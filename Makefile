@@ -1,4 +1,7 @@
-.PHONY: test oracle oracle-stable oracle-sf01 bench scaling plans zip
+.PHONY: test oracle oracle-stable oracle-sf01 bench scaling plans zip perf-ingest perf-serve
+
+SEED ?= 101
+TRACE ?= 0
 
 test:
 	python -m pytest tests/ -x -q
@@ -14,6 +17,12 @@ oracle-sf01:
 
 bench:
 	python bench.py
+
+perf-ingest:
+	python3 perfbench/run.py --workload ingest --seed $(SEED) --trace $(TRACE)
+
+perf-serve:
+	python3 perfbench/run.py --workload serve --seed $(SEED) --trace $(TRACE)
 
 scaling:
 	python bench.py --scaling

@@ -9,6 +9,8 @@ One place to pin every config the engine relies on:
   Catalyst-native replacement).
 * Arrow on — all Python crossings are Arrow-batched (pandas UDFs only).
 * shuffle partitions sized to cores, not the 200 default.
+* no distributed file-listing job for explicit path lists (TierStore
+  reads).
 """
 
 from __future__ import annotations
@@ -53,6 +55,15 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS)
+        )
+        # TierStore reads pass the manifest's explicit file list; past this
+        # threshold (default 32) Spark stats the paths with a distributed
+        # listing job: read_tier on a 112-file tier took ~650 ms with it
+        # and ~85 ms with driver-side stats (4-core host). The 1d tier is
+        # never expired, so no committed file list may reach the threshold.
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

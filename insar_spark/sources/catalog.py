@@ -32,10 +32,15 @@ horizon (``expire_snapshots``). ``snapshot_keep=0`` (default) vacuums
 immediately — identical behavior and cost to the pre-time-travel store.
 
 Layout: ``root/tier=<t>/day=YYYY-MM-DD/*.parquet`` — day partitioning gives
-partition pruning for retention and time-range scans; files within a
-partition are written clustered by ``conv_id`` (repartition + sort) so a
-series rarely spans files (the full-depth-chunk locality rule,
-insar/timeseries.py:152-153).
+partition pruning for retention and time-range scans. Each commit writes
+one file per day, sorted by ``conv_id`` then ``window_start``, so a series
+never spans files of one commit (the full-depth-chunk locality rule,
+insar/timeseries.py:152-153); ``compact`` splits a day that outgrows its
+byte target. The manifest records the tier's Spark schema (the string
+``day`` column included), so a read needs no schema inference, and reads
+open the manifest's explicit file list, stat'ed on the driver (the engine
+session pins the parallel-listing threshold above any tier's file count):
+building a tier DataFrame launches no Spark job.
 """
 
 from __future__ import annotations
@@ -47,8 +52,10 @@ import shutil
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # tier -> retention horizon in days (None = keep forever); the continuous-
 # aggregate pattern: fine tiers age out, coarse tiers persist. Sketch
@@ -60,6 +67,25 @@ DEFAULT_RETENTION: dict[str, int | None] = {
     "dist_1m": 7, "dist_1h": 90,
     "m4_1m": 7, "m4_1d": 90, "m4_1w": None,
 }
+
+
+_NULLABILITY_KEYS = ("nullable", "containsNull", "valueContainsNull", "metadata")
+
+
+def _column_types(schema_json: str) -> dict[str, object]:
+    """Column name -> type of a ``StructType.json()``, with nullability
+    (and field metadata) dropped at every depth: commits of one tier may
+    differ there (the seal and the batch job both commit ``1m``), and a
+    file-source read makes every column nullable anyway."""
+
+    def strip(t):
+        if isinstance(t, dict):
+            return {k: strip(v) for k, v in t.items() if k not in _NULLABILITY_KEYS}
+        if isinstance(t, list):
+            return [strip(v) for v in t]
+        return t
+
+    return {f["name"]: strip(f["type"]) for f in json.loads(schema_json)["fields"]}
 
 
 class SnapshotExpiredError(LookupError):
@@ -81,6 +107,9 @@ class TierStore:
     # the pre-restate state readable needs N >= 3 (pre-drop, drop,
     # refill). N keeps the last N snapshots' state files + data files.
     snapshot_keep: int = 0
+    # real-time view family -> (committed state it was built on, DataFrame
+    # plan); filled by streaming.rollup_stream.realtime_1h_view
+    views: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     # ------------------------------------------------------------ manifest
 
@@ -288,6 +317,27 @@ class TierStore:
     def committed_days(self, tier: str) -> set[str]:
         return set(self.manifest(tier)["partitions"])
 
+    def committed_files(self, tier: str) -> tuple[str, ...]:
+        """Root-relative paths of the tier's live files. Committed files
+        are immutable and uniquely named, so an unchanged tuple means
+        unchanged contents."""
+        return tuple(self._part_paths(tier, self.manifest(tier)["partitions"]))
+
+    def _check_schema(self, tier: str, man: dict, df: DataFrame) -> None:
+        """Refuse a commit whose column names or types differ from the
+        tier's recorded schema; record the schema on the first commit (and
+        on the first commit to a store written before schemas were
+        recorded). Nullability and column order are not compared."""
+        new = df.schema.json()
+        old = man.get("schema")
+        if old is not None and _column_types(old) != _column_types(new):
+            raise ValueError(
+                f"tier '{tier}': commit schema {df.schema.simpleString()} "
+                f"differs from the recorded "
+                f"{StructType.fromJson(json.loads(old)).simpleString()}"
+            )
+        man.setdefault("schema", new)
+
     # ------------------------------------------------------------- write
 
     def tier_path(self, tier: str, day: str | None = None) -> str:
@@ -347,7 +397,7 @@ class TierStore:
         df = rolled.withColumn("_epoch", F.lit(int(epoch))).withColumn(
             "day", F.date_format("window_start", "yyyy-MM-dd")
         )
-        n = df.count()
+        self._check_schema(tier, man, df)
         files = self._stage_and_promote(
             lambda staging: (
                 df.repartition(2, "day")
@@ -357,6 +407,13 @@ class TierStore:
             ),
             tier,
             tag,
+        )
+        # row count from the promoted files' footers: no second pass over
+        # the micro-batch plan
+        n = sum(
+            pq.read_metadata(os.path.join(self.tier_path(tier, d), name)).num_rows
+            for d, names in files.items()
+            for name in names
         )
         man["snapshots"].append(
             {
@@ -417,7 +474,6 @@ class TierStore:
         rolled: DataFrame,
         tier: str,
         run_params: dict | None = None,
-        files_per_partition: int = 4,
         seal_before: str | None = None,
     ) -> dict:
         """Append day-partitions of a rollup DataFrame; skip days already
@@ -427,6 +483,9 @@ class TierStore:
         strictly before it are committed — an in-flight day is never
         sealed with partial data, so the day-level resume skip is always
         safe (the streaming analog is the event-time watermark).
+
+        Each committed day is one file, sorted by ``conv_id`` and
+        ``window_start``; ``compact`` splits a day too large for one file.
         """
         man = self.manifest(tier)
         done = set(man["partitions"])
@@ -434,6 +493,7 @@ class TierStore:
         df = rolled.withColumn(
             "day", F.date_format("window_start", "yyyy-MM-dd")
         )
+        self._check_schema(tier, man, df)
         if seal_before is not None:
             df = df.filter(F.col("day") < seal_before)
         if done:
@@ -471,7 +531,7 @@ class TierStore:
         cluster = ["day", "conv_id"] if has_series else ["day"]
         files = self._stage_and_promote(
             lambda staging: (
-                df.repartition(files_per_partition, *cluster)
+                df.repartition("day")
                 .sortWithinPartitions(*cluster, "window_start")
                 .write.partitionBy("day")
                 .option("compression", "zstd")
@@ -506,12 +566,12 @@ class TierStore:
         ``as_of=<snapshot id>``, the files of that PAST snapshot's state
         (Iceberg ``VERSION AS OF``; requires the snapshot inside the
         store's ``snapshot_keep`` horizon, else ``SnapshotExpiredError``).
-        Orphan files from a crashed write are invisible either way."""
-        parts = (
-            self.manifest(tier)["partitions"]
-            if as_of is None
-            else self.state_at(tier, as_of)
-        )
+        Orphan files from a crashed write are invisible either way.
+
+        Builds the DataFrame without a Spark job: the schema comes from the
+        manifest and the explicit file list is stat'ed on the driver."""
+        man = self.manifest(tier)
+        parts = man["partitions"] if as_of is None else self.state_at(tier, as_of)
         if not parts:
             raise ValueError(
                 f"tier '{tier}' has no committed partitions "
@@ -521,10 +581,15 @@ class TierStore:
             os.path.join(self.root, rel)
             for rel in self._part_paths(tier, parts)
         ]
-        df = spark.read.option("basePath", self.tier_path(tier)).parquet(*paths)
-        # partition-column inference would type `day` as DATE; keep the
-        # manifest's string form for a stable schema
-        return df.withColumn("day", F.date_format("day", "yyyy-MM-dd"))
+        reader = spark.read.option("basePath", self.tier_path(tier))
+        if "schema" not in man:
+            # a store written before commits recorded the schema: infer it
+            # (one Spark job), and re-cast `day`, which partition inference
+            # types as DATE, to the manifest's string form
+            df = reader.parquet(*paths)
+            return df.withColumn("day", F.date_format("day", "yyyy-MM-dd"))
+        schema = StructType.fromJson(json.loads(man["schema"]))
+        return reader.schema(schema).parquet(*paths)
 
     def tier_bytes(self, tier: str) -> int:
         """On-disk bytes of the tier's committed files — the footprint

@@ -196,15 +196,17 @@ def seal_and_compact(
     delta = dt.timedelta(**{unit.rstrip("s") + "s": float(qty)})
 
     try:
-        log = store.read_tier_log(spark, log_tier, keys=log_keys)
+        raw = store.read_tier(spark, log_tier)
     except ValueError:  # nothing committed to the log yet
         return {"seal_before": None, "written_days": [], "truncated": []}
-    mx = log.agg(F.max("window_start").alias("m")).first()["m"]
+    # latest-epoch-wins only drops superseded rows of the same window, so
+    # the raw log has the same max window without the dedup shuffle
+    mx = raw.agg(F.max("window_start").alias("m")).first()["m"]
     if mx is None:
         return {"seal_before": None, "written_days": [], "truncated": []}
     seal_before = (mx - delta).date().isoformat()
 
-    final = log.drop("day")
+    final = store.read_tier_log(spark, log_tier, keys=log_keys).drop("day")
     res = store.write_tier(
         final,
         sealed_tier,
@@ -547,7 +549,38 @@ def realtime_1h_view(
     max for hll) — the result is bit-equal to a batch 1h rollup over
     everything that has arrived (stream==batch tested per family). At
     100 TB the expensive layer (3) is bounded by the watermark horizon;
-    layers 1–2 are stored-tier scans, never raw."""
+    layers 1–2 are stored-tier scans, never raw.
+
+    The view is memoized per family in ``store.views`` (the plan only,
+    nothing cached): it is rebuilt only when the session, the store root or
+    the committed file list of one of the three tiers changed. Committed
+    files are immutable and uniquely named, so every commit, seal,
+    truncation or expiry changes the key; snapshot ids would not (a store
+    recreated or restored at the same root repeats them over new files)."""
+    family = (log_tier, fine_tier, coarse_tier, tuple(log_keys))
+    state = (spark, store.root) + tuple(
+        store.committed_files(t) for t in (coarse_tier, fine_tier, log_tier)
+    )
+    hit = store.views.get(family)
+    if hit is not None and hit[0] == state:
+        return hit[1]
+    view = _stitch_1h_view(
+        spark, store, cascade_to_1h, log_keys, log_tier, fine_tier, coarse_tier
+    )
+    store.views[family] = (state, view)
+    return view
+
+
+def _stitch_1h_view(
+    spark: SparkSession,
+    store,
+    cascade_to_1h,
+    log_keys: tuple[str, ...],
+    log_tier: str,
+    fine_tier: str,
+    coarse_tier: str,
+) -> DataFrame:
+    """Build :func:`realtime_1h_view`'s three-layer stitch."""
     coarse_days = store.committed_days(coarse_tier)
     try:
         coarse = store.read_tier(spark, coarse_tier).drop("day")

@@ -183,7 +183,7 @@ def test_compact_is_side_by_side_and_size_targeted(spark, transcripts, store):
     import os
 
     rolled = rollup_turns(transcripts, "1h")
-    store.write_tier(rolled, "1h", files_per_partition=4)
+    store.write_tier(rolled, "1h")
     man = store.manifest("1h")
     day = sorted(man["partitions"])[0]
     before = store.read_tier(spark, "1h").toPandas()
@@ -203,3 +203,79 @@ def test_compact_is_side_by_side_and_size_targeted(spark, transcripts, store):
     a = before[cols].sort_values(cols).reset_index(drop=True)
     b = after[cols].sort_values(cols).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b, check_exact=True)
+
+
+def test_read_tier_runs_no_job_and_keeps_recorded_schema(spark, store):
+    """Building a tier DataFrame launches no Spark job: the schema comes
+    from the manifest (no inference job) and the explicit file list is
+    stat'ed on the driver (no distributed listing job past 32 files).
+    Dtypes read back equal the written ones, `day` a string."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    # 40 days, one conversation-sorted file per day -> a 40-file commit
+    rolled = spark.range(40).select(
+        F.format_string("c%02d", (F.col("id") % 3).cast("int")).alias("conv_id"),
+        F.timestamp_seconds(F.lit(1704067200) + F.col("id") * 86400).alias(
+            "window_start"
+        ),
+        F.col("id").alias("n_turns"),
+    )
+    store.write_tier(rolled, "1h")
+    store.write_tier_log(rolled, "1m_log", epoch=0)
+    store.write_tier(rolled.drop("conv_id"), "g_1d")
+    assert len(store.committed_files("1h")) > 32
+
+    def build(tier):
+        group = f"read_tier-{tier}"
+        sc.setJobGroup(group, "read_tier builds a DataFrame")
+        try:
+            df = store.read_tier(spark, tier)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], tier
+        return df
+
+    cases = {
+        "1h": rolled.dtypes + [("day", "string")],
+        "1m_log": rolled.dtypes + [("_epoch", "int"), ("day", "string")],
+        "g_1d": rolled.drop("conv_id").dtypes + [("day", "string")],
+    }
+    for tier, want in cases.items():
+        df = build(tier)
+        assert df.dtypes == want, tier
+        assert df.count() == 40
+
+    # a commit with a changed column type is refused (new days, so it
+    # would otherwise write)
+    later = rolled.select(
+        "conv_id",
+        (F.col("window_start") + F.expr("INTERVAL 100 DAYS")).alias("window_start"),
+        F.col("n_turns").cast("double").alias("n_turns"),
+    )
+    with pytest.raises(ValueError, match="differs from the recorded"):
+        store.write_tier(later, "1h")
+    with pytest.raises(ValueError, match="differs from the recorded"):
+        store.write_tier_log(later, "1m_log", epoch=1)
+    assert store.read_tier(spark, "1h").count() == 40
+    assert len(store.manifest("1m_log")["snapshots"]) == 1
+    # nullability and column order are not compared
+    store.write_tier(
+        later.select(
+            F.when(F.col("n_turns") >= 0, F.col("n_turns").cast("long")).alias("n_turns"),
+            "window_start",
+            "conv_id",
+        ),
+        "1h",
+    )
+    assert store.read_tier(spark, "1h").count() == 80
+
+    # a store written before schemas were recorded still reads (inferred)
+    mp = store._manifest_path("1h")
+    man = json.load(open(mp))
+    del man["schema"]
+    json.dump(man, open(mp, "w"))
+    legacy = store.read_tier(spark, "1h")
+    assert legacy.dtypes == cases["1h"] and legacy.count() == 80

@@ -113,3 +113,66 @@ def test_write_tier_log_onto_legacy_entry_keeps_old_files(spark, tmp_path, trans
     assert second["written"] > 0
     # both generations visible: old (enumerated into the list) + new epoch
     assert store.read_tier(spark, "1m").count() == n0 + second["written"]
+
+
+def test_realtime_view_reuse_follows_every_commit(spark, tmp_path, transcripts):
+    """stats_realtime_1h_view is reused while no tier commits and rebuilt
+    after every append, seal, cascade and expiry: each time it equals a
+    batch 1h rollup of everything appended so far. A pristine copy
+    restored at the same root repeats the snapshot ids over new files; the
+    view then serves the new rows, never a stale plan over vacuumed
+    files."""
+    import shutil
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from insar_spark.operators.rollup import cascade, rollup_turns
+    from insar_spark.streaming.rollup_stream import (
+        seal_and_compact,
+        stats_realtime_1h_view,
+        streaming_rollup_1m,
+    )
+
+    # drops cut at midnight, so no 1m window spans two appends
+    cuts = ["2025-01-01", "2025-01-06", "2025-01-10", "2025-01-13"]
+    d0, d1, d2 = (
+        transcripts.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
+        for lo, hi in zip(cuts, cuts[1:])
+    )
+    root = str(tmp_path / "tiers_reuse")
+    pristine = str(tmp_path / "pristine")
+    store = TierStore(root)
+    key = ["conv_id", "window_start"]
+
+    def assert_view_equals_batch(*appended):
+        view = stats_realtime_1h_view(spark, store)
+        assert stats_realtime_1h_view(spark, store) is view
+        turns = appended[0]
+        for d in appended[1:]:
+            turns = turns.unionByName(d)
+        want = rollup_turns(turns, "1h").toPandas()
+        cols = [c for c in want.columns if c in view.columns]
+        got = view.toPandas()[cols].sort_values(key).reset_index(drop=True)
+        want = want[cols].sort_values(key).reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+    store.write_tier_log(streaming_rollup_1m(d0), "1m_log", epoch=0)
+    assert_view_equals_batch(d0)
+    shutil.copytree(root, pristine)
+    store.write_tier_log(streaming_rollup_1m(d1), "1m_log", epoch=1)
+    assert_view_equals_batch(d0, d1)
+
+    # same root, same snapshot ids, new file names
+    shutil.rmtree(root)
+    shutil.copytree(pristine, root)
+    store.write_tier_log(streaming_rollup_1m(d2), "1m_log", epoch=1)
+    assert store.current_snapshot_id("1m_log") == 2
+    assert_view_equals_batch(d0, d2)
+
+    assert seal_and_compact(spark, store)["written_days"]
+    assert_view_equals_batch(d0, d2)
+    store.write_tier(cascade(store.read_tier(spark, "1m").drop("day"), "1h"), "1h")
+    assert_view_equals_batch(d0, d2)
+    assert store.expire("1m", "2025-01-12")  # days the 1h tier covers
+    assert_view_equals_batch(d0, d2)
