@@ -11,6 +11,11 @@ One place to pin every config the engine relies on:
 * shuffle partitions sized to cores, not the 200 default.
 * no distributed file-listing job for explicit path lists (TierStore
   reads).
+* ``TIMESTAMP_MICROS`` Parquet timestamps, not Spark's INT96 default:
+  INT96 columns carry no footer min/max, and a TierStore commit takes
+  each day's ``w_min``/``w_max`` from the footers of the files it wrote
+  instead of a second pass over the plan. Files written as INT96 still
+  read back as the same Spark timestamp type.
 """
 
 from __future__ import annotations
@@ -65,6 +70,9 @@ def get_spark(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
             str(2**31 - 1),
         )
+        # INT96 (the default) has no footer min/max; TierStore commits read
+        # each day's window range from the footers of the files they wrote
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))

@@ -15,10 +15,17 @@ Semantics mirrored from the reference:
 * per-partition lineage + metrics — run-params YAML
   (insar/timeseries.py:188-213) generalized: every commit records, per
   day-partition, the row count and min/max window, plus the run params.
+  They come from the Parquet footers of the files the commit wrote (read
+  on the driver), so a commit runs its plan once.
 * tier-expiry compaction — overwrite-dset pattern
   (insar/prepare.py:228-242): partitions older than the tier's retention
   horizon are dropped atomically via a manifest commit; the data files go
-  with them.
+  with them. The cutoff stays in the manifest as the tier's expiry floor
+  (``expired_before``), so no later commit brings an expired day back.
+
+A caller that can name the days its input covers asks ``pending_days``
+first: the no-op decision reads only the manifest, so a re-run with
+nothing pending builds no plan and launches no Spark job.
 
 Snapshot time travel (Iceberg snapshot semantics): every commit writes a
 per-snapshot state file (``_snapshots/<tier>/snap-<id>.json`` — the
@@ -45,6 +52,7 @@ building a tier DataFrame launches no Spark job.
 
 from __future__ import annotations
 
+import datetime as dt
 import glob
 import json
 import os
@@ -86,6 +94,69 @@ def _column_types(schema_json: str) -> dict[str, object]:
         return t
 
     return {f["name"]: strip(f["type"]) for f in json.loads(schema_json)["fields"]}
+
+
+def footer_range(
+    paths: list[str], column: str
+) -> tuple[int, dt.datetime | None, dt.datetime | None] | None:
+    """Row count and min/max of timestamp ``column`` over Parquet files,
+    from their footers alone (driver-side, no Spark job). Bounds are naive
+    UTC for UTC-adjusted columns, as stored for the rest. None when a file
+    lacks the column or a non-empty row group lacks min/max statistics
+    (INT96 timestamps never have them)."""
+    rows, lo, hi = 0, None, None
+    for p in paths:
+        md = pq.read_metadata(p)
+        cols = [md.schema.column(i).path for i in range(md.num_columns)]
+        if column not in cols:
+            return None
+        i = cols.index(column)
+        rows += md.num_rows
+        for g in range(md.num_row_groups):
+            c = md.row_group(g).column(i)
+            if c.num_values == 0:
+                continue
+            st = c.statistics
+            if st is None or not st.has_min_max or not isinstance(st.min, dt.datetime):
+                return None
+            a, b = (
+                v.astimezone(dt.timezone.utc).replace(tzinfo=None) if v.tzinfo else v
+                for v in (st.min, st.max)
+            )
+            lo = a if lo is None else min(lo, a)
+            hi = b if hi is None else max(hi, b)
+    return rows, lo, hi
+
+
+def _hidden(name: str) -> bool:
+    """Spark's rule for the paths a file source skips."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def footer_days(path: str, column: str = "ts") -> list[str] | None:
+    """Every day from the min to the max of timestamp ``column`` in a
+    Parquet input (a file, or a directory listed recursively the way Spark
+    lists it), from the footers alone: a superset of the days it holds.
+    Days are UTC dates, the zone the engine session pins and tier ``day``
+    partitions use. None when unknown: a path that is no local file or
+    directory, or a file without min/max statistics on ``column``."""
+    if os.path.isfile(path):
+        files = [path]
+    elif os.path.isdir(path):
+        files = []
+        for d, dirs, names in os.walk(path):
+            dirs[:] = [n for n in dirs if not _hidden(n)]
+            files += [os.path.join(d, n) for n in names if not _hidden(n)]
+    else:
+        return None
+    rng = footer_range(files, column)
+    if rng is None:
+        return None
+    _, lo, hi = rng
+    if lo is None:
+        return []
+    first, n = lo.date(), (hi.date() - lo.date()).days
+    return [(first + dt.timedelta(days=i)).isoformat() for i in range(n + 1)]
 
 
 class SnapshotExpiredError(LookupError):
@@ -136,16 +207,19 @@ class TierStore:
     def _state_dir(self, tier: str) -> str:
         return os.path.join(self.root, "_snapshots", tier)
 
-    def _write_state(self, tier: str, snap_id: int, partitions: dict) -> None:
-        """Per-snapshot full partition→file state (Iceberg manifest-list
-        analog): written BEFORE the live-manifest commit, so a crash
-        between the two leaves an orphan state file (never read — the
-        live manifest still points at the previous snapshot)."""
+    def _write_state(self, tier: str, snap_id: int, man: dict) -> None:
+        """Per-snapshot full partition→file state and expiry floor (Iceberg
+        manifest-list analog): written BEFORE the live-manifest commit, so
+        a crash between the two leaves an orphan state file (never read —
+        the live manifest still points at the previous snapshot)."""
         os.makedirs(self._state_dir(tier), exist_ok=True)
         p = os.path.join(self._state_dir(tier), f"snap-{snap_id}.json")
+        state = {"id": snap_id, "partitions": man["partitions"]}
+        if "expired_before" in man:
+            state["expired_before"] = man["expired_before"]
         tmp = p + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"id": snap_id, "partitions": partitions}, f, sort_keys=True)
+            json.dump(state, f, sort_keys=True)
         os.replace(tmp, p)
 
     def current_snapshot_id(self, tier: str) -> int:
@@ -156,10 +230,14 @@ class TierStore:
         """Partition state as of ``snapshot_id``. Raises
         ``SnapshotExpiredError`` if the snapshot existed but was vacuumed,
         ``ValueError`` if it never existed."""
+        return self._state(tier, snapshot_id)["partitions"]
+
+    def _state(self, tier: str, snapshot_id: int) -> dict:
+        """The state file of ``snapshot_id`` (see ``state_at``)."""
         p = os.path.join(self._state_dir(tier), f"snap-{snapshot_id}.json")
         if os.path.exists(p):
             with open(p) as f:
-                return json.load(f)["partitions"]
+                return json.load(f)
         if any(s["id"] == snapshot_id for s in self.manifest(tier)["snapshots"]):
             raise SnapshotExpiredError(
                 f"tier '{tier}' snapshot {snapshot_id} is past the "
@@ -190,7 +268,7 @@ class TierStore:
         keep = self.snapshot_keep if keep is None else keep
         latest = man["snapshots"][-1]["id"] if man["snapshots"] else 0
         if latest:
-            self._write_state(tier, latest, man["partitions"])
+            self._write_state(tier, latest, man)
         # A pending tombstone must never cover a path the CURRENT state
         # references (r6, advisor finding): a day re-committed into the
         # same directory before a dir-level (legacy pre-file-tracking)
@@ -281,8 +359,10 @@ class TierStore:
         snapshot commit (history is never rewritten — Iceberg
         rollback_to_snapshot). Files that only the abandoned snapshots
         reference are tombstoned under the new snapshot; files the target
-        references are un-tombstoned (live again)."""
-        target = self.state_at(tier, snapshot_id)  # raises if gone
+        references are un-tombstoned (live again). The target's expiry
+        floor comes back with it (a state recorded without one has none)."""
+        state = self._state(tier, snapshot_id)  # raises if gone
+        target = state["partitions"]
         man = self.manifest(tier)
         snap_id = len(man["snapshots"]) + 1
         target_paths = set(self._part_paths(tier, target))
@@ -301,6 +381,9 @@ class TierStore:
             )
         self._tombstone(man, snap_id, sorted(current_paths - target_paths))
         man["partitions"] = target
+        man.pop("expired_before", None)
+        if "expired_before" in state:
+            man["expired_before"] = state["expired_before"]
         man["snapshots"].append(
             {"id": snap_id, "op": "rollback", "to": snapshot_id}
         )
@@ -316,6 +399,16 @@ class TierStore:
 
     def committed_days(self, tier: str) -> set[str]:
         return set(self.manifest(tier)["partitions"])
+
+    def pending_days(self, tier: str, days) -> list[str]:
+        """The days of ``days`` a commit to ``tier`` would still write:
+        neither committed nor below the tier's expiry floor. Reads only
+        the manifest."""
+        man = self.manifest(tier)
+        floor = man.get("expired_before", "")
+        return sorted(
+            d for d in set(days) if d >= floor and d not in man["partitions"]
+        )
 
     def committed_files(self, tier: str) -> tuple[str, ...]:
         """Root-relative paths of the tier's live files. Committed files
@@ -482,11 +575,22 @@ class TierStore:
         ``seal_before`` (YYYY-MM-DD) is the ingest watermark: only days
         strictly before it are committed — an in-flight day is never
         sealed with partial data, so the day-level resume skip is always
-        safe (the streaming analog is the event-time watermark).
+        safe (the streaming analog is the event-time watermark). Days
+        below the tier's expiry floor are never committed again.
 
+        One pass: the plan is written to staging once, and each day's
+        ``rows``/``w_min``/``w_max`` come from the written files' footers.
         Each committed day is one file, sorted by ``conv_id`` and
         ``window_start``; ``compact`` splits a day too large for one file.
         """
+        conf = rolled.sparkSession.conf
+        if conf.get("spark.sql.parquet.outputTimestampType") == "INT96":
+            raise ValueError(
+                "TierStore commits read window ranges from Parquet footers, and "
+                "INT96 timestamps have none: set spark.sql.parquet."
+                "outputTimestampType=TIMESTAMP_MICROS (insar_spark.session."
+                "get_spark pins it)"
+            )
         man = self.manifest(tier)
         done = set(man["partitions"])
 
@@ -496,39 +600,15 @@ class TierStore:
         self._check_schema(tier, man, df)
         if seal_before is not None:
             df = df.filter(F.col("day") < seal_before)
+        if "expired_before" in man:
+            df = df.filter(F.col("day") >= man["expired_before"])
         if done:
             df = df.filter(~F.col("day").isin(sorted(done)))
 
-        # per-partition metrics collected in the same pass as the write:
-        # cheap agg on the (already shuffled) rollup output. Global tiers
-        # (no series key, e.g. the distinct bitmap) report n_series=1.
-        has_series = "conv_id" in df.columns
-        n_series_agg = (
-            F.approx_count_distinct("conv_id")
-            if has_series
-            else F.lit(1).cast("long")
-        )
-        stats = {
-            r["day"]: {
-                "rows": r["rows"],
-                "w_min": str(r["w_min"]),
-                "w_max": str(r["w_max"]),
-                "n_series": r["n_series"],
-            }
-            for r in df.groupBy("day")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.min("window_start").alias("w_min"),
-                F.max("window_start").alias("w_max"),
-                n_series_agg.alias("n_series"),
-            )
-            .collect()
-        }
-        if not stats:
-            return {"written_days": [], "skipped_days": sorted(done)}
-
         snap_id = len(man["snapshots"]) + 1
-        cluster = ["day", "conv_id"] if has_series else ["day"]
+        # global tiers (no series key, e.g. the distinct bitmap) cluster
+        # by day only
+        cluster = ["day", "conv_id"] if "conv_id" in df.columns else ["day"]
         files = self._stage_and_promote(
             lambda staging: (
                 df.repartition("day")
@@ -540,22 +620,30 @@ class TierStore:
             tier,
             f"snap{snap_id}",
         )
+        if not files:
+            return {"written_days": [], "skipped_days": sorted(done)}
+        for day, names in files.items():
+            rows, lo, hi = footer_range(
+                [os.path.join(self.tier_path(tier, day), n) for n in names],
+                "window_start",
+            )
+            man["partitions"][day] = {
+                "rows": rows,
+                "w_min": str(lo),
+                "w_max": str(hi),
+                "snapshot": snap_id,
+                "files": names,
+            }
         man["snapshots"].append(
             {
                 "id": snap_id,
                 "op": "append",
-                "days": sorted(stats),
+                "days": sorted(files),
                 "run_params": run_params or {},
             }
         )
-        for day, s in stats.items():
-            man["partitions"][day] = {
-                **s,
-                "snapshot": snap_id,
-                "files": files.get(day, []),
-            }
         self._finalize(tier, man)
-        return {"written_days": sorted(stats), "skipped_days": sorted(done)}
+        return {"written_days": sorted(files), "skipped_days": sorted(done)}
 
     # -------------------------------------------------------------- read
 
@@ -614,9 +702,9 @@ class TierStore:
 
     def expire(self, tier: str, now_day: str) -> list[str]:
         """Drop partitions past the tier's retention horizon (manifest-first:
-        the commit makes them invisible, then files are vacuumed)."""
-        import datetime as dt
-
+        the commit makes them invisible, then files are vacuumed). The
+        cutoff becomes the tier's expiry floor, which only moves forward:
+        ``write_tier`` and ``pending_days`` skip every day below it."""
         horizon = self.retention.get(tier)
         if horizon is None:
             return []
@@ -625,8 +713,10 @@ class TierStore:
         ).isoformat()
         man = self.manifest(tier)
         expired = sorted(d for d in man["partitions"] if d < cutoff)
-        if not expired:
+        floor = man.get("expired_before", "")
+        if not expired and cutoff <= floor:
             return []
+        man["expired_before"] = max(cutoff, floor)
         snap_id = len(man["snapshots"]) + 1
         retired = self._part_paths(
             tier, {d: man["partitions"][d] for d in expired}

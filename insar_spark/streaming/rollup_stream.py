@@ -184,7 +184,8 @@ def seal_and_compact(
     latest-epoch-wins view is final and is committed through the ordinary
     resume-mode ``write_tier`` path (skip-if-committed ⇒ the compactor is
     idempotent and crash-restartable). ``truncate_log`` then drops the
-    sealed days from the log (manifest-first, vacuumed after commit).
+    sealed days from the log (manifest-first, vacuumed after commit),
+    together with any log day below the sealed tier's expiry floor.
 
     Returns {"seal_before": day, "written_days": [...], "truncated": [...]}.
     """
@@ -215,8 +216,14 @@ def seal_and_compact(
     )
     truncated = []
     if truncate_log:
+        # log days below the sealed tier's expiry floor are never sealed
+        # (write_tier skips them): truncate them with the sealed days
+        sealed = store.manifest(sealed_tier)
+        floor = sealed.get("expired_before", "")
         sealed_days = sorted(
-            d for d in store.committed_days(sealed_tier) if d < seal_before
+            d
+            for d in store.committed_days(log_tier)
+            if d < floor or (d < seal_before and d in sealed["partitions"])
         )
         truncated = store.drop_partitions(log_tier, sealed_days, op="seal-truncate")
     return {

@@ -13,13 +13,23 @@ Flow (one raw scan total):
   transcripts -> rollup 1m -> TierStore commit (skips already-committed
   day-partitions: resume) -> read STORED 1m -> cascade 1h -> commit ->
   read STORED 1h -> cascade 1d -> commit -> retention expiry -> metrics
-  JSON on stdout (per-tier rows, wall seconds, rolled-up points/sec,
-  per-partition lineage lives in the store manifests).
+  JSON on stdout (per-tier days written/skipped and wall ms, wall seconds,
+  rolled-up points/sec; per-partition lineage lives in the store
+  manifests).
+
+Each tier step first asks the store which of its days are still pending:
+tier-0 days come from the input files' Parquet footers (the ``ts`` range),
+cascade days from the finer tier's manifest. A tier with nothing pending
+is skipped without building a plan (``"decided": "manifest"``), so a
+re-run with nothing to do launches no Spark job; otherwise the plan is
+built and committed (``"decided": "plan"``).
 """
 
 from __future__ import annotations
 
 import argparse
+import datetime as dt
+import functools
 import json
 import os
 import sys
@@ -51,8 +61,6 @@ def _partition_day(tier: str, day: str) -> str:
     weekly M4 tier (date_trunc('week') semantics)."""
     if tier != "m4_1w":
         return day
-    import datetime as dt
-
     d = dt.date.fromisoformat(day)
     return (d - dt.timedelta(days=d.weekday())).isoformat()
 
@@ -60,7 +68,7 @@ def _partition_day(tier: str, day: str) -> str:
 def main(argv: list[str] | None = None) -> dict:
     from insar_spark.operators.rollup import cascade, rollup_turns
     from insar_spark.session import get_spark
-    from insar_spark.sources.catalog import TierStore
+    from insar_spark.sources.catalog import TierStore, footer_days
     from insar_spark.synth import synth_transcripts
 
     p = argparse.ArgumentParser()
@@ -139,25 +147,57 @@ def main(argv: list[str] | None = None) -> dict:
     run_params = {"input": args.input, "job": "rollup_job", "version": 1}
 
     t0 = time.perf_counter()
-    if args.input.startswith("synth:"):
-        turns = synth_transcripts(spark, n_convs=int(args.input.split(":")[1]))
-    else:
-        turns = spark.read.parquet(args.input).withColumn(
-            "ts", F.col("ts").cast("timestamp")
-        )
+    metrics: dict = {"tiers": {}, "expired": {}}
 
-    if args.bucketize:
+    @functools.cache
+    def turns():
+        """The input, read (and bucketed) only when a tier-0 tier has
+        pending days: reading parquet infers its schema with a Spark job."""
+        if args.input.startswith("synth:"):
+            df = synth_transcripts(spark, n_convs=int(args.input.split(":")[1]))
+        else:
+            df = spark.read.parquet(args.input).withColumn(
+                "ts", F.col("ts").cast("timestamp")
+            )
+        if not args.bucketize:
+            return df
         from insar_spark.sources.bucketed import attach_bucketed, write_bucketed
 
         wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
         loc = os.path.join(wh, "transcripts_bucketed")
         if not os.path.exists(loc):
-            write_bucketed(turns, "transcripts_bucketed", args.bucketize)
-        turns = attach_bucketed(
-            spark, "transcripts_bucketed", loc, args.bucketize
-        )
+            write_bucketed(df, "transcripts_bucketed", args.bucketize)
+        return attach_bucketed(spark, "transcripts_bucketed", loc, args.bucketize)
 
-    metrics: dict = {"tiers": {}, "expired": {}}
+    input_days = None if args.input.startswith("synth:") else footer_days(args.input)
+
+    def commit(tier, build, days, params=run_params):
+        """One tier step: skip it from the manifest when ``days`` (the
+        days its source holds; None = unknown) has none pending, else
+        build the plan and commit it."""
+        t = time.perf_counter()
+        if days is not None and not store.pending_days(tier, days):
+            written, skipped = 0, len(store.committed_days(tier))
+            decided = "manifest"
+        else:
+            res = store.write_tier(build(), tier, run_params=params)
+            written, skipped = len(res["written_days"]), len(res["skipped_days"])
+            decided = "plan"
+        metrics["tiers"][tier] = {
+            "written_days": written,
+            "skipped_days": skipped,
+            "ms": round(1000 * (time.perf_counter() - t), 1),
+            "decided": decided,
+        }
+
+    def cascade_from(source, tier, fn, window, params=run_params):
+        """Commit ``tier`` as ``fn`` over the STORED ``source`` tier; its
+        days are the source's committed days."""
+        def build():
+            return fn(store.read_tier(spark, source).drop("day"), window)
+
+        days = {_partition_day(tier, d) for d in store.committed_days(source)}
+        commit(tier, build, days, params)
 
     if args.restate_days:
         # Invalidation first, rebuild via the normal flow below: dropping
@@ -173,27 +213,11 @@ def main(argv: list[str] | None = None) -> dict:
             if hit:
                 metrics["restated"][tier] = hit
 
-    # tier 0: the only raw scan
-    r1m = rollup_turns(turns, "1m")
-    res = store.write_tier(r1m, "1m", run_params=run_params)
-    metrics["tiers"]["1m"] = {
-        "written_days": len(res["written_days"]),
-        "skipped_days": len(res["skipped_days"]),
-    }
-
-    # cascades read the STORED finer tier (60x+ smaller than raw)
-    stored_1m = store.read_tier(spark, "1m").drop("day")
-    res = store.write_tier(cascade(stored_1m, "1h"), "1h", run_params=run_params)
-    metrics["tiers"]["1h"] = {
-        "written_days": len(res["written_days"]),
-        "skipped_days": len(res["skipped_days"]),
-    }
-    stored_1h = store.read_tier(spark, "1h").drop("day")
-    res = store.write_tier(cascade(stored_1h, "1d"), "1d", run_params=run_params)
-    metrics["tiers"]["1d"] = {
-        "written_days": len(res["written_days"]),
-        "skipped_days": len(res["skipped_days"]),
-    }
+    # tier 0: the only raw scan; cascades read the STORED finer tier (60x+
+    # smaller than raw)
+    commit("1m", lambda: rollup_turns(turns(), "1m"), input_days)
+    cascade_from("1m", "1h", cascade, "1h")
+    cascade_from("1h", "1d", cascade, "1d")
 
     if args.sketch:
         # percentile-sketch tiers ride the same store: day-commit resume,
@@ -207,6 +231,11 @@ def main(argv: list[str] | None = None) -> dict:
             hist_rollup,
         )
 
+        def text_len(cast, *cols):
+            return turns().select(
+                *cols, F.length("text").cast(cast).alias("text_len")
+            )
+
         # bin edges ride the tier manifest: a reader can tell what range
         # the stored sketch was built for (and, with the n_clamped_*
         # columns, whether that range saturated) without re-scanning raw
@@ -216,26 +245,15 @@ def main(argv: list[str] | None = None) -> dict:
             "hist_hi": DEFAULT_HI,
             "hist_bins": DEFAULT_BINS,
         }
-        hist_src = turns.select(
-            "conv_id", "ts", F.length("text").cast("double").alias("text_len")
-        )
-        res = store.write_tier(
-            hist_rollup(hist_src, "1m", value_col="text_len"),
+        commit(
             "hist_1m",
-            run_params=hist_params,
+            lambda: hist_rollup(
+                text_len("double", "conv_id", "ts"), "1m", value_col="text_len"
+            ),
+            input_days,
+            hist_params,
         )
-        metrics["tiers"]["hist_1m"] = {
-            "written_days": len(res["written_days"]),
-            "skipped_days": len(res["skipped_days"]),
-        }
-        stored_h1m = store.read_tier(spark, "hist_1m").drop("day")
-        res = store.write_tier(
-            hist_cascade(stored_h1m, "1h"), "hist_1h", run_params=hist_params
-        )
-        metrics["tiers"]["hist_1h"] = {
-            "written_days": len(res["written_days"]),
-            "skipped_days": len(res["skipped_days"]),
-        }
+        cascade_from("hist_1m", "hist_1h", hist_cascade, "1h", hist_params)
 
         # range-free log-bucket rank sketch tier (second sketch family):
         # tall (key, window, bucket, cnt) rows, merge = groupBy sum, no
@@ -265,41 +283,18 @@ def main(argv: list[str] | None = None) -> dict:
             "lb_sub_bits": LB_SUB_BITS,
             "lb_tier0_policy": "1m" if args.lb_tier0 else "1h+",
         }
-        lb_src = turns.select(
-            "conv_id", "ts", F.length("text").cast("long").alias("text_len")
-        )
+
+        def lb_direct(window):
+            return lb_rollup(
+                text_len("long", "conv_id", "ts"), window, value_col="text_len"
+            )
+
         if args.lb_tier0:
-            res = store.write_tier(
-                lb_rollup(lb_src, "1m", value_col="text_len"),
-                "lb_1m",
-                run_params=lb_params,
-            )
-            metrics["tiers"]["lb_1m"] = {
-                "written_days": len(res["written_days"]),
-                "skipped_days": len(res["skipped_days"]),
-            }
-            stored_lb1m = store.read_tier(spark, "lb_1m").drop("day")
-            res = store.write_tier(
-                lb_cascade(stored_lb1m, "1h"), "lb_1h", run_params=lb_params
-            )
+            commit("lb_1m", lambda: lb_direct("1m"), input_days, lb_params)
+            cascade_from("lb_1m", "lb_1h", lb_cascade, "1h", lb_params)
         else:
-            res = store.write_tier(
-                lb_rollup(lb_src, "1h", value_col="text_len"),
-                "lb_1h",
-                run_params=lb_params,
-            )
-        metrics["tiers"]["lb_1h"] = {
-            "written_days": len(res["written_days"]),
-            "skipped_days": len(res["skipped_days"]),
-        }
-        stored_lb1h = store.read_tier(spark, "lb_1h").drop("day")
-        res = store.write_tier(
-            lb_cascade(stored_lb1h, "1d"), "lb_1d", run_params=lb_params
-        )
-        metrics["tiers"]["lb_1d"] = {
-            "written_days": len(res["written_days"]),
-            "skipped_days": len(res["skipped_days"]),
-        }
+            commit("lb_1h", lambda: lb_direct("1h"), input_days, lb_params)
+        cascade_from("lb_1h", "lb_1d", lb_cascade, "1d", lb_params)
         if args.lb_tier0:
             lb_rows = sum(
                 p["rows"]
@@ -314,13 +309,12 @@ def main(argv: list[str] | None = None) -> dict:
             )
 
         # global distinct-conversation bitmap tier (no series key):
-        # write_tier clusters by day only and reports n_series=1. The
-        # GLOBAL tier sees fleet cardinality, so it uses the TALL
-        # large-m form (m=2^20: load factor < 10% at 1M distincts per
-        # window — the array form's m=1024 saturates silently there),
-        # and m rides the manifest exactly like the hist bin edges so a
-        # reader can derive the load factor / saturation flag from the
-        # stored tier alone.
+        # write_tier clusters by day only. The GLOBAL tier sees fleet
+        # cardinality, so it uses the TALL large-m form (m=2^20: load
+        # factor < 10% at 1M distincts per window — the array form's
+        # m=1024 saturates silently there), and m rides the manifest
+        # exactly like the hist bin edges so a reader can derive the load
+        # factor / saturation flag from the stored tier alone.
         from insar_spark.operators.sketch import (
             DISTINCT_M_GLOBAL,
             distinct_cascade_tall,
@@ -332,27 +326,15 @@ def main(argv: list[str] | None = None) -> dict:
             "distinct_m": DISTINCT_M_GLOBAL,
             "distinct_form": "tall",
         }
-        res = store.write_tier(
-            distinct_rollup_tall(
-                turns.select("conv_id", "ts"), "1m", m=DISTINCT_M_GLOBAL
-            ),
+        commit(
             "dist_1m",
-            run_params=dist_params,
+            lambda: distinct_rollup_tall(
+                turns().select("conv_id", "ts"), "1m", m=DISTINCT_M_GLOBAL
+            ),
+            input_days,
+            dist_params,
         )
-        metrics["tiers"]["dist_1m"] = {
-            "written_days": len(res["written_days"]),
-            "skipped_days": len(res["skipped_days"]),
-        }
-        stored_d1m = store.read_tier(spark, "dist_1m").drop("day")
-        res = store.write_tier(
-            distinct_cascade_tall(stored_d1m, "1h"),
-            "dist_1h",
-            run_params=dist_params,
-        )
-        metrics["tiers"]["dist_1h"] = {
-            "written_days": len(res["written_days"]),
-            "skipped_days": len(res["skipped_days"]),
-        }
+        cascade_from("dist_1m", "dist_1h", distinct_cascade_tall, "1h", dist_params)
 
         # HLL register tier: the UNBOUNDED-cardinality companion to the
         # bitmap — the bitmap is the low-range precision tool (exact bit
@@ -370,23 +352,13 @@ def main(argv: list[str] | None = None) -> dict:
         )
 
         hll_params = {**run_params, "hll_p": HLL_P}
-        res = store.write_tier(
-            hll_rollup(turns.select("conv_id", "ts"), "1m"),
+        commit(
             "hll_1m",
-            run_params=hll_params,
+            lambda: hll_rollup(turns().select("conv_id", "ts"), "1m"),
+            input_days,
+            hll_params,
         )
-        metrics["tiers"]["hll_1m"] = {
-            "written_days": len(res["written_days"]),
-            "skipped_days": len(res["skipped_days"]),
-        }
-        stored_hll1m = store.read_tier(spark, "hll_1m").drop("day")
-        res = store.write_tier(
-            hll_cascade(stored_hll1m, "1h"), "hll_1h", run_params=hll_params
-        )
-        metrics["tiers"]["hll_1h"] = {
-            "written_days": len(res["written_days"]),
-            "skipped_days": len(res["skipped_days"]),
-        }
+        cascade_from("hll_1m", "hll_1h", hll_cascade, "1h", hll_params)
 
         # count-min frequency tier: point-frequency probes (hot-key /
         # mega-conversation detection) from d*w counters per window.
@@ -408,24 +380,13 @@ def main(argv: list[str] | None = None) -> dict:
             "cms_w": CMS_W,
             "cms_seed": CMS_SEED,
         }
-        res = store.write_tier(
-            cms_rollup(turns.select("conv_id", "ts"), "1m"),
+        commit(
             "cms_1m",
-            run_params=cms_params_,
+            lambda: cms_rollup(turns().select("conv_id", "ts"), "1m"),
+            input_days,
+            cms_params_,
         )
-        metrics["tiers"]["cms_1m"] = {
-            "written_days": len(res["written_days"]),
-            "skipped_days": len(res["skipped_days"]),
-        }
-        stored_cms1m = store.read_tier(spark, "cms_1m").drop("day")
-        res = store.write_tier(
-            cms_cascade(stored_cms1m, "1h"), "cms_1h",
-            run_params=cms_params_,
-        )
-        metrics["tiers"]["cms_1h"] = {
-            "written_days": len(res["written_days"]),
-            "skipped_days": len(res["skipped_days"]),
-        }
+        cascade_from("cms_1m", "cms_1h", cms_cascade, "1h", cms_params_)
 
         # KMV distinct-sample tier: the only distinct summary whose
         # stored form also answers set INTERSECTION (bitmap/HLL merge by
@@ -440,24 +401,13 @@ def main(argv: list[str] | None = None) -> dict:
         )
 
         kmv_params = {**run_params, "kmv_k": KMV_K}
-        res = store.write_tier(
-            kmv_rollup(turns.select("conv_id", "ts"), "1m"),
+        commit(
             "kmv_1m",
-            run_params=kmv_params,
+            lambda: kmv_rollup(turns().select("conv_id", "ts"), "1m"),
+            input_days,
+            kmv_params,
         )
-        metrics["tiers"]["kmv_1m"] = {
-            "written_days": len(res["written_days"]),
-            "skipped_days": len(res["skipped_days"]),
-        }
-        stored_kmv1m = store.read_tier(spark, "kmv_1m").drop("day")
-        res = store.write_tier(
-            kmv_cascade(stored_kmv1m, "1h"), "kmv_1h",
-            run_params=kmv_params,
-        )
-        metrics["tiers"]["kmv_1h"] = {
-            "written_days": len(res["written_days"]),
-            "skipped_days": len(res["skipped_days"]),
-        }
+        cascade_from("kmv_1m", "kmv_1h", kmv_cascade, "1h", kmv_params)
 
         # M4 downsample tier: the chart-serving shape (first/min/max/last
         # real points per bucket, downsample.py). Every component
@@ -466,27 +416,16 @@ def main(argv: list[str] | None = None) -> dict:
         # (series, bucket) — tier-0 persistence always cheap.
         from insar_spark.operators.downsample import m4_cascade, m4_downsample
 
-        m4_src = turns.select(
-            "conv_id", "turn_idx", "ts",
-            F.length("text").cast("double").alias("text_len"),
-        )
-        res = store.write_tier(
-            m4_downsample(m4_src, "day", value_col="text_len"),
+        commit(
             "m4_1d",
-            run_params=run_params,
+            lambda: m4_downsample(
+                text_len("double", "conv_id", "turn_idx", "ts"),
+                "day",
+                value_col="text_len",
+            ),
+            input_days,
         )
-        metrics["tiers"]["m4_1d"] = {
-            "written_days": len(res["written_days"]),
-            "skipped_days": len(res["skipped_days"]),
-        }
-        stored_m4_1d = store.read_tier(spark, "m4_1d").drop("day")
-        res = store.write_tier(
-            m4_cascade(stored_m4_1d, "week"), "m4_1w", run_params=run_params
-        )
-        metrics["tiers"]["m4_1w"] = {
-            "written_days": len(res["written_days"]),
-            "skipped_days": len(res["skipped_days"]),
-        }
+        cascade_from("m4_1d", "m4_1w", m4_cascade, "week")
 
     if args.expire_asof:
         for tier in _job_tiers(args):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -47,7 +49,42 @@ def test_manifest_lineage_and_metrics(spark, transcripts, store):
     total = sum(p["rows"] for p in man["partitions"].values())
     assert total == rolled.count()
     for p in man["partitions"].values():
-        assert p["rows"] > 0 and p["n_series"] > 0 and p["snapshot"] == 1
+        assert p["rows"] > 0 and p["w_min"] <= p["w_max"] and p["snapshot"] == 1
+
+
+def test_commit_stats_come_from_footers_and_equal_the_data(spark, transcripts, store):
+    """One-pass commit: each day's manifest rows/w_min/w_max (read from the
+    written files' footers) equal a groupBy(day) over the stored tier. A
+    session writing INT96 timestamps (no footer min/max) is refused before
+    anything is written."""
+    from pyspark.sql import functions as F
+
+    store.write_tier(rollup_turns(transcripts, "1m"), "1m")
+    want = {
+        r["day"]: {"rows": r["rows"], "w_min": r["w_min"], "w_max": r["w_max"]}
+        for r in store.read_tier(spark, "1m")
+        .groupBy("day")
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.min("window_start").cast("string").alias("w_min"),
+            F.max("window_start").cast("string").alias("w_max"),
+        )
+        .collect()
+    }
+    parts = store.manifest("1m")["partitions"]
+    got = {
+        d: {k: p[k] for k in ("rows", "w_min", "w_max")} for d, p in parts.items()
+    }
+    assert got == want and len(got) > 1
+
+    key = "spark.sql.parquet.outputTimestampType"
+    spark.conf.set(key, "INT96")
+    try:
+        with pytest.raises(ValueError, match="TIMESTAMP_MICROS"):
+            store.write_tier(rollup_turns(transcripts, "1h"), "1h")
+    finally:
+        spark.conf.set(key, "TIMESTAMP_MICROS")
+    assert not os.path.exists(store.tier_path("1h"))
 
 
 def test_expire_drops_old_partitions(spark, transcripts, store):

@@ -530,3 +530,101 @@ def test_batch_restate_heals_a_stream_built_store(spark, tmp_path, transcripts):
                                   check_exact=True)
     # stream-built days outside the restate are untouched files
     assert store.manifest("1m")["partitions"][other]["files"] == other_files
+
+
+def _spark_jobs(spark, fn):
+    """Run ``fn``; return its result and the ids of the Spark jobs it
+    launched (job group + status tracker)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _land(path, turns):
+    turns.write.mode("overwrite").parquet(path)
+    return path
+
+
+def test_job_noop_resume_runs_no_spark_job(spark, tmp_path):
+    """A re-run over a landed parquet input with nothing pending decides
+    from the manifests and the input footers alone: zero Spark jobs, with
+    and without --sketch. An input whose ts range spans a day without
+    rows takes the build path for that day, commits nothing and leaves
+    every manifest unchanged."""
+    from pyspark.sql import functions as F
+
+    from insar_spark.sources.catalog import TierStore
+    from insar_spark.synth import synth_transcripts
+
+    turns = synth_transcripts(spark, n_convs=20)
+    src = _land(str(tmp_path / "in"), turns)
+    argv = ["--input", src, "--store", str(tmp_path / "t"), "--master", "local[4]"]
+    first = job_main(argv + ["--sketch"])
+    assert all(t["decided"] == "plan" for t in first["tiers"].values())
+    assert first["tiers"]["1m"]["written_days"] > 2
+    for extra in ([], ["--sketch"]):
+        m, jobs = _spark_jobs(spark, lambda: job_main(argv + extra))
+        assert jobs == [], extra
+        assert len(m["tiers"]) == (17 if extra else 3)
+        for tier, t in m["tiers"].items():
+            assert t["decided"] == "manifest" and t["written_days"] == 0, tier
+            assert t["skipped_days"] == first["tiers"][tier]["written_days"], tier
+            assert t["ms"] >= 0
+        assert m["rolled_up_points"] == first["rolled_up_points"]
+
+    # a day inside the ts range holds no rows: 1m cannot be decided from
+    # the footers, builds, and writes nothing; the cascades skip
+    day = F.date_format("ts", "yyyy-MM-dd")
+    gap = sorted(r[0] for r in turns.select(day).distinct().collect())[1]
+    holed = _land(str(tmp_path / "holed"), turns.filter(day != gap))
+    hargv = ["--input", holed, "--store", str(tmp_path / "h"), "--master", "local[4]"]
+    job_main(hargv)
+    store = TierStore(str(tmp_path / "h"))
+    before = {t: store.manifest(t) for t in ("1m", "1h", "1d")}
+    assert gap not in store.committed_days("1m")
+    m = job_main(hargv)
+    assert m["tiers"]["1m"]["decided"] == "plan"
+    assert m["tiers"]["1h"]["decided"] == m["tiers"]["1d"]["decided"] == "manifest"
+    assert all(t["written_days"] == 0 for t in m["tiers"].values())
+    assert {t: store.manifest(t) for t in ("1m", "1h", "1d")} == before
+
+
+def test_job_rerun_on_expired_store_commits_nothing(spark, tmp_path):
+    """Expired days never come back: a re-run without --expire-asof on an
+    expired store writes no day and runs no Spark job (the 1m expiry
+    floor excludes the expired days). Rolling 1m back to its pre-expire
+    snapshot restores that snapshot's floor (none), so a --restate-day on
+    a rolled-back day refills it."""
+    from insar_spark.sources.catalog import TierStore
+    from insar_spark.synth import synth_transcripts
+
+    src = _land(str(tmp_path / "in"), synth_transcripts(spark, n_convs=40))
+    sp = str(tmp_path / "t")
+    argv = ["--input", src, "--store", sp, "--master", "local[4]", "--snapshot-keep", "5"]
+    m1 = job_main(argv + ["--expire-asof", "2025-01-10"])
+    expired = m1["expired"]["1m"]
+    store = TierStore(sp, snapshot_keep=5)
+    kept = store.committed_days("1m")
+    assert expired and kept and not set(expired) & kept
+    assert store.manifest("1m")["expired_before"] == "2025-01-03"
+    rows = {d: p["rows"] for d, p in store.state_at("1m", 1).items()}
+
+    m2, jobs = _spark_jobs(spark, lambda: job_main(argv))
+    assert jobs == []
+    assert all(t["written_days"] == 0 for t in m2["tiers"].values())
+    assert store.committed_days("1m") == kept
+
+    store.rollback("1m", 1)  # the pre-expire append
+    assert "expired_before" not in store.manifest("1m")
+    assert set(expired) <= store.committed_days("1m")
+    m3 = job_main(argv + ["--restate-day", expired[0]])
+    assert m3["restated"]["1m"] == [expired[0]]
+    assert m3["tiers"]["1m"]["written_days"] == 1
+    assert store.manifest("1m")["partitions"][expired[0]]["rows"] == rows[expired[0]]

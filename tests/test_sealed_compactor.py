@@ -824,3 +824,21 @@ def test_m4_realtime_view_three_layers(spark, tmp_path, transcripts):
     # the live (log) layer really contributes: view covers days past the
     # 1m seal horizon
     assert (g["window_start"].dt.strftime("%Y-%m-%d") >= sb).any()
+
+
+def test_seal_truncates_log_days_below_the_expiry_floor(spark, tmp_path, transcripts):
+    """A log day older than the sealed tier's expiry floor is never sealed
+    (no expired day comes back) and is truncated with the sealed days, so
+    it cannot linger in the real-time view."""
+    store = TierStore(str(tmp_path / "tiers"))
+    rolled = rollup_turns(transcripts, "1m")
+    store.write_tier(rolled, "1m")
+    expired = store.expire("1m", "2025-01-10")  # floor 2025-01-03
+    assert expired
+    kept = store.committed_days("1m")
+    store.write_tier_log(rolled, "1m_log", epoch=0)  # a replay of every day
+    res = seal_and_compact(spark, store, watermark="60 minutes")
+    assert res["written_days"] == []
+    assert store.committed_days("1m") == kept
+    assert set(expired) <= set(res["truncated"])
+    assert all(d >= res["seal_before"] for d in store.committed_days("1m_log"))
