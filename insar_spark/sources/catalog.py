@@ -65,15 +65,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-# tier -> retention horizon in days (None = keep forever); the continuous-
-# aggregate pattern: fine tiers age out, coarse tiers persist. Sketch
-# tiers age like their stats siblings.
+from insar_spark.families import FAMILIES
+
+# tier -> retention horizon in days (None = keep forever), as declared on
+# each tier's family entry in insar_spark.families (the one place that
+# decides it); the continuous-aggregate pattern: fine tiers age out,
+# coarse tiers persist. A tier absent here (the epoch logs) never expires.
 DEFAULT_RETENTION: dict[str, int | None] = {
-    "1m": 7, "1h": 90, "1d": None,
-    "hist_1m": 7, "hist_1h": 90,
-    "lb_1m": 7, "lb_1h": 90, "lb_1d": None,
-    "dist_1m": 7, "dist_1h": 90,
-    "m4_1m": 7, "m4_1d": 90, "m4_1w": None,
+    tier: days
+    for fam in FAMILIES.values()
+    for tier, days in zip(fam.tiers, fam.retention, strict=True)
 }
 
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from insar_spark.families import FAMILIES
 from insar_spark.synth import TRANSCRIPT_SCHEMA
 
 
@@ -529,34 +530,27 @@ def streaming_distinct_by_role_1m(
     )
 
 
-def realtime_1h_view(
-    spark: SparkSession,
-    store,
-    cascade_to_1h,
-    log_keys: tuple[str, ...],
-    log_tier: str,
-    fine_tier: str,
-    coarse_tier: str,
-) -> DataFrame:
+def realtime_1h_view(spark: SparkSession, store, family: str) -> DataFrame:
     """Real-time continuous aggregate ACROSS retention tiers — the
-    TimescaleDB real-time-aggregate pattern, generic over any mergeable
-    tier family: serve "the last 24 h right now" by stitching three
-    layers, coarsest-first:
+    TimescaleDB real-time-aggregate pattern, generic over the tier
+    families of ``insar_spark.families``: serve "the last 24 h right now"
+    by stitching three layers of ``family``, coarsest-first:
 
-      1. committed 1h day partitions (sealed, cascaded, cheap),
-      2. the sealed 1m layer cascaded to 1h on the fly for days the 1h
+      1. committed day partitions of its second tier (1h; M4: 1d),
+      2. the sealed 1m layer cascaded on the fly for days the coarse
          cascade hasn't sealed yet,
       3. the live epoch log (update-mode partials still inside the
-         watermark), latest-epoch-wins, also cascaded to 1h.
+         watermark), latest-epoch-wins, also cascaded.
 
     No double counting: each finer layer is filtered to the days the
     coarser committed tier does NOT cover (day is the seal granularity,
-    so day-level exclusion is exact). Legal mid-window for every family
-    whose merge is associative over partials (sum for plain/hist/lb/cms,
-    max for hll) — the result is bit-equal to a batch 1h rollup over
-    everything that has arrived (stream==batch tested per family). At
-    100 TB the expensive layer (3) is bounded by the watermark horizon;
-    layers 1–2 are stored-tier scans, never raw.
+    so day-level exclusion is exact; for M4's daily tier window_start IS
+    the day). Legal mid-window for every family whose merge is
+    associative over partials (sum for plain/hist/lb/cms, max for hll,
+    composing components for M4) — the result is bit-equal to a batch
+    rollup over everything that has arrived (stream==batch tested per
+    family). At 100 TB the expensive layer (3) is bounded by the
+    watermark horizon; layers 1–2 are stored-tier scans, never raw.
 
     The view is memoized per family in ``store.views`` (the plan only,
     nothing cached): it is rebuilt only when the session, the store root or
@@ -564,30 +558,22 @@ def realtime_1h_view(
     files are immutable and uniquely named, so every commit, seal,
     truncation or expiry changes the key; snapshot ids would not (a store
     recreated or restored at the same root repeats them over new files)."""
-    family = (log_tier, fine_tier, coarse_tier, tuple(log_keys))
+    fam = FAMILIES[family]
+    fine_tier, coarse_tier = fam.tiers[:2]
     state = (spark, store.root) + tuple(
-        store.committed_files(t) for t in (coarse_tier, fine_tier, log_tier)
+        store.committed_files(t) for t in (coarse_tier, fine_tier, fam.log_tier)
     )
     hit = store.views.get(family)
     if hit is not None and hit[0] == state:
         return hit[1]
-    view = _stitch_1h_view(
-        spark, store, cascade_to_1h, log_keys, log_tier, fine_tier, coarse_tier
-    )
+    view = _stitch_1h_view(spark, store, fam)
     store.views[family] = (state, view)
     return view
 
 
-def _stitch_1h_view(
-    spark: SparkSession,
-    store,
-    cascade_to_1h,
-    log_keys: tuple[str, ...],
-    log_tier: str,
-    fine_tier: str,
-    coarse_tier: str,
-) -> DataFrame:
+def _stitch_1h_view(spark: SparkSession, store, fam) -> DataFrame:
     """Build :func:`realtime_1h_view`'s three-layer stitch."""
+    (fine_tier, _), (coarse_tier, window) = fam.chain[:2]
     coarse_days = store.committed_days(coarse_tier)
     try:
         coarse = store.read_tier(spark, coarse_tier).drop("day")
@@ -595,15 +581,15 @@ def _stitch_1h_view(
         coarse = None
     try:
         fine = sealed_union_view(
-            spark, store, log_tier=log_tier, sealed_tier=fine_tier,
-            log_keys=log_keys,
+            spark, store, log_tier=fam.log_tier, sealed_tier=fine_tier,
+            log_keys=fam.log_keys,
         )
-        live = cascade_to_1h(fine)
+        live = fam.cascade(fine, window)
     except ValueError:  # fine layers fully expired/truncated
         live = None
     if coarse is None and live is None:
         raise ValueError(
-            f"none of '{coarse_tier}'/'{fine_tier}'/'{log_tier}' has data"
+            f"none of '{coarse_tier}'/'{fine_tier}'/'{fam.log_tier}' has data"
         )
     if coarse is None:
         return live
@@ -618,36 +604,17 @@ def _stitch_1h_view(
     return coarse.unionByName(live)
 
 
-def stats_realtime_1h_view(
-    spark: SparkSession,
-    store,
-    log_tier: str = "1m_log",
-    fine_tier: str = "1m",
-    coarse_tier: str = "1h",
-) -> DataFrame:
+def stats_realtime_1h_view(spark: SparkSession, store) -> DataFrame:
     """Real-time PLAIN-STATS serve — the flagship tier family through the
     same three-layer stitch the sketch families use: every stat in the
     stats tier is decomposable (sums/counts/min/max/ord-keyed first+last),
     so ``operators.rollup.cascade`` merges sealed 1h days, sealed 1m days
     the 1h cascade hasn't covered, and the live epoch log into a view
     bit-equal to a batch 1h rollup over everything that has arrived."""
-    from insar_spark.operators.rollup import cascade
-
-    return realtime_1h_view(
-        spark, store, lambda fine: cascade(fine, "1h"),
-        ("conv_id", "window_start"),
-        log_tier, fine_tier, coarse_tier,
-    )
+    return realtime_1h_view(spark, store, "stats")
 
 
-def anomaly_realtime_1h(
-    spark: SparkSession,
-    store,
-    log_tier: str = "1m_log",
-    fine_tier: str = "1m",
-    coarse_tier: str = "1h",
-    k_sigma: int | None = None,
-) -> DataFrame:
+def anomaly_realtime_1h(spark: SparkSession, store, k_sigma: int | None = None) -> DataFrame:
     """Hour-of-day anomaly flags over the REAL-TIME stats view — "is this
     hour anomalous for this conversation, including turns that arrived
     seconds ago". The flag math (operators.quality.hod_anomaly_flags) is
@@ -664,109 +631,9 @@ def anomaly_realtime_1h(
         # the real-time and batch alert thresholds (stream == batch holds
         # for default-argument callers by construction)
         k_sigma = K_SIGMA
-    view = stats_realtime_1h_view(
-        spark, store, log_tier=log_tier, fine_tier=fine_tier,
-        coarse_tier=coarse_tier,
-    ).select("conv_id", "window_start", "n_turns")
+    view = stats_realtime_1h_view(spark, store).select("conv_id", "window_start", "n_turns")
     return hod_anomaly_flags(
         view, "n_turns", group_cols=("conv_id",), k_sigma=k_sigma
-    )
-
-
-def lb_realtime_1h_view(
-    spark: SparkSession,
-    store,
-    log_tier: str = "lb_1m_log",
-    fine_tier: str = "lb_1m",
-    coarse_tier: str = "lb_1h",
-) -> DataFrame:
-    """Real-time log-bucket rank-sketch serve: "fleet p99 over the last
-    24 h right now" from sealed 1h + sealed 1m + the live epoch log."""
-    from insar_spark.operators.sketch import lb_cascade
-
-    return realtime_1h_view(
-        spark, store, lambda fine: lb_cascade(fine, "1h"),
-        ("conv_id", "window_start", "bucket"),
-        log_tier, fine_tier, coarse_tier,
-    )
-
-
-def hist_realtime_1h_view(
-    spark: SparkSession,
-    store,
-    log_tier: str = "hist_1m_log",
-    fine_tier: str = "hist_1m",
-    coarse_tier: str = "hist_1h",
-) -> DataFrame:
-    """Real-time histogram-sketch serve (per-bin sums merge across all
-    three layers; clamp counters ride along, so saturation stays
-    visible even on the live edge)."""
-    from insar_spark.operators.sketch import hist_cascade
-
-    return realtime_1h_view(
-        spark, store, lambda fine: hist_cascade(fine, "1h"),
-        ("conv_id", "window_start"),
-        log_tier, fine_tier, coarse_tier,
-    )
-
-
-def hll_realtime_1h_view(
-    spark: SparkSession,
-    store,
-    log_tier: str = "hll_1m_log",
-    fine_tier: str = "hll_1m",
-    coarse_tier: str = "hll_1h",
-) -> DataFrame:
-    """Real-time HLL serve: "active conversations in the last 24 h right
-    now" at fleet cardinality — register max is idempotent, so the live
-    layer merges with no replay special-casing."""
-    from insar_spark.operators.sketch import hll_cascade
-
-    return realtime_1h_view(
-        spark, store, lambda fine: hll_cascade(fine, "1h"),
-        ("window_start", "reg"),
-        log_tier, fine_tier, coarse_tier,
-    )
-
-
-def cms_realtime_1h_view(
-    spark: SparkSession,
-    store,
-    log_tier: str = "cms_1m_log",
-    fine_tier: str = "cms_1m",
-    coarse_tier: str = "cms_1h",
-) -> DataFrame:
-    """Real-time count-min serve: hot-key frequency probes against a view
-    that includes turns still inside the watermark."""
-    from insar_spark.operators.sketch import cms_cascade
-
-    return realtime_1h_view(
-        spark, store, lambda fine: cms_cascade(fine, "1h"),
-        ("window_start", "row_j", "cell"),
-        log_tier, fine_tier, coarse_tier,
-    )
-
-
-def m4_realtime_1d_view(
-    spark: SparkSession,
-    store,
-    log_tier: str = "m4_1m_log",
-    fine_tier: str = "m4_1m",
-    coarse_tier: str = "m4_1d",
-) -> DataFrame:
-    """Real-time M4 chart serve: "today's line chart right now" from
-    sealed daily M4 + sealed 1m M4 + the live epoch log, merged through
-    the exact ``m4_cascade`` (every M4 component composes, and the live
-    update-mode partials are complete current 1m aggregates — so the
-    stitched view is bit-equal to a batch day-M4 over everything that
-    has arrived). Day-level layer exclusion is exact for daily windows
-    because window_start IS the day."""
-    from insar_spark.operators.downsample import m4_cascade
-
-    return realtime_1h_view(
-        spark, store, lambda fine: m4_cascade(fine, "day"),
-        ("conv_id", "window_start"),
-        log_tier, fine_tier, coarse_tier,
     )
 
 

@@ -40,33 +40,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 
-def _job_tiers(args) -> tuple[str, ...]:
-    """Every tier this invocation maintains, given its flags."""
-    return ("1m", "1h", "1d") + (
-        (
-            "hist_1m", "hist_1h", "lb_1h", "lb_1d",
-            "dist_1m", "dist_1h", "hll_1m", "hll_1h",
-            "cms_1m", "cms_1h", "kmv_1m", "kmv_1h",
-            "m4_1d", "m4_1w",
-        )
-        + (("lb_1m",) if args.lb_tier0 else ())
-        if args.sketch
-        else ()
-    )
-
-
-def _partition_day(tier: str, day: str) -> str:
-    """The store partition holding ``day``'s data in ``tier``: the day
-    itself for day-or-finer windows, the containing Monday for the
+def _partition_day(window: str, day: str) -> str:
+    """The store partition holding ``day``'s data in a tier of ``window``:
+    the day itself for day-or-finer windows, the containing Monday for the
     weekly M4 tier (date_trunc('week') semantics)."""
-    if tier != "m4_1w":
+    if window != "week":
         return day
     d = dt.date.fromisoformat(day)
     return (d - dt.timedelta(days=d.weekday())).isoformat()
 
 
 def main(argv: list[str] | None = None) -> dict:
-    from insar_spark.operators.rollup import cascade, rollup_turns
+    from insar_spark.families import enabled
     from insar_spark.session import get_spark
     from insar_spark.sources.catalog import TierStore, footer_days
     from insar_spark.synth import synth_transcripts
@@ -94,8 +79,9 @@ def main(argv: list[str] | None = None) -> dict:
         "--lb-tier0), tall distinct-count bitmap (dist_1m -> dist_1h, "
         "m=2^20), HLL registers (hll_1m -> hll_1h, unbounded "
         "cardinality), count-min frequency (cms_1m -> cms_1h, "
-        "hot-key probes) and KMV distinct samples (kmv_1m -> kmv_1h, "
-        "set intersection). Same TierStore commit/resume/expiry "
+        "hot-key probes), KMV distinct samples (kmv_1m -> kmv_1h, "
+        "set intersection) and the M4 chart downsample (m4_1d -> m4_1w, "
+        "first/min/max/last points). Same TierStore commit/resume/expiry "
         "semantics; every cascade reads the STORED finer tier",
     )
     p.add_argument(
@@ -121,8 +107,8 @@ def main(argv: list[str] | None = None) -> dict:
         "invalidation analog). The drop is a snapshot, not a mutation: "
         "with --snapshot-keep N the pre-restate numbers stay readable "
         "via read_tier(as_of=...) and rollback-able. Covers the tiers "
-        "THIS job maintains; stream-only tiers (m4_1m, *_1m_log) must "
-        "be restated by stream_job. Repeatable",
+        "THIS job maintains; stream-only tiers (m4_1m, lb_1m without "
+        "--lb-tier0, *_1m_log) have no restate path. Repeatable",
     )
     p.add_argument(
         "--snapshot-keep",
@@ -171,7 +157,7 @@ def main(argv: list[str] | None = None) -> dict:
 
     input_days = None if args.input.startswith("synth:") else footer_days(args.input)
 
-    def commit(tier, build, days, params=run_params):
+    def commit(tier, build, days, params):
         """One tier step: skip it from the manifest when ``days`` (the
         days its source holds; None = unknown) has none pending, else
         build the plan and commit it."""
@@ -190,14 +176,23 @@ def main(argv: list[str] | None = None) -> dict:
             "decided": decided,
         }
 
-    def cascade_from(source, tier, fn, window, params=run_params):
+    def cascade_from(source, tier, fn, window, params):
         """Commit ``tier`` as ``fn`` over the STORED ``source`` tier; its
         days are the source's committed days."""
         def build():
             return fn(store.read_tier(spark, source).drop("day"), window)
 
-        days = {_partition_day(tier, d) for d in store.committed_days(source)}
+        days = {_partition_day(window, d) for d in store.committed_days(source)}
         commit(tier, build, days, params)
+
+    def first_tier(fam):
+        # --lb-tier0 opts the lb family into persisting its finest tier
+        return fam.tiers[0] if fam.name == "lb" and args.lb_tier0 else fam.batch_from
+
+    families = enabled(args.sketch)
+    job_tiers = [
+        link for fam in families for link in fam.chain[fam.tiers.index(first_tier(fam)):]
+    ]
 
     if args.restate_days:
         # Invalidation first, rebuild via the normal flow below: dropping
@@ -207,228 +202,33 @@ def main(argv: list[str] | None = None) -> dict:
         # the full input — the write is day-pruned, the scan is not; a
         # backfill-only deployment would pass a day-filtered --input.
         metrics["restated"] = {}
-        for tier in _job_tiers(args):
-            days = sorted({_partition_day(tier, d) for d in args.restate_days})
+        for tier, window in job_tiers:
+            days = sorted({_partition_day(window, d) for d in args.restate_days})
             hit = store.drop_partitions(tier, days, op="restate")
             if hit:
                 metrics["restated"][tier] = hit
 
-    # tier 0: the only raw scan; cascades read the STORED finer tier (60x+
-    # smaller than raw)
-    commit("1m", lambda: rollup_turns(turns(), "1m"), input_days)
-    cascade_from("1m", "1h", cascade, "1h")
-    cascade_from("1h", "1d", cascade, "1d")
+    # each family: its first tier is the only raw scan; cascades read the
+    # STORED finer tier (60x+ smaller than raw) — the merges being
+    # associative is what makes "cascade from storage" legal
+    for fam in families:
+        first = first_tier(fam)
+        params = {**run_params, **fam.params()}
+        if fam.name == "lb":
+            params["lb_tier0_policy"] = "1m" if args.lb_tier0 else "1h+"
+        commit(first, lambda: fam.tier0(turns(), dict(fam.chain)[first]), input_days, params)
+        for source, tier, window in fam.cascades(first):
+            cascade_from(source, tier, fam.cascade, window, params)
 
-    if args.sketch:
-        # percentile-sketch tiers ride the same store: day-commit resume,
-        # manifest lineage, expiry — the bitmap/histogram merge being
-        # associative is what makes "cascade from storage" legal here too
-        from insar_spark.operators.sketch import (
-            DEFAULT_BINS,
-            DEFAULT_HI,
-            DEFAULT_LO,
-            hist_cascade,
-            hist_rollup,
+    if args.sketch and args.lb_tier0:
+        lb_rows, hist_rows = (
+            sum(p["rows"] for p in store.manifest(t)["partitions"].values())
+            for t in ("lb_1m", "hist_1m")
         )
-
-        def text_len(cast, *cols):
-            return turns().select(
-                *cols, F.length("text").cast(cast).alias("text_len")
-            )
-
-        # bin edges ride the tier manifest: a reader can tell what range
-        # the stored sketch was built for (and, with the n_clamped_*
-        # columns, whether that range saturated) without re-scanning raw
-        hist_params = {
-            **run_params,
-            "hist_lo": DEFAULT_LO,
-            "hist_hi": DEFAULT_HI,
-            "hist_bins": DEFAULT_BINS,
-        }
-        commit(
-            "hist_1m",
-            lambda: hist_rollup(
-                text_len("double", "conv_id", "ts"), "1m", value_col="text_len"
-            ),
-            input_days,
-            hist_params,
-        )
-        cascade_from("hist_1m", "hist_1h", hist_cascade, "1h", hist_params)
-
-        # range-free log-bucket rank sketch tier (second sketch family):
-        # tall (key, window, bucket, cnt) rows, merge = groupBy sum, no
-        # [lo,hi) assumption so nothing ever clamps/saturates.
-        #
-        # STORE POLICY (round-5): the tall sketch barely collapses sparse
-        # series at 1m granularity — measured 1.57x the hist tier's row
-        # count on the sparse synth corpus, i.e. a tier-0 sketch
-        # comparable to the raw table, which defeats the "cascade reads
-        # stored tiers, never raw" rule. So the PERSISTED lb family
-        # starts at 1h (a direct 1h rollup — pytest-proven identical to
-        # cascading a transient 1m sketch) and cascades 1h -> 1d from
-        # storage. --lb-tier0 opts into persisting the 1m sketch too
-        # (dense-window deployments); the job then records the measured
-        # lb_1m/hist_1m row ratio in its metrics so the operator can see
-        # whether the opt-in was justified. The STREAMING path still
-        # seals 1m lb partials — that layer is the bounded (7-day
-        # retention) real-time serve window, not long-term tier storage.
-        from insar_spark.operators.sketch import (
-            LB_SUB_BITS,
-            lb_cascade,
-            lb_rollup,
-        )
-
-        lb_params = {
-            **run_params,
-            "lb_sub_bits": LB_SUB_BITS,
-            "lb_tier0_policy": "1m" if args.lb_tier0 else "1h+",
-        }
-
-        def lb_direct(window):
-            return lb_rollup(
-                text_len("long", "conv_id", "ts"), window, value_col="text_len"
-            )
-
-        if args.lb_tier0:
-            commit("lb_1m", lambda: lb_direct("1m"), input_days, lb_params)
-            cascade_from("lb_1m", "lb_1h", lb_cascade, "1h", lb_params)
-        else:
-            commit("lb_1h", lambda: lb_direct("1h"), input_days, lb_params)
-        cascade_from("lb_1h", "lb_1d", lb_cascade, "1d", lb_params)
-        if args.lb_tier0:
-            lb_rows = sum(
-                p["rows"]
-                for p in store.manifest("lb_1m")["partitions"].values()
-            )
-            hist_rows = sum(
-                p["rows"]
-                for p in store.manifest("hist_1m")["partitions"].values()
-            )
-            metrics["lb_tier0_rows_ratio"] = (
-                round(lb_rows / hist_rows, 3) if hist_rows else None
-            )
-
-        # global distinct-conversation bitmap tier (no series key):
-        # write_tier clusters by day only. The GLOBAL tier sees fleet
-        # cardinality, so it uses the TALL large-m form (m=2^20: load
-        # factor < 10% at 1M distincts per window — the array form's
-        # m=1024 saturates silently there), and m rides the manifest
-        # exactly like the hist bin edges so a reader can derive the load
-        # factor / saturation flag from the stored tier alone.
-        from insar_spark.operators.sketch import (
-            DISTINCT_M_GLOBAL,
-            distinct_cascade_tall,
-            distinct_rollup_tall,
-        )
-
-        dist_params = {
-            **run_params,
-            "distinct_m": DISTINCT_M_GLOBAL,
-            "distinct_form": "tall",
-        }
-        commit(
-            "dist_1m",
-            lambda: distinct_rollup_tall(
-                turns().select("conv_id", "ts"), "1m", m=DISTINCT_M_GLOBAL
-            ),
-            input_days,
-            dist_params,
-        )
-        cascade_from("dist_1m", "dist_1h", distinct_cascade_tall, "1h", dist_params)
-
-        # HLL register tier: the UNBOUNDED-cardinality companion to the
-        # bitmap — the bitmap is the low-range precision tool (exact bit
-        # count below its load-factor ceiling), HLL the fleet-scale one
-        # (~3% error flat forever; max-merge is idempotent so replays
-        # are free). Global tier at 1m is bounded at 2^p rows per window
-        # regardless of traffic, so tier-0 persistence is always cheap —
-        # no lb-style store policy needed. p rides the manifest like the
-        # hist edges / distinct m, so readers derive the register count
-        # (and LC-regime cutoff) from the stored tier alone.
-        from insar_spark.operators.sketch import (
-            HLL_P,
-            hll_cascade,
-            hll_rollup,
-        )
-
-        hll_params = {**run_params, "hll_p": HLL_P}
-        commit(
-            "hll_1m",
-            lambda: hll_rollup(turns().select("conv_id", "ts"), "1m"),
-            input_days,
-            hll_params,
-        )
-        cascade_from("hll_1m", "hll_1h", hll_cascade, "1h", hll_params)
-
-        # count-min frequency tier: point-frequency probes (hot-key /
-        # mega-conversation detection) from d*w counters per window.
-        # Bounded like HLL (<= d*w rows/window regardless of traffic),
-        # so tier-0 persistence is always cheap; sum-merge cascades.
-        # d/w/seed ride the manifest so probes recompute the SAME
-        # universal-hash cells the stored tier was built with.
-        from insar_spark.operators.sketch import (
-            CMS_D,
-            CMS_SEED,
-            CMS_W,
-            cms_cascade,
-            cms_rollup,
-        )
-
-        cms_params_ = {
-            **run_params,
-            "cms_d": CMS_D,
-            "cms_w": CMS_W,
-            "cms_seed": CMS_SEED,
-        }
-        commit(
-            "cms_1m",
-            lambda: cms_rollup(turns().select("conv_id", "ts"), "1m"),
-            input_days,
-            cms_params_,
-        )
-        cascade_from("cms_1m", "cms_1h", cms_cascade, "1h", cms_params_)
-
-        # KMV distinct-sample tier: the only distinct summary whose
-        # stored form also answers set INTERSECTION (bitmap/HLL merge by
-        # union only). One array row of <= k hashes per window, so
-        # tier-0 persistence is always cheap; the cascade is
-        # union-and-retake (== direct build, tested). k rides the
-        # manifest so intersection readers know the sample contract.
-        from insar_spark.operators.sketch import (
-            KMV_K,
-            kmv_cascade,
-            kmv_rollup,
-        )
-
-        kmv_params = {**run_params, "kmv_k": KMV_K}
-        commit(
-            "kmv_1m",
-            lambda: kmv_rollup(turns().select("conv_id", "ts"), "1m"),
-            input_days,
-            kmv_params,
-        )
-        cascade_from("kmv_1m", "kmv_1h", kmv_cascade, "1h", kmv_params)
-
-        # M4 downsample tier: the chart-serving shape (first/min/max/last
-        # real points per bucket, downsample.py). Every component
-        # composes exactly, so the weekly tier cascades from the STORED
-        # daily tier (== direct weekly build, tested). One row per
-        # (series, bucket) — tier-0 persistence always cheap.
-        from insar_spark.operators.downsample import m4_cascade, m4_downsample
-
-        commit(
-            "m4_1d",
-            lambda: m4_downsample(
-                text_len("double", "conv_id", "turn_idx", "ts"),
-                "day",
-                value_col="text_len",
-            ),
-            input_days,
-        )
-        cascade_from("m4_1d", "m4_1w", m4_cascade, "week")
+        metrics["lb_tier0_rows_ratio"] = round(lb_rows / hist_rows, 3) if hist_rows else None
 
     if args.expire_asof:
-        for tier in _job_tiers(args):
+        for tier, _ in job_tiers:
             metrics["expired"][tier] = store.expire(tier, args.expire_asof)
 
     wall = time.perf_counter() - t0

@@ -9,14 +9,14 @@ Usage (sandbox, synthesized drop):
     python jobs/stream_job.py --input synth:200 --store /tmp/tiers \
         --checkpoint /tmp/ckpt --drain
 
-Flow — one CYCLE is:
+Flow — one CYCLE is, per streaming tier family (``insar_spark.families``):
   file-source stream -> watermarked 1m tumbling rollup -> epoch-tagged
   commits into the ``1m_log`` tier (update mode, exactly-once via the
   snapshot manifest) -> stream STOPPED -> ``seal_and_compact``: days the
   watermark has finalized move into ordinary committed ``1m`` partitions
-  and are truncated from the log -> the 1h and 1d continuous aggregates
-  cascade from the STORED finer tier for the newly sealed horizon
-  (exact re-aggregation of decomposable stats; idempotent day-resume).
+  and are truncated from the log -> the coarser continuous aggregates
+  (stats: 1h, 1d) cascade from the STORED finer tier for the newly sealed
+  horizon (exact re-aggregation of mergeable summaries; idempotent day-resume).
 
 The seal only ever runs against a quiesced stream: epoch commits
 (foreachBatch) and the seal's truncate-commit do read-modify-write on the
@@ -49,231 +49,48 @@ def run_cycle(
     spark, store, src: str, checkpoint: str, watermark: str,
     sketch: bool = False,
 ) -> dict:
-    """One quiesced ingest+seal+cascade cycle: drain available files, stop
-    the query, seal watermark-finalized days from the epoch log into the
-    committed 1m tier, then maintain the coarser continuous aggregates —
-    1h and 1d cascade from the STORED finer tier (never raw turns), with
-    write_tier's day-resume skip making every step idempotent. No epoch
-    commit can interleave with any manifest read-modify-write (the stream
-    is stopped first)."""
-    from insar_spark.operators.rollup import cascade
-    from insar_spark.streaming.rollup_stream import (
-        seal_and_compact,
-        stream_to_tierstore,
-    )
+    """One quiesced ingest+seal+cascade cycle per streaming family (stats,
+    plus the streaming sketch families with ``sketch``): drain available
+    files into the family's epoch log, stop the query, seal
+    watermark-finalized days into its 1m tier, then cascade its coarser
+    tiers from the STORED finer tier (never raw turns), idempotent by
+    write_tier's day-resume skip. No epoch commit can interleave with any
+    manifest read-modify-write (the stream is stopped first). Returns the
+    stats seal dict plus ``families[name]``: each family's seal dict with
+    ``cascaded`` days per tier and wall ``ms``."""
+    from insar_spark.families import enabled
+    from insar_spark.streaming import rollup_stream as rs
 
-    q = stream_to_tierstore(
-        spark, src, store, checkpoint_dir=checkpoint,
-        watermark=watermark, tier="1m_log",
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    seal = seal_and_compact(
-        spark, store, log_tier="1m_log", sealed_tier="1m",
-        watermark=watermark,
-    )
-    # a sealed 1m day is final (watermark passed), so its 1h/1d windows
-    # are final too — cascade them under the same seal horizon
-    seal["cascaded"] = {}
-    if seal["written_days"]:
-        params = {"source": "stream_cycle_cascade"}
-        stored_1m = store.read_tier(spark, "1m").drop("day")
-        r1h = store.write_tier(
-            cascade(stored_1m, "1h"), "1h",
-            run_params=params, seal_before=seal["seal_before"],
-        )
-        stored_1h = store.read_tier(spark, "1h").drop("day")
-        r1d = store.write_tier(
-            cascade(stored_1h, "1d"), "1d",
-            run_params=params, seal_before=seal["seal_before"],
-        )
-        seal["cascaded"] = {
-            "1h": r1h["written_days"], "1d": r1d["written_days"]
-        }
-
-    if sketch:
-        # the histogram-sketch tier rides the identical quiesced
-        # ingest -> epoch-log -> seal -> cascade machinery (its own
-        # checkpoint; same manifest idempotency)
-        from insar_spark.operators.sketch import (
-            DEFAULT_BINS,
-            DEFAULT_HI,
-            DEFAULT_LO,
-            hist_cascade,
-        )
-        from insar_spark.streaming.rollup_stream import streaming_hist_1m
-
-        qh = stream_to_tierstore(
-            spark, src, store, checkpoint_dir=checkpoint + "_hist",
-            watermark=watermark, tier="hist_1m_log",
-            rollup_builder=streaming_hist_1m,
+    families = {}
+    for fam in (f for f in enabled(sketch) if f.stream_to):
+        t0 = time.perf_counter()
+        ckpt = checkpoint if fam.name == "stats" else f"{checkpoint}_{fam.name}"
+        q = rs.stream_to_tierstore(
+            spark, src, store, checkpoint_dir=ckpt, watermark=watermark,
+            tier=fam.log_tier, rollup_builder=fam.stream_1m,
         )
         try:
-            qh.processAllAvailable()
+            q.processAllAvailable()
         finally:
-            qh.stop()
-        hseal = seal_and_compact(
-            spark, store, log_tier="hist_1m_log", sealed_tier="hist_1m",
-            watermark=watermark,
+            q.stop()
+        seal = rs.seal_and_compact(
+            spark, store, log_tier=fam.log_tier, sealed_tier=fam.tiers[0],
+            watermark=watermark, log_keys=fam.log_keys,
         )
-        hseal["cascaded"] = {}
-        if hseal["written_days"]:
-            stored_h = store.read_tier(spark, "hist_1m").drop("day")
-            rh = store.write_tier(
-                hist_cascade(stored_h, "1h"), "hist_1h",
-                run_params={
-                    "source": "stream_cycle_cascade",
-                    "hist_lo": DEFAULT_LO,
-                    "hist_hi": DEFAULT_HI,
-                    "hist_bins": DEFAULT_BINS,
-                },
-                seal_before=hseal["seal_before"],
-            )
-            hseal["cascaded"]["hist_1h"] = rh["written_days"]
-        seal["sketch"] = hseal
-
-        # the log-bucket rank sketch streams through the same cycle; its
-        # tall rows need the bucket column in the epoch-log key
-        from insar_spark.operators.sketch import LB_SUB_BITS, lb_cascade
-        from insar_spark.streaming.rollup_stream import streaming_lb_1m
-
-        ql = stream_to_tierstore(
-            spark, src, store, checkpoint_dir=checkpoint + "_lb",
-            watermark=watermark, tier="lb_1m_log",
-            rollup_builder=streaming_lb_1m,
-        )
-        try:
-            ql.processAllAvailable()
-        finally:
-            ql.stop()
-        lseal = seal_and_compact(
-            spark, store, log_tier="lb_1m_log", sealed_tier="lb_1m",
-            watermark=watermark,
-            log_keys=("conv_id", "window_start", "bucket"),
-        )
-        lseal["cascaded"] = {}
-        if lseal["written_days"]:
-            stored_lb = store.read_tier(spark, "lb_1m").drop("day")
-            rl = store.write_tier(
-                lb_cascade(stored_lb, "1h"), "lb_1h",
-                run_params={
-                    "source": "stream_cycle_cascade",
-                    "lb_sub_bits": LB_SUB_BITS,
-                },
-                seal_before=lseal["seal_before"],
-            )
-            lseal["cascaded"]["lb_1h"] = rl["written_days"]
-        seal["sketch_lb"] = lseal
-
-        # the HLL register tier (unbounded distinct counts) seals with
-        # (window, reg) log keys; its max-merge is idempotent, so
-        # latest-epoch-wins IS the merge — no replay special-casing
-        from insar_spark.operators.sketch import HLL_P, hll_cascade
-        from insar_spark.streaming.rollup_stream import streaming_hll_1m
-
-        qh2 = stream_to_tierstore(
-            spark, src, store, checkpoint_dir=checkpoint + "_hll",
-            watermark=watermark, tier="hll_1m_log",
-            rollup_builder=streaming_hll_1m,
-        )
-        try:
-            qh2.processAllAvailable()
-        finally:
-            qh2.stop()
-        hllseal = seal_and_compact(
-            spark, store, log_tier="hll_1m_log", sealed_tier="hll_1m",
-            watermark=watermark, log_keys=("window_start", "reg"),
-        )
-        hllseal["cascaded"] = {}
-        if hllseal["written_days"]:
-            stored_hll = store.read_tier(spark, "hll_1m").drop("day")
-            rhll = store.write_tier(
-                hll_cascade(stored_hll, "1h"), "hll_1h",
-                run_params={
-                    "source": "stream_cycle_cascade",
-                    "hll_p": HLL_P,
-                },
-                seal_before=hllseal["seal_before"],
-            )
-            hllseal["cascaded"]["hll_1h"] = rhll["written_days"]
-        seal["sketch_hll"] = hllseal
-
-        # the count-min frequency tier seals with (window, row, cell)
-        # log keys; state is bounded at d*w rows per window no matter
-        # the traffic, and the sum-merge cascade is the same shape as
-        # the lb tier's
-        from insar_spark.operators.sketch import (
-            CMS_D,
-            CMS_SEED,
-            CMS_W,
-            cms_cascade,
-        )
-        from insar_spark.streaming.rollup_stream import streaming_cms_1m
-
-        qc = stream_to_tierstore(
-            spark, src, store, checkpoint_dir=checkpoint + "_cms",
-            watermark=watermark, tier="cms_1m_log",
-            rollup_builder=streaming_cms_1m,
-        )
-        try:
-            qc.processAllAvailable()
-        finally:
-            qc.stop()
-        cms_params_ = {
-            "source": "stream_cycle_cascade",
-            "cms_d": CMS_D,
-            "cms_w": CMS_W,
-            "cms_seed": CMS_SEED,
-        }
-        cmsseal = seal_and_compact(
-            spark, store, log_tier="cms_1m_log", sealed_tier="cms_1m",
-            watermark=watermark,
-            log_keys=("window_start", "row_j", "cell"),
-        )
-        cmsseal["cascaded"] = {}
-        if cmsseal["written_days"]:
-            stored_cms = store.read_tier(spark, "cms_1m").drop("day")
-            rcms = store.write_tier(
-                cms_cascade(stored_cms, "1h"), "cms_1h",
-                run_params=cms_params_,
-                seal_before=cmsseal["seal_before"],
-            )
-            cmsseal["cascaded"]["cms_1h"] = rcms["written_days"]
-        seal["sketch_cms"] = cmsseal
-
-        # the M4 downsample tier: its min_by/max_by components are plain
-        # incremental aggregates and every component composes across
-        # buckets, so the live 1m layer seals and cascades into the
-        # daily chart-serving tier with no custom state
-        from insar_spark.operators.downsample import m4_cascade
-        from insar_spark.streaming.rollup_stream import streaming_m4_1m
-
-        qm = stream_to_tierstore(
-            spark, src, store, checkpoint_dir=checkpoint + "_m4",
-            watermark=watermark, tier="m4_1m_log",
-            rollup_builder=streaming_m4_1m,
-        )
-        try:
-            qm.processAllAvailable()
-        finally:
-            qm.stop()
-        m4seal = seal_and_compact(
-            spark, store, log_tier="m4_1m_log", sealed_tier="m4_1m",
-            watermark=watermark, log_keys=("conv_id", "window_start"),
-        )
-        m4seal["cascaded"] = {}
-        if m4seal["written_days"]:
-            stored_m4 = store.read_tier(spark, "m4_1m").drop("day")
-            rm4 = store.write_tier(
-                m4_cascade(stored_m4, "day"), "m4_1d",
-                run_params={"source": "stream_cycle_cascade"},
-                seal_before=m4seal["seal_before"],
-            )
-            m4seal["cascaded"]["m4_1d"] = rm4["written_days"]
-        seal["sketch_m4"] = m4seal
-    return seal
+        # a sealed day is final (watermark passed), so its coarser windows
+        # are final too — cascade them under the same seal horizon
+        seal["cascaded"] = {}
+        if seal["written_days"]:
+            params = {"source": "stream_cycle_cascade", **fam.params()}
+            for source, tier, window in fam.cascades(fam.tiers[0], fam.stream_to):
+                res = store.write_tier(
+                    fam.cascade(store.read_tier(spark, source).drop("day"), window),
+                    tier, run_params=params, seal_before=seal["seal_before"],
+                )
+                seal["cascaded"][tier] = res["written_days"]
+        seal["ms"] = round(1000 * (time.perf_counter() - t0), 1)
+        families[fam.name] = seal
+    return {**families["stats"], "families": families}
 
 
 def main(argv: list[str] | None = None) -> dict:
@@ -294,8 +111,9 @@ def main(argv: list[str] | None = None) -> dict:
     p.add_argument("--max-cycles", type=int, default=0,
                    help="stop after N cycles (0 = until interrupted)")
     p.add_argument("--sketch", action="store_true",
-                   help="also stream-maintain the histogram-sketch tiers "
-                   "(hist_1m_log -> seal -> hist_1m -> cascade hist_1h)")
+                   help="also stream-maintain every streaming sketch family "
+                   "(<f>_1m_log -> seal <f>_1m -> cascade; checkpoint <checkpoint>_<f>): "
+                   "hist, lb, hll, cms (-> <f>_1h) and m4 (-> m4_1d)")
     p.add_argument("--size-watermark", metavar="ARRIVAL_COL", default=None,
                    help="before streaming, profile the drop's lateness "
                    "distribution ordered by ARRIVAL_COL (the ingest "
@@ -353,29 +171,15 @@ def main(argv: list[str] | None = None) -> dict:
             "cascaded_1h_days": len(seal["cascaded"].get("1h", [])),
             "cascaded_1d_days": len(seal["cascaded"].get("1d", [])),
             "wall_sec": round(time.perf_counter() - t0, 3),
+            "families": {
+                name: {
+                    "sealed_days": len(f["written_days"]),
+                    "cascaded": {t: len(d) for t, d in f["cascaded"].items()},
+                    "ms": f["ms"],
+                }
+                for name, f in seal["families"].items()
+            },
         }
-        if args.sketch:
-            metrics["sealed_hist_days"] = len(seal["sketch"]["written_days"])
-            metrics["cascaded_hist_1h_days"] = len(
-                seal["sketch"]["cascaded"].get("hist_1h", [])
-            )
-            metrics["sealed_lb_days"] = len(seal["sketch_lb"]["written_days"])
-            metrics["sealed_hll_days"] = len(
-                seal["sketch_hll"]["written_days"]
-            )
-            metrics["cascaded_hll_1h_days"] = len(
-                seal["sketch_hll"]["cascaded"].get("hll_1h", [])
-            )
-            metrics["sealed_cms_days"] = len(
-                seal["sketch_cms"]["written_days"]
-            )
-            metrics["cascaded_cms_1h_days"] = len(
-                seal["sketch_cms"]["cascaded"].get("cms_1h", [])
-            )
-            metrics["sealed_m4_days"] = len(seal["sketch_m4"]["written_days"])
-            metrics["cascaded_m4_1d_days"] = len(
-                seal["sketch_m4"]["cascaded"].get("m4_1d", [])
-            )
         metrics.update(wm_metrics)
         print(json.dumps(metrics), flush=True)
         if args.drain or (args.max_cycles and cycle >= args.max_cycles):

@@ -628,3 +628,32 @@ def test_job_rerun_on_expired_store_commits_nothing(spark, tmp_path):
     assert m3["restated"]["1m"] == [expired[0]]
     assert m3["tiers"]["1m"]["written_days"] == 1
     assert store.manifest("1m")["partitions"][expired[0]]["rows"] == rows[expired[0]]
+
+
+def test_job_sketch_tiers_expire_at_their_family_horizons(spark, tmp_path):
+    """Every sketch family declares its tiers' retention: hll/cms/kmv 1m
+    days expire at the 1m horizon (7 days) with the stats 1m days, and
+    their 1h days stay until the 1h horizon (90 days)."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from insar_spark.sources.catalog import TierStore
+    from insar_spark.synth import synth_transcripts
+
+    turns = synth_transcripts(spark, n_convs=20)
+    last = turns.agg(F.max("ts")).first()[0].date()
+    src = _land(str(tmp_path / "in"), turns)
+    sp = str(tmp_path / "t")
+    argv = ["--input", src, "--store", sp, "--master", "local[4]", "--sketch"]
+    m1 = job_main(argv + ["--expire-asof", (last + dt.timedelta(days=8)).isoformat()])
+    days = m1["expired"]["1m"]
+    assert days and max(days) == last.isoformat()
+    store = TierStore(sp)
+    m2 = job_main(argv + ["--expire-asof", "2030-01-01"])
+    for fam in ("hll", "cms", "kmv"):
+        assert m1["expired"][f"{fam}_1m"] == days, fam
+        assert store.committed_days(f"{fam}_1m") == set(), fam
+        assert m1["expired"][f"{fam}_1h"] == [], fam
+        assert m2["expired"][f"{fam}_1h"] == days, fam
+        assert store.committed_days(f"{fam}_1h") == set(), fam

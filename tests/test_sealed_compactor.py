@@ -186,13 +186,13 @@ def test_stream_cycle_sketch_tier_seals_and_matches_batch(spark, tmp_path, trans
     ckpt = str(tmp_path / "ckpt_sk")
 
     s1 = run_cycle(spark, store, src, ckpt, watermark="60 minutes", sketch=True)
-    hseal = s1["sketch"]
+    hseal = s1["families"]["hist"]
     assert len(hseal["written_days"]) > 0
     assert hseal["cascaded"]["hist_1h"]
-    assert len(s1["sketch_lb"]["written_days"]) > 0
-    assert s1["sketch_lb"]["cascaded"]["lb_1h"]
-    assert len(s1["sketch_m4"]["written_days"]) > 0
-    assert s1["sketch_m4"]["cascaded"]["m4_1d"]
+    assert len(s1["families"]["lb"]["written_days"]) > 0
+    assert s1["families"]["lb"]["cascaded"]["lb_1h"]
+    assert len(s1["families"]["m4"]["written_days"]) > 0
+    assert s1["families"]["m4"]["cascaded"]["m4_1d"]
 
     sealed = (
         store.read_tier(spark, "hist_1m")
@@ -241,7 +241,7 @@ def test_stream_cycle_sketch_tier_seals_and_matches_batch(spark, tmp_path, trans
         m4_direct.withColumn(
             "day", F.date_format("window_start", "yyyy-MM-dd")
         )
-        .filter(F.col("day") < s1["sketch_m4"]["seal_before"])
+        .filter(F.col("day") < s1["families"]["m4"]["seal_before"])
         .drop("day")
         .toPandas()
         .sort_values(["conv_id", "window_start"])
@@ -253,9 +253,9 @@ def test_stream_cycle_sketch_tier_seals_and_matches_batch(spark, tmp_path, trans
     )
 
     s2 = run_cycle(spark, store, src, ckpt, watermark="60 minutes", sketch=True)
-    assert len(s2["sketch"]["written_days"]) == 0
-    assert len(s2["sketch_lb"]["written_days"]) == 0
-    assert len(s2["sketch_m4"]["written_days"]) == 0
+    assert len(s2["families"]["hist"]["written_days"]) == 0
+    assert len(s2["families"]["lb"]["written_days"]) == 0
+    assert len(s2["families"]["m4"]["written_days"]) == 0
 
 
 def test_stream_seal_global_distinct_tier(spark, tmp_path, transcripts):
@@ -426,7 +426,7 @@ def test_lb_realtime_view_stitches_three_tiers(spark, tmp_path, transcripts):
         lb_rollup,
     )
     from insar_spark.streaming.rollup_stream import (
-        lb_realtime_1h_view,
+        realtime_1h_view,
         seal_and_compact,
         stream_to_tierstore,
         streaming_lb_1m,
@@ -466,7 +466,7 @@ def test_lb_realtime_view_stitches_three_tiers(spark, tmp_path, transcripts):
     mid_days = {d for d in store.committed_days("lb_1m")} - coarse_days
     assert coarse_days and mid_days  # both stored layers contribute
 
-    view = lb_realtime_1h_view(spark, store)
+    view = realtime_1h_view(spark, store, "lb")
     got = (
         view.toPandas()
         .sort_values(["conv_id", "window_start", "bucket"])
@@ -702,7 +702,7 @@ def test_hll_realtime_view_three_layers(spark, tmp_path, transcripts):
 
     from insar_spark.operators.sketch import hll_cascade, hll_rollup
     from insar_spark.streaming.rollup_stream import (
-        hll_realtime_1h_view,
+        realtime_1h_view,
         seal_and_compact,
         stream_to_tierstore,
         streaming_hll_1m,
@@ -738,7 +738,7 @@ def test_hll_realtime_view_three_layers(spark, tmp_path, transcripts):
     mid_days = set(store.committed_days("hll_1m")) - coarse_days
     assert coarse_days and mid_days  # both stored layers contribute
 
-    view = hll_realtime_1h_view(spark, store)
+    view = realtime_1h_view(spark, store, "hll")
     key = ["window_start", "reg", "max_rho"]
     got = {tuple(r) for r in view.select(*key).collect()}
     batch = {
@@ -763,7 +763,7 @@ def test_m4_realtime_view_three_layers(spark, tmp_path, transcripts):
 
     from insar_spark.operators.downsample import m4_cascade, m4_downsample
     from insar_spark.streaming.rollup_stream import (
-        m4_realtime_1d_view,
+        realtime_1h_view,
         seal_and_compact,
         stream_to_tierstore,
         streaming_m4_1m,
@@ -799,7 +799,7 @@ def test_m4_realtime_view_three_layers(spark, tmp_path, transcripts):
     mid_days = set(store.committed_days("m4_1m")) - coarse_days
     assert coarse_days and mid_days  # both stored layers contribute
 
-    view = m4_realtime_1d_view(spark, store)
+    view = realtime_1h_view(spark, store, "m4")
     batch = m4_downsample(
         transcripts.select(
             "conv_id", "turn_idx", "ts",
