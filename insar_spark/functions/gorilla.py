@@ -288,17 +288,6 @@ def decode_timestamps(data: bytes) -> np.ndarray:
     """Inverse of :func:`encode_timestamps` — buffered-accumulator reader
     (refills 64 bits at a time; array-identical to the reference decoder,
     parity-pinned)."""
-    blob = int.from_bytes(data, "big")
-    total = len(data) * 8
-    # acc-on-demand: keep the whole blob as one int, track remaining bits;
-    # reading k bits = shift/mask on a SMALL window int pulled per refill
-    pos = 0
-
-    def read(bits: int) -> int:
-        nonlocal pos
-        pos += bits
-        return (blob >> (total - pos)) & ((1 << bits) - 1)
-
     # big-int right shifts on the whole blob are O(words); for long blobs
     # walk via a word list + local accumulator instead
     if len(data) > 512:
@@ -310,7 +299,7 @@ def decode_timestamps(data: bytes) -> np.ndarray:
         acc = 0
         acc_bits = 0
 
-        def read(bits: int) -> int:  # noqa: F811 — fast path
+        def read(bits: int) -> int:
             nonlocal wi, acc, acc_bits
             while acc_bits < bits:
                 acc = (acc << 64) | words[wi]
@@ -362,6 +351,17 @@ def decode_timestamps(data: bytes) -> np.ndarray:
             cur = _to_i64((cur + delta) & _M64)
             res[i] = cur
         return np.array(res, dtype=np.int64)
+
+    # short blobs: keep the whole blob as one int, track the bits read;
+    # reading k bits = one shift/mask
+    blob = int.from_bytes(data, "big")
+    total = len(data) * 8
+    pos = 0
+
+    def read(bits: int) -> int:
+        nonlocal pos
+        pos += bits
+        return (blob >> (total - pos)) & ((1 << bits) - 1)
 
     n = read(32)
     out = np.empty(n, dtype=np.int64)

@@ -160,6 +160,27 @@ def footer_days(path: str, column: str = "ts") -> list[str] | None:
     return [(first + dt.timedelta(days=i)).isoformat() for i in range(n + 1)]
 
 
+def _of_days(parts: dict, days) -> dict:
+    """Manifest ``parts`` (day -> entry) of ``days`` only; all when None."""
+    if days is None:
+        return parts
+    days = set(days)
+    return {d: p for d, p in parts.items() if d in days}
+
+
+def latest_epoch(df: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+    """Latest-epoch-wins: per window identity ``keys``, the row with the
+    highest ``_epoch``; the ``_epoch`` column is dropped."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys).orderBy(F.desc("_epoch"))
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_epoch")
+    )
+
+
 class SnapshotExpiredError(LookupError):
     """The snapshot existed but its state (or data files) were vacuumed
     past the ``snapshot_keep`` horizon — time travel to it is gone."""
@@ -549,19 +570,13 @@ class TierStore:
         spark: SparkSession,
         tier: str,
         keys: tuple[str, ...] = ("conv_id", "window_start"),
+        days=None,
     ) -> DataFrame:
-        """Latest-epoch-wins view over a log-mode tier. ``keys`` is the
-        window identity — (conv_id, window_start) for per-series tiers,
-        ("window_start",) for global ones (e.g. the distinct bitmap)."""
-        from pyspark.sql import Window
-
-        df = self.read_tier(spark, tier)
-        w = Window.partitionBy(*keys).orderBy(F.desc("_epoch"))
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_epoch")
-        )
+        """Latest-epoch-wins view over a log-mode tier (of ``days`` only,
+        when given; see ``read_tier``). ``keys`` is the window identity —
+        (conv_id, window_start) for per-series tiers, ("window_start",) for
+        global ones (e.g. the distinct bitmap)."""
+        return latest_epoch(self.read_tier(spark, tier, days=days), keys)
 
     def write_tier(
         self,
@@ -649,7 +664,11 @@ class TierStore:
     # -------------------------------------------------------------- read
 
     def read_tier(
-        self, spark: SparkSession, tier: str, as_of: int | None = None
+        self,
+        spark: SparkSession,
+        tier: str,
+        as_of: int | None = None,
+        days=None,
     ) -> DataFrame:
         """Scan only the files committed in the manifest — or, with
         ``as_of=<snapshot id>``, the files of that PAST snapshot's state
@@ -657,10 +676,17 @@ class TierStore:
         store's ``snapshot_keep`` horizon, else ``SnapshotExpiredError``).
         Orphan files from a crashed write are invisible either way.
 
+        ``days`` (any iterable of ``YYYY-MM-DD``) prunes the scan to those
+        days' committed files, decided from the manifest: the files of
+        other days are never opened. None of them committed raises the
+        same ``ValueError`` as an empty tier.
+
         Builds the DataFrame without a Spark job: the schema comes from the
         manifest and the explicit file list is stat'ed on the driver."""
         man = self.manifest(tier)
-        parts = man["partitions"] if as_of is None else self.state_at(tier, as_of)
+        parts = _of_days(
+            man["partitions"] if as_of is None else self.state_at(tier, as_of), days
+        )
         if not parts:
             raise ValueError(
                 f"tier '{tier}' has no committed partitions "
@@ -680,24 +706,48 @@ class TierStore:
         schema = StructType.fromJson(json.loads(man["schema"]))
         return reader.schema(schema).parquet(*paths)
 
+    def day_files(self, tier: str, days=None) -> list[str]:
+        """Absolute paths of the committed files of ``days`` (default:
+        every committed day). A legacy entry without a file list stands for
+        its directory's data files, as a read of the directory sees them."""
+        parts = _of_days(self.manifest(tier)["partitions"], days)
+        out = []
+        for rel in self._part_paths(tier, parts):
+            path = os.path.join(self.root, rel)
+            if os.path.isdir(path):
+                out.extend(
+                    os.path.join(path, n)
+                    for n in sorted(os.listdir(path))
+                    if not _hidden(n)
+                )
+            else:
+                out.append(path)
+        return out
+
     def tier_bytes(self, tier: str) -> int:
         """On-disk bytes of the tier's committed files — the footprint
         number store policies compare (row counts mislead across tier
         shapes: a tall lb row is ~30 B, a 64-bin hist array row ~530 B).
         Missing files (concurrent vacuum) count as 0."""
-        man = self.manifest(tier)
         total = 0
-        for d, part in man["partitions"].items():
-            day_dir = self.tier_path(tier, d)
-            names = part.get("files") or (
-                os.listdir(day_dir) if os.path.isdir(day_dir) else []
-            )
-            for n in names:
-                try:
-                    total += os.path.getsize(os.path.join(day_dir, n))
-                except OSError:
-                    pass
+        for p in self.day_files(tier):
+            try:
+                total += os.path.getsize(p)
+            except OSError:
+                pass
         return total
+
+    def tier_rows(self, tier: str, days=None) -> int:
+        """Rows of the tier's committed days (of ``days`` only, when
+        given), without a Spark job: the count a commit recorded in the
+        manifest, else (an epoch log's days) the files' Parquet footers,
+        read on the driver."""
+        parts = _of_days(self.manifest(tier)["partitions"], days)
+        counted = {d: p["rows"] for d, p in parts.items() if p.get("rows") is not None}
+        return sum(counted.values()) + sum(
+            pq.read_metadata(f).num_rows
+            for f in self.day_files(tier, set(parts) - set(counted))
+        )
 
     # --------------------------------------------------- retention / compact
 

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from insar_spark.families import FAMILIES
+from insar_spark.sources.catalog import footer_range, latest_epoch
 from insar_spark.synth import TRANSCRIPT_SCHEMA
 
 
@@ -188,6 +189,14 @@ def seal_and_compact(
     sealed days from the log (manifest-first, vacuumed after commit),
     together with any log day below the sealed tier's expiry floor.
 
+    The max observed window comes from the Parquet footers of the latest
+    log day's files (on the driver; a log row's day is its window's day);
+    only files without statistics fall back to one ``max`` job over that
+    day's raw log. The days due are decided from the manifests
+    (``pending_days`` of the log days before the horizon), and only their
+    log files are read; with no day due the seal builds no plan, so it
+    launches no Spark job (the truncation still runs).
+
     Returns {"seal_before": day, "written_days": [...], "truncated": [...]}.
     """
     import datetime as dt
@@ -197,24 +206,34 @@ def seal_and_compact(
     qty, unit = watermark.split()
     delta = dt.timedelta(**{unit.rstrip("s") + "s": float(qty)})
 
-    try:
-        raw = store.read_tier(spark, log_tier)
-    except ValueError:  # nothing committed to the log yet
-        return {"seal_before": None, "written_days": [], "truncated": []}
-    # latest-epoch-wins only drops superseded rows of the same window, so
-    # the raw log has the same max window without the dedup shuffle
-    mx = raw.agg(F.max("window_start").alias("m")).first()["m"]
+    nothing = {"seal_before": None, "written_days": [], "truncated": []}
+    log_days = store.committed_days(log_tier)
+    if not log_days:  # nothing committed to the log yet
+        return nothing
+    # a log row's day is its window's day: the latest day holds the max
+    last = [max(log_days)]
+    rng = footer_range(store.day_files(log_tier, last), "window_start")
+    if rng is not None:
+        mx = rng[2]
+    else:
+        # latest-epoch-wins only drops superseded rows of the same window,
+        # so the raw log has the same max window without the dedup shuffle
+        raw = store.read_tier(spark, log_tier, days=last)
+        mx = raw.agg(F.max("window_start").alias("m")).first()["m"]
     if mx is None:
-        return {"seal_before": None, "written_days": [], "truncated": []}
+        return nothing
     seal_before = (mx - delta).date().isoformat()
 
-    final = store.read_tier_log(spark, log_tier, keys=log_keys).drop("day")
-    res = store.write_tier(
-        final,
-        sealed_tier,
-        run_params={"source": "seal_compact", "log_tier": log_tier},
-        seal_before=seal_before,
-    )
+    written = []
+    due = store.pending_days(sealed_tier, [d for d in log_days if d < seal_before])
+    if due:
+        final = store.read_tier_log(spark, log_tier, keys=log_keys, days=due)
+        written = store.write_tier(
+            final.drop("day"),
+            sealed_tier,
+            run_params={"source": "seal_compact", "log_tier": log_tier},
+            seal_before=seal_before,
+        )["written_days"]
     truncated = []
     if truncate_log:
         # log days below the sealed tier's expiry floor are never sealed
@@ -223,15 +242,27 @@ def seal_and_compact(
         floor = sealed.get("expired_before", "")
         sealed_days = sorted(
             d
-            for d in store.committed_days(log_tier)
+            for d in log_days
             if d < floor or (d < seal_before and d in sealed["partitions"])
         )
         truncated = store.drop_partitions(log_tier, sealed_days, op="seal-truncate")
     return {
         "seal_before": seal_before,
-        "written_days": res["written_days"],
+        "written_days": written,
         "truncated": truncated,
     }
+
+
+# Live-layer rows up to which sealed_union_view runs latest-epoch-wins and
+# the cascade in one task instead of behind one exchange. The cost is the
+# rows' sort, so the rule counts rows, not bytes (a stored hll row is ~1 B,
+# a stats row ~35 B). Measured with tools/live_split.py on 4 cores, median
+# wall ms one task / exchange: an unfiltered stats read 322/395 at 56k live
+# rows, 431/392 at 112k, 2589/1054 at 881k; an unfiltered hll read breaks
+# even between 439k and 878k rows; a conv_id-filtered stats read is within
+# 40 ms either way from 28k to 1.76M rows. One task uses less CPU
+# throughout; past the cutoff the exchange wins on wall time.
+ONE_TASK_ROWS = 100_000
 
 
 def sealed_union_view(
@@ -240,32 +271,54 @@ def sealed_union_view(
     log_tier: str = "1m_log",
     sealed_tier: str = "1m",
     log_keys: tuple[str, ...] = ("conv_id", "window_start"),
+    exclude=(),
 ) -> DataFrame:
     """The continuous-aggregate read path: committed sealed days plus the
-    latest-epoch-wins view of the still-open log days (minus any sealed
-    days not yet truncated from the log — no double counting)."""
-    sealed_days = store.committed_days(sealed_tier)
-    try:
-        live = store.read_tier_log(spark, log_tier, keys=log_keys).drop("day")
-    except ValueError:
-        live = None
-    try:
-        sealed = store.read_tier(spark, sealed_tier).drop("day")
-    except ValueError:
-        sealed = None
-    if sealed is None and live is None:
-        raise ValueError(
-            f"neither '{sealed_tier}' nor '{log_tier}' has committed data"
-        )
-    if sealed is None:
-        return live
-    if live is None:
-        return sealed
+    latest-epoch-wins view of the still-open log days.
+
+    Each layer reads only the days it alone contributes, decided from the
+    manifests: sealed = the sealed tier's days minus ``exclude`` (the days
+    a coarser tier already covers), log = the log's days minus the sealed
+    tier's days and ``exclude`` (sealed days not yet truncated from the
+    log are never read twice). Sealed rows join the one latest-epoch-wins
+    with the sentinel ``_epoch = -1``; the day sets are disjoint, so it
+    never competes with a real epoch.
+
+    One-task rule: when the two layers hold at most ``ONE_TASK_ROWS``
+    rows (``TierStore.tier_rows``: manifest counts, footers for log days),
+    the union is coalesced to one partition, which satisfies the
+    latest-epoch-wins window and any aggregate above it (a cascade) with
+    no exchange. Otherwise it is repartitioned once on the log keys minus
+    ``window_start`` (a global tier keyed by the window alone: on
+    ``window_start``), the one exchange both operators use.
+    Raises ``ValueError`` when neither layer has a day to contribute."""
+    exclude = set(exclude)
+    sealed_days = store.committed_days(sealed_tier) - exclude
+    log_days = store.committed_days(log_tier) - exclude - sealed_days
+    layers = []
     if sealed_days:
-        live = live.filter(
-            ~F.date_format("window_start", "yyyy-MM-dd").isin(sorted(sealed_days))
+        layers.append(
+            store.read_tier(spark, sealed_tier, days=sealed_days)
+            .withColumn("_epoch", F.lit(-1))
         )
-    return sealed.unionByName(live)
+    if log_days:
+        layers.append(store.read_tier(spark, log_tier, days=log_days))
+    if not layers:
+        raise ValueError(
+            f"neither '{sealed_tier}' nor '{log_tier}' has a committed day "
+            f"outside the {len(exclude)} excluded"
+        )
+    live = layers[0] if len(layers) == 1 else layers[0].unionByName(layers[1])
+    rows = store.tier_rows(sealed_tier, sealed_days) + store.tier_rows(
+        log_tier, log_days
+    )
+    if rows <= ONE_TASK_ROWS:
+        live = live.coalesce(1)
+    else:
+        live = live.repartition(
+            *([k for k in log_keys if k != "window_start"] or log_keys)
+        )
+    return latest_epoch(live, log_keys).drop("day")
 
 
 def stateful_cumulative_reconstruction(turns: DataFrame) -> DataFrame:
@@ -542,22 +595,31 @@ def realtime_1h_view(spark: SparkSession, store, family: str) -> DataFrame:
       3. the live epoch log (update-mode partials still inside the
          watermark), latest-epoch-wins, also cascaded.
 
-    No double counting: each finer layer is filtered to the days the
-    coarser committed tier does NOT cover (day is the seal granularity,
-    so day-level exclusion is exact; for M4's daily tier window_start IS
-    the day). Legal mid-window for every family whose merge is
-    associative over partials (sum for plain/hist/lb/cms, max for hll,
-    composing components for M4) — the result is bit-equal to a batch
-    rollup over everything that has arrived (stream==batch tested per
-    family). At 100 TB the expensive layer (3) is bounded by the
-    watermark horizon; layers 1–2 are stored-tier scans, never raw.
+    No double counting, decided from the manifests before anything is
+    read: each finer layer opens only the day files of days no coarser
+    committed tier covers (day is the seal granularity, so day-level
+    exclusion is exact; for M4's daily tier window_start IS the day).
+    Layers 2-3 are one :func:`sealed_union_view` (sealed rows enter its
+    latest-epoch-wins with the sentinel epoch -1): when they hold at most
+    ``ONE_TASK_ROWS`` rows they run latest-epoch-wins and the cascade in
+    one partition with no exchange, else behind one shared exchange; a
+    per-conversation filtered read of such a store is one Spark job.
+    Legal mid-window
+    for every family whose merge is associative over partials (sum for
+    plain/hist/lb/cms, max for hll, composing components for M4) — the
+    result is bit-equal to a batch rollup over everything that has arrived
+    (stream==batch tested per family). At 100 TB the expensive layer (3)
+    is bounded by the watermark horizon; layers 1–2 are stored-tier scans,
+    never raw.
 
     The view is memoized per family in ``store.views`` (the plan only,
     nothing cached): it is rebuilt only when the session, the store root or
     the committed file list of one of the three tiers changed. Committed
     files are immutable and uniquely named, so every commit, seal,
-    truncation or expiry changes the key; snapshot ids would not (a store
-    recreated or restored at the same root repeats them over new files)."""
+    truncation or expiry changes the key, and the day sets and row counts
+    the plan was built from derive from those lists; snapshot ids would
+    not (a store recreated or restored at the same root repeats them over
+    new files)."""
     fam = FAMILIES[family]
     fine_tier, coarse_tier = fam.tiers[:2]
     state = (spark, store.root) + tuple(
@@ -576,32 +638,21 @@ def _stitch_1h_view(spark: SparkSession, store, fam) -> DataFrame:
     (fine_tier, _), (coarse_tier, window) = fam.chain[:2]
     coarse_days = store.committed_days(coarse_tier)
     try:
-        coarse = store.read_tier(spark, coarse_tier).drop("day")
-    except ValueError:
-        coarse = None
-    try:
         fine = sealed_union_view(
             spark, store, log_tier=fam.log_tier, sealed_tier=fine_tier,
-            log_keys=fam.log_keys,
+            log_keys=fam.log_keys, exclude=coarse_days,
         )
         live = fam.cascade(fine, window)
-    except ValueError:  # fine layers fully expired/truncated
+    except ValueError:  # no fine day outside the coarse tier
         live = None
-    if coarse is None and live is None:
-        raise ValueError(
-            f"none of '{coarse_tier}'/'{fine_tier}'/'{fam.log_tier}' has data"
-        )
-    if coarse is None:
-        return live
-    if live is None:
-        return coarse
-    if coarse_days:
-        live = live.filter(
-            ~F.date_format("window_start", "yyyy-MM-dd").isin(
-                sorted(coarse_days)
+    if not coarse_days:
+        if live is None:
+            raise ValueError(
+                f"none of '{coarse_tier}'/'{fine_tier}'/'{fam.log_tier}' has data"
             )
-        )
-    return coarse.unionByName(live)
+        return live
+    coarse = store.read_tier(spark, coarse_tier).drop("day")
+    return coarse if live is None else coarse.unionByName(live)
 
 
 def stats_realtime_1h_view(spark: SparkSession, store) -> DataFrame:

@@ -216,6 +216,51 @@ def test_read_empty_tier_raises_clearly(spark, store):
         store.read_tier(spark, "1h")
 
 
+def test_read_tier_days_scans_only_those_days(spark, store, spark_jobs):
+    """``read_tier(days=...)`` opens only the committed files of those days,
+    decided from the manifest (no Spark job to build it); days with no
+    commit among them raise like an empty tier. ``read_tier_log`` and
+    ``tier_rows`` (manifest counts; footers for log days) prune the same
+    way."""
+    from pyspark.sql import functions as F
+
+    rolled = spark.range(6).select(
+        F.format_string("c%02d", (F.col("id") % 2).cast("int")).alias("conv_id"),
+        F.timestamp_seconds(F.lit(1704067200) + F.col("id") * 86400).alias(
+            "window_start"
+        ),
+        F.col("id").alias("n_turns"),
+    )
+    store.write_tier(rolled, "1h")
+    store.write_tier_log(rolled, "1m_log", epoch=0)
+    store.write_tier_log(rolled.withColumn("n_turns", F.col("n_turns") + 10), "1m_log", epoch=1)
+    days = sorted(store.committed_days("1h"))
+    pick = {days[1], days[4], "1999-01-01"}
+
+    (df, log, rows), jobs = spark_jobs(
+        lambda: (
+            store.read_tier(spark, "1h", days=pick),
+            store.read_tier_log(spark, "1m_log", days=pick),
+            [store.tier_rows(t, d) for t in ("1h", "1m_log") for d in (pick, None)],
+        )
+    )
+    assert jobs == []
+
+    want = {days[1], days[4]}
+    assert {p.split("day=")[1].split("/")[0] for p in df.inputFiles()} == want
+    assert {r["day"] for r in df.select("day").distinct().collect()} == want
+    assert sorted(r["n_turns"] for r in df.collect()) == [1, 4]
+    assert sorted(r["n_turns"] for r in log.collect()) == [11, 14]
+    assert rows == [2, 6, 4, 12]
+    assert store.tier_bytes("1h") == sum(
+        os.path.getsize(p) for p in store.day_files("1h")
+    ) > sum(os.path.getsize(p) for p in store.day_files("1h", want))
+    with pytest.raises(ValueError, match="no committed partitions"):
+        store.read_tier(spark, "1h", days=["1999-01-01"])
+    with pytest.raises(ValueError, match="no committed partitions"):
+        store.read_tier(spark, "1h", days=[])
+
+
 def test_compact_is_side_by_side_and_size_targeted(spark, transcripts, store):
     import os
 

@@ -532,27 +532,12 @@ def test_batch_restate_heals_a_stream_built_store(spark, tmp_path, transcripts):
     assert store.manifest("1m")["partitions"][other]["files"] == other_files
 
 
-def _spark_jobs(spark, fn):
-    """Run ``fn``; return its result and the ids of the Spark jobs it
-    launched (job group + status tracker)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "counted")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _land(path, turns):
     turns.write.mode("overwrite").parquet(path)
     return path
 
 
-def test_job_noop_resume_runs_no_spark_job(spark, tmp_path):
+def test_job_noop_resume_runs_no_spark_job(spark, tmp_path, spark_jobs):
     """A re-run over a landed parquet input with nothing pending decides
     from the manifests and the input footers alone: zero Spark jobs, with
     and without --sketch. An input whose ts range spans a day without
@@ -570,7 +555,7 @@ def test_job_noop_resume_runs_no_spark_job(spark, tmp_path):
     assert all(t["decided"] == "plan" for t in first["tiers"].values())
     assert first["tiers"]["1m"]["written_days"] > 2
     for extra in ([], ["--sketch"]):
-        m, jobs = _spark_jobs(spark, lambda: job_main(argv + extra))
+        m, jobs = spark_jobs(lambda: job_main(argv + extra))
         assert jobs == [], extra
         assert len(m["tiers"]) == (17 if extra else 3)
         for tier, t in m["tiers"].items():
@@ -596,7 +581,7 @@ def test_job_noop_resume_runs_no_spark_job(spark, tmp_path):
     assert {t: store.manifest(t) for t in ("1m", "1h", "1d")} == before
 
 
-def test_job_rerun_on_expired_store_commits_nothing(spark, tmp_path):
+def test_job_rerun_on_expired_store_commits_nothing(spark, tmp_path, spark_jobs):
     """Expired days never come back: a re-run without --expire-asof on an
     expired store writes no day and runs no Spark job (the 1m expiry
     floor excludes the expired days). Rolling 1m back to its pre-expire
@@ -616,7 +601,7 @@ def test_job_rerun_on_expired_store_commits_nothing(spark, tmp_path):
     assert store.manifest("1m")["expired_before"] == "2025-01-03"
     rows = {d: p["rows"] for d, p in store.state_at("1m", 1).items()}
 
-    m2, jobs = _spark_jobs(spark, lambda: job_main(argv))
+    m2, jobs = spark_jobs(lambda: job_main(argv))
     assert jobs == []
     assert all(t["written_days"] == 0 for t in m2["tiers"].values())
     assert store.committed_days("1m") == kept

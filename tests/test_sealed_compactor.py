@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -697,10 +698,27 @@ def test_hll_realtime_view_three_layers(spark, tmp_path, transcripts):
     live epoch log — with all THREE layers genuinely populated — is
     register-for-register equal to a batch 1h HLL over every turn that
     has arrived (max-merge is idempotent, so the stitch needs no replay
-    special-casing)."""
+    special-casing). The live layer is within ``ONE_TASK_ROWS``, so the
+    view takes no exchange."""
+    _check_hll_realtime_view(spark, tmp_path, transcripts, None)
+
+
+def test_hll_realtime_view_three_layers_with_exchange(
+    spark, tmp_path, transcripts, monkeypatch
+):
+    """The same three-layer HLL view with ``ONE_TASK_ROWS`` below the live
+    layer's rows: the live layer takes one exchange on ``reg`` (HLL has
+    no ``conv_id``) and the registers are unchanged."""
+    _check_hll_realtime_view(spark, tmp_path, transcripts, monkeypatch)
+
+
+def _check_hll_realtime_view(spark, tmp_path, transcripts, monkeypatch):
+    """``monkeypatch`` given: run with ``ONE_TASK_ROWS`` at half the live
+    layer's rows (the exchange branch)."""
     import datetime as dt
 
     from insar_spark.operators.sketch import hll_cascade, hll_rollup
+    from insar_spark.streaming import rollup_stream
     from insar_spark.streaming.rollup_stream import (
         realtime_1h_view,
         seal_and_compact,
@@ -738,9 +756,18 @@ def test_hll_realtime_view_three_layers(spark, tmp_path, transcripts):
     mid_days = set(store.committed_days("hll_1m")) - coarse_days
     assert coarse_days and mid_days  # both stored layers contribute
 
+    from insar_spark.plans.inspect import audit
+
+    open_days = store.committed_days("hll_1m_log") - store.committed_days("hll_1m")
+    live = store.tier_rows("hll_1m", mid_days) + store.tier_rows("hll_1m_log", open_days)
+    if monkeypatch is None:
+        assert live <= rollup_stream.ONE_TASK_ROWS
+    else:
+        monkeypatch.setattr(rollup_stream, "ONE_TASK_ROWS", live // 2)
     view = realtime_1h_view(spark, store, "hll")
     key = ["window_start", "reg", "max_rho"]
     got = {tuple(r) for r in view.select(*key).collect()}
+    assert audit(view).n_exchanges == (monkeypatch is not None)
     batch = {
         tuple(r)
         for r in hll_rollup(transcripts.select("conv_id", "ts"), "1h")
@@ -842,3 +869,130 @@ def test_seal_truncates_log_days_below_the_expiry_floor(spark, tmp_path, transcr
     assert store.committed_days("1m") == kept
     assert set(expired) <= set(res["truncated"])
     assert all(d >= res["seal_before"] for d in store.committed_days("1m_log"))
+
+
+def _manifests(store):
+    import glob
+    import os
+
+    return {
+        p: open(p).read()
+        for p in glob.glob(os.path.join(store.root, "_snapshots", "*.json"))
+    }
+
+
+def test_seal_with_no_day_due_runs_no_spark_job(spark, tmp_path, transcripts, spark_jobs):
+    """The seal horizon comes from the log files' footers and the days due
+    from the manifests: a seal with nothing to commit launches no Spark
+    job, whether its days are already sealed but not truncated or not yet
+    past the horizon."""
+    store = TierStore(str(tmp_path / "tiers"))
+    store.write_tier_log(rollup_turns(transcripts, "1m"), "1m_log", epoch=0)
+    first = seal_and_compact(spark, store, watermark="60 minutes", truncate_log=False)
+    assert first["written_days"] and first["truncated"] == []
+    sealed = store.manifest("1m")
+
+    # sealed days still in the log: truncated, nothing re-sealed
+    second, jobs = spark_jobs(
+        lambda: seal_and_compact(spark, store, watermark="60 minutes")
+    )
+    assert jobs == []
+    assert second["seal_before"] == first["seal_before"]
+    assert second["written_days"] == []
+    assert second["truncated"] == first["written_days"]
+    assert store.manifest("1m") == sealed
+
+    # only open days left: no day due, no manifest changes
+    before = _manifests(store)
+    third, jobs = spark_jobs(
+        lambda: seal_and_compact(spark, store, watermark="60 minutes")
+    )
+    assert jobs == []
+    assert third == {**second, "truncated": []}
+    assert _manifests(store) == before
+
+
+@pytest.mark.parametrize("split", ["one", "exchange"])
+def test_realtime_read_is_one_job_over_contributing_files(
+    spark, tmp_path, transcripts, spark_jobs, monkeypatch, split
+):
+    """A per-conversation real-time read over all three layers — committed
+    1h days, a sealed 1m day not yet cascaded, and an open log day whose 1m
+    windows two epochs refine — opens only the files of the days each
+    layer contributes and equals a batch 1h rollup. Its live layer is
+    within ``ONE_TASK_ROWS``, so the read is one Spark job with no
+    exchange; with ``ONE_TASK_ROWS`` below the live layer's rows it takes
+    one exchange instead, with the same rows."""
+    import os
+
+    from insar_spark.operators.rollup import cascade
+    from insar_spark.streaming import rollup_stream
+    from insar_spark.plans.inspect import audit
+    from insar_spark.streaming.rollup_stream import stats_realtime_1h_view
+
+    # four busy days: two committed to 1h, one sealed in 1m only, one open
+    turns = transcripts.filter(F.col("ts") < "2025-01-05")
+    store = TierStore(str(tmp_path / "tiers"))
+    day = F.date_format("ts", "yyyy-MM-dd")
+    days = sorted(r[0] for r in turns.select(day).distinct().collect())
+    fine_day, open_day = days[-2:]
+    store.write_tier(rollup_turns(turns, "1m"), "1m", seal_before=open_day)
+    store.write_tier(
+        cascade(store.read_tier(spark, "1m").drop("day"), "1h"), "1h",
+        seal_before=fine_day,
+    )
+    # epoch 0 holds half the turns of every day (log days a seal has not
+    # truncated yet); epoch 1 refines the open day's windows to all turns
+    half = rollup_turns(turns.filter(F.col("turn_idx") % 2 == 0), "1m")
+    full = rollup_turns(turns.filter(day == open_day), "1m")
+    store.write_tier_log(half, "1m_log", epoch=0)
+    store.write_tier_log(full, "1m_log", epoch=1)
+    refined = half.alias("h").join(full.alias("f"), ["conv_id", "window_start"])
+    assert refined.filter(F.col("h.n_turns") != F.col("f.n_turns")).count() > 0
+    coarse_days = store.committed_days("1h")
+    assert len(coarse_days) == 2 and fine_day not in coarse_days
+    assert store.committed_days("1m") == coarse_days | {fine_day}
+
+    # the conversation with turns on the fine and the open day and the
+    # most coarse days
+    on = lambda d: F.col("conv_id").isin(  # noqa: E731
+        [r[0] for r in turns.filter(day == d).select("conv_id").distinct().collect()]
+    )
+    conv, n_days = (
+        turns.filter(on(fine_day) & on(open_day))
+        .groupBy("conv_id").agg(F.countDistinct(day).alias("n"))
+        .orderBy(F.desc("n"), "conv_id").first()
+    )
+    assert n_days > 2
+
+    live = store.tier_rows("1m", [fine_day]) + store.tier_rows("1m_log", [open_day])
+    if split == "one":
+        assert live <= rollup_stream.ONE_TASK_ROWS
+    else:
+        monkeypatch.setattr(rollup_stream, "ONE_TASK_ROWS", live // 2)
+
+    def read():
+        view = stats_realtime_1h_view(spark, store)
+        return view, view.filter(F.col("conv_id") == conv).collect()
+
+    (view, rows), jobs = spark_jobs(read)
+    exchanges = audit(view).n_exchanges
+
+    if split == "one":
+        assert len(jobs) == 1 and exchanges == 0
+    else:
+        assert exchanges == 1
+    for path in view.inputFiles():
+        tier, d = (p.split("=", 1)[1] for p in path.split(os.sep)[-3:-1])
+        assert tier == "1h" or d not in coarse_days, path
+        assert tier != "1m_log" or d == open_day, path
+
+    got = pd.DataFrame([r.asDict() for r in rows])
+    want = rollup_turns(turns, "1h").filter(F.col("conv_id") == conv).toPandas()
+    cols = list(want.columns)
+    assert len(got) == len(want) > 0
+    pd.testing.assert_frame_equal(
+        got[cols].sort_values("window_start").reset_index(drop=True),
+        want.sort_values("window_start").reset_index(drop=True),
+        check_exact=True,
+    )
