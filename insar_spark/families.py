@@ -20,6 +20,9 @@ re-aggregates a STORED finer tier into the next coarser one, never raw.
 * ``params`` — extras every commit records in its manifest
   ``run_params``, so a reader knows what a stored sketch was built with.
 * ``retention`` — each chain tier's horizon in days (None = forever).
+* file period (``file_period``, one rule for every family) — the calendar
+  span one data file of a tier covers: a day for the chain's first tier,
+  a UTC calendar month for every later tier.
 
 Entries look engine functions up as module attributes when they run (no
 ``operators``/``streaming`` import here), so a wrapper installed on a
@@ -28,6 +31,7 @@ module attribute, such as a tracer's, is the one called.
 
 from __future__ import annotations
 
+import datetime as dt
 import importlib
 from dataclasses import dataclass
 from typing import Callable
@@ -224,3 +228,57 @@ def enabled(sketch: bool) -> list[Family]:
     """The families a job maintains: stats, plus every other family with
     ``--sketch``."""
     return [f for f in FAMILIES.values() if sketch or f.name == "stats"]
+
+
+# The file period of each chain tier. A chain's first tier (``*1m``, 7-day
+# retention, sealed and committed once a day, ingest's largest write) keeps
+# one file per day; every later tier stores one ``(conv_id, window_start)``-
+# sorted file per UTC calendar month, so a read of a coarse tier opens one
+# file per month, not one per day. The epoch logs and any tier outside the
+# families keep day files. Measured with tools/coarse_periods.py (seed 4242,
+# 4 cores), median filtered stats_realtime_1h_view read in cpu-ms / wall ms:
+# a 28-day 1h tier as 28 day files 530/202, 4 ISO-week files 420/168, 1
+# month file 350/152; a 90-day tier as 90 day files 470/199, 13 week files
+# 300/154, 3 month files 230/141. The cost is the write amplification of
+# an open month: a daily 1h commit rewrites the month so far, a median
+# 157 KB and at most 308 KB on the 28-day tier, against 17 KB for a day
+# file, and takes a median 800 cpu-ms / 438 ms wall against 555/321 (90-day
+# tier: 415/329 against 310/261).
+def file_period(tier: str) -> str:
+    """``"day"`` or ``"month"``: the calendar span one data file of ``tier``
+    covers (see the comment above)."""
+    for fam in FAMILIES.values():
+        if tier in fam.tiers:
+            return "day" if tier == fam.tiers[0] else "month"
+    return "day"
+
+
+def period_start(unit: str, day: str) -> str:
+    """The first day of the ``unit`` (``"day"``, ISO ``"week"`` or
+    ``"month"``) holding ``day``, both ``YYYY-MM-DD``: the Python twin of
+    Spark's ``date_trunc(unit, ...)``."""
+    d = dt.date.fromisoformat(day)
+    if unit == "week":
+        d -= dt.timedelta(days=d.weekday())
+    elif unit == "month":
+        d = d.replace(day=1)
+    return d.isoformat()
+
+
+def window_day(window: str, day: str) -> str:
+    """The day partition holding ``day``'s windows in a tier of ``window``:
+    the day itself, or the week's Monday for the weekly M4 tier."""
+    return period_start("week" if window == "week" else "day", day)
+
+
+def pending_cascade(
+    store, source: str, tier: str, window: str, before: str | None = None
+) -> tuple[list[str], list[str]]:
+    """``(pending, reads)`` for the cascade ``source`` -> ``tier`` at
+    ``window``, from the manifests alone: the target days still to commit
+    from the source's committed days (those before ``before`` only, when
+    given), and the source days those target days are built from."""
+    src = [d for d in sorted(store.committed_days(source)) if before is None or d < before]
+    pending = store.pending_days(tier, {window_day(window, d) for d in src})
+    wanted = set(pending)
+    return pending, [d for d in src if window_day(window, d) in wanted]

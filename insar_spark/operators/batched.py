@@ -61,7 +61,14 @@ def keyed_map(
     partition. ``fn_group`` receives the group's rows (sorted by
     ``sort_cols`` — the partition-level sort guarantees delivered order,
     so kernels need no re-sort) and returns an output frame OR a dict of
-    columns (or None to drop)."""
+    columns (or None to drop); the two forms may be mixed, and output rows
+    keep the groups' delivered order either way.
+
+    Delivered order is Spark's ascending sort: within a partition, groups
+    arrive by ``key`` and each group's rows by ``sort_cols``, NULLS FIRST
+    (a row with a null sort value leads its group; pandas ``sort_values``
+    would put it last). Rows with a null ``key`` are dropped (pandas
+    ``groupby``)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None
@@ -69,12 +76,23 @@ def keyed_map(
         def emit(chunk: pd.DataFrame):
             frames: list[pd.DataFrame] = []
             col_parts: dict[str, list] = {}
+
+            def flush():
+                # pending dict results go out before a frame result, so
+                # groups keep their delivered order
+                if col_parts:
+                    frames.append(
+                        pd.DataFrame({c: np.concatenate(p) for c, p in col_parts.items()})
+                    )
+                    col_parts.clear()
+
             for _, g in chunk.groupby(key, sort=False):
                 r = fn_group(g)
                 if r is None:
                     continue
                 if isinstance(r, pd.DataFrame):
                     if len(r):
+                        flush()
                         frames.append(r)
                     continue
                 n = _rows_of(r)
@@ -84,12 +102,7 @@ def keyed_map(
                     if not _is_seq(v):
                         v = [v] * n
                     col_parts.setdefault(c, []).append(np.asarray(v))
-            if col_parts:
-                frames.append(
-                    pd.DataFrame(
-                        {c: np.concatenate(p) for c, p in col_parts.items()}
-                    )
-                )
+            flush()
             if len(frames) == 1:
                 return frames[0]
             if frames:

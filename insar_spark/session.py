@@ -40,6 +40,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or ``local[*]``.
     On a real cluster, pass ``master=None`` and let spark-submit supply it.
+    A running session is returned with the settings re-applied to it
+    (``_reapply``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -49,36 +51,57 @@ def get_spark(
         n = cpus or (master.split("[")[-1].rstrip("]") if "[" in master else "")
         shuffle_partitions = int(n) if n.isdigit() else 32
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS)
-        )
+    settings = {
+        "spark.app.name": app_name,
+        "spark.master": master,
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_MAX_RECORDS),
         # TierStore reads pass the manifest's explicit file list; past this
         # threshold (default 32) Spark stats the paths with a distributed
         # listing job: read_tier on a 112-file tier took ~650 ms with it
         # and ~85 ms with driver-side stats (4-core host). The 1d tier is
         # never expired, so no committed file list may reach the threshold.
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            str(2**31 - 1),
-        )
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1),
         # INT96 (the default) has no footer min/max; TierStore commits read
         # each day's window range from the footers of the files they wrote
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+        "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+        "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "16g"),
+        **(extra_conf or {}),
+    }
+    spark = SparkSession._instantiatedSession
+    if spark is None or spark._sc._jsc is None:
+        spark = SparkSession.builder.config(map=settings).getOrCreate()
+    else:
+        _reapply(spark, settings)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# (session, settings, JVM session module, JVM map of the settings) of the
+# last re-application
+_last_applied: tuple | None = None
+
+
+def _reapply(spark: SparkSession, settings: dict[str, str]) -> None:
+    """Apply ``settings`` to the running session, as
+    ``SparkSession.builder.getOrCreate`` does (runtime SQL settings take
+    effect; static ones are ignored with a warning). The builder converts
+    the settings to a JVM map with one Py4J round trip per entry, ~20 per
+    call; a job run in-process on a warm session calls this every run, so
+    the map of the last settings is kept and re-applied in one call."""
+    global _last_applied
+    if _last_applied is None or _last_applied[:2] != (spark, settings):
+        jmap = spark._jvm.java.util.HashMap()
+        for k, v in settings.items():
+            jmap.put(k, v)
+        module = SparkSession._get_j_spark_session_module(spark._jvm)
+        _last_applied = (spark, dict(settings), module, jmap)
+    _, _, module, jmap = _last_applied
+    module.applyModifiableSettings(spark._jsparkSession, jmap)

@@ -38,33 +38,59 @@ files are vacuumed only once their creating snapshot ages past the keep
 horizon (``expire_snapshots``). ``snapshot_keep=0`` (default) vacuums
 immediately — identical behavior and cost to the pre-time-travel store.
 
-Layout: ``root/tier=<t>/day=YYYY-MM-DD/*.parquet`` — day partitioning gives
-partition pruning for retention and time-range scans. Each commit writes
-one file per day, sorted by ``conv_id`` then ``window_start``, so a series
-never spans files of one commit (the full-depth-chunk locality rule,
-insar/timeseries.py:152-153); ``compact`` splits a day that outgrows its
-byte target. The manifest records the tier's Spark schema (the string
-``day`` column included), so a read needs no schema inference, and reads
-open the manifest's explicit file list, stat'ed on the driver (the engine
-session pins the parallel-listing threshold above any tier's file count):
-building a tier DataFrame launches no Spark job.
+Layout: ``root/tier=<t>/day=YYYY-MM-DD/*.parquet`` for a family chain's
+first tier and the epoch logs, ``root/tier=<t>/month=YYYY-MM-01/*.parquet``
+for every later (cascaded) tier — the rule is ``families.file_period``.
+Each commit writes one file per period, sorted by ``conv_id`` then
+``window_start``, so a series never spans files of one commit (the
+full-depth-chunk locality rule, insar/timeseries.py:152-153), and a read of
+a cascaded tier opens one file per month, not one per day. A commit to a
+month tier rewrites each month it touches into one new file holding the
+month's live days with the new ones (read back in the same plan); the
+manifest keeps one entry per day, pointing at its file, with the day's own
+``rows``/``w_min``/``w_max`` (from the written files' ``window_start``
+column). ``compact`` rewrites the files holding a day, split by byte
+target. The manifest records the tier's Spark schema (the string ``day``
+column included), so a read needs no schema inference, and reads open the
+manifest's explicit file list, stat'ed in the calling process (the
+engine session pins the parallel-listing threshold above any tier's file
+count), without partition discovery: ``day`` is derived from
+``window_start``, as the commits define it. Building a tier DataFrame
+launches no Spark job.
+
+Shared-file rules (a month file holds many days):
+
+* ``expire`` and ``drop_partitions`` stay manifest-only; a file is
+  tombstoned when its last live day goes (``_finalize`` keeps every path a
+  live day references out of the tombstones).
+* A read keeps only the returned days' ``window_start`` ranges when an
+  opened file also holds a day it does not return (not requested, expired
+  or dropped), decided from the entries' ``file_days`` counts; a read of
+  every live day of whole files adds no filter.
+* ``day_files``, ``committed_files`` and ``tier_bytes`` list each file
+  once.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import glob
 import json
+import operator
 import os
 import shutil
 import uuid
+from collections import Counter
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from insar_spark import families
 from insar_spark.families import FAMILIES
 
 # tier -> retention horizon in days (None = keep forever), as declared on
@@ -158,6 +184,56 @@ def footer_days(path: str, column: str = "ts") -> list[str] | None:
         return []
     first, n = lo.date(), (hi.date() - lo.date()).days
     return [(first + dt.timedelta(days=i)).isoformat() for i in range(n + 1)]
+
+
+_EPOCH = dt.datetime(1970, 1, 1)
+_DAY_US = 86_400_000_000
+
+
+def _day_stats(path: str) -> dict[str, tuple[int, dt.datetime, dt.datetime]]:
+    """Rows and min/max ``window_start`` per UTC day of one Parquet file,
+    from its ``window_start`` column, read with pyarrow in the calling
+    process. Bounds are naive UTC datetimes."""
+    col = pq.read_table(path, columns=["window_start"]).column(0)
+    us = col.cast(pa.timestamp("us", col.type.tz)).cast(pa.int64()).to_numpy()
+    by_day = pa.table({"d": us // _DAY_US, "w": us}).group_by("d").aggregate(
+        [("w", "count"), ("w", "min"), ("w", "max")]
+    )
+    return {
+        (_EPOCH + dt.timedelta(days=d)).date().isoformat(): (
+            n, _EPOCH + dt.timedelta(microseconds=lo), _EPOCH + dt.timedelta(microseconds=hi)
+        )
+        for d, n, lo, hi in zip(
+            *(by_day[c].to_pylist() for c in ("d", "w_count", "w_min", "w_max"))
+        )
+    }
+
+
+def _in_days(days) -> Column:
+    """``window_start`` inside one of ``days``: one ``[start, end)`` range
+    per run of consecutive days, so Parquet statistics prune row groups."""
+    runs: list[list[dt.date]] = []
+    for d in sorted(dt.date.fromisoformat(x) for x in days):
+        if runs and runs[-1][1] == d:
+            runs[-1][1] = d + dt.timedelta(days=1)
+        else:
+            runs.append([d, d + dt.timedelta(days=1)])
+    ws = F.col("window_start")
+    ts = lambda d: F.lit(d.isoformat()).cast("timestamp")  # noqa: E731
+    return functools.reduce(operator.or_, [(ws >= ts(lo)) & (ws < ts(hi)) for lo, hi in runs])
+
+
+def _holds_other_days(parts: dict) -> bool:
+    """Whether a file of manifest ``parts`` also holds a day outside them:
+    a shared file's entries record how many days it holds
+    (``file_days``), so it holds another day when fewer of ``parts``
+    reference it. Day files hold one day and record nothing."""
+    refs = Counter((p["dir"], name) for p in parts.values() for name in p.get("file_days", {}))
+    return any(
+        refs[p["dir"], name] < n
+        for p in parts.values()
+        for name, n in p.get("file_days", {}).items()
+    )
 
 
 def _of_days(parts: dict, days) -> dict:
@@ -363,18 +439,19 @@ class TierStore:
         return doomed
 
     def _part_paths(self, tier: str, partitions: dict) -> list[str]:
-        """Root-relative paths of every file a partition state references
-        (legacy pre-file-tracking entries resolve to the day directory)."""
-        out = []
+        """Root-relative paths of every file a partition state references,
+        each listed once (the days of a shared file all reference it).
+        Files live in the entry's ``dir`` (a month file's
+        ``month=YYYY-MM-01``), else in the day's directory; legacy
+        pre-file-tracking entries resolve to the day directory."""
+        out: dict[str, None] = {}
         for d in sorted(partitions):
             part = partitions[d]
-            day_rel = os.path.relpath(self.tier_path(tier, d), self.root)
+            base = os.path.join(f"tier={tier}", part.get("dir", f"day={d}"))
             names = part.get("files")
-            if names:
-                out.extend(os.path.join(day_rel, n) for n in names)
-            else:
-                out.append(day_rel)
-        return out
+            for rel in [os.path.join(base, n) for n in names] if names else [base]:
+                out[rel] = None
+        return list(out)
 
     def rollback(self, tier: str, snapshot_id: int) -> dict:
         """Restore the tier's live state to ``snapshot_id`` via a NEW
@@ -435,8 +512,16 @@ class TierStore:
     def committed_files(self, tier: str) -> tuple[str, ...]:
         """Root-relative paths of the tier's live files. Committed files
         are immutable and uniquely named, so an unchanged tuple means
-        unchanged contents."""
+        unchanged files, though not the same live days (``live_key``)."""
         return tuple(self._part_paths(tier, self.manifest(tier)["partitions"]))
+
+    def live_key(self, tier: str) -> tuple[tuple[str, ...], tuple[str, ...]]:
+        """``(live days, committed_files)`` from one manifest read: equal
+        keys mean equal live contents. The files alone do not say which
+        days are live, since a month file outlives the expiry or drop of
+        some of the days it holds."""
+        parts = self.manifest(tier)["partitions"]
+        return tuple(sorted(parts)), tuple(self._part_paths(tier, parts))
 
     def _check_schema(self, tier: str, man: dict, df: DataFrame) -> None:
         """Refuse a commit whose column names or types differ from the
@@ -460,32 +545,33 @@ class TierStore:
         return os.path.join(p, f"day={day}") if day else p
 
     def _stage_and_promote(
-        self, write, tier: str, prefix: str
+        self, write, tier: str, prefix: str, unit: str = "day"
     ) -> dict[str, list[str]]:
-        """Write through a unique staging dir, then move the data files into
-        their final day directories under snapshot-unique names.
+        """Write through a unique staging dir partitioned by ``unit``, then
+        move the data files into their final ``<unit>=<value>`` directories
+        under snapshot-unique names.
 
-        Returns {day: [filename, ...]} for the manifest. Crash safety: a
+        Returns {value: [filename, ...]} for the manifest. Crash safety: a
         crash before the move leaves files only in staging (never read,
-        vacuumable); a crash mid-move leaves unmanifested files in day dirs
-        which read_tier ignores (it scans the manifest's file list, not the
-        directory) — so a re-run never produces duplicate rows.
+        vacuumable); a crash mid-move leaves unmanifested files in tier
+        dirs which read_tier ignores (it scans the manifest's file list, not
+        the directory) — so a re-run never produces duplicate rows.
         """
         staging = os.path.join(self.root, "_staging", f"{prefix}-{uuid.uuid4().hex[:8]}")
         write(staging)
         out: dict[str, list[str]] = {}
-        for day_dir in sorted(glob.glob(os.path.join(staging, "day=*"))):
-            day = os.path.basename(day_dir).split("=", 1)[1]
-            dest = self.tier_path(tier, day)
+        for part_dir in sorted(glob.glob(os.path.join(staging, f"{unit}=*"))):
+            value = os.path.basename(part_dir).split("=", 1)[1]
+            dest = os.path.join(self.tier_path(tier), f"{unit}={value}")
             os.makedirs(dest, exist_ok=True)
             names = []
-            for f in sorted(os.listdir(day_dir)):
+            for f in sorted(os.listdir(part_dir)):
                 if not f.endswith(".parquet"):
                     continue
                 new = f"{prefix}-{f}"
-                os.replace(os.path.join(day_dir, f), os.path.join(dest, new))
+                os.replace(os.path.join(part_dir, f), os.path.join(dest, new))
                 names.append(new)
-            out[day] = names
+            out[value] = names
         shutil.rmtree(staging, ignore_errors=True)
         return out
 
@@ -584,6 +670,7 @@ class TierStore:
         tier: str,
         run_params: dict | None = None,
         seal_before: str | None = None,
+        days=None,
     ) -> dict:
         """Append day-partitions of a rollup DataFrame; skip days already
         committed (idempotent resume). Returns the commit record.
@@ -592,23 +679,38 @@ class TierStore:
         strictly before it are committed — an in-flight day is never
         sealed with partial data, so the day-level resume skip is always
         safe (the streaming analog is the event-time watermark). Days
-        below the tier's expiry floor are never committed again.
+        below the tier's expiry floor are never committed again. ``days``
+        (any iterable of ``YYYY-MM-DD``), when given, restricts the commit
+        to those days; with none of them pending it returns at once.
 
-        One pass: the plan is written to staging once, and each day's
-        ``rows``/``w_min``/``w_max`` come from the written files' footers.
-        Each committed day is one file, sorted by ``conv_id`` and
-        ``window_start``; ``compact`` splits a day too large for one file.
+        One pass: the plan is written to staging once. A day tier
+        (``families.file_period``) gets one file per day; a month tier gets
+        one file per month the commit touches, holding the new days plus
+        that month's live committed days, read back in the same plan (only
+        the months of ``days``, when given; with ``days`` omitted every
+        live month is read and the untouched ones are discarded). Each
+        committed month is then one file: the manifest points each of its
+        days at it, and the replaced files are tombstoned. Files are sorted
+        by ``conv_id`` then ``window_start``. Each day's ``rows``/
+        ``w_min``/``w_max`` come from the written files' ``window_start``
+        column, read with pyarrow and grouped by UTC date.
         """
         conf = rolled.sparkSession.conf
         if conf.get("spark.sql.parquet.outputTimestampType") == "INT96":
             raise ValueError(
-                "TierStore commits read window ranges from Parquet footers, and "
-                "INT96 timestamps have none: set spark.sql.parquet."
+                "TierStore reads prune month files and seals find their horizon "
+                "by Parquet window_start statistics, and INT96 timestamps have "
+                "none: set spark.sql.parquet."
                 "outputTimestampType=TIMESTAMP_MICROS (insar_spark.session."
                 "get_spark pins it)"
             )
         man = self.manifest(tier)
-        done = set(man["partitions"])
+        parts = man["partitions"]
+        done = set(parts)
+        if days is not None:
+            days = [d for d in self.pending_days(tier, days) if seal_before is None or d < seal_before]
+            if not days:
+                return {"written_days": [], "skipped_days": sorted(done)}
 
         df = rolled.withColumn(
             "day", F.date_format("window_start", "yyyy-MM-dd")
@@ -620,46 +722,89 @@ class TierStore:
             df = df.filter(F.col("day") >= man["expired_before"])
         if done:
             df = df.filter(~F.col("day").isin(sorted(done)))
+        if days is not None:
+            df = df.filter(F.col("day").isin(days))
+        # a month tier rewrites each month it touches with its live days
+        unit = families.file_period(tier)
+        merged = set()
+        if unit != "day":
+            periods = None if days is None else {families.period_start(unit, d) for d in days}
+            merged = {
+                d for d in parts if periods is None or families.period_start(unit, d) in periods
+            }
+        if merged:
+            df = df.unionByName(self.read_tier(rolled.sparkSession, tier, days=merged))
 
         snap_id = len(man["snapshots"]) + 1
-        # global tiers (no series key, e.g. the distinct bitmap) cluster
-        # by day only
-        cluster = ["day", "conv_id"] if "conv_id" in df.columns else ["day"]
+        entries = self._write_files(df, tier, f"snap{snap_id}", merged)
+        written = sorted(set(entries) - merged)
+        if not written:
+            return {"written_days": [], "skipped_days": sorted(done)}
+        replaced = self._part_paths(tier, {d: parts[d] for d in entries if d in merged})
+        for day, entry in entries.items():
+            parts[day] = {**entry, "snapshot": snap_id}
+        record = {"id": snap_id, "op": "append", "days": written, "run_params": run_params or {}}
+        if merged & set(entries):
+            record["rewritten_days"] = sorted(merged & set(entries))
+        man["snapshots"].append(record)
+        self._tombstone(man, snap_id, replaced)
+        self._finalize(tier, man)
+        return {"written_days": written, "skipped_days": sorted(done)}
+
+    def _write_files(
+        self, df: DataFrame, tier: str, prefix: str, merged=frozenset(), n_files: int | None = None
+    ) -> dict[str, dict]:
+        """Write ``df`` (with its ``day`` column) as the tier's data files
+        through staging: per ``families.file_period(tier)`` period, one file
+        sorted by ``conv_id`` (when present) then ``window_start``, or with
+        ``n_files`` that many files split by series. Returns the manifest
+        entry of every day the promoted files hold (``rows``/``w_min``/
+        ``w_max`` from their ``window_start`` columns; a shared file's
+        entries also record ``dir`` and the days each file holds). A written
+        file holding only ``merged`` days is deleted: its period gained no
+        day, so the period keeps its committed file."""
+        unit = families.file_period(tier)
+        key = ["conv_id"] if "conv_id" in df.columns else []
+        if unit != "day":
+            df = df.withColumn(
+                unit, F.date_format(F.date_trunc(unit, "window_start"), "yyyy-MM-dd")
+            ).drop("day")
+        parted = (
+            df.repartition(n_files, *(key or ["window_start"]))
+            if n_files
+            else df.repartition(unit)
+        )
         files = self._stage_and_promote(
             lambda staging: (
-                df.repartition("day")
-                .sortWithinPartitions(*cluster, "window_start")
-                .write.partitionBy("day")
+                parted.sortWithinPartitions(unit, *key, "window_start")
+                .write.partitionBy(unit)
                 .option("compression", "zstd")
                 .parquet(staging)
             ),
             tier,
-            f"snap{snap_id}",
+            prefix,
+            unit,
         )
-        if not files:
-            return {"written_days": [], "skipped_days": sorted(done)}
-        for day, names in files.items():
-            rows, lo, hi = footer_range(
-                [os.path.join(self.tier_path(tier, day), n) for n in names],
-                "window_start",
-            )
-            man["partitions"][day] = {
-                "rows": rows,
-                "w_min": str(lo),
-                "w_max": str(hi),
-                "snapshot": snap_id,
-                "files": names,
-            }
-        man["snapshots"].append(
-            {
-                "id": snap_id,
-                "op": "append",
-                "days": sorted(files),
-                "run_params": run_params or {},
-            }
-        )
-        self._finalize(tier, man)
-        return {"written_days": sorted(files), "skipped_days": sorted(done)}
+        entries: dict[str, dict] = {}
+        for period, names in files.items():
+            dirname = f"{unit}={period}"
+            for name in names:
+                path = os.path.join(self.tier_path(tier), dirname, name)
+                stats = _day_stats(path)
+                if not set(stats) - set(merged):
+                    os.remove(path)
+                    continue
+                for day, (rows, lo, hi) in stats.items():
+                    e = entries.setdefault(day, {"rows": 0, "w_min": lo, "w_max": hi, "files": []})
+                    e["rows"] += rows
+                    e["w_min"], e["w_max"] = min(e["w_min"], lo), max(e["w_max"], hi)
+                    e["files"].append(name)
+                    if unit != "day":
+                        e["dir"] = dirname
+                        e.setdefault("file_days", {})[name] = len(stats)
+        for e in entries.values():
+            e["w_min"], e["w_max"] = str(e["w_min"]), str(e["w_max"])
+        return entries
 
     # -------------------------------------------------------------- read
 
@@ -681,6 +826,15 @@ class TierStore:
         other days are never opened. None of them committed raises the
         same ``ValueError`` as an empty tier.
 
+        One path for day files, month files and stores written before
+        either: the manifest's file list is read without partition
+        discovery, and ``day`` is derived as ``date_format(window_start,
+        'yyyy-MM-dd')``, as the commits define it. When an opened file
+        also holds a day the read does not return (not requested, expired
+        or dropped; decided from the manifest), the scan keeps only the
+        returned days' ``window_start`` ranges, which Parquet statistics
+        prune; otherwise it adds no filter.
+
         Builds the DataFrame without a Spark job: the schema comes from the
         manifest and the explicit file list is stat'ed on the driver."""
         man = self.manifest(tier)
@@ -696,15 +850,21 @@ class TierStore:
             os.path.join(self.root, rel)
             for rel in self._part_paths(tier, parts)
         ]
-        reader = spark.read.option("basePath", self.tier_path(tier))
-        if "schema" not in man:
+        if "schema" in man:
+            schema = StructType.fromJson(json.loads(man["schema"]))
+            data = StructType([f for f in schema.fields if f.name != "day"])
+            df = spark.read.schema(data).parquet(*paths)
+            columns = schema.fieldNames()
+        else:
             # a store written before commits recorded the schema: infer it
-            # (one Spark job), and re-cast `day`, which partition inference
-            # types as DATE, to the manifest's string form
-            df = reader.parquet(*paths)
-            return df.withColumn("day", F.date_format("day", "yyyy-MM-dd"))
-        schema = StructType.fromJson(json.loads(man["schema"]))
-        return reader.schema(schema).parquet(*paths)
+            # (one Spark job)
+            df = spark.read.parquet(*paths)
+            columns = [*df.columns, "day"]
+        day = F.date_format("window_start", "yyyy-MM-dd").alias("day")
+        df = df.select(*(day if c == "day" else c for c in columns))
+        if _holds_other_days(parts):
+            df = df.filter(_in_days(parts))
+        return df
 
     def day_files(self, tier: str, days=None) -> list[str]:
         """Absolute paths of the committed files of ``days`` (default:
@@ -753,7 +913,8 @@ class TierStore:
 
     def expire(self, tier: str, now_day: str) -> list[str]:
         """Drop partitions past the tier's retention horizon (manifest-first:
-        the commit makes them invisible, then files are vacuumed). The
+        the commit makes them invisible, then files no live day holds are
+        vacuumed). The
         cutoff becomes the tier's expiry floor, which only moves forward:
         ``write_tier`` and ``pending_days`` skip every day below it."""
         horizon = self.retention.get(tier)
@@ -783,7 +944,8 @@ class TierStore:
         """Manifest-first removal of specific day partitions (log truncation
         after seal-compaction, or targeted deletes). The commit makes them
         invisible, then only THEIR files are vacuumed (other generations in
-        the same directory are untouched)."""
+        the same directory are untouched; a month file another live day
+        still holds stays)."""
         man = self.manifest(tier)
         hit = [d for d in days if d in man["partitions"]]
         if not hit:
@@ -804,59 +966,46 @@ class TierStore:
         day: str,
         target_file_bytes: int = 128 << 20,
     ) -> int:
-        """Rewrite one day-partition into size-targeted zstd files
-        (small-file compaction; Iceberg rewrite_data_files analog).
+        """Rewrite the files holding one committed day into size-targeted
+        zstd files (small-file compaction; Iceberg rewrite_data_files
+        analog): every live day those files hold is rewritten with it (a
+        month tier: the day's month).
 
         The rewrite is side-by-side, never in-place: new files land next to
         the old ones under a snapshot-unique prefix, THEN the manifest swaps
-        the file list, THEN the old files are vacuumed — a crash at any
+        the file lists, THEN the old files are vacuumed — a crash at any
         point leaves one complete committed file set readable (no
         rmtree-then-rename window). Output file count is sized by the
-        current partition bytes / ``target_file_bytes`` (not coalesce(1),
+        current files' bytes / ``target_file_bytes`` (not coalesce(1),
         which would serialize a 100-TB day through one task).
-        Returns the row count.
+        Returns ``day``'s row count.
         """
         import math
 
         man = self.manifest(tier)
-        if day not in man["partitions"]:
+        parts = man["partitions"]
+        if day not in parts:
             raise ValueError(f"day {day} not committed in tier '{tier}'")
-        path = self.tier_path(tier, day)
-        old_names = man["partitions"][day].get("files") or [
-            f for f in sorted(os.listdir(path)) if f.endswith(".parquet")
-        ]
-        old_paths = [os.path.join(path, f) for f in old_names]
-        total_bytes = sum(os.path.getsize(p) for p in old_paths)
+        held = set(self._part_paths(tier, {day: parts[day]}))
+        days = [d for d in parts if held & set(self._part_paths(tier, {d: parts[d]}))]
+        old = self._part_paths(tier, {d: parts[d] for d in days})
+        total_bytes = sum(os.path.getsize(p) for p in self.day_files(tier, days))
         n_files = max(1, math.ceil(total_bytes / target_file_bytes))
 
-        df = spark.read.parquet(*old_paths).cache()
-        n = df.count()
         snap_id = len(man["snapshots"]) + 1
-        staging = os.path.join(
-            self.root, "_staging", f"compact{snap_id}-{uuid.uuid4().hex[:8]}"
+        entries = self._write_files(
+            self.read_tier(spark, tier, days=days), tier, f"compact{snap_id}", n_files=n_files
         )
-        (
-            df.repartition(n_files, "conv_id")
-            .sortWithinPartitions("conv_id", "window_start")
-            .write.option("compression", "zstd")
-            .parquet(staging)
-        )
-        df.unpersist()
-        new_names = []
-        for f in sorted(os.listdir(staging)):
-            if not f.endswith(".parquet"):
-                continue
-            new = f"compact{snap_id}-{f}"
-            os.replace(os.path.join(staging, f), os.path.join(path, new))
-            new_names.append(new)
-        shutil.rmtree(staging, ignore_errors=True)
-
-        man["partitions"][day]["files"] = new_names
+        for d, entry in entries.items():
+            parts[d] = {**parts[d], **entry}
         man["snapshots"].append(
-            {"id": snap_id, "op": "compact", "days": [day], "files": len(new_names)}
+            {
+                "id": snap_id,
+                "op": "compact",
+                "days": sorted(entries),
+                "files": len(self._part_paths(tier, entries)),
+            }
         )
-        self._tombstone(
-            man, snap_id, [os.path.relpath(p, self.root) for p in old_paths]
-        )
+        self._tombstone(man, snap_id, old)
         self._finalize(tier, man)
-        return n
+        return entries[day]["rows"]

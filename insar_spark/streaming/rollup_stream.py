@@ -613,17 +613,20 @@ def realtime_1h_view(spark: SparkSession, store, family: str) -> DataFrame:
     never raw.
 
     The view is memoized per family in ``store.views`` (the plan only,
-    nothing cached): it is rebuilt only when the session, the store root or
-    the committed file list of one of the three tiers changed. Committed
-    files are immutable and uniquely named, so every commit, seal,
-    truncation or expiry changes the key, and the day sets and row counts
-    the plan was built from derive from those lists; snapshot ids would
-    not (a store recreated or restored at the same root repeats them over
-    new files)."""
+    nothing cached): it is rebuilt only when the session, the store root,
+    or the live days or committed file list of one of the three tiers
+    changed (``TierStore.live_key``, one manifest read per tier).
+    Committed files are immutable and uniquely named, so every commit,
+    seal or truncation changes the files; an expiry or drop of some days
+    of a month file leaves the file live and changes the days, so the
+    rebuilt plan filters them out. The row counts the plan was built from
+    derive from those days and files; snapshot ids would not (a store
+    recreated or restored at the same root repeats them over new
+    files)."""
     fam = FAMILIES[family]
     fine_tier, coarse_tier = fam.tiers[:2]
     state = (spark, store.root) + tuple(
-        store.committed_files(t) for t in (coarse_tier, fine_tier, fam.log_tier)
+        store.live_key(t) for t in (coarse_tier, fine_tier, fam.log_tier)
     )
     hit = store.views.get(family)
     if hit is not None and hit[0] == state:

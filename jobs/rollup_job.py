@@ -19,7 +19,8 @@ Flow (one raw scan total):
 
 Each tier step first asks the store which of its days are still pending:
 tier-0 days come from the input files' Parquet footers (the ``ts`` range),
-cascade days from the finer tier's manifest. A tier with nothing pending
+cascade days from the finer tier's manifest, and a cascade reads only the
+stored source days of its pending days. A tier with nothing pending
 is skipped without building a plan (``"decided": "manifest"``), so a
 re-run with nothing to do launches no Spark job; otherwise the plan is
 built and committed (``"decided": "plan"``).
@@ -28,7 +29,6 @@ built and committed (``"decided": "plan"``).
 from __future__ import annotations
 
 import argparse
-import datetime as dt
 import functools
 import json
 import os
@@ -40,18 +40,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 
-def _partition_day(window: str, day: str) -> str:
-    """The store partition holding ``day``'s data in a tier of ``window``:
-    the day itself for day-or-finer windows, the containing Monday for the
-    weekly M4 tier (date_trunc('week') semantics)."""
-    if window != "week":
-        return day
-    d = dt.date.fromisoformat(day)
-    return (d - dt.timedelta(days=d.weekday())).isoformat()
-
-
 def main(argv: list[str] | None = None) -> dict:
-    from insar_spark.families import enabled
+    from insar_spark.families import enabled, pending_cascade, window_day
     from insar_spark.session import get_spark
     from insar_spark.sources.catalog import TierStore, footer_days
     from insar_spark.synth import synth_transcripts
@@ -157,16 +147,16 @@ def main(argv: list[str] | None = None) -> dict:
 
     input_days = None if args.input.startswith("synth:") else footer_days(args.input)
 
-    def commit(tier, build, days, params):
-        """One tier step: skip it from the manifest when ``days`` (the
-        days its source holds; None = unknown) has none pending, else
-        build the plan and commit it."""
+    def commit(tier, pending, build, params):
+        """One tier step: skip it from the manifest when ``pending`` (its
+        pending days; None = unknown) is empty, else build the plan and
+        commit it, restricted to ``pending``."""
         t = time.perf_counter()
-        if days is not None and not store.pending_days(tier, days):
+        if pending == []:
             written, skipped = 0, len(store.committed_days(tier))
             decided = "manifest"
         else:
-            res = store.write_tier(build(), tier, run_params=params)
+            res = store.write_tier(build(), tier, run_params=params, days=pending)
             written, skipped = len(res["written_days"]), len(res["skipped_days"])
             decided = "plan"
         metrics["tiers"][tier] = {
@@ -177,13 +167,14 @@ def main(argv: list[str] | None = None) -> dict:
         }
 
     def cascade_from(source, tier, fn, window, params):
-        """Commit ``tier`` as ``fn`` over the STORED ``source`` tier; its
-        days are the source's committed days."""
-        def build():
-            return fn(store.read_tier(spark, source).drop("day"), window)
-
-        days = {_partition_day(window, d) for d in store.committed_days(source)}
-        commit(tier, build, days, params)
+        """Commit ``tier`` as ``fn`` over the STORED ``source`` tier,
+        reading only the source days of its pending days."""
+        pending, reads = pending_cascade(store, source, tier, window)
+        commit(
+            tier, pending,
+            lambda: fn(store.read_tier(spark, source, days=reads).drop("day"), window),
+            params,
+        )
 
     def first_tier(fam):
         # --lb-tier0 opts the lb family into persisting its finest tier
@@ -203,7 +194,7 @@ def main(argv: list[str] | None = None) -> dict:
         # backfill-only deployment would pass a day-filtered --input.
         metrics["restated"] = {}
         for tier, window in job_tiers:
-            days = sorted({_partition_day(window, d) for d in args.restate_days})
+            days = sorted({window_day(window, d) for d in args.restate_days})
             hit = store.drop_partitions(tier, days, op="restate")
             if hit:
                 metrics["restated"][tier] = hit
@@ -216,7 +207,8 @@ def main(argv: list[str] | None = None) -> dict:
         params = {**run_params, **fam.params()}
         if fam.name == "lb":
             params["lb_tier0_policy"] = "1m" if args.lb_tier0 else "1h+"
-        commit(first, lambda: fam.tier0(turns(), dict(fam.chain)[first]), input_days, params)
+        pending = None if input_days is None else store.pending_days(first, input_days)
+        commit(first, pending, lambda: fam.tier0(turns(), dict(fam.chain)[first]), params)
         for source, tier, window in fam.cascades(first):
             cascade_from(source, tier, fam.cascade, window, params)
 

@@ -58,7 +58,7 @@ def run_cycle(
     manifest read-modify-write (the stream is stopped first). Returns the
     stats seal dict plus ``families[name]``: each family's seal dict with
     ``cascaded`` days per tier and wall ``ms``."""
-    from insar_spark.families import enabled
+    from insar_spark.families import enabled, pending_cascade
     from insar_spark.streaming import rollup_stream as rs
 
     families = {}
@@ -83,11 +83,16 @@ def run_cycle(
         if seal["written_days"]:
             params = {"source": "stream_cycle_cascade", **fam.params()}
             for source, tier, window in fam.cascades(fam.tiers[0], fam.stream_to):
-                res = store.write_tier(
-                    fam.cascade(store.read_tier(spark, source).drop("day"), window),
-                    tier, run_params=params, seal_before=seal["seal_before"],
+                # only the source days of the pending target days are read
+                pending, reads = pending_cascade(
+                    store, source, tier, window, before=seal["seal_before"]
                 )
-                seal["cascaded"][tier] = res["written_days"]
+                seal["cascaded"][tier] = []
+                if pending:
+                    seal["cascaded"][tier] = store.write_tier(
+                        fam.cascade(store.read_tier(spark, source, days=reads).drop("day"), window),
+                        tier, run_params=params, seal_before=seal["seal_before"], days=pending,
+                    )["written_days"]
         seal["ms"] = round(1000 * (time.perf_counter() - t0), 1)
         families[fam.name] = seal
     return {**families["stats"], "families": families}

@@ -54,9 +54,9 @@ def test_manifest_lineage_and_metrics(spark, transcripts, store):
 
 def test_commit_stats_come_from_footers_and_equal_the_data(spark, transcripts, store):
     """One-pass commit: each day's manifest rows/w_min/w_max (read from the
-    written files' footers) equal a groupBy(day) over the stored tier. A
-    session writing INT96 timestamps (no footer min/max) is refused before
-    anything is written."""
+    written files' window_start column) equal a groupBy(day) over the
+    stored tier. A session writing INT96 timestamps (no footer min/max) is
+    refused before anything is written."""
     from pyspark.sql import functions as F
 
     store.write_tier(rollup_turns(transcripts, "1m"), "1m")
@@ -197,18 +197,18 @@ def test_orphan_files_from_crashed_write_are_invisible(spark, transcripts, store
     import os
     import shutil
 
-    rolled = rollup_turns(transcripts, "1h")
-    store.write_tier(rolled, "1h")
-    n = store.read_tier(spark, "1h").count()
+    rolled = rollup_turns(transcripts, "1m")
+    store.write_tier(rolled, "1m")
+    n = store.read_tier(spark, "1m").count()
     # simulate the crash: copy a committed file into the same day dir under
     # an unmanifested name (exactly what a re-run after a mid-move crash
     # would leave behind)
-    man = store.manifest("1h")
+    man = store.manifest("1m")
     day = sorted(man["partitions"])[0]
-    day_dir = store.tier_path("1h", day)
+    day_dir = store.tier_path("1m", day)
     src = os.path.join(day_dir, man["partitions"][day]["files"][0])
     shutil.copy(src, os.path.join(day_dir, "snap99-orphan.parquet"))
-    assert store.read_tier(spark, "1h").count() == n  # orphan ignored
+    assert store.read_tier(spark, "1m").count() == n  # orphan ignored
 
 
 def test_read_empty_tier_raises_clearly(spark, store):
@@ -231,17 +231,17 @@ def test_read_tier_days_scans_only_those_days(spark, store, spark_jobs):
         ),
         F.col("id").alias("n_turns"),
     )
-    store.write_tier(rolled, "1h")
+    store.write_tier(rolled, "1m")
     store.write_tier_log(rolled, "1m_log", epoch=0)
     store.write_tier_log(rolled.withColumn("n_turns", F.col("n_turns") + 10), "1m_log", epoch=1)
-    days = sorted(store.committed_days("1h"))
+    days = sorted(store.committed_days("1m"))
     pick = {days[1], days[4], "1999-01-01"}
 
     (df, log, rows), jobs = spark_jobs(
         lambda: (
-            store.read_tier(spark, "1h", days=pick),
+            store.read_tier(spark, "1m", days=pick),
             store.read_tier_log(spark, "1m_log", days=pick),
-            [store.tier_rows(t, d) for t in ("1h", "1m_log") for d in (pick, None)],
+            [store.tier_rows(t, d) for t in ("1m", "1m_log") for d in (pick, None)],
         )
     )
     assert jobs == []
@@ -252,35 +252,35 @@ def test_read_tier_days_scans_only_those_days(spark, store, spark_jobs):
     assert sorted(r["n_turns"] for r in df.collect()) == [1, 4]
     assert sorted(r["n_turns"] for r in log.collect()) == [11, 14]
     assert rows == [2, 6, 4, 12]
-    assert store.tier_bytes("1h") == sum(
-        os.path.getsize(p) for p in store.day_files("1h")
-    ) > sum(os.path.getsize(p) for p in store.day_files("1h", want))
+    assert store.tier_bytes("1m") == sum(
+        os.path.getsize(p) for p in store.day_files("1m")
+    ) > sum(os.path.getsize(p) for p in store.day_files("1m", want))
     with pytest.raises(ValueError, match="no committed partitions"):
-        store.read_tier(spark, "1h", days=["1999-01-01"])
+        store.read_tier(spark, "1m", days=["1999-01-01"])
     with pytest.raises(ValueError, match="no committed partitions"):
-        store.read_tier(spark, "1h", days=[])
+        store.read_tier(spark, "1m", days=[])
 
 
 def test_compact_is_side_by_side_and_size_targeted(spark, transcripts, store):
     import os
 
-    rolled = rollup_turns(transcripts, "1h")
-    store.write_tier(rolled, "1h")
-    man = store.manifest("1h")
+    rolled = rollup_turns(transcripts, "1m")
+    store.write_tier(rolled, "1m")
+    man = store.manifest("1m")
     day = sorted(man["partitions"])[0]
-    before = store.read_tier(spark, "1h").toPandas()
+    before = store.read_tier(spark, "1m").toPandas()
     # tiny byte budget -> multiple output files (no coalesce(1) ceiling)
-    n = store.compact(spark, "1h", day, target_file_bytes=4096)
+    n = store.compact(spark, "1m", day, target_file_bytes=4096)
     assert n > 0
-    man2 = store.manifest("1h")
+    man2 = store.manifest("1m")
     new_files = man2["partitions"][day]["files"]
     assert all(f.startswith("compact") for f in new_files)
     assert len(new_files) >= 2  # size-targeted, not single-task
     # old generation vacuumed
-    day_dir = store.tier_path("1h", day)
+    day_dir = store.tier_path("1m", day)
     on_disk = {f for f in os.listdir(day_dir) if f.endswith(".parquet")}
     assert on_disk == set(new_files)
-    after = store.read_tier(spark, "1h").toPandas()
+    after = store.read_tier(spark, "1m").toPandas()
     cols = sorted(before.columns)
     a = before[cols].sort_values(cols).reset_index(drop=True)
     b = after[cols].sort_values(cols).reset_index(drop=True)
@@ -305,10 +305,10 @@ def test_read_tier_runs_no_job_and_keeps_recorded_schema(spark, store):
         ),
         F.col("id").alias("n_turns"),
     )
-    store.write_tier(rolled, "1h")
+    store.write_tier(rolled, "1m")
     store.write_tier_log(rolled, "1m_log", epoch=0)
     store.write_tier(rolled.drop("conv_id"), "g_1d")
-    assert len(store.committed_files("1h")) > 32
+    assert len(store.committed_files("1m")) > 32
 
     def build(tier):
         group = f"read_tier-{tier}"
@@ -321,7 +321,7 @@ def test_read_tier_runs_no_job_and_keeps_recorded_schema(spark, store):
         return df
 
     cases = {
-        "1h": rolled.dtypes + [("day", "string")],
+        "1m": rolled.dtypes + [("day", "string")],
         "1m_log": rolled.dtypes + [("_epoch", "int"), ("day", "string")],
         "g_1d": rolled.drop("conv_id").dtypes + [("day", "string")],
     }
@@ -338,10 +338,10 @@ def test_read_tier_runs_no_job_and_keeps_recorded_schema(spark, store):
         F.col("n_turns").cast("double").alias("n_turns"),
     )
     with pytest.raises(ValueError, match="differs from the recorded"):
-        store.write_tier(later, "1h")
+        store.write_tier(later, "1m")
     with pytest.raises(ValueError, match="differs from the recorded"):
         store.write_tier_log(later, "1m_log", epoch=1)
-    assert store.read_tier(spark, "1h").count() == 40
+    assert store.read_tier(spark, "1m").count() == 40
     assert len(store.manifest("1m_log")["snapshots"]) == 1
     # nullability and column order are not compared
     store.write_tier(
@@ -350,14 +350,14 @@ def test_read_tier_runs_no_job_and_keeps_recorded_schema(spark, store):
             "window_start",
             "conv_id",
         ),
-        "1h",
+        "1m",
     )
-    assert store.read_tier(spark, "1h").count() == 80
+    assert store.read_tier(spark, "1m").count() == 80
 
     # a store written before schemas were recorded still reads (inferred)
-    mp = store._manifest_path("1h")
+    mp = store._manifest_path("1m")
     man = json.load(open(mp))
     del man["schema"]
     json.dump(man, open(mp, "w"))
-    legacy = store.read_tier(spark, "1h")
-    assert legacy.dtypes == cases["1h"] and legacy.count() == 80
+    legacy = store.read_tier(spark, "1m")
+    assert legacy.dtypes == cases["1m"] and legacy.count() == 80

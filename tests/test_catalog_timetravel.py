@@ -83,24 +83,24 @@ def test_compact_keeps_old_generation_readable(spark, transcripts, store):
 
 
 def test_expire_is_deferred_then_vacuumed(spark, transcripts, store):
-    store.retention["1d"] = 1
-    rolled = rollup_turns(transcripts, "1d")
-    store.write_tier(rolled, "1d")
-    last = max(_days(store, "1d"))
-    expired = store.expire("1d", last)  # snapshot 2
+    store.retention["1m"] = 1
+    rolled = rollup_turns(transcripts, "1m")
+    store.write_tier(rolled, "1m")
+    last = max(_days(store, "1m"))
+    expired = store.expire("1m", last)  # snapshot 2
     assert expired
     # the expired day's files survive on disk for time travel
-    gone_dir = store.tier_path("1d", expired[0])
+    gone_dir = store.tier_path("1m", expired[0])
     assert os.path.isdir(gone_dir) and os.listdir(gone_dir)
-    assert store.read_tier(spark, "1d", as_of=1).count() == rolled.count()
+    assert store.read_tier(spark, "1m", as_of=1).count() == rolled.count()
     # force the horizon shut: everything older than the latest snapshot goes
-    removed = store.expire_snapshots("1d", keep_last=0)
+    removed = store.expire_snapshots("1m", keep_last=0)
     assert removed
     assert not any(os.scandir(gone_dir)) if os.path.isdir(gone_dir) else True
     with pytest.raises(SnapshotExpiredError):
-        store.read_tier(spark, "1d", as_of=1)
+        store.read_tier(spark, "1m", as_of=1)
     # current read unaffected
-    assert store.read_tier(spark, "1d").count() > 0
+    assert store.read_tier(spark, "1m").count() > 0
 
 
 def test_rollback_restores_and_appends_history(spark, transcripts, store):
@@ -143,22 +143,22 @@ def test_recommitted_day_survives_legacy_dir_tombstone(spark, transcripts, store
     the deferred rmtree must not take the new, manifest-referenced files
     with it. The finalize pass now expands such a tombstone to the
     directory's non-live files."""
-    rolled = rollup_turns(transcripts, "1d")
-    store.write_tier(rolled, "1d")  # snapshot 1
-    day = _days(store, "1d")[0]
+    rolled = rollup_turns(transcripts, "1m")
+    store.write_tier(rolled, "1m")  # snapshot 1
+    day = _days(store, "1m")[0]
     # simulate a legacy manifest entry (no per-file tracking) for that day
-    man = store.manifest("1d")
+    man = store.manifest("1m")
     man["partitions"][day].pop("files", None)
-    store._commit("1d", man)
-    store.drop_partitions("1d", [day])  # snapshot 2: dir-level tombstone
-    res = store.write_tier(rolled, "1d")  # snapshot 3: same day, same dir
+    store._commit("1m", man)
+    store.drop_partitions("1m", [day])  # snapshot 2: dir-level tombstone
+    res = store.write_tier(rolled, "1m")  # snapshot 3: same day, same dir
     assert day in res["written_days"]
-    n = store.read_tier(spark, "1d").count()
+    n = store.read_tier(spark, "1m").count()
     assert n == rolled.count()
     # age every tombstone out: the re-committed day must survive the vacuum
-    store.expire_snapshots("1d", keep_last=0)
-    assert store.read_tier(spark, "1d").count() == n
-    day_dir = store.tier_path("1d", day)
+    store.expire_snapshots("1m", keep_last=0)
+    assert store.read_tier(spark, "1m").count() == n
+    day_dir = store.tier_path("1m", day)
     assert os.path.isdir(day_dir) and os.listdir(day_dir)
 
 

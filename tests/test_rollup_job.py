@@ -378,6 +378,13 @@ def test_job_restate_day_rebuilds_all_tiers(spark, tmp_path):
     from insar_spark.synth import synth_transcripts
 
     turns = synth_transcripts(spark, n_convs=40)
+    # the untouched day lies in another month: a commit to a month-file
+    # tier (1d, hist_1h, m4_1w) rewrites the file of each month it touches
+    turns = turns.unionByName(
+        turns.filter(F.date_format("ts", "yyyy-MM-dd") == "2025-01-02")
+        .withColumn("conv_id", F.concat(F.lit("m"), "conv_id"))
+        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 40 DAYS"))
+    )
     days = sorted(
         r["d"]
         for r in turns.select(
@@ -385,7 +392,8 @@ def test_job_restate_day_rebuilds_all_tiers(spark, tmp_path):
         ).distinct().collect()
     )
     day = days[len(days) // 2]
-    other = days[1]
+    other = days[-1]
+    assert day[:7] != other[:7]
     v1 = str(tmp_path / "v1")
     v2 = str(tmp_path / "v2")
     turns.write.mode("overwrite").parquet(v1)
