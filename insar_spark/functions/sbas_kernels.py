@@ -187,8 +187,7 @@ def invert_regularized(
 def estimate_ramp(z: np.ndarray, order: int = 1) -> np.ndarray:
     """Least-squares plane/quadratic fit over a 2-D grid
     (insar/timeseries.py _estimate_ramp; golden: z=(1..7 step2)^T+(0..3)
-    -> coeffs (1, 1, 2)). Kept for operator parity; the transcript-domain
-    analog of deramp is per-series detrend (operators.smoothing.detrend)."""
+    -> coeffs (1, 1, 2)). Kept for operator parity."""
     rows, cols = z.shape
     yy, xx = np.mgrid[0:rows, 0:cols]
     x = xx.ravel().astype(np.float64)
@@ -308,7 +307,7 @@ def solve_series(
     # solve — a 20k-date redundant network would need ~3 GB and minutes
     # per series. Chain networks take the O(M) path above; redundant
     # networks on mega-series must be bandwidth-limited upstream
-    # (operators.series.adjacent_pairs k, or skew.route_by_size).
+    # (operators.series.adjacent_pairs k).
     if n > max_dense_dates:
         raise ValueError(
             f"{n} dates exceeds max_dense_dates={max_dense_dates} for a "

@@ -21,8 +21,7 @@ rows and order are identical (groups are emitted in delivered order,
 columns concatenated in that same order).
 
 Use for fleets of SMALL groups (series solves, blob packing). For few huge
-groups, plain applyInPandas is equivalent; for mega-series, route through
-operators.skew first.
+groups, plain applyInPandas is equivalent.
 """
 
 from __future__ import annotations

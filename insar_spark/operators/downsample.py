@@ -24,8 +24,7 @@ key ``round(v*100) * 2^30 ± turn_idx`` (values in the synthetic corpus
 are exact 2-decimals; turn_idx < 2^30), and the LTTB areas are computed
 in exact integer arithmetic — y scaled by 100, x as microsecond offsets
 from the series start, Python ints in the kernel / HUGEINT in the DuckDB
-oracle — so the argmax selection cannot flip on float summation order
-(the w5 rounding-lottery lesson, BENCH.md §0b.3).
+oracle — so the argmax selection cannot flip on float summation order.
 """
 
 from __future__ import annotations

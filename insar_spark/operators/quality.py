@@ -7,8 +7,8 @@ thresholds useless. This module adds the telemetry layer a production
 rollup store runs NEXT TO the tiers — each operator consumes either the
 raw series or an already-stored tier, and each is built so its decision
 columns are INTEGER-exact (cross-multiplied compares, scaled-integer
-values), so the DuckDB oracle replays every flag bit-for-bit and the
-driver's value-hash gate covers the whole surface. Floats appear only in
+values), so the DuckDB oracle replays every flag bit-for-bit and its
+byte compare covers the whole surface. Floats appear only in
 explicitly-rounded convenience columns computed from those integers.
 
 Reference analogs (file:line into /root/reference): the reference scans
@@ -49,7 +49,7 @@ def _lateness_us(
     a ROWS frame would make tied rows' prev_max depend on arbitrary
     intra-tie order). Returns (lateness_us, prev_max_us); lateness is 0
     for an in-order or first event. Mirrored by the ``e`` CTE in the
-    __spark_entry__ oracles — keep in sync."""
+    oracles of tests/test_duckdb_oracle.py — keep in sync."""
     w_prev = (
         Window.partitionBy(key_col)
         .orderBy(F.col(arrival_col).cast("long"))
@@ -189,8 +189,7 @@ def cusum_level_shift(
 
     Overflow: |S_i| <= 2*n^2*max|x|, so int64 holds through n ~ 1.5e7
     turns per series at centi-values <= 2e4; past that ANSI mode raises
-    loudly instead of wrapping (route mega-conversations through the
-    chunked skew path first). One window exchange on the series key;
+    loudly instead of wrapping. One window exchange on the series key;
     the reference's analogous QC is the quantile outlier scan over
     solved series (insar/ts_utils.py:282-289) — CUSUM localizes WHERE
     the series changed, not just that tails exist.

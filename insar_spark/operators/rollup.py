@@ -116,18 +116,3 @@ def finalize(rolled: DataFrame, tier: str) -> DataFrame:
             "text_len_delta"
         ),
     )
-
-
-def rollup_all_tiers(df: DataFrame) -> dict[str, DataFrame]:
-    """Full tier cascade from raw turns: {'1m': ..., '1h': ..., '1d': ...}.
-
-    The 1m tier is the only pass over raw data; 1h and 1d re-aggregate it.
-    Callers persisting tiers should write 1m first and build the others from
-    the written table (see sources.catalog.write_tier) so the raw scan
-    happens exactly once per ingest.
-    """
-    out: dict[str, DataFrame] = {}
-    out["1m"] = rollup_turns(df, "1m")
-    out["1h"] = cascade(out["1m"], "1h")
-    out["1d"] = cascade(out["1h"], "1d")
-    return out

@@ -1095,7 +1095,7 @@ def hll_estimate(
 # turns did conversation X contribute this hour?" needs per-(window, key)
 # counts — at 10^12 turns that exact table is billions of rows per day,
 # and the only reason to keep it is to find the heavy keys (the
-# mega-conversations the skew-handling paths salt around). The count-min
+# mega-conversations). The count-min
 # sketch (Cormode & Muthukrishnan 2005) answers point-frequency queries
 # from d*w counters per window: cell (j, h_j(x)) accumulates every
 # occurrence of x; the estimate min_j cnt[j][h_j(x)] is NEVER an

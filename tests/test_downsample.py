@@ -1,6 +1,6 @@
 """M4 + LTTB visualization downsampling: properties and independent
 reference checks (the cross-engine SQL-oracle equality is covered by
-check_oracle / the driver gate; here we pin the algorithms themselves)."""
+tests/test_duckdb_oracle.py; here we pin the algorithms themselves)."""
 
 from __future__ import annotations
 

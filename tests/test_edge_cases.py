@@ -127,51 +127,3 @@ def test_gapfill_property_piecewise_linear(spark):
         xo = obs["grid_ts"].to_numpy("datetime64[us]").astype("int64") / 60e6
         exp = np.interp(x, xo, obs["v_filled"].to_numpy())
         np.testing.assert_allclose(g["v_filled"].to_numpy(), exp, atol=1e-9)
-
-
-def test_multimodal_oracle_byte_parity_non_ascii(spark, tmp_path):
-    """The multimodal oracle must use BYTE semantics (the Spark payload is
-    utf-8 bytes): parity must hold for non-ASCII text and for an empty
-    document (the old char-based oracle divided by zero there)."""
-    import duckdb
-
-    import __spark_entry__ as E
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [0, 1, 2, 3],
-            "text": ["héllo wörld", "", "plain ascii", "日本語テキスト"],
-            "lang": ["de", "en", "en", "ja"],
-            "source": ["s"] * 4,
-            "n_chars": [11, 0, 11, 7],
-        }
-    )
-    p = str(tmp_path / "documents.parquet")
-    spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "docs")
-    )
-    import glob
-    import shutil
-
-    shutil.copy(glob.glob(str(tmp_path / "docs" / "*.parquet"))[0], p)
-
-    got = (
-        E.q_multimodal_features(spark, str(tmp_path))
-        .toPandas()
-        .sort_values("media_id")
-        .reset_index(drop=True)
-    )
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{p}'")
-    exp = (
-        con.sql(E._SQL_MULTIMODAL)
-        .df()
-        .sort_values("media_id")
-        .reset_index(drop=True)
-    )
-    assert got["n_bytes"].tolist() == exp["n_bytes"].tolist()
-    # utf-8 byte counts, not char counts
-    assert got["n_bytes"].tolist() == [13, 0, 11, 21]
-    np.testing.assert_allclose(got["feat_mean"], exp["feat_mean"], atol=1e-9)
-    np.testing.assert_allclose(got["feat_std"], exp["feat_std"], atol=1e-9)
-    assert got.loc[1, "feat_mean"] == 0.0  # empty payload -> zero buffer

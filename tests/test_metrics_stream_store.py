@@ -1,40 +1,10 @@
-"""North-star metric series + streaming -> TierStore ingestion."""
+"""Streaming -> TierStore ingestion: exactly-once epoch logs and the
+real-time view over them."""
 
 from __future__ import annotations
 
-import numpy as np
-
-from insar_spark.operators.metrics import (
-    all_metrics_long,
-    text_len_deltas,
-    tool_call_rate,
-    turns_per_min,
-)
 from insar_spark.sources.catalog import TierStore
 from insar_spark.streaming.rollup_stream import stream_to_tierstore
-
-
-def test_metric_series_shapes(spark, transcripts, transcripts_pdf):
-    tpm = turns_per_min(transcripts).toPandas()
-    assert (tpm["value"] >= 1).all()  # every emitted window has >= 1 turn
-    assert tpm["value"].sum() == len(transcripts_pdf)
-
-    tcr = tool_call_rate(transcripts).toPandas()
-    assert ((tcr["value"] >= 0) & (tcr["value"] <= 1)).all()
-
-    tld = text_len_deltas(transcripts).toPandas()
-    n_convs = transcripts_pdf["conv_id"].nunique()
-    assert len(tld) == len(transcripts_pdf) - n_convs
-
-
-def test_all_metrics_long(spark, transcripts):
-    long = all_metrics_long(transcripts)
-    counts = {
-        r["metric"]: r["n"]
-        for r in long.groupBy("metric").count().withColumnRenamed("count", "n").collect()
-    }
-    assert set(counts) == {"turns_per_min", "tool_call_rate", "text_len_delta"}
-    assert counts["turns_per_min"] == counts["tool_call_rate"]
 
 
 def test_stream_to_tierstore_exactly_once(spark, tmp_path, transcripts):

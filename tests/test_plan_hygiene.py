@@ -1,76 +1,83 @@
-"""Physical-plan hygiene as CI: the properties PLANS.md documents,
-asserted so a regression fails a test run instead of surfacing at 100 TB.
+"""Physical-plan hygiene as CI over the plans the engine runs: each tier
+family's tier-0 build and its first cascade (from a stored tier, as
+``rollup_job`` and ``stream_job`` run it), and the per-series Python
+kernels (SBAS solve, spline gap-fill, Gorilla compression).
 
-Plan-building only (no execution) — cheap enough to cover every contract
-query for the row-wise-Python ban, plus exchange/Python-stage budgets for
-representative query shapes.
+A BatchEvalPython node means a row-at-a-time Python UDF crept in (the
+kernels must stay on the Arrow path). The exchange and Python-stage
+budgets are the counts these plans have, so a shuffle sneaking into a
+plan fails a test run instead of surfacing at 100 TB.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
-import __spark_entry__ as entry_mod
-from insar_spark.plans.inspect import audit, executed_plan
-
-SF = "/root/testdata/sf0.001"
+from insar_spark.families import FAMILIES
+from plan_inspect import audit, executed_plan
 
 
-def test_no_rowwise_python_in_any_contract_query(spark):
-    """Every graded plan must stay on the Arrow path (§2.10): a
-    BatchEvalPython node means a row-at-a-time Python UDF crept in."""
-    offenders = []
-    for name, fn in entry_mod.queries().items():
-        if "BatchEvalPython" in executed_plan(fn(spark, SF)):
-            offenders.append(name)
+@pytest.fixture(scope="module")
+def plans(spark, transcripts, tmp_path_factory):
+    """Plan name -> DataFrame, each over a Parquet scan as the jobs read
+    their input (built, not run, except the written inputs: the turns and
+    each family's tier-0 output, the cascade's stored source)."""
+    from insar_spark.operators.compression import compress_series
+    from insar_spark.operators.gapfill import resample_spline
+    from insar_spark.operators.sbas import invert_pairs
+    from insar_spark.operators.series import adjacent_pairs, with_text_len
+
+    out = {}
+    tmp = tmp_path_factory.mktemp("plan_hygiene")
+    transcripts.write.parquet(str(tmp / "turns"))
+    turns = spark.read.parquet(str(tmp / "turns"))
+    for fam in FAMILIES.values():
+        windows = dict(fam.chain)
+        tier0 = fam.tier0(turns, windows[fam.batch_from])
+        out[f"{fam.name}.tier0"] = tier0
+        source, _, window = fam.cascades(fam.batch_from)[0]
+        tier0.write.parquet(str(tmp / source))
+        out[f"{fam.name}.cascade"] = fam.cascade(spark.read.parquet(str(tmp / source)), window)
+    series = turns.select("conv_id", "ts", F.length("text").cast("double").alias("v"))
+    out["invert_pairs"] = invert_pairs(adjacent_pairs(with_text_len(turns)))
+    out["resample_spline"] = resample_spline(series, interval_sec=3600)
+    out["compress_series"] = compress_series(series)
+    return out
+
+
+def test_no_rowwise_python_in_any_engine_plan(plans):
+    offenders = [name for name, df in plans.items() if "BatchEvalPython" in executed_plan(df)]
     assert not offenders, offenders
 
 
 @pytest.mark.parametrize(
     ("name", "max_unique_exchanges", "max_python_stages"),
     [
-        ("flagship_rollup_1m", 1, 0),  # one shuffle, all JVM
-        ("w1_turn_deltas", 1, 0),  # series window only
-        ("doc_chunks", 0, 0),  # narrow map-only transform
-        ("sim_lsh_topk", 1, 0),  # r6: one spread exchange, JVM signatures
-        ("hist_p95_1h", 2, 0),  # r6: spread + direct-1h rank read
-        ("dedup_minhash_pairs", 3, 0),  # band/bucket + verify, linear
-        ("dedup_minhash_incremental", 5, 0),  # + store prune join
-        ("sbas_solve_bandwidth1", 2, 1),  # one Arrow solve stage
-        # map-only fold; the one exchange is r6's spread_scan spreading
-        # the single-split documents scan across cores (no-op at scale)
-        ("text_repetition", 1, 0),
-        ("event_gap_stats", 2, 0),  # user window (reused) + type window
-        ("shard_stats", 1, 0),  # one n_shards-way shuffle
-        ("hist_p95_global_1h", 2, 0),  # r6: spread + direct global read
-        ("top_tokens_per_source", 4, 0),  # spread + token agg + distinct + topk
-        ("distinct_convs_1h", 2, 0),  # r6: spread + direct 1h bit_or
-        ("distinct_hll_1h", 3, 0),  # r6: spread + direct 1h regs + read agg
-        ("hot_convs_cms_1h", 3, 0),  # r6: spread + probe-pushdown aggs
-        ("doc_oov_rate", 3, 0),  # vocab agg + doc_id aggs, broadcast join
-        ("late_data_profile", 1, 0),  # one conv_id window, groupBy reuses it
-        ("cusum_level_shift", 1, 0),  # one conv_id window, groupBy reuses it
-        ("counter_increase_1h", 1, 0),  # (conv,seg) windows ride conv_id hash
-        ("anomaly_hod_1h", 2, 0),  # 1h tier build + cohort window on tiny tier
-        ("metric_corr_1h", 2, 0),  # 1h tier build + per-conv component agg
-        ("watermark_sizing", 3, 0),  # lateness window (reused) + bucket agg
-        #   + single-partition rank scan over <= ~2k bucket rows
-        # one collect-fold shuffle (reused by both length-route branches);
-        # the r6 mega-series Arrow route adds one vectorized stage that
-        # only sees series past EWMA_FOLD_MAX_TURNS
-        ("holt_smooth", 1, 1),
-        ("tier_reconcile_1h", 3, 0),  # tier build (reused) + join sides
+        ("stats.tier0", 1, 0),
+        ("stats.cascade", 1, 0),
+        ("hist.tier0", 1, 0),
+        ("hist.cascade", 1, 0),
+        ("lb.tier0", 1, 0),
+        ("lb.cascade", 1, 0),
+        ("dist.tier0", 1, 0),
+        ("dist.cascade", 1, 0),
+        ("hll.tier0", 1, 0),
+        ("hll.cascade", 1, 0),
+        ("cms.tier0", 1, 0),
+        ("cms.cascade", 1, 0),
+        ("kmv.tier0", 2, 0),  # (window, hash) dedup agg + per-window agg
+        ("kmv.cascade", 1, 0),
+        ("m4.tier0", 1, 0),
+        ("m4.cascade", 1, 0),
+        ("invert_pairs", 1, 1),  # conv_id exchange, one Arrow solve stage
+        ("resample_spline", 2, 1),  # last-wins per (conv_id, grid cell) + keyed repartition
+        ("compress_series", 1, 1),
     ],
 )
-def test_exchange_and_python_budgets(spark, name, max_unique_exchanges, max_python_stages):
-    """Unique-exchange budgets per query shape (repeated DAG branches
-    collapse — ReuseExchange executes them once). A raw-size shuffle
-    sneaking into a zero/one-shuffle plan is the regression that hurts
-    most at scale."""
-    df = entry_mod.queries()[name](spark, SF)
-    a = audit(df)
-    assert a.n_exchanges_unique <= max_unique_exchanges, (
-        name,
-        a.exchanges,
-    )
+def test_exchange_and_python_budgets(plans, name, max_unique_exchanges, max_python_stages):
+    """Unique-exchange budgets (repeated DAG branches collapse:
+    ReuseExchange runs them once) and Arrow Python stages per plan."""
+    a = audit(plans[name])
+    assert a.n_exchanges_unique <= max_unique_exchanges, (name, a.exchanges)
     assert a.python_stages <= max_python_stages, name

@@ -63,26 +63,3 @@ def test_ramp_goldens():
     assert_array_almost_equal(remove_ramp(z, order=1), np.zeros((4, 4)))
     assert_array_almost_equal(estimate_ramp(z, order=2), [1, 1, 2, 0, 0, 0])
     assert_array_almost_equal(remove_ramp(z, order=2), np.zeros((4, 4)))
-
-
-def test_detrend_linear_removes_trend(spark):
-    import datetime as dt
-
-    import pandas as pd
-
-    from insar_spark.operators.smoothing import detrend_linear
-
-    base = dt.datetime(2025, 1, 1)
-    rows = []
-    rng = np.random.default_rng(0)
-    resid_truth = rng.normal(0, 1, 50)
-    resid_truth -= resid_truth.mean()  # mean-zero so intercept absorbs rest
-    for i in range(50):
-        rows.append(("c1", base + dt.timedelta(days=i), 5.0 + 2.0 * i))
-        rows.append(("c2", base + dt.timedelta(days=i), -3.0 * i + float(resid_truth[i])))
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["conv_id", "ts", "v"]))
-    out = detrend_linear(df).toPandas()
-    pure = out[out.conv_id == "c1"]["v_detrended"].to_numpy()
-    np.testing.assert_allclose(pure, 0.0, atol=1e-8)
-    noisy = out[out.conv_id == "c2"]["v_detrended"].to_numpy()
-    assert abs(noisy.mean()) < 1e-8  # residuals are mean-zero after detrend

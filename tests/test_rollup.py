@@ -5,7 +5,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from insar_spark.operators.rollup import cascade, finalize, rollup_all_tiers, rollup_turns
+from insar_spark.operators.rollup import cascade, finalize, rollup_turns
 
 
 def _pd_rollup(pdf: pd.DataFrame, unit: str) -> pd.DataFrame:
@@ -44,8 +44,9 @@ def test_cascade_identity_1h(spark, transcripts):
 
 def test_cascade_identity_1d(spark, transcripts):
     direct = _sorted(rollup_turns(transcripts, "1d").toPandas())
-    tiers = rollup_all_tiers(transcripts)
-    cascaded = _sorted(tiers["1d"].toPandas())
+    cascaded = _sorted(
+        cascade(cascade(rollup_turns(transcripts, "1m"), "1h"), "1d").toPandas()
+    )
     pd.testing.assert_frame_equal(direct, cascaded, check_exact=True)
 
 

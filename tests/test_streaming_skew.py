@@ -1,18 +1,12 @@
-"""Streaming rollup + explicit skew handling."""
+"""Structured-Streaming tier builders == their batch twins."""
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from insar_spark.operators.rollup import rollup_turns
-from insar_spark.operators.series import turn_deltas, with_text_len
-from insar_spark.operators.skew import (
-    chunked_turn_deltas,
-    route_by_size,
-    salted_two_phase_rollup,
-)
-from insar_spark.synth import synth_transcripts
+from insar_spark.sources.catalog import TierStore
+from insar_spark.streaming.rollup_stream import stream_to_tierstore
 
 
 def _sorted(pdf, cols):
@@ -20,15 +14,19 @@ def _sorted(pdf, cols):
 
 
 def test_streaming_rollup_matches_batch(spark, tmp_path, transcripts):
-    """File-source streaming 1m rollup == batch 1m rollup on the same data."""
-    from insar_spark.streaming.rollup_stream import run_stream_to_memory
-
+    """File-source streaming 1m rollup, committed to the epoch log by
+    stream_to_tierstore, == batch 1m rollup on the same data."""
     src = str(tmp_path / "stream_src")
     transcripts.write.mode("overwrite").parquet(src)
 
-    run_stream_to_memory(spark, src, query_name="t1m")
+    store = TierStore(str(tmp_path / "tiers"))
+    q = stream_to_tierstore(spark, src, store, checkpoint_dir=str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     got = _sorted(
-        spark.sql("SELECT * FROM t1m").toPandas(), ["conv_id", "window_start"]
+        store.read_tier_log(spark, "1m").toPandas(), ["conv_id", "window_start"]
     )
     exp = _sorted(rollup_turns(transcripts, "1m").toPandas(), ["conv_id", "window_start"])
     assert len(got) == len(exp)
@@ -36,117 +34,6 @@ def test_streaming_rollup_matches_batch(spark, tmp_path, transcripts):
         np.testing.assert_allclose(
             got[c].to_numpy("float64"), exp[c].to_numpy("float64"), err_msg=c
         )
-
-
-def test_session_window_metric(spark, tmp_path, transcripts):
-    from insar_spark.streaming.rollup_stream import (
-        read_transcript_stream,
-        stateful_session_metric,
-    )
-
-    src = str(tmp_path / "stream_src2")
-    transcripts.filter("conv_id < 'conv00000004'").write.mode("overwrite").parquet(src)
-    q = (
-        stateful_session_metric(read_transcript_stream(spark, src))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sessions")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    out = spark.sql("SELECT * FROM sessions").toPandas()
-    assert len(out) > 0
-    assert (out["session_end"] > out["session_start"]).all()
-    assert (out["n_turns"] >= 1).all()
-    # sessions of one conversation never overlap
-    for _, g in out.groupby("conv_id"):
-        g = g.sort_values("session_start")
-        assert (
-            g["session_start"].iloc[1:].to_numpy()
-            >= g["session_end"].iloc[:-1].to_numpy()
-        ).all()
-
-
-def test_salted_rollup_equals_plain(spark, transcripts):
-    plain = _sorted(
-        rollup_turns(transcripts, "1m")
-        .select("conv_id", "window_start", "n_turns", "n_tool_calls",
-                "sum_text_len", "min_text_len", "max_text_len")
-        .toPandas(),
-        ["conv_id", "window_start"],
-    )
-    salted = _sorted(
-        salted_two_phase_rollup(transcripts, "minute", n_salt=8).toPandas(),
-        ["conv_id", "window_start"],
-    )
-    pd.testing.assert_frame_equal(plain, salted, check_exact=True)
-
-
-def test_chunked_deltas_bitwise_equal(spark):
-    df = with_text_len(
-        synth_transcripts(spark, n_convs=6, seed=3, mega_every=3, mega_turns=5000)
-    )
-    plain = _sorted(
-        turn_deltas(df).select("conv_id", "turn_idx", "delta_v", "dt_sec").toPandas(),
-        ["conv_id", "turn_idx"],
-    )
-    chunked = _sorted(
-        chunked_turn_deltas(df, chunk_size=700)
-        .select("conv_id", "turn_idx", "delta_v", "dt_sec")
-        .toPandas(),
-        ["conv_id", "turn_idx"],
-    )
-    pd.testing.assert_frame_equal(plain, chunked, check_exact=True)
-
-
-def test_route_by_size_equals_plain(spark):
-    df = with_text_len(
-        synth_transcripts(spark, n_convs=8, seed=4, mega_every=4, mega_turns=3000)
-    )
-    plain = _sorted(
-        turn_deltas(df).select("conv_id", "turn_idx", "delta_v").toPandas(),
-        ["conv_id", "turn_idx"],
-    )
-    routed = _sorted(
-        route_by_size(df, mega_threshold=1000, chunk_size=500)
-        .select("conv_id", "turn_idx", "delta_v")
-        .toPandas(),
-        ["conv_id", "turn_idx"],
-    )
-    pd.testing.assert_frame_equal(plain, routed, check_exact=True)
-
-
-def test_chunked_deltas_match_unchunked_around_nulls(spark):
-    """Regression: a row following a NULL-valued row mid-chunk must get a
-    NULL delta (like plain lag), not the previous chunk's tail value."""
-    import datetime as dt
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from insar_spark.operators.series import turn_deltas
-    from insar_spark.operators.skew import chunked_turn_deltas
-
-    base = dt.datetime(2025, 3, 1)
-    rows = []
-    for i in range(20):
-        v = None if i in (4, 7, 10) else float(i * 10)
-        rows.append(("c1", i, base + dt.timedelta(seconds=i), v))
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["conv_id", "turn_idx", "ts", "text_len"])
-    )
-    plain = (
-        turn_deltas(df).toPandas().sort_values("turn_idx").reset_index(drop=True)
-    )
-    chunked = (
-        chunked_turn_deltas(df, chunk_size=5)
-        .toPandas()
-        .sort_values("turn_idx")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_series_equal(plain["delta_v"], chunked["delta_v"])
-    pd.testing.assert_series_equal(plain["dt_sec"], chunked["dt_sec"])
 
 
 def test_ord_key_overflow_fails_loudly(spark):
@@ -179,8 +66,6 @@ def test_streaming_ord_key_overflow_fails_loudly(spark, tmp_path):
     import pandas as pd
     import pytest
 
-    from insar_spark.streaming.rollup_stream import run_stream_to_memory
-
     df = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -195,109 +80,15 @@ def test_streaming_ord_key_overflow_fails_loudly(spark, tmp_path):
     )
     src = str(tmp_path / "overflow_src")
     df.write.mode("overwrite").parquet(src)
-    with pytest.raises(Exception, match="ord_key overflow"):
-        run_stream_to_memory(spark, src, query_name="t1m_overflow")
-
-
-def _mega_plus_tail(spark, mega_turns: int, tail_convs: int, tail_turns: int):
-    """One mega conversation + a long tail, whole-second timestamps,
-    deterministic values — built JVM-side (no driver-side 10^5-row pandas)."""
-    import pyspark.sql.functions as F
-
-    mega = spark.range(mega_turns).select(
-        F.lit("mega").alias("conv_id"),
-        F.col("id").cast("int").alias("turn_idx"),
-        F.timestamp_seconds(F.lit(1735689600) + F.col("id") * 2).alias("ts"),
-        (F.pmod(F.col("id") * 37, F.lit(997)).cast("double") + 1.0).alias(
-            "text_len"
-        ),
-        F.when(F.col("id") % 5 == 0, F.lit("search")).alias("tool"),
-    ).withColumn(
-        "text", F.repeat(F.lit("x"), F.col("text_len").cast("int"))
+    store = TierStore(str(tmp_path / "overflow_tiers"))
+    q = stream_to_tierstore(
+        spark, src, store, checkpoint_dir=str(tmp_path / "overflow_ckpt")
     )
-    tail = spark.range(tail_convs * tail_turns).select(
-        F.concat(F.lit("t"), (F.col("id") % tail_convs).cast("string")).alias(
-            "conv_id"
-        ),
-        (F.col("id") / tail_convs).cast("int").alias("turn_idx"),
-        F.timestamp_seconds(
-            F.lit(1735689600) + (F.col("id") / tail_convs).cast("long") * 7
-        ).alias("ts"),
-        (F.pmod(F.col("id") * 13, F.lit(503)).cast("double") + 1.0).alias(
-            "text_len"
-        ),
-        F.when(F.col("id") % 3 == 0, F.lit("code")).alias("tool"),
-    ).withColumn(
-        "text", F.repeat(F.lit("x"), F.col("text_len").cast("int"))
-    )
-    return mega.unionByName(tail)
-
-
-def test_mega_series_composed_pipeline_equals_plain(spark):
-    """The 100-TB skew story END TO END on a real 10^5-turn conversation:
-    route_by_size -> chunked deltas -> salted rollup -> solve, each stage
-    equal to its plain single-window counterpart (the pieces were tested
-    separately before; this is the composed proof)."""
-    import pyspark.sql.functions as F
-
-    from insar_spark.operators.sbas import invert_pairs
-    from insar_spark.operators.series import adjacent_pairs
-
-    df = _mega_plus_tail(spark, mega_turns=100_000, tail_convs=20, tail_turns=50)
-
-    # stage 1: deltas — routed (mega through the chunked path) == plain
-    routed = _sorted(
-        route_by_size(df, mega_threshold=50_000, chunk_size=10_000).toPandas(),
-        ["conv_id", "turn_idx"],
-    )
-    plain = _sorted(turn_deltas(df).toPandas(), ["conv_id", "turn_idx"])
-    pd.testing.assert_series_equal(routed["delta_v"], plain["delta_v"])
-    pd.testing.assert_series_equal(routed["dt_sec"], plain["dt_sec"])
-
-    # stage 2: rollup — salted two-phase == plain tier rollup
-    cols = ["n_turns", "n_tool_calls", "sum_text_len", "min_text_len", "max_text_len"]
-    salted = _sorted(
-        salted_two_phase_rollup(df, "minute", value_col="text_len").toPandas(),
-        ["conv_id", "window_start"],
-    )
-    direct = _sorted(
-        rollup_turns(df, "1m").toPandas(), ["conv_id", "window_start"]
-    )
-    for c in cols:
-        np.testing.assert_array_equal(
-            salted[c].to_numpy("float64"), direct[c].to_numpy("float64"), err_msg=c
-        )
-
-    # stage 3: solve — pairs derived from the ROUTED deltas == pairs from
-    # the plain window operator, through the same SBAS kernel. A dense
-    # bandwidth-1 solve is O(n^2) memory in series length, so the solve
-    # stage runs on a 2k-turn mega (threshold 500) — still the chunked
-    # path, bounded kernel size.
-    df_s = _mega_plus_tail(spark, mega_turns=2_000, tail_convs=10, tail_turns=40)
-    routed_d = route_by_size(df_s, mega_threshold=500, chunk_size=256)
-    pairs_routed = routed_d.filter(F.col("dt_sec").isNotNull()).select(
-        "conv_id",
-        F.timestamp_micros(
-            F.unix_micros("ts") - (F.col("dt_sec") * 1_000_000).cast("long")
-        ).alias("early_ts"),
-        F.col("ts").alias("late_ts"),
-        "delta_v",
-    )
-    got = _sorted(
-        invert_pairs(pairs_routed, prefilter=False).toPandas(),
-        ["conv_id", "date_num"],
-    )
-    exp = _sorted(
-        invert_pairs(
-            adjacent_pairs(df_s, "text_len", k=1), prefilter=False
-        ).toPandas(),
-        ["conv_id", "date_num"],
-    )
-    assert got["conv_id"].tolist() == exp["conv_id"].tolist()
-    np.testing.assert_array_equal(got["phase"], exp["phase"])
-    np.testing.assert_array_equal(
-        got["temporal_coherence"], exp["temporal_coherence"]
-    )
+    try:
+        with pytest.raises(Exception, match="ord_key overflow"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 def test_streaming_hist_matches_batch_and_serves_global_p95(
@@ -356,46 +147,6 @@ def test_streaming_hist_matches_batch_and_serves_global_p95(
 
     gp, ep = p95(got), p95(exp)
     assert gp["p95"].tolist() == ep["p95"].tolist() and len(gp) > 0
-
-
-def test_streaming_distinct_bitmap_matches_batch(spark, tmp_path, transcripts):
-    """Streaming-built 1m distinct bitmaps == batch distinct_rollup on the
-    same turns — streaming count-distinct with zero custom state."""
-    from insar_spark.streaming.rollup_stream import (
-        read_transcript_stream,
-        streaming_distinct_1m,
-    )
-    from insar_spark.operators.sketch import distinct_rollup
-
-    src = str(tmp_path / "distinct_src")
-    transcripts.write.mode("overwrite").parquet(src)
-
-    stream = streaming_distinct_1m(
-        read_transcript_stream(spark, src, max_files_per_trigger=None)
-    )
-    q = (
-        stream.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("d1m_stream")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    g = (
-        spark.sql("SELECT * FROM d1m_stream")
-        .toPandas()
-        .sort_values("window_start")
-        .reset_index(drop=True)
-    )
-    e = (
-        distinct_rollup(transcripts.select("conv_id", "ts"), "1m")
-        .toPandas()
-        .sort_values("window_start")
-        .reset_index(drop=True)
-    )
-    assert len(g) == len(e) > 0
-    assert [list(b) for b in g["bitmap"]] == [list(b) for b in e["bitmap"]]
 
 
 def test_streaming_hll_matches_batch(spark, tmp_path, transcripts):
