@@ -1,11 +1,8 @@
-"""As-of join, L1 IRLS solve, closure phases."""
+"""L1 IRLS solve and closure phases (the robust-inversion kernels)."""
 
 from __future__ import annotations
 
-import datetime as dt
-
 import numpy as np
-import pandas as pd
 import pytest
 
 from insar_spark.functions.sbas_kernels import (
@@ -14,91 +11,6 @@ from insar_spark.functions.sbas_kernels import (
     integrate_velocities,
     invert_sbas_l1,
 )
-from insar_spark.operators.asof import asof_join_backward
-
-BASE = dt.datetime(2025, 5, 1)
-
-
-def _ts(minutes: float) -> dt.datetime:
-    return BASE + dt.timedelta(minutes=minutes)
-
-
-@pytest.fixture(scope="module")
-def asof_frames(spark):
-    left = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                ("a", _ts(1), 0, 10.0),
-                ("a", _ts(5), 1, 20.0),
-                ("a", _ts(9), 2, 30.0),
-                ("b", _ts(2), 0, 5.0),
-            ],
-            columns=["conv_id", "ts", "turn_idx", "v"],
-        )
-    )
-    right = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                ("a", _ts(0), 100.0),
-                ("a", _ts(5), 200.0),  # equal-ts: counts as at-or-before
-                ("a", _ts(7), 300.0),
-                ("b", _ts(3), 400.0),  # after b's only left row
-            ],
-            columns=["conv_id", "ts", "v"],
-        )
-    )
-    return left, right
-
-
-def test_asof_backward_semantics(spark, asof_frames):
-    left, right = asof_frames
-    out = (
-        asof_join_backward(left, right)
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    assert out["v_asof"].tolist()[:3] == [100.0, 200.0, 300.0]
-    assert pd.isna(out["v_asof"].iloc[3])  # no right row at/before b's left
-
-
-def test_asof_tolerance(spark, asof_frames):
-    left, right = asof_frames
-    out = (
-        asof_join_backward(left, right, tolerance_sec=90)
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    # row 0: match 1 min old (ok); row 1: exact-ts (ok); row 2: 2 min old (stale)
-    assert out["v_asof"].iloc[0] == 100.0
-    assert out["v_asof"].iloc[1] == 200.0
-    assert pd.isna(out["v_asof"].iloc[2])
-
-
-def test_asof_matches_pandas_merge_asof(spark, transcripts):
-    from pyspark.sql import functions as F
-
-    t = transcripts.filter("conv_id < 'conv00000005'").select(
-        "conv_id", "ts", "turn_idx", F.length("text").cast("double").alias("v")
-    )
-    lefts = t.filter("turn_idx % 2 = 0")
-    rights = t.filter("turn_idx % 2 = 1").select("conv_id", "ts", "v")
-    got = (
-        asof_join_backward(lefts, rights)
-        .toPandas()
-        .sort_values(["conv_id", "ts", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    lp = lefts.toPandas().sort_values("ts")
-    rp = rights.toPandas().sort_values("ts")
-    exp = pd.merge_asof(
-        lp, rp, on="ts", by="conv_id", direction="backward", suffixes=("", "_asof")
-    ).sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
-    np.testing.assert_array_equal(
-        got["v_asof"].to_numpy(), exp["v_asof"].to_numpy()
-    )
-
 
 # ---------------------------------------------------------------- L1 solve
 

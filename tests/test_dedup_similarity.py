@@ -442,73 +442,3 @@ def test_minhash_incremental_equals_full_restricted(spark, tmp_path, docs_with_d
     assert any(f.startswith("band=") for f in os.listdir(path))
 
 
-def test_streaming_dedup_accumulates_full_pair_set(spark, tmp_path, docs_with_dups):
-    """Streaming drops through the foreachBatch incremental pipeline: after
-    all drops, the accumulated pair set equals one-shot batch minhash_dedup
-    over the full corpus, and a replayed epoch appends nothing."""
-    from insar_spark.operators.dedup import minhash_dedup
-    from insar_spark.streaming.dedup_stream import (
-        DedupStreamStore,
-        process_dedup_batch,
-    )
-
-    store = DedupStreamStore(str(tmp_path / "dstore"))
-    drops = [
-        docs_with_dups.filter("doc_id <= 2"),   # includes exact+near of 0
-        docs_with_dups.filter("doc_id in (3, 4)"),
-        docs_with_dups.filter("doc_id >= 5"),   # 5 pairs with 0/1 across drops
-    ]
-    for epoch, d in enumerate(drops):
-        process_dedup_batch(spark, store, d, epoch, threshold=0.5)
-
-    got = spark.read.parquet(store.pairs)
-    got_set = {
-        tuple(sorted((r["id_a"], r["id_b"]))) for r in got.collect()
-    }
-    full = minhash_dedup(docs_with_dups, threshold=0.5)
-    full_set = {
-        tuple(sorted((r["id_a"], r["id_b"]))) for r in full.collect()
-    }
-    assert got_set == full_set and len(full_set) >= 3
-
-    # replayed epoch (crash re-execution) must be a no-op
-    n_before = got.count()
-    process_dedup_batch(spark, store, drops[0], 0, threshold=0.5)
-    assert spark.read.parquet(store.pairs).count() == n_before
-
-
-def test_streaming_dedup_via_file_stream(spark, tmp_path, docs_with_dups):
-    """The same invariant through an actual readStream/foreachBatch query
-    over two sequential parquet drops."""
-    from insar_spark.operators.dedup import minhash_dedup
-    from insar_spark.streaming.dedup_stream import (
-        DedupStreamStore,
-        stream_dedup,
-    )
-
-    src = str(tmp_path / "drops")
-    ckpt = str(tmp_path / "ckpt")
-    store = DedupStreamStore(str(tmp_path / "dstore2"))
-
-    # drops append part files at the TOP level of src: the file stream
-    # source lists the directory itself, not nested subdirectories
-    docs_with_dups.filter("doc_id <= 3").select("doc_id", "text").write.mode(
-        "append"
-    ).parquet(src)
-    q = stream_dedup(spark, src, store, ckpt, threshold=0.5)
-    q.processAllAvailable()
-    docs_with_dups.filter("doc_id > 3").select("doc_id", "text").write.mode(
-        "append"
-    ).parquet(src)
-    q.processAllAvailable()
-    q.stop()
-
-    got_set = {
-        tuple(sorted((r["id_a"], r["id_b"])))
-        for r in spark.read.parquet(store.pairs).collect()
-    }
-    full_set = {
-        tuple(sorted((r["id_a"], r["id_b"])))
-        for r in minhash_dedup(docs_with_dups, threshold=0.5).collect()
-    }
-    assert got_set == full_set

@@ -1,7 +1,9 @@
 """Physical-plan hygiene as CI over the plans the engine runs: each tier
 family's tier-0 build and its first cascade (from a stored tier, as
-``rollup_job`` and ``stream_job`` run it), and the per-series Python
-kernels (SBAS solve, spline gap-fill, Gorilla compression).
+``rollup_job`` and ``stream_job`` run it), the per-series Python kernels
+(SBAS solve, spline gap-fill, Gorilla compression), every DuckDB-checked
+query of ``test_duckdb_oracle`` and the corpus operators' query shapes,
+the last two over the sf0.001 files.
 
 A BatchEvalPython node means a row-at-a-time Python UDF crept in (the
 kernels must stay on the Arrow path). The exchange and Python-stage
@@ -16,6 +18,61 @@ from pyspark.sql import functions as F
 
 from insar_spark.families import FAMILIES
 from plan_inspect import audit, executed_plan
+from test_duckdb_oracle import ORACLES, SF, load, spread_scan
+
+
+def _corpus_queries(spark, store_dir: str) -> dict:
+    """The corpus operators over the sf0.001 documents/embeddings, as
+    ``jobs/corpus_job.py`` composes them (built, not run, except the
+    incremental dedup's stored minhash index)."""
+    from insar_spark.operators.dedup import (
+        minhash_dedup,
+        minhash_dedup_incremental,
+        minhash_write,
+    )
+    from insar_spark.operators.similarity import hyperplane_lsh_topk
+    from insar_spark.operators.textstats import (
+        chunk_documents,
+        repetition_stats,
+        token_frequencies,
+    )
+    from insar_spark.sources.shards import assign_shards
+
+    docs = load(spark, SF, "documents")
+    emb = load(spark, SF, "embeddings")
+    qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
+    minhash_write(docs.filter("doc_id % 2 = 0"), store_dir)
+    vocab = token_frequencies(docs, k=100).select("source", "token")
+    toks = docs.select("doc_id", "source", F.explode(F.split("text", " ")).alias("token"))
+    in_vocab = (
+        toks.join(F.broadcast(vocab), ["source", "token"], "left_semi")
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_in"))
+    )
+    totals = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
+    return {
+        "doc_chunks": chunk_documents(docs, chunk_tokens=32, overlap=8),
+        "sim_lsh_topk": hyperplane_lsh_topk(emb, qv, k=20, n_bits=10),
+        "dedup_minhash_pairs": minhash_dedup(docs, threshold=0.8),
+        "dedup_minhash_incremental": minhash_dedup_incremental(
+            spark, docs.filter("doc_id % 2 = 1"), store_dir, docs, threshold=0.8
+        ),
+        "text_repetition": repetition_stats(spread_scan(docs, "doc_id")),
+        "shard_stats": assign_shards(docs, n_shards=64)
+        .groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("total_chars"),
+            F.min("doc_id").alias("min_id"),
+            F.max("doc_id").alias("max_id"),
+        ),
+        "top_tokens_per_source": token_frequencies(spread_scan(docs, "doc_id"), k=10),
+        "doc_oov_rate": totals.join(in_vocab, "doc_id", "left").select(
+            "doc_id",
+            ((F.col("n_tok") - F.coalesce("n_in", F.lit(0))).cast("double") / F.col("n_tok"))
+            .alias("oov_rate"),
+        ),
+    }
 
 
 @pytest.fixture(scope="module")
@@ -39,14 +96,21 @@ def plans(spark, transcripts, tmp_path_factory):
         source, _, window = fam.cascades(fam.batch_from)[0]
         tier0.write.parquet(str(tmp / source))
         out[f"{fam.name}.cascade"] = fam.cascade(spark.read.parquet(str(tmp / source)), window)
+    # the stats family's 1m tier-0 build is the flagship rollup
+    out["flagship_rollup_1m"] = out["stats.tier0"]
     series = turns.select("conv_id", "ts", F.length("text").cast("double").alias("v"))
     out["invert_pairs"] = invert_pairs(adjacent_pairs(with_text_len(turns)))
     out["resample_spline"] = resample_spline(series, interval_sec=3600)
     out["compress_series"] = compress_series(series)
+    for name, (query, _) in ORACLES.items():
+        out[name] = query(spark, SF)
+    out.update(_corpus_queries(spark, str(tmp / "minhash_store")))
     return out
 
 
-def test_no_rowwise_python_in_any_engine_plan(plans):
+def test_no_rowwise_python_in_any_contract_query(plans):
+    """Every plan above must stay on the Arrow path: a BatchEvalPython
+    node means a row-at-a-time Python UDF crept in."""
     offenders = [name for name, df in plans.items() if "BatchEvalPython" in executed_plan(df)]
     assert not offenders, offenders
 
@@ -73,6 +137,36 @@ def test_no_rowwise_python_in_any_engine_plan(plans):
         ("invert_pairs", 1, 1),  # conv_id exchange, one Arrow solve stage
         ("resample_spline", 2, 1),  # last-wins per (conv_id, grid cell) + keyed repartition
         ("compress_series", 1, 1),
+        ("flagship_rollup_1m", 1, 0),  # one shuffle, all JVM
+        ("w1_turn_deltas", 1, 0),  # series window only
+        ("doc_chunks", 0, 0),  # narrow map-only transform
+        ("sim_lsh_topk", 1, 0),  # one spread exchange, JVM signatures
+        ("hist_p95_1h", 2, 0),  # spread + direct-1h rank read
+        ("dedup_minhash_pairs", 3, 0),  # band/bucket + verify, linear
+        ("dedup_minhash_incremental", 5, 0),  # + store prune join
+        ("sbas_solve_bandwidth1", 2, 1),  # one Arrow solve stage
+        # map-only fold; the one exchange is spread_scan spreading the
+        # single-split documents scan across cores (no-op at scale)
+        ("text_repetition", 1, 0),
+        ("shard_stats", 1, 0),  # one n_shards-way shuffle
+        ("hist_p95_global_1h", 2, 0),  # spread + direct global read
+        ("top_tokens_per_source", 4, 0),  # spread + token agg + distinct + topk
+        ("distinct_convs_1h", 2, 0),  # spread + direct 1h bit_or
+        ("distinct_hll_1h", 3, 0),  # spread + direct 1h regs + read agg
+        ("hot_convs_cms_1h", 3, 0),  # spread + probe-pushdown aggs
+        ("doc_oov_rate", 3, 0),  # vocab agg + doc_id aggs, broadcast join
+        ("late_data_profile", 1, 0),  # one conv_id window, groupBy reuses it
+        ("cusum_level_shift", 1, 0),  # one conv_id window, groupBy reuses it
+        ("counter_increase_1h", 1, 0),  # (conv,seg) windows ride conv_id hash
+        ("anomaly_hod_1h", 2, 0),  # 1h tier build + cohort window on tiny tier
+        ("metric_corr_1h", 2, 0),  # 1h tier build + per-conv component agg
+        ("watermark_sizing", 3, 0),  # lateness window (reused) + bucket agg
+        #   + single-partition rank scan over <= ~2k bucket rows
+        # one collect-fold shuffle (reused by both length-route branches);
+        # the mega-series Arrow route adds one vectorized stage that only
+        # sees series past EWMA_FOLD_MAX_TURNS
+        ("holt_smooth", 1, 1),
+        ("tier_reconcile_1h", 3, 0),  # tier build (reused) + join sides
     ],
 )
 def test_exchange_and_python_budgets(plans, name, max_unique_exchanges, max_python_stages):

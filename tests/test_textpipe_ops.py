@@ -79,42 +79,6 @@ class TestShards:
         assert rejoin.where("w.shard <> m.shard").count() == 0
 
 
-class TestEventGapMedian:
-    def test_even_and_odd_counts(self, spark, tmp_path):
-        """The row-number median construction: odd n -> middle element,
-        even n -> mean of the two middle elements."""
-        import __spark_entry__ as e
-
-        # one user, gaps 10s/20s/40s (odd, median 20) for type 'x';
-        # two gaps 10s/30s (even, median 20) for type 'y'
-        rows = []
-        ts = pd.Timestamp("2024-01-01")
-        deltas = [
-            ("x", 0), ("x", 10), ("x", 30), ("x", 70),  # gaps 10,20,40
-            ("y", 100), ("y", 110), ("y", 140),          # gaps 10,30
-        ]
-        uid = {"x": 1, "y": 2}
-        for i, (etype, off) in enumerate(deltas):
-            rows.append(
-                (i, ts + pd.Timedelta(seconds=off), uid[etype], etype, 0.0, "{}")
-            )
-        pdf = pd.DataFrame(
-            rows,
-            columns=["event_id", "ts", "user_id", "event_type", "value", "props"],
-        )
-        sf_dir = str(tmp_path)
-        spark.createDataFrame(pdf).write.parquet(f"{sf_dir}/events.parquet")
-        out = {
-            r["event_type"]: r
-            for r in e.q_event_gap_stats(spark, sf_dir).collect()
-        }
-        assert out["x"]["n_gaps"] == 3
-        assert out["x"]["median_gap_us"] == 20e6
-        assert out["x"]["mean_gap_us"] == (10e6 + 20e6 + 40e6) / 3
-        assert out["y"]["n_gaps"] == 2
-        assert out["y"]["median_gap_us"] == 20e6
-
-
 from collections import Counter
 
 from hypothesis import HealthCheck, given, settings
