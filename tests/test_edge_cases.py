@@ -129,51 +129,13 @@ def test_gapfill_property_piecewise_linear(spark):
         np.testing.assert_allclose(g["v_filled"].to_numpy(), exp, atol=1e-9)
 
 
-# DuckDB twin of media_from_docs + extract_features over a documents table
-_SQL_MULTIMODAL = """
-WITH d AS (
-  -- byte semantics throughout (the Spark payload is utf-8 BYTES), except
-  -- the width formula, which the Spark side itself derives from the CHAR
-  -- length (F.length on a string column) — faithful to media_from_docs
-  SELECT doc_id AS media_id,
-         ['image','audio','video'][(doc_id % 3 + 1)::INT] AS kind,
-         hex(encode(text)) AS hx,
-         octet_length(encode(text)) AS n,
-         (8 + length(text) % 56) * (8 + (doc_id * 7) % 56) AS need
-  FROM documents
-), c AS (
-  SELECT media_id, kind, n, need,
-         list_transform(range(0, n), i ->
-           16 * (strpos('0123456789ABCDEF', substr(hx, 2 * i + 1, 1)) - 1)
-              + (strpos('0123456789ABCDEF', substr(hx, 2 * i + 2, 1)) - 1)
-         ) AS o
-  FROM d
-), s AS (
-  -- decode stub tiles the n-byte buffer ceil(need/n) times, truncates to
-  -- `need`: full copies = need // n, remainder prefix = need % n bytes
-  SELECT media_id, kind, n, need,
-         CASE WHEN n = 0 THEN 0.0 ELSE
-           ((need // n) * list_sum(o)
-            + coalesce(list_sum(o[1:(need % n)]), 0))::DOUBLE / need END AS mean,
-         CASE WHEN n = 0 THEN 0.0 ELSE
-           ((need // n) * list_sum(list_transform(o, x -> x * x))
-            + coalesce(list_sum(list_transform(o[1:(need % n)], x -> x * x)), 0)
-           )::DOUBLE / need END AS ex2
-  FROM c
-)
-SELECT media_id, kind, mean AS feat_mean,
-       sqrt(ex2 - mean * mean) AS feat_std, n AS n_bytes
-FROM s
-"""
-
-
 def test_multimodal_oracle_byte_parity_non_ascii(spark, tmp_path):
     """The multimodal oracle must use BYTE semantics (the Spark payload is
     utf-8 bytes): parity must hold for non-ASCII text and for an empty
     document (the old char-based oracle divided by zero there)."""
     import duckdb
 
-    from insar_spark.operators.multimodal import extract_features, media_from_docs
+    from test_duckdb_oracle import _SQL_MULTIMODAL, q_multimodal_features
 
     pdf = pd.DataFrame(
         {
@@ -194,14 +156,7 @@ def test_multimodal_oracle_byte_parity_non_ascii(spark, tmp_path):
     shutil.copy(glob.glob(str(tmp_path / "docs" / "*.parquet"))[0], p)
 
     got = (
-        extract_features(media_from_docs(spark.read.parquet(p)))
-        .select(
-            "media_id",
-            "kind",
-            "feat_mean",
-            "feat_std",
-            F.col("n_bytes").cast("long").alias("n_bytes"),
-        )
+        q_multimodal_features(spark, str(tmp_path))
         .toPandas()
         .sort_values("media_id")
         .reset_index(drop=True)

@@ -1,9 +1,9 @@
 """Physical-plan hygiene as CI over the plans the engine runs: each tier
 family's tier-0 build and its first cascade (from a stored tier, as
 ``rollup_job`` and ``stream_job`` run it), the per-series Python kernels
-(SBAS solve, spline gap-fill, Gorilla compression), every DuckDB-checked
-query of ``test_duckdb_oracle`` and the corpus operators' query shapes,
-the last two over the sf0.001 files.
+(SBAS solve, spline gap-fill, Gorilla compression) and every
+DuckDB-checked query of ``test_duckdb_oracle`` (engine and corpus
+operators), the last over the sf0.001 files.
 
 A BatchEvalPython node means a row-at-a-time Python UDF crept in (the
 kernels must stay on the Arrow path). The exchange and Python-stage
@@ -18,68 +18,15 @@ from pyspark.sql import functions as F
 
 from insar_spark.families import FAMILIES
 from plan_inspect import audit, executed_plan
-from test_duckdb_oracle import ORACLES, SF, load, spread_scan
-
-
-def _corpus_queries(spark, store_dir: str) -> dict:
-    """The corpus operators over the sf0.001 documents/embeddings, as
-    ``jobs/corpus_job.py`` composes them (built, not run, except the
-    incremental dedup's stored minhash index)."""
-    from insar_spark.operators.dedup import (
-        minhash_dedup,
-        minhash_dedup_incremental,
-        minhash_write,
-    )
-    from insar_spark.operators.similarity import hyperplane_lsh_topk
-    from insar_spark.operators.textstats import (
-        chunk_documents,
-        repetition_stats,
-        token_frequencies,
-    )
-    from insar_spark.sources.shards import assign_shards
-
-    docs = load(spark, SF, "documents")
-    emb = load(spark, SF, "embeddings")
-    qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    minhash_write(docs.filter("doc_id % 2 = 0"), store_dir)
-    vocab = token_frequencies(docs, k=100).select("source", "token")
-    toks = docs.select("doc_id", "source", F.explode(F.split("text", " ")).alias("token"))
-    in_vocab = (
-        toks.join(F.broadcast(vocab), ["source", "token"], "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_in"))
-    )
-    totals = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
-    return {
-        "doc_chunks": chunk_documents(docs, chunk_tokens=32, overlap=8),
-        "sim_lsh_topk": hyperplane_lsh_topk(emb, qv, k=20, n_bits=10),
-        "dedup_minhash_pairs": minhash_dedup(docs, threshold=0.8),
-        "dedup_minhash_incremental": minhash_dedup_incremental(
-            spark, docs.filter("doc_id % 2 = 1"), store_dir, docs, threshold=0.8
-        ),
-        "text_repetition": repetition_stats(spread_scan(docs, "doc_id")),
-        "shard_stats": assign_shards(docs, n_shards=64)
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-            F.min("doc_id").alias("min_id"),
-            F.max("doc_id").alias("max_id"),
-        ),
-        "top_tokens_per_source": token_frequencies(spread_scan(docs, "doc_id"), k=10),
-        "doc_oov_rate": totals.join(in_vocab, "doc_id", "left").select(
-            "doc_id",
-            ((F.col("n_tok") - F.coalesce("n_in", F.lit(0))).cast("double") / F.col("n_tok"))
-            .alias("oov_rate"),
-        ),
-    }
+from test_duckdb_oracle import ORACLES, SF
 
 
 @pytest.fixture(scope="module")
 def plans(spark, transcripts, tmp_path_factory):
     """Plan name -> DataFrame, each over a Parquet scan as the jobs read
-    their input (built, not run, except the written inputs: the turns and
-    each family's tier-0 output, the cascade's stored source)."""
+    their input (built, not run, except the written inputs: the turns,
+    each family's tier-0 output as the cascade's stored source, and the
+    indexes and centroids some corpus queries store or train first)."""
     from insar_spark.operators.compression import compress_series
     from insar_spark.operators.gapfill import resample_spline
     from insar_spark.operators.sbas import invert_pairs
@@ -104,7 +51,6 @@ def plans(spark, transcripts, tmp_path_factory):
     out["compress_series"] = compress_series(series)
     for name, (query, _) in ORACLES.items():
         out[name] = query(spark, SF)
-    out.update(_corpus_queries(spark, str(tmp / "minhash_store")))
     return out
 
 
