@@ -1,6 +1,6 @@
 """DuckDB oracles for the engine's per-series, sketch, downsample, SBAS,
 gap-fill, Gorilla and quality operators, and for the corpus pipeline's
-dedup, ANN, text-stats, multimodal and shard operators.
+dedup, text-stats and shard operators.
 
 Each case runs one engine query in Spark and its independent DuckDB
 twin over the ``events``, ``documents`` and ``embeddings`` tables of the
@@ -2473,15 +2473,14 @@ SELECT conv_id, {n_out - 1} AS sel_idx, ts, v FROM pts WHERE bucket = {b}"""
 _SQL_LTTB = _lttb_sql(24)
 
 
-# The corpus pipeline (jobs/corpus_job.py): dedup, ANN, text stats,
-# multimodal features and shards over the documents/embeddings tables.
+# The corpus pipeline (jobs/corpus_job.py): dedup, brute-force cosine,
+# text stats and shards over the documents/embeddings tables.
 
 
 def q_sim_cosine_vs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine similarity of every embedding vs embedding #0.
 
-    JVM-side: zip_with + aggregate (no Python). The exact baseline of the
-    LSH/IVF paths below.
+    JVM-side: zip_with + aggregate (no Python).
     """
     from insar_spark.operators.dedup import ensure_parallelism
 
@@ -2751,201 +2750,6 @@ FROM g
 """
 
 
-def q_sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k via hyperplane LSH (query bucket + all buckets within 2 bit
-    flips, exact cosine rerank). The oracle is a full independent SQL
-    re-execution: the seeded unit hyperplanes are inlined as literals, the
-    bucket is recomputed from sign bits, multiprobe == Hamming(bucket,
-    query_bucket) <= 2, then the same rerank — parity by construction."""
-    from insar_spark.operators.similarity import hyperplane_lsh_topk
-
-    emb = load(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    return hyperplane_lsh_topk(emb, qv, k=20, n_bits=10).select(
-        "vec_id", _r("cos_sim", 4).alias("cos_sim")
-    )
-
-
-def _sql_planes_literal(n_bits: int, dim: int, seed: int) -> str:
-    from insar_spark.operators.similarity import _hyperplanes
-
-    H = _hyperplanes(dim, n_bits, seed)
-    rows = ", ".join(
-        "[" + ", ".join(repr(float(x)) for x in row) + "]" for row in H
-    )
-    return f"[{rows}]"
-
-
-def _sql_sim_lsh(n_bits: int = 10, dim: int = 64, seed: int = 7, k: int = 20) -> str:
-    planes = _sql_planes_literal(n_bits, dim, seed)
-    return f"""
-WITH h AS (SELECT {planes} AS H),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-sig AS (
-  SELECT vec_id, v,
-         list_sum(list_transform(range(0, {n_bits}), j ->
-           CASE WHEN list_dot_product(v, H[j + 1]) > 0
-                THEN (1::BIGINT << j) ELSE 0 END))::BIGINT AS bucket
-  FROM e CROSS JOIN h
-),
-q AS (SELECT v AS qv, bucket AS qb FROM sig WHERE vec_id = 0)
-SELECT s.vec_id, round(list_cosine_similarity(s.v, q.qv), 4) AS cos_sim
-FROM sig s CROSS JOIN q
-WHERE bit_count(xor(s.bucket, q.qb)) <= 2
-ORDER BY list_cosine_similarity(s.v, q.qv) DESC, s.vec_id
-LIMIT {k}
-"""
-
-
-def q_sim_lsh_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Store-backed ANN top-k: signatures persisted once at write time
-    (lsh_write, partitionBy(bucket)); the query probes <= 56 bucket
-    partitions via partition pruning — no corpus rescan, no per-query
-    signature recompute. Bit-identical to the
-    scan path by construction, so it shares sim_lsh_topk's full SQL
-    oracle (inlined plane literals + Hamming-probe predicate)."""
-    import tempfile
-
-    from insar_spark.operators.similarity import lsh_topk_from_store, lsh_write
-
-    emb = load(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    path = tempfile.mkdtemp(prefix="lsh_store_")
-    lsh_write(emb, path, dim=len(qv), n_bits=10, seed=7)
-    return lsh_topk_from_store(
-        spark, path, qv, k=20, n_bits=10, seed=7
-    ).select("vec_id", _r("cos_sim", 4).alias("cos_sim"))
-
-
-def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k via IVF (deterministic Lloyd's: first-8 init, 2 iterations
-    on the ordered 512-row sample), probing the 3 cells nearest the query,
-    exact cosine rerank. The oracle re-runs the ENTIRE pipeline — training
-    included — as unrolled SQL CTEs, so assignment, probe selection and
-    rerank are all value-checked."""
-    from insar_spark.operators.similarity import ivf_topk, train_centroids
-
-    emb = load(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    C = train_centroids(
-        emb, n_centroids=8, iters=2, sample_rows=512, init="first"
-    )
-    return ivf_topk(emb, qv, C, k=20, n_probe=3).select(
-        "vec_id", _r("cos_sim", 4).alias("cos_sim")
-    )
-
-
-def _sql_ivf_ctes(
-    n_centroids: int = 8, iters: int = 2, sample_rows: int = 512,
-    dim: int = 64,
-) -> tuple[str, str, str]:
-    """Unrolled Lloyd's-in-SQL: c{t} = centroids after t iterations.
-    Assignment = arg_min over squared L2; empty cells keep the previous
-    centroid (coalesce in the left join). Returns (WITH-body, final
-    centroid CTE name, the shared distance expression)."""
-    d2 = (
-        "list_sum(list_transform(range(1, {dim} + 1), "
-        "i -> (s.v[i] - c.c[i]) * (s.v[i] - c.c[i])))"
-    ).format(dim=dim)
-    ctes = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        f"smp AS (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT {sample_rows})",
-        f"c0 AS (SELECT vec_id AS cid, v AS c FROM smp ORDER BY vec_id LIMIT {n_centroids})",
-    ]
-    for t in range(iters):
-        ctes.append(
-            f"a{t} AS (SELECT s.vec_id, s.v, arg_min(c.cid, {d2}) AS cell "
-            f"FROM smp s CROSS JOIN c{t} c GROUP BY s.vec_id, s.v)"
-        )
-        ctes.append(
-            f"m{t} AS (SELECT cell AS cid, list(m ORDER BY i) AS c FROM ("
-            f"SELECT cell, i, avg(v[i]) AS m FROM a{t} "
-            f"CROSS JOIN range(1, {dim} + 1) t(i) GROUP BY cell, i) GROUP BY cell)"
-        )
-        ctes.append(
-            f"c{t + 1} AS (SELECT p.cid, coalesce(m.c, p.c) AS c "
-            f"FROM c{t} p LEFT JOIN m{t} m ON p.cid = m.cid)"
-        )
-    return ",\n".join(ctes), f"c{iters}", d2
-
-
-def _sql_sim_ivf(
-    n_centroids: int = 8, iters: int = 2, sample_rows: int = 512,
-    n_probe: int = 3, k: int = 20, dim: int = 64,
-) -> str:
-    body, final, d2 = _sql_ivf_ctes(n_centroids, iters, sample_rows, dim)
-    return (
-        "WITH " + body + f""",
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-pr AS (
-  SELECT c.cid FROM {final} c CROSS JOIN q
-  ORDER BY list_sum(list_transform(range(1, {dim} + 1),
-           i -> (q.qv[i] - c.c[i]) * (q.qv[i] - c.c[i]))), c.cid
-  LIMIT {n_probe}
-),
-asg AS (SELECT s.vec_id, s.v, arg_min(c.cid, {d2}) AS cell
-        FROM e s CROSS JOIN {final} c GROUP BY s.vec_id, s.v)
-SELECT a.vec_id, round(list_cosine_similarity(a.v, q.qv), 4) AS cos_sim
-FROM asg a CROSS JOIN q
-WHERE a.cell IN (SELECT cid FROM pr)
-ORDER BY list_cosine_similarity(a.v, q.qv) DESC, a.vec_id
-LIMIT {k}
-"""
-    )
-
-
-_PLANT_N = 25  # planted near-dup copies for the embedding-dedup contract
-
-
-_PLANT_EPS = 0.003
-
-
-_PLANT_OFFSET = 100_000
-
-
-def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs via multi-band hyperplane-LSH buckets
-    + exact cosine verify. The test corpus is random (max base cosine ~0.51),
-    so 25 near-dups are planted with deterministic arithmetic both engines
-    can reproduce: v' = v + eps*(((vec_id+i) mod 5) - 2). At the planted
-    cosine (~0.9994) the 6-band x 12-bit LSH misses a pair with prob ~3e-6,
-    so the all-pairs DuckDB oracle matches."""
-    from insar_spark.operators.similarity import embedding_near_dups
-
-    emb = load(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    planted = base.filter(F.col("vec_id") < _PLANT_N).select(
-        (F.col("vec_id") + _PLANT_OFFSET).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: x
-            + F.lit(_PLANT_EPS) * (((F.col("vec_id") + i) % 5).cast("double") - 2),
-        ).alias("embedding"),
-    )
-    corpus = base.unionByName(planted)
-    return embedding_near_dups(
-        corpus, threshold=0.95, n_bits=12, n_bands=6
-    ).select("id_a", "id_b", _r("cos_sim", 4).alias("cos_sim"))
-
-
-_SQL_EMB_NEAR_DUPS = f"""
-WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-planted AS (
-  SELECT vec_id + {_PLANT_OFFSET} AS vec_id,
-         list_transform(v, (x, i) ->
-           x + {_PLANT_EPS} * (((vec_id + i - 1) % 5) - 2)) AS v
-  FROM base WHERE vec_id < {_PLANT_N}
-),
-allv AS (SELECT * FROM base UNION ALL SELECT * FROM planted)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_cosine_similarity(a.v, b.v), 4) AS cos_sim
-FROM allv a JOIN allv b ON a.vec_id < b.vec_id
-WHERE list_cosine_similarity(a.v, b.v) >= 0.95
-"""
-
-
 def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-data hygiene: email/phone redaction with hit counts. The
     corpus has no PII, so deterministic PII is injected first (every third
@@ -3032,95 +2836,6 @@ GROUP BY c.doc_id
 """
 
 
-def q_embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document clustering: k-means (deterministic Lloyd, first-8 init,
-    2 iterations) cell assignment for every embedding — the training-data
-    curation primitive behind IVF, topic bucketing and cluster-balanced
-    sampling. Oracle: the training unrolled in SQL, then the same arg-min
-    assignment."""
-    from insar_spark.operators.similarity import ivf_assign, train_centroids
-
-    emb = load(spark, sf_dir, "embeddings")
-    C = train_centroids(
-        emb, n_centroids=8, iters=2, sample_rows=512, init="first"
-    )
-    return ivf_assign(emb, C).select(
-        "vec_id", F.col("cell").cast("int").alias("cell")
-    )
-
-
-def _sql_embedding_kmeans() -> str:
-    body, final, d2 = _sql_ivf_ctes()
-    return (
-        "WITH " + body + f""",
-asg AS (SELECT s.vec_id, arg_min(c.cid, {d2}) AS cell
-        FROM e s CROSS JOIN {final} c GROUP BY s.vec_id, s.v)
-SELECT vec_id, cell::INTEGER AS cell FROM asg
-"""
-    )
-
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal decode plumbing over real binary payloads: media rows are
-    derived deterministically from the documents table (payload = utf-8
-    text bytes), run through the byte-budgeted mapInPandas decode +
-    feature-extract path, so the DuckDB oracle can recompute the tiled
-    pixel-buffer mean/std arithmetically without running the codec."""
-    from insar_spark.operators.multimodal import extract_features, media_from_docs
-
-    docs = load(spark, sf_dir, "documents")
-    # NO rounding here, deliberately: both engines derive mean/std from
-    # EXACT integer pixel sums followed by one float division each, so the
-    # doubles are bit-identical by construction — while rounding would
-    # BREAK parity at decimal boundaries (Spark's Java round works on the
-    # shortest decimal repr, DuckDB's on the binary value; a sf0.1 doc at
-    # mean 92.60124999999999 rounds to .6013 vs .6012).
-    return extract_features(media_from_docs(docs)).select(
-        "media_id",
-        "kind",
-        "feat_mean",
-        "feat_std",
-        F.col("n_bytes").cast("long").alias("n_bytes"),
-    )
-
-
-_SQL_MULTIMODAL = """
-WITH d AS (
-  -- byte semantics throughout (the Spark payload is utf-8 BYTES), except
-  -- the width formula, which the Spark side itself derives from the CHAR
-  -- length (F.length on a string column) — faithful to media_from_docs
-  SELECT doc_id AS media_id,
-         ['image','audio','video'][(doc_id % 3 + 1)::INT] AS kind,
-         hex(encode(text)) AS hx,
-         octet_length(encode(text)) AS n,
-         (8 + length(text) % 56) * (8 + (doc_id * 7) % 56) AS need
-  FROM documents
-), c AS (
-  SELECT media_id, kind, n, need,
-         list_transform(range(0, n), i ->
-           16 * (strpos('0123456789ABCDEF', substr(hx, 2 * i + 1, 1)) - 1)
-              + (strpos('0123456789ABCDEF', substr(hx, 2 * i + 2, 1)) - 1)
-         ) AS o
-  FROM d
-), s AS (
-  -- decode stub tiles the n-byte buffer ceil(need/n) times, truncates to
-  -- `need`: full copies = need // n, remainder prefix = need % n bytes
-  SELECT media_id, kind, n, need,
-         CASE WHEN n = 0 THEN 0.0 ELSE
-           ((need // n) * list_sum(o)
-            + coalesce(list_sum(o[1:(need % n)]), 0))::DOUBLE / need END AS mean,
-         CASE WHEN n = 0 THEN 0.0 ELSE
-           ((need // n) * list_sum(list_transform(o, x -> x * x))
-            + coalesce(list_sum(list_transform(o[1:(need % n)], x -> x * x)), 0)
-           )::DOUBLE / need END AS ex2
-  FROM c
-)
-SELECT media_id, kind, mean AS feat_mean,
-       sqrt(ex2 - mean * mean) AS feat_std, n AS n_bytes
-FROM s
-"""
-
-
 def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality: duplicate-word fraction and
     top-bigram fraction per doc. Zero-shuffle map-only pass (the bigram
@@ -3135,8 +2850,9 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Both fractions are exact-int counts through ONE double division, so the
-# doubles are bit-identical cross-engine with no rounding (see the
-# multimodal 4dp-boundary lesson: rounding can BREAK parity, not save it).
+# doubles are bit-identical cross-engine with no rounding (rounding can
+# BREAK parity at a decimal boundary: Spark rounds the shortest decimal
+# repr, DuckDB the binary value).
 _SQL_REPETITION = """
 WITH base AS (
     SELECT doc_id, string_split(text, ' ') AS words,
@@ -3326,19 +3042,13 @@ ORACLES = {
     "top_tokens_per_source": (q_top_tokens_per_source, _SQL_TOP_TOKENS),
     "dedup_fingerprint_pairs": (q_dedup_fingerprint_pairs, _sql_dedup_fingerprint()),
     "decontaminate": (q_decontaminate, _sql_decontaminate()),
-    "sim_lsh_topk": (q_sim_lsh_topk, _sql_sim_lsh()),
     "sim_cosine_vs_query": (q_sim_cosine_vs_query, _SQL_SIM),
     "doc_oov_rate": (q_doc_oov_rate, _SQL_DOC_OOV),
-    "sim_lsh_store_topk": (q_sim_lsh_store_topk, _sql_sim_lsh()),
     "doc_chunks": (q_doc_chunks, _SQL_DOC_CHUNKS),
     "dedup_minhash_incremental": (q_dedup_minhash_incremental, _sql_dedup_minhash_incremental()),
     "text_repetition": (q_text_repetition, _SQL_REPETITION),
     "text_tokens_bpe": (q_text_tokens_bpe, _SQL_TOKENS_BPE),
     "dedup_simhash_pairs": (q_dedup_simhash_pairs, _sql_dedup_simhash()),
-    "sim_ivf_topk": (q_sim_ivf_topk, _sql_sim_ivf()),
-    "multimodal_features": (q_multimodal_features, _SQL_MULTIMODAL),
-    "embedding_near_dups": (q_embedding_near_dups, _SQL_EMB_NEAR_DUPS),
-    "embedding_kmeans": (q_embedding_kmeans, _sql_embedding_kmeans()),
     "shard_stats": (q_shard_stats, _sql_shard_stats()),
 }
 

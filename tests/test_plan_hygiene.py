@@ -86,7 +86,6 @@ def test_no_rowwise_python_in_any_contract_query(plans):
         ("flagship_rollup_1m", 1, 0),  # one shuffle, all JVM
         ("w1_turn_deltas", 1, 0),  # series window only
         ("doc_chunks", 0, 0),  # narrow map-only transform
-        ("sim_lsh_topk", 1, 0),  # one spread exchange, JVM signatures
         ("hist_p95_1h", 2, 0),  # spread + direct-1h rank read
         ("dedup_minhash_pairs", 3, 0),  # band/bucket + verify, linear
         ("dedup_minhash_incremental", 5, 0),  # + store prune join

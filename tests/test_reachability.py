@@ -5,13 +5,8 @@ engine functions ``insar_spark/families.py`` names by path (``_late``).
 From them, every ``import``/``from ... import`` (function-local ones too)
 that lands on a repository module is followed. A module under
 ``insar_spark/`` that no root reaches is code only tests run: delete it,
-or give it a caller. Static (``ast``) only; no Spark.
-
-``UNREACHED`` names the modules still waiting for that decision: the
-corpus pipeline's ANN index and multimodal decode operators, which only
-their tests run (the rest of the corpus pipeline is reached from
-``jobs/corpus_job.py``). The list must match exactly, so it shrinks as
-they go and cannot grow silently.
+or give it a caller. There is no allowlist. Static (``ast``) only; no
+Spark.
 """
 
 from __future__ import annotations
@@ -21,11 +16,6 @@ import glob
 import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-UNREACHED = [
-    "insar_spark/operators/multimodal.py",
-    "insar_spark/operators/similarity.py",
-]
 
 
 def _module_file(name: str, importer: str) -> str | None:
@@ -95,4 +85,4 @@ def test_every_engine_module_is_reached():
     engine = set(glob.glob(os.path.join(ROOT, "insar_spark", "**", "*.py"), recursive=True))
     assert engine, ROOT
     unreached = sorted(os.path.relpath(f, ROOT) for f in engine - reached())
-    assert unreached == UNREACHED, unreached
+    assert unreached == [], unreached
