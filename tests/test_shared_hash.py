@@ -1,9 +1,11 @@
 """Cross-engine parity of the shared hashing primitives.
 
-The entire dedup/fingerprint oracle story rests on shared_hash.py emitting
-byte-identical values in Spark and DuckDB; these property tests drive both
-engines over generated corpora (including whitespace-edge and short-doc
-shapes the fixed testdata never hits).
+The sketch tiers and their DuckDB oracles rest on shared_hash.py giving
+byte-identical values in Spark (``h60_col``), DuckDB (``sql_h60``) and the
+driver (``py_h60``), and on the ``perm_params`` universal hash giving the
+same cells in every engine; these property tests drive all three over
+generated texts (including whitespace-edge and short-doc shapes the fixed
+testdata never hits).
 """
 
 from __future__ import annotations
@@ -21,23 +23,25 @@ WORD = st.text(alphabet="abcdefghijklmnopqrstuvwxyz0123456789", min_size=1, max_
 TEXT = st.lists(WORD, min_size=1, max_size=40).map(" ".join)
 
 
-def _both_engines(spark, texts: list[str]):
+def _all_engines(spark, texts: list[str]) -> dict[str, list[tuple[list, list]]]:
+    """Per text, the md5-60 hash of every space-separated token and the
+    8 universal-hash permutations of each hash, from Spark, DuckDB and
+    the driver: ``{engine: [(token_hashes, perms), ...]}``."""
+    a, b = SH.perm_params(8, seed=42)
+    P = SH.P31
+
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    a, b = SH.perm_params(8, seed=42)
-    sh = SH.shingle_hashes_col(F.col("text"), 3)
-    tokh = F.transform(SH.tokens_col(F.col("text")), SH.h60_col)
-    got = (
-        df.select(
-            "doc_id",
-            sh.alias("shash"),
-            SH.minhash_sig_col(sh, a, b).alias("sig"),
-            SH.simhash_col(tokh).alias("simhash"),
-            SH.winnow_col(sh, 4).alias("fps"),
-        )
+    tokh = F.transform(F.split(F.col("text"), " "), SH.h60_col)
+    perm = lambda h: F.array(  # noqa: E731
+        *[(F.lit(aj) * (h % P) + F.lit(bj)) % P for aj, bj in zip(a, b)]
+    )
+    spark_rows = (
+        df.select("doc_id", tokh.alias("tokh"))
+        .select("doc_id", "tokh", F.transform("tokh", perm).alias("perm"))
         .orderBy("doc_id")
-        .toPandas()
+        .collect()
     )
 
     con = duckdb.connect()
@@ -45,22 +49,36 @@ def _both_engines(spark, texts: list[str]):
     con.executemany("INSERT INTO d VALUES (?, ?)", list(enumerate(texts)))
     A = "[" + ",".join(map(str, a)) + "]"
     B = "[" + ",".join(map(str, b)) + "]"
-    shs = SH.sql_shingle_hashes("text", 3)
-    tks = (
-        f"list_transform({SH.SQL_TOKENS.format(text='text')}, "
-        f"_t -> {SH.sql_h60('_t')})"
-    )
-    exp = con.execute(
+    duck_rows = con.execute(
         f"""
-WITH s AS (SELECT doc_id, {shs} AS shash, {tks} AS tokh FROM d)
-SELECT doc_id, shash,
-  list_transform(range(0, 8), j -> list_min(list_transform(shash,
-    h -> ({A}[j+1] * (h % {SH.P31}) + {B}[j+1]) % {SH.P31}))) AS sig,
-  {SH.sql_simhash('tokh')} AS simhash,
-  {SH.sql_winnow('shash', 4)} AS fps
+WITH s AS (
+  SELECT doc_id, list_transform(string_split(text, ' '), _t -> {SH.sql_h60('_t')}) AS tokh
+  FROM d)
+SELECT tokh,
+  list_transform(tokh, h -> list_transform(range(0, 8),
+    j -> ({A}[j+1] * (h % {P}) + {B}[j+1]) % {P})) AS perm
 FROM s ORDER BY doc_id"""
-    ).df()
-    return got, exp
+    ).fetchall()
+
+    py_rows = []
+    for t in texts:
+        hs = [SH.py_h60(tok) for tok in t.split(" ")]
+        py_rows.append((hs, [[(aj * (h % P) + bj) % P for aj, bj in zip(a, b)] for h in hs]))
+
+    return {
+        "spark": [(list(r["tokh"]), [list(p) for p in r["perm"]]) for r in spark_rows],
+        "duckdb": [(list(h), [list(p) for p in pm]) for h, pm in duck_rows],
+        "python": py_rows,
+    }
+
+
+def _assert_engines_agree(spark, texts: list[str]) -> None:
+    rows = _all_engines(spark, texts)
+    for engine in ("duckdb", "python"):
+        assert len(rows[engine]) == len(texts), engine
+        for i, text in enumerate(texts):
+            for col, want, got in zip(("tokh", "perm"), rows["spark"][i], rows[engine][i]):
+                assert got == want, (engine, col, i, text)
 
 
 @settings(
@@ -70,27 +88,15 @@ FROM s ORDER BY doc_id"""
 )
 @given(st.lists(TEXT, min_size=1, max_size=6))
 def test_hash_primitives_cross_engine(spark, texts):
-    got, exp = _both_engines(spark, texts)
-    for col in ("shash", "sig", "simhash", "fps"):
-        for i in range(len(texts)):
-            sv, dv = got[col][i], exp[col][i]
-            sl = list(sv) if hasattr(sv, "__iter__") else sv
-            dl = list(dv) if hasattr(dv, "__iter__") else dv
-            assert sl == dl, (col, i, texts[i])
+    _assert_engines_agree(spark, texts)
 
 
 def test_hash_edge_shapes(spark):
-    """Deterministic edge corpus: shorter than shingle/window sizes,
-    single-char tokens, repeated tokens."""
+    """Deterministic edge corpus: one-token and one-char texts, repeated
+    tokens."""
     texts = ["x", "a b", "a a a a a a a a", "one two", "w " * 3 + "w"]
     texts = [t.strip() for t in texts]
-    got, exp = _both_engines(spark, texts)
-    for col in ("shash", "sig", "simhash", "fps"):
-        for i in range(len(texts)):
-            sv, dv = got[col][i], exp[col][i]
-            sl = list(sv) if hasattr(sv, "__iter__") else sv
-            dl = list(dv) if hasattr(dv, "__iter__") else dv
-            assert sl == dl, (col, i, texts[i])
+    _assert_engines_agree(spark, texts)
 
 
 def test_h60_matches_known_md5(spark):
