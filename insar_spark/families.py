@@ -194,8 +194,9 @@ FAMILIES: dict[str, Family] = {f.name: f for f in (
     # array row of <= k hashes per window, so tier-0 persistence is
     # always cheap; the cascade is union-and-retake (== direct build,
     # tested). k rides the manifest so intersection readers know the
-    # sample contract. Batch-only: its merge is no incremental aggregate
-    # (streaming.rollup_stream.stateful_kmv_1m is the drain-scoped path).
+    # sample contract. Batch-only: its merge (union, re-take the k
+    # smallest) is no incremental aggregate, so it cannot stream without
+    # custom state.
     Family(
         "kmv", chain=(("kmv_1m", "1m"), ("kmv_1h", "1h")), retention=(7, 90),
         batch_from="kmv_1m",

@@ -94,26 +94,6 @@ def streaming_rollup_1m(
     )
 
 
-def run_stream_to_memory(
-    spark: SparkSession, src_path: str, query_name: str = "tier_1m_stream"
-):
-    """Drive the stream synchronously over whatever files exist (tests /
-    smoke); returns the StreamingQuery (already stopped). Whole-drop
-    trigger (None): replayed files carry no time order among themselves."""
-    stream = streaming_rollup_1m(
-        read_transcript_stream(spark, src_path, max_files_per_trigger=None)
-    )
-    q = (
-        stream.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return q
-
-
 def stream_to_tierstore(
     spark: SparkSession,
     src_path: str,
@@ -321,113 +301,6 @@ def sealed_union_view(
     return latest_epoch(live, log_keys).drop("day")
 
 
-def stateful_cumulative_reconstruction(turns: DataFrame) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: continuous
-    per-conversation cumulative text-length reconstruction across
-    micro-batches.
-
-    The streaming form of W2+W4 (cumsum of deltas, zero-referenced at the
-    series head): state carries (last emitted turn_idx, last text length,
-    running cumulative delta) plus a buffer of out-of-order turns. A turn
-    is emitted only when it is contiguous with the last emitted index, so
-    arbitrary cross-batch arrival order (and replays) produce exactly the
-    batch window-cumsum result — the incremental analog of the reference's
-    start_layer resume (insar/prepare.py:942) with late-data buffering.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState
-
-    out_schema = (
-        "conv_id string, turn_idx int, ts timestamp, text_len double, "
-        "recon_v double"
-    )
-    state_schema = (
-        "last_idx int, last_len double, cum double, "
-        "pend_idx array<int>, pend_len array<double>, pend_ts array<long>"
-    )
-
-    def update(key, pdfs, state: GroupState):
-        (conv_id,) = key
-        if state.exists:
-            last_idx, last_len, cum, p_idx, p_len, p_ts = state.get
-            pending = {
-                int(i): (float(l), int(t))
-                for i, l, t in zip(p_idx or [], p_len or [], p_ts or [])
-            }
-        else:
-            last_idx, last_len, cum, pending = -1, 0.0, 0.0, {}
-        for pdf in pdfs:
-            lens = pdf["text"].str.len().astype("float64")
-            ts_us = pdf["ts"].to_numpy("datetime64[us]").astype("int64")
-            for idx, ln, t in zip(pdf["turn_idx"], lens, ts_us):
-                if int(idx) > last_idx:  # replay/duplicate guard
-                    pending[int(idx)] = (float(ln), int(t))
-        out_rows = []
-        while (last_idx + 1) in pending:
-            nxt = last_idx + 1
-            ln, t = pending.pop(nxt)
-            if last_idx >= 0:
-                cum += ln - last_len
-            last_len = ln
-            last_idx = nxt
-            out_rows.append((nxt, t, ln, cum))
-        state.update(
-            (
-                last_idx,
-                last_len,
-                cum,
-                sorted(pending),
-                [pending[i][0] for i in sorted(pending)],
-                [pending[i][1] for i in sorted(pending)],
-            )
-        )
-        if out_rows:
-            yield pd.DataFrame(
-                {
-                    "conv_id": conv_id,
-                    "turn_idx": [r[0] for r in out_rows],
-                    "ts": pd.to_datetime([r[1] for r in out_rows], unit="us"),
-                    "text_len": [r[2] for r in out_rows],
-                    "recon_v": [r[3] for r in out_rows],
-                }
-            )
-
-    return (
-        turns.select("conv_id", "turn_idx", "ts", "text")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "append", "NoTimeout"
-        )
-    )
-
-
-def stateful_session_metric(
-    turns: DataFrame, gap: str = "30 minutes"
-) -> DataFrame:
-    """Custom stateful operator: session windows per conversation via the
-    built-in session_window (gap-based), yielding per-session turn counts
-    and text-length delta — the streaming analog of per-series alignment."""
-    return (
-        turns.select(
-            "conv_id", "ts", F.length("text").cast("double").alias("text_len")
-        )
-        .withWatermark("ts", "10 minutes")
-        .groupBy("conv_id", F.session_window("ts", gap).alias("sw"))
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            (F.max("text_len") - F.min("text_len")).alias("text_len_span"),
-        )
-        .select(
-            "conv_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_turns",
-            "text_len_span",
-        )
-    )
-
-
 def streaming_hist_1m(
     turns: DataFrame, watermark: str = "10 minutes"
 ) -> DataFrame:
@@ -531,54 +404,6 @@ def streaming_m4_1m(
             "ts_max",
             "v_last",
             "ts_last",
-        )
-    )
-
-
-def streaming_distinct_by_role_1m(
-    turns: DataFrame, watermark: str = "10 minutes"
-) -> DataFrame:
-    """KEYED streamed bitmap: distinct conversations per (role, minute).
-    Same zero-custom-state property as the global bitmap — each packed
-    word is an ordinary ``bit_or`` aggregate, now grouped by the role
-    dimension as well; merges bit-for-bit with batch-built keyed bitmaps.
-    """
-    from insar_spark.functions.shared_hash import h60_col
-    from insar_spark.operators.sketch import DISTINCT_M
-
-    words = DISTINCT_M // 32
-    base = (
-        turns.select(
-            "role",
-            "ts",
-            F.pmod(
-                h60_col(F.col("conv_id").cast("string")),
-                F.lit(DISTINCT_M),
-            ).alias("_p"),
-        )
-        .select(
-            "role",
-            "ts",
-            F.floor(F.col("_p") / 32).cast("int").alias("_word"),
-            (F.col("_p") % 32).cast("int").alias("_bit"),
-        )
-        .withColumn("_one", F.expr("cast(1 as bigint)"))
-        .withColumn("_mask", F.expr("shiftleft(_one, _bit)"))
-    )
-    aggs = [
-        F.coalesce(
-            F.bit_or(F.when(F.col("_word") == i, F.col("_mask"))), F.lit(0)
-        ).cast("long").alias(f"_w{i}")
-        for i in range(words)
-    ]
-    return (
-        base.withWatermark("ts", watermark)
-        .groupBy("role", F.window("ts", "1 minute").alias("w"))
-        .agg(*aggs)
-        .select(
-            "role",
-            F.col("w.start").alias("window_start"),
-            F.array(*[F.col(f"_w{i}") for i in range(words)]).alias("bitmap"),
         )
     )
 
@@ -722,66 +547,17 @@ def streaming_lb_1m(
     )
 
 
-def streaming_distinct_1m(
-    turns: DataFrame, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Watermarked 1m DISTINCT-CONVERSATION bitmap tier over a stream.
-
-    Streaming count-distinct normally needs custom state (dedup buffers,
-    approx sketches); the linear-counting bitmap needs none — each of the
-    32 packed words is a plain ``bit_or`` aggregate, incremental across
-    micro-batches exactly like a sum. The streaming-built tier merges with
-    batch-built bitmaps bit-for-bit (stream == batch test), so "active
-    conversations this hour" is servable live from the same tier cascade.
-    """
-    from insar_spark.functions.shared_hash import h60_col
-    from insar_spark.operators.sketch import DISTINCT_M
-
-    words = DISTINCT_M // 32
-    base = (
-        turns.select(
-            "ts",
-            F.pmod(
-                h60_col(F.col("conv_id").cast("string")),
-                F.lit(DISTINCT_M),
-            ).alias("_p"),
-        )
-        .select(
-            "ts",
-            F.floor(F.col("_p") / 32).cast("int").alias("_word"),
-            (F.col("_p") % 32).cast("int").alias("_bit"),
-        )
-        .withColumn("_one", F.expr("cast(1 as bigint)"))
-        .withColumn("_mask", F.expr("shiftleft(_one, _bit)"))
-    )
-    aggs = [
-        F.coalesce(
-            F.bit_or(F.when(F.col("_word") == i, F.col("_mask"))), F.lit(0)
-        ).cast("long").alias(f"_w{i}")
-        for i in range(words)
-    ]
-    return (
-        base.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 minute").alias("w"))
-        .agg(*aggs)
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.array(*[F.col(f"_w{i}") for i in range(words)]).alias("bitmap"),
-        )
-    )
-
-
 def streaming_hll_1m(
     turns: DataFrame, watermark: str = "10 minutes"
 ) -> DataFrame:
-    """Watermarked 1m HLL register tier over a transcript stream — the
-    unbounded-cardinality companion to :func:`streaming_distinct_1m`.
-    ``max(rho)`` per (window, register) is an ordinary incremental
-    aggregate (and idempotent, so replayed micro-batches are absorbed
-    with no dedup buffer), so the streamed tier merges bit-for-bit with
-    batch-built HLL sketches (stream == batch test) and, unlike the
-    bitmap, can never saturate — "active conversations this hour" stays
-    servable live at fleet cardinality."""
+    """Watermarked 1m HLL register tier over a transcript stream: the
+    streamed distinct-conversation count. ``max(rho)`` per (window,
+    register) is an ordinary incremental aggregate (and idempotent, so
+    replayed micro-batches are absorbed with no dedup buffer), so the
+    streamed tier merges bit-for-bit with batch-built HLL sketches
+    (stream == batch test) and, unlike a linear-counting bitmap, can never
+    saturate — "active conversations this hour" stays servable live at
+    fleet cardinality."""
     from insar_spark.functions.shared_hash import h60_col
     from insar_spark.operators.sketch import HLL_M, hll_rho
 
@@ -848,68 +624,5 @@ def streaming_cms_1m(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(
             F.col("w.start").alias("window_start"), "row_j", "cell", "cnt"
-        )
-    )
-
-
-def stateful_kmv_1m(turns: DataFrame, k: int = 256) -> DataFrame:
-    """Custom stateful operator: streaming KMV distinct sample per 1m
-    window via ``applyInPandasWithState``.
-
-    The other sketch tiers stream as plain incremental SQL aggregates
-    (conditional counts, bit_or, max, sum); KMV's merge —
-    union-and-retake-the-k-smallest — is NOT an incremental aggregate
-    Spark's state store can fold, so it takes the custom-stateful path.
-    State per window is EXACTLY the sketch: one sorted array of ≤ k
-    int64 hashes, bounded no matter the traffic (the trimming that makes
-    the sketch cheap is the same trimming that bounds the state). The
-    md5-60 hash is computed JVM-side BEFORE the grouping so the Python
-    stage only merges int lists (Arrow-batched, no per-row text work).
-    Each trigger emits the window's refreshed sketch; the LAST emission
-    per window equals the batch ``kmv_rollup`` array bit-for-bit
-    (stream == batch test), so a live window's distinct estimate — and
-    its overlap against any stored KMV tier — is servable mid-window.
-    
-    SCOPE (advisor r5): this runs with NoTimeout and no watermark, so a
-    long-running stream accumulates one state entry per 1-minute window
-    forever — it is the drain-style test/backfill path. A production
-    deployment must add an event-time watermark +
-    GroupStateTimeout.EventTimeTimeout (state for windows past the
-    watermark is final — the batch cascade covers them) before running
-    unbounded.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState
-
-    from insar_spark.functions.shared_hash import h60_col
-
-    out_schema = "window_start timestamp, kmv array<long>, n_sample int"
-    state_schema = "kmv array<long>"
-
-    def update(key, pdfs, state: GroupState):
-        (window_start,) = key
-        kept = list(state.get[0]) if state.exists else []
-        seen = set(kept)
-        for pdf in pdfs:
-            seen.update(int(h) for h in pdf["_h"])
-        kept = sorted(seen)[:k]
-        state.update((kept,))
-        yield pd.DataFrame(
-            {
-                "window_start": [window_start],
-                "kmv": [kept],
-                "n_sample": [len(kept)],
-            }
-        )
-
-    return (
-        turns.select(
-            F.date_trunc("minute", F.col("ts")).alias("window_start"),
-            h60_col(F.col("conv_id").cast("string")).alias("_h"),
-        )
-        .groupBy("window_start")
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update", "NoTimeout"
         )
     )

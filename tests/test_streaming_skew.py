@@ -2,63 +2,7 @@
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
-
-from insar_spark.operators.rollup import rollup_turns
-
-
-def _sorted(pdf, cols):
-    return pdf.sort_values(cols).reset_index(drop=True)
-
-
-def test_streaming_rollup_matches_batch(spark, tmp_path, transcripts):
-    """File-source streaming 1m rollup == batch 1m rollup on the same data."""
-    from insar_spark.streaming.rollup_stream import run_stream_to_memory
-
-    src = str(tmp_path / "stream_src")
-    transcripts.write.mode("overwrite").parquet(src)
-
-    run_stream_to_memory(spark, src, query_name="t1m")
-    got = _sorted(
-        spark.sql("SELECT * FROM t1m").toPandas(), ["conv_id", "window_start"]
-    )
-    exp = _sorted(rollup_turns(transcripts, "1m").toPandas(), ["conv_id", "window_start"])
-    assert len(got) == len(exp)
-    for c in ["n_turns", "n_tool_calls", "sum_text_len", "first_text_len", "last_text_len"]:
-        np.testing.assert_allclose(
-            got[c].to_numpy("float64"), exp[c].to_numpy("float64"), err_msg=c
-        )
-
-
-def test_session_window_metric(spark, tmp_path, transcripts):
-    from insar_spark.streaming.rollup_stream import (
-        read_transcript_stream,
-        stateful_session_metric,
-    )
-
-    src = str(tmp_path / "stream_src2")
-    transcripts.filter("conv_id < 'conv00000004'").write.mode("overwrite").parquet(src)
-    q = (
-        stateful_session_metric(read_transcript_stream(spark, src))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sessions")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    out = spark.sql("SELECT * FROM sessions").toPandas()
-    assert len(out) > 0
-    assert (out["session_end"] > out["session_start"]).all()
-    assert (out["n_turns"] >= 1).all()
-    # sessions of one conversation never overlap
-    for _, g in out.groupby("conv_id"):
-        g = g.sort_values("session_start")
-        assert (
-            g["session_start"].iloc[1:].to_numpy()
-            >= g["session_end"].iloc[:-1].to_numpy()
-        ).all()
 
 
 def test_ord_key_overflow_fails_loudly(spark):
@@ -91,7 +35,8 @@ def test_streaming_ord_key_overflow_fails_loudly(spark, tmp_path):
     import pandas as pd
     import pytest
 
-    from insar_spark.streaming.rollup_stream import run_stream_to_memory
+    from insar_spark.sources.catalog import TierStore
+    from insar_spark.streaming.rollup_stream import stream_to_tierstore
 
     df = spark.createDataFrame(
         pd.DataFrame(
@@ -107,8 +52,15 @@ def test_streaming_ord_key_overflow_fails_loudly(spark, tmp_path):
     )
     src = str(tmp_path / "overflow_src")
     df.write.mode("overwrite").parquet(src)
-    with pytest.raises(Exception, match="ord_key overflow"):
-        run_stream_to_memory(spark, src, query_name="t1m_overflow")
+    q = stream_to_tierstore(
+        spark, src, TierStore(str(tmp_path / "tiers")),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    try:
+        with pytest.raises(Exception, match="ord_key overflow"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 def test_streaming_hist_matches_batch_and_serves_global_p95(
@@ -167,46 +119,6 @@ def test_streaming_hist_matches_batch_and_serves_global_p95(
 
     gp, ep = p95(got), p95(exp)
     assert gp["p95"].tolist() == ep["p95"].tolist() and len(gp) > 0
-
-
-def test_streaming_distinct_bitmap_matches_batch(spark, tmp_path, transcripts):
-    """Streaming-built 1m distinct bitmaps == batch distinct_rollup on the
-    same turns — streaming count-distinct with zero custom state."""
-    from insar_spark.streaming.rollup_stream import (
-        read_transcript_stream,
-        streaming_distinct_1m,
-    )
-    from insar_spark.operators.sketch import distinct_rollup
-
-    src = str(tmp_path / "distinct_src")
-    transcripts.write.mode("overwrite").parquet(src)
-
-    stream = streaming_distinct_1m(
-        read_transcript_stream(spark, src, max_files_per_trigger=None)
-    )
-    q = (
-        stream.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("d1m_stream")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    g = (
-        spark.sql("SELECT * FROM d1m_stream")
-        .toPandas()
-        .sort_values("window_start")
-        .reset_index(drop=True)
-    )
-    e = (
-        distinct_rollup(transcripts.select("conv_id", "ts"), "1m")
-        .toPandas()
-        .sort_values("window_start")
-        .reset_index(drop=True)
-    )
-    assert len(g) == len(e) > 0
-    assert [list(b) for b in g["bitmap"]] == [list(b) for b in e["bitmap"]]
 
 
 def test_streaming_hll_matches_batch(spark, tmp_path, transcripts):
