@@ -21,24 +21,17 @@ from insar_spark.sources.catalog import footer_range, latest_epoch
 from insar_spark.synth import TRANSCRIPT_SCHEMA
 
 
-def read_transcript_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = 4
-) -> DataFrame:
-    """File-source stream over parquet drops.
+def read_transcript_stream(spark: SparkSession, path: str) -> DataFrame:
+    """File-source stream over parquet drops; every available file goes
+    into ONE micro-batch.
 
-    ``max_files_per_trigger=None`` processes every available file in ONE
-    micro-batch. That is the right setting for drop/backfill replay: the
-    files of one drop carry no time ordering among themselves, so slicing
-    a drop into several micro-batches lets the first slice advance the
-    event-time watermark past rows still waiting in a later slice — the
-    aggregation then drops them as late (real data loss, caught by
-    test_stream_job_two_cycles_with_mid_arrival). A bounded trigger is
-    only safe when files arrive (and are picked up) in event-time order,
-    e.g. a live tail of minute-granular drops."""
-    rs = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger is not None:
-        rs = rs.option("maxFilesPerTrigger", max_files_per_trigger)
-    return rs.parquet(path)
+    The files of one drop carry no time ordering among themselves, so
+    slicing a drop into several micro-batches (``maxFilesPerTrigger``)
+    would let the first slice advance the event-time watermark past rows
+    still waiting in a later slice, and the aggregation would then drop
+    them as late (real data loss, caught by
+    test_stream_job_two_cycles_with_mid_arrival)."""
+    return spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(path)
 
 
 def streaming_rollup_1m(
@@ -101,7 +94,6 @@ def stream_to_tierstore(
     checkpoint_dir: str,
     watermark: str = "10 minutes",
     tier: str = "1m",
-    max_files_per_trigger: int | None = None,
     rollup_builder=None,
 ):
     """Continuous 1m-tier ingestion committed through TierStore.
@@ -111,9 +103,9 @@ def stream_to_tierstore(
     builder producing (conv_id, window_start, ...) rows) to ingest a
     sketch tier through the identical epoch-log commit machinery.
 
-    ``max_files_per_trigger`` defaults to None (whole drop per
-    micro-batch) — see read_transcript_stream for why a bounded trigger
-    over an unordered drop loses beyond-watermark rows.
+    Each micro-batch takes every file available (a whole drop): see
+    :func:`read_transcript_stream` for why a bounded trigger over an
+    unordered drop loses beyond-watermark rows.
 
     ``foreachBatch`` gives exactly-once at the partition level: each
     micro-batch's rollup goes through the same snapshot-manifest commit as
@@ -125,10 +117,7 @@ def stream_to_tierstore(
     once its last window has been finalized.
     """
     builder = rollup_builder if rollup_builder is not None else streaming_rollup_1m
-    stream = builder(
-        read_transcript_stream(spark, src_path, max_files_per_trigger),
-        watermark,
-    )
+    stream = builder(read_transcript_stream(spark, src_path), watermark)
 
     def sink(batch_df, epoch_id: int) -> None:
         if batch_df.isEmpty():

@@ -85,9 +85,7 @@ def test_streaming_hist_matches_batch_and_serves_global_p95(
     src = str(tmp_path / "hist_src")
     transcripts.write.mode("overwrite").parquet(src)
 
-    stream = streaming_hist_1m(
-        read_transcript_stream(spark, src, max_files_per_trigger=None)
-    )
+    stream = streaming_hist_1m(read_transcript_stream(spark, src))
     q = (
         stream.writeStream.outputMode("complete")
         .format("memory")
@@ -134,9 +132,7 @@ def test_streaming_hll_matches_batch(spark, tmp_path, transcripts):
     src = str(tmp_path / "hll_src")
     transcripts.write.mode("overwrite").parquet(src)
 
-    stream = streaming_hll_1m(
-        read_transcript_stream(spark, src, max_files_per_trigger=None)
-    )
+    stream = streaming_hll_1m(read_transcript_stream(spark, src))
     q = (
         stream.writeStream.outputMode("complete")
         .format("memory")
@@ -176,9 +172,7 @@ def test_streaming_m4_matches_batch_and_cascades(spark, tmp_path, transcripts):
     src = str(tmp_path / "m4_src")
     transcripts.write.mode("overwrite").parquet(src)
 
-    stream = streaming_m4_1m(
-        read_transcript_stream(spark, src, max_files_per_trigger=None)
-    )
+    stream = streaming_m4_1m(read_transcript_stream(spark, src))
     q = (
         stream.writeStream.outputMode("complete")
         .format("memory")
