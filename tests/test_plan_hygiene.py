@@ -53,6 +53,18 @@ def plans(spark, transcripts, tmp_path_factory):
     return out
 
 
+def test_unique_exchanges_count_each_different_shuffle(spark):
+    """A branch repeated in one plan counts once; a different shuffle on
+    the same key counts again."""
+    df = spark.range(64).select(
+        (F.col("id") % 7).cast("string").alias("conv_id"), F.col("id").alias("v")
+    )
+    total = df.groupBy("conv_id").agg(F.sum("v").alias("x"))
+    top = df.groupBy("conv_id").agg(F.max("v").alias("x"))
+    assert audit(total.unionByName(total)).n_exchanges_unique == 1
+    assert audit(total.unionByName(top)).n_exchanges_unique == 2
+
+
 def test_no_rowwise_python_in_any_contract_query(plans):
     """Every plan above must stay on the Arrow path: a BatchEvalPython
     node means a row-at-a-time Python UDF crept in."""
@@ -79,13 +91,16 @@ def test_no_rowwise_python_in_any_contract_query(plans):
         ("kmv.cascade", 1, 0),
         ("m4.tier0", 1, 0),
         ("m4.cascade", 1, 0),
-        ("invert_pairs", 1, 1),  # conv_id exchange, one Arrow solve stage
+        # the pairs' conv_id window + a second raw conv_id shuffle under the
+        # nonzero-series semi-join (its projection differs, so no reuse);
+        # one Arrow solve stage
+        ("invert_pairs", 2, 1),
         ("resample_spline", 2, 1),  # last-wins per (conv_id, grid cell) + keyed repartition
         ("compress_series", 1, 1),
         ("flagship_rollup_1m", 1, 0),  # one shuffle, all JVM
         ("w1_turn_deltas", 1, 0),  # series window only
-        ("hist_p95_1h", 2, 0),  # spread + direct-1h rank read
-        ("sbas_solve_bandwidth1", 2, 1),  # one Arrow solve stage
+        ("hist_p95_1h", 1, 0),  # spread; the direct-1h rank read rides it
+        ("sbas_solve_bandwidth1", 1, 1),  # series window; one Arrow solve stage
         ("hist_p95_global_1h", 2, 0),  # spread + direct global read
         ("distinct_convs_1h", 2, 0),  # spread + direct 1h bit_or
         ("distinct_hll_1h", 3, 0),  # spread + direct 1h regs + read agg
@@ -95,18 +110,23 @@ def test_no_rowwise_python_in_any_contract_query(plans):
         ("counter_increase_1h", 1, 0),  # (conv,seg) windows ride conv_id hash
         ("anomaly_hod_1h", 2, 0),  # 1h tier build + cohort window on tiny tier
         ("metric_corr_1h", 2, 0),  # 1h tier build + per-conv component agg
-        ("watermark_sizing", 3, 0),  # lateness window (reused) + bucket agg
-        #   + single-partition rank scan over <= ~2k bucket rows
+        # lateness window + bucket agg (both reused by the late-count
+        # branch) + two single-partition aggs over <= ~2k bucket rows
+        ("watermark_sizing", 4, 0),
         # one collect-fold shuffle (reused by both length-route branches);
         # the mega-series Arrow route adds one vectorized stage that only
         # sees series past EWMA_FOLD_MAX_TURNS
         ("holt_smooth", 1, 1),
-        ("tier_reconcile_1h", 3, 0),  # tier build (reused) + join sides
+        # day agg + one 1h build per side, two for the perturbed side's
+        # union branches + the join exchange on that side
+        ("tier_reconcile_1h", 5, 0),
     ],
 )
 def test_exchange_and_python_budgets(plans, name, max_unique_exchanges, max_python_stages):
     """Unique-exchange budgets (repeated DAG branches collapse:
     ReuseExchange runs them once) and Arrow Python stages per plan."""
     a = audit(plans[name])
-    assert a.n_exchanges_unique <= max_unique_exchanges, (name, a.exchanges)
+    assert a.n_exchanges_unique <= max_unique_exchanges, (
+        name, [e.splitlines()[0] for e in a.exchanges]
+    )
     assert a.python_stages <= max_python_stages, name
