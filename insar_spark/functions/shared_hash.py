@@ -53,6 +53,14 @@ def sql_h60(expr: str) -> str:
     return f"('0x' || substring(md5({expr}), 1, 15))::BIGINT"
 
 
+def perm_params(num_hashes: int, seed: int = 42) -> tuple[list[int], list[int]]:
+    """Seeded (a, b) literals for the universal-hash permutations."""
+    rng = np.random.default_rng(seed)
+    a = rng.integers(1, P31, num_hashes).tolist()
+    b = rng.integers(0, P31, num_hashes).tolist()
+    return [int(x) for x in a], [int(x) for x in b]
+
+
 def py_h60(s: str) -> int:
     """Driver-side twin of :func:`h60_col` / :func:`sql_h60` (same md5,
     same top-15-hex-chars parse). Used to precompute PROBE literals —
@@ -62,11 +70,3 @@ def py_h60(s: str) -> int:
     import hashlib
 
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-
-
-def perm_params(num_hashes: int, seed: int = 42) -> tuple[list[int], list[int]]:
-    """Seeded (a, b) literals for the universal-hash permutations."""
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, P31, num_hashes).tolist()
-    b = rng.integers(0, P31, num_hashes).tolist()
-    return [int(x) for x in a], [int(x) for x in b]
