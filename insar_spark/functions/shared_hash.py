@@ -3,7 +3,7 @@
 The distinct, HLL, KMV and count-min sketch tiers hash conversation ids
 with a function that (a) runs JVM-side in Spark (no Python in the hot
 path), (b) can be recomputed *independently* in DuckDB by the oracles and
-(c) can be computed on the driver for probe literals; the cross-engine
+(c) can be computed in plain Python for probe literals; the cross-engine
 tests (``tests/test_shared_hash.py``) cover all three. Every engine ships
 md5, so the shared primitive is the top 60 bits of ``md5(s)`` parsed as
 an integer:

@@ -1,8 +1,8 @@
 """Cross-engine parity of the shared hashing primitives.
 
 The sketch tiers and their DuckDB oracles rest on shared_hash.py giving
-byte-identical values in Spark (``h60_col``), DuckDB (``sql_h60``) and the
-driver (``py_h60``), and on the ``perm_params`` universal hash giving the
+byte-identical values in Spark (``h60_col``), DuckDB (``sql_h60``) and
+plain Python (``py_h60``), and on the ``perm_params`` universal hash giving the
 same cells in every engine; these property tests drive all three over
 generated texts (including whitespace-edge and short-doc shapes the fixed
 testdata never hits).
@@ -26,7 +26,7 @@ TEXT = st.lists(WORD, min_size=1, max_size=40).map(" ".join)
 def _all_engines(spark, texts: list[str]) -> dict[str, list[tuple[list, list]]]:
     """Per text, the md5-60 hash of every space-separated token and the
     8 universal-hash permutations of each hash, from Spark, DuckDB and
-    the driver: ``{engine: [(token_hashes, perms), ...]}``."""
+    plain Python: ``{engine: [(token_hashes, perms), ...]}``."""
     a, b = SH.perm_params(8, seed=42)
     P = SH.P31
 
