@@ -1,4 +1,4 @@
-"""Dedup + similarity + textstats + multimodal operators."""
+"""Dedup + textstats operators."""
 
 from __future__ import annotations
 
@@ -61,78 +61,6 @@ def test_simhash_near_dups(spark, docs_with_dups):
     assert (0, 1) in found
     h01 = pairs[(pairs.id_a == 0) & (pairs.id_b == 1)]["hamming"].iloc[0]
     assert h01 == 0
-
-
-def test_brute_force_vs_lsh_vs_ivf_topk(spark, tmp_path):
-    from insar_spark.operators.similarity import (
-        brute_force_topk,
-        hyperplane_lsh_topk,
-        ivf_topk,
-        train_centroids,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qrow = emb.filter("vec_id = 7").first()
-    qv = [float(x) for x in qrow["embedding"]]
-
-    exact = brute_force_topk(emb, qv, k=10).toPandas()
-    assert exact["vec_id"].iloc[0] == 7  # self is most similar
-    assert exact["cos_sim"].iloc[0] == pytest.approx(1.0, abs=1e-6)
-    assert exact["cos_sim"].is_monotonic_decreasing
-
-    # on uniform random embeddings ANN recall is meaningless (neighbors are
-    # near-orthogonal); assert self-retrieval only
-    lsh = hyperplane_lsh_topk(emb, qv, k=10, n_bits=10, multiprobe_bits=2).toPandas()
-    assert lsh["vec_id"].iloc[0] == 7
-
-    C = train_centroids(emb, n_centroids=8, sample_rows=500)
-    ivf = ivf_topk(emb, qv, C, k=10, n_probe=3).toPandas()
-    assert ivf["vec_id"].iloc[0] == 7
-
-
-def test_ann_recall_on_clustered_data(spark):
-    """Planted-cluster data: LSH and IVF must recover the true neighbors."""
-    from insar_spark.operators.similarity import (
-        brute_force_topk,
-        hyperplane_lsh_topk,
-        ivf_topk,
-        train_centroids,
-    )
-
-    rng = np.random.default_rng(9)
-    centers = rng.normal(size=(5, 24)) * 4
-    V = np.vstack(
-        [c + rng.normal(0, 0.3, size=(40, 24)) for c in centers]
-    ).astype(np.float32)
-    pdf = pd.DataFrame({"vec_id": range(len(V)), "embedding": list(map(list, V))})
-    emb = spark.createDataFrame(pdf).cache()
-    qv = [float(x) for x in V[3]]  # a member of cluster 0
-
-    exact = set(brute_force_topk(emb, qv, k=10).toPandas().vec_id)
-    lsh = set(
-        hyperplane_lsh_topk(emb, qv, k=10, n_bits=10, multiprobe_bits=2)
-        .toPandas()
-        .vec_id
-    )
-    assert len(lsh & exact) / 10 >= 0.8
-
-    C = train_centroids(emb, n_centroids=5, sample_rows=200, iters=8)
-    ivf = set(ivf_topk(emb, qv, C, k=10, n_probe=2).toPandas().vec_id)
-    assert len(ivf & exact) / 10 >= 0.8
-    emb.unpersist()
-
-
-def test_embedding_near_dups_finds_planted_pair(spark):
-    from insar_spark.operators.similarity import embedding_near_dups
-
-    rng = np.random.default_rng(5)
-    V = rng.normal(size=(60, 16)).astype(np.float32)
-    V[13] = V[7] + rng.normal(0, 0.01, 16).astype(np.float32)  # planted near-dup
-    pdf = pd.DataFrame({"vec_id": range(60), "embedding": list(map(list, V))})
-    emb = spark.createDataFrame(pdf)
-    pairs = embedding_near_dups(emb, threshold=0.98, n_bits=8).toPandas()
-    found = {tuple(sorted((a, b))) for a, b in zip(pairs.id_a, pairs.id_b)}
-    assert (7, 13) in found
 
 
 def test_lang_id(spark):
@@ -203,76 +131,6 @@ def test_fingerprint_flood_is_capped_not_quadratic(spark):
     assert (200, 201) in pairs  # normal bucket unaffected
     assert not any(300 in p for p in pairs)  # singleton dropped
     assert (got.id_a < got.id_b).all()
-
-
-def test_multimodal_plumbing(spark):
-    from insar_spark.operators.multimodal import (
-        extract_features,
-        frame_sample,
-        synth_media,
-    )
-
-    media = synth_media(spark, n=30)
-    feats = extract_features(media, max_batch_bytes=4096).toPandas()
-    assert len(feats) == 30
-    assert (feats["n_bytes"] > 0).all()
-    assert ((feats["feat_mean"] >= 0) & (feats["feat_mean"] <= 255)).all()
-    assert feats["thumb"].map(len).max() <= 16
-    # deterministic: second run identical
-    feats2 = extract_features(media, max_batch_bytes=1 << 30).toPandas()
-    a = feats.sort_values("media_id").reset_index(drop=True)
-    b = feats2.sort_values("media_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-
-    frames = frame_sample(media, every_n=7).toPandas()
-    assert (frames["frame_idx"] % 7 == 0).all()
-
-
-def test_decoder_contract_swap_in(spark, monkeypatch):
-    """The codec boundary contract: any decoder with the _decode_image
-    signature (payload bytes, width, height) -> uint8 (height, width) array
-    drops in without touching the Spark plumbing. Simulated here with a
-    tiny self-describing raw format (what PIL.Image.open would replace)."""
-    import numpy as np
-
-    from insar_spark.operators import multimodal as mm
-
-    rng = np.random.default_rng(17)
-
-    def encode_raw(img: np.ndarray) -> bytes:
-        h, w = img.shape
-        return h.to_bytes(2, "big") + w.to_bytes(2, "big") + img.tobytes()
-
-    def decode_raw(payload: bytes, width: int, height: int) -> np.ndarray:
-        h = int.from_bytes(payload[0:2], "big")
-        w = int.from_bytes(payload[2:4], "big")
-        assert (h, w) == (height, width)  # metadata agrees with the payload
-        return np.frombuffer(payload[4:], dtype=np.uint8).reshape(h, w)
-
-    imgs = {i: rng.integers(0, 256, (12, 9), dtype=np.uint8) for i in range(6)}
-    import pandas as pd
-
-    media = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "media_id": i,
-                    "kind": "image",
-                    "payload": encode_raw(img),
-                    "meta": {"width": 9, "height": 12, "sample_rate": 0,
-                             "n_frames": 1},
-                }
-                for i, img in imgs.items()
-            ]
-        ),
-        schema=mm.MEDIA_SCHEMA,
-    )
-    monkeypatch.setattr(mm, "_decode_image", decode_raw)
-    feats = mm.extract_features(media).toPandas().set_index("media_id")
-    for i, img in imgs.items():
-        assert feats.loc[i, "feat_mean"] == pytest.approx(img.mean())
-        assert feats.loc[i, "feat_std"] == pytest.approx(img.std())
-        assert feats.loc[i, "n_bytes"] == len(encode_raw(img))
 
 
 def test_redact_pii(spark):

@@ -1,9 +1,10 @@
 """DuckDB oracles for the engine's per-series, sketch, downsample, SBAS,
-gap-fill, Gorilla and quality operators.
+gap-fill, Gorilla and quality operators, and for the corpus pipeline's
+dedup, brute-force cosine, text-stats and shard operators.
 
 Each case runs one engine query in Spark and its independent DuckDB
-twin over the ``events`` and ``documents`` tables of the sf0.001 test
-data, then compares row count, column names and values (``compare``):
+twin over the ``events``, ``documents`` and ``embeddings`` tables of the
+sf0.001 test data, then compares row count, column names and values (``compare``):
 columns sorted by name, rows sorted by every column, floats equal to
 1e-9 and then byte-equal. The UDF paths (SBAS solves, natural-cubic
 spline, Gorilla round-trip) are re-executed in DuckDB via closed forms,
@@ -2472,6 +2473,526 @@ SELECT conv_id, {n_out - 1} AS sel_idx, ts, v FROM pts WHERE bucket = {b}"""
 _SQL_LTTB = _lttb_sql(24)
 
 
+# The corpus pipeline (jobs/corpus_job.py): dedup, brute-force cosine,
+# text stats and shards over the documents/embeddings tables.
+
+
+def q_sim_cosine_vs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine similarity of every embedding vs embedding #0.
+
+    JVM-side: zip_with + aggregate (no Python).
+    """
+    from insar_spark.operators.dedup import ensure_parallelism
+
+    emb = load(spark, sf_dir, "embeddings")
+    qv = F.broadcast(
+        emb.filter(F.col("vec_id") == 0).select(
+            F.col("embedding").alias("qe")
+        )
+    )
+    # spread the one-split scan so the per-row interpreted dot folds
+    # use every core (task layout only — identical per-row arithmetic)
+    joined = ensure_parallelism(emb).crossJoin(qv)
+
+    def dot(a, b):
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+
+    cos = dot(F.col("embedding"), F.col("qe")) / (
+        F.sqrt(dot(F.col("embedding"), F.col("embedding")))
+        * F.sqrt(dot(F.col("qe"), F.col("qe")))
+    )
+    return joined.select("vec_id", F.round(cos, 4).alias("cos_sim"))
+
+
+_SQL_SIM = """
+WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
+SELECT e.vec_id,
+       round(list_dot_product(cast(e.embedding AS double[]), cast(q.qe AS double[]))
+             / (sqrt(list_dot_product(cast(e.embedding AS double[]), cast(e.embedding AS double[])))
+                * sqrt(list_dot_product(cast(q.qe AS double[]), cast(q.qe AS double[])))), 4) AS cos_sim
+FROM embeddings e, q
+"""
+
+
+def q_text_tokens_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BPE-ish regex token counting (Java regex == RE2 on this pattern)."""
+    from insar_spark.operators.textstats import token_stats
+
+    return token_stats(load(spark, sf_dir, "documents")).select(
+        "doc_id",
+        F.col("ws_tokens").cast("long").alias("ws_tokens"),
+        F.col("bpe_ish_tokens").cast("long").alias("bpe_ish_tokens"),
+        F.col("n_chars").cast("long").alias("n_chars"),
+    )
+
+
+_SQL_TOKENS_BPE = r"""
+SELECT doc_id,
+       len(regexp_split_to_array(text, '\s+')) AS ws_tokens,
+       len(regexp_extract_all(text,
+           '''(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+'))
+         AS bpe_ish_tokens,
+       length(text) AS n_chars
+FROM documents
+"""
+
+
+def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash+LSH near-dup pairs, JVM-side signatures (shared md5-60 hash),
+    exact word-3-gram Jaccard verify >= 0.8. Oracle: all-pairs exact Jaccard
+    in DuckDB — LSH recall at the shipped 16x4 banding is 1 - (1-s^4)^16:
+    2e-4 miss at the 0.8 contract boundary, ~4e-8 at the dataset's planted-
+    dup similarity (J >= 0.9). The threshold sits in the banding's
+    recall-safe regime ON PURPOSE (a 0.5 gate would carry ~35% per-pair
+    miss odds at its own boundary and only pass while no borderline pair
+    exists — dataset-dependent). Verified against the all-pairs oracle at
+    sf0.001, sf0.01 AND sf0.1."""
+    from insar_spark.operators.dedup import minhash_dedup
+
+    docs = load(spark, sf_dir, "documents")
+    return minhash_dedup(docs, threshold=0.8).select(
+        "id_a", "id_b", _r("jaccard", 6).alias("jaccard")
+    )
+
+
+def _sql_dedup_minhash() -> str:
+    from insar_spark.functions.shared_hash import SQL_TOKENS, sql_shingles
+
+    sh = sql_shingles(SQL_TOKENS.format(text="text"), 3)
+    return f"""
+WITH s AS (
+  SELECT doc_id, list_distinct({sh}) AS sh FROM documents
+), p AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+         len(list_intersect(a.sh, b.sh))::DOUBLE AS i,
+         (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))::DOUBLE AS u
+  FROM s a JOIN s b ON a.doc_id < b.doc_id
+)
+SELECT id_a, id_b, round(i / u, 6) AS jaccard FROM p WHERE i / u >= 0.8
+"""
+
+
+# stores written by the queries that need one, kept alive (and removed at
+# exit) for as long as their lazily-read plans may run
+_STORES: list = []
+
+
+def q_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental dedup — the production crawl shape: even doc_ids are
+    the stored corpus (banded minhash index written once, ingest-time),
+    odd doc_ids are the new batch; only the new batch is hashed, stored
+    rows prune to touched buckets, and the result is the verified pairs
+    involving >= 1 new doc. Oracle: all-pairs exact Jaccard >= 0.8
+    restricted to pairs with an odd member — recall-safe for the same
+    banding reason as dedup_minhash_pairs. The store lives in a
+    temporary directory removed when the process exits (the returned
+    plan reads it lazily)."""
+    import tempfile
+
+    from insar_spark.operators.dedup import (
+        minhash_dedup_incremental,
+        minhash_write,
+    )
+
+    docs = load(spark, sf_dir, "documents")
+    corpus = docs.filter("doc_id % 2 = 0")
+    new = docs.filter("doc_id % 2 = 1")
+    store = tempfile.TemporaryDirectory(prefix="minhash_store_")
+    _STORES.append(store)
+    minhash_write(corpus, store.name)
+    return minhash_dedup_incremental(
+        spark, new, store.name, docs, threshold=0.8
+    ).select("id_a", "id_b", _r("jaccard", 6).alias("jaccard"))
+
+
+def _sql_dedup_minhash_incremental() -> str:
+    from insar_spark.functions.shared_hash import SQL_TOKENS, sql_shingles
+
+    sh = sql_shingles(SQL_TOKENS.format(text="text"), 3)
+    return f"""
+WITH s AS (
+  SELECT doc_id, list_distinct({sh}) AS sh FROM documents
+), p AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+         len(list_intersect(a.sh, b.sh))::DOUBLE AS i,
+         (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))::DOUBLE AS u
+  FROM s a JOIN s b ON a.doc_id < b.doc_id
+  WHERE a.doc_id % 2 = 1 OR b.doc_id % 2 = 1
+)
+SELECT id_a, id_b, round(i / u, 6) AS jaccard FROM p WHERE i / u >= 0.8
+"""
+
+
+def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash near-dups at Hamming <= 3 over 60-bit signatures. The 4x15-bit
+    chunk banding is pigeonhole-COMPLETE for Hamming <= 3, and over-cap
+    buckets re-band by sub-chunks of the remaining bits (pigeonhole again),
+    so the all-pairs DuckDB oracle (recomputing the signature independently
+    from the shared md5-60 token hash) matches by construction — verified
+    at sf0.001/0.01/0.1 including a bucket past the cap at sf0.1."""
+    from insar_spark.operators.dedup import simhash_near_dups, simhash_signatures
+
+    docs = load(spark, sf_dir, "documents")
+    return simhash_near_dups(simhash_signatures(docs), max_hamming=3).select(
+        "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
+    )
+
+
+def _sql_dedup_simhash() -> str:
+    from insar_spark.functions.shared_hash import (
+        SQL_TOKENS,
+        sql_h60,
+        sql_simhash,
+    )
+
+    tokh = (
+        f"list_transform({SQL_TOKENS.format(text='text')}, _t -> {sql_h60('_t')})"
+    )
+    return f"""
+WITH h AS (
+  SELECT doc_id, {sql_simhash('tokh')} AS sig
+  FROM (SELECT doc_id, {tokh} AS tokh FROM documents)
+)
+SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       bit_count(xor(a.sig, b.sig))::INTEGER AS hamming
+FROM h a JOIN h b ON a.doc_id < b.doc_id
+WHERE bit_count(xor(a.sig, b.sig)) <= 3
+"""
+
+
+def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-window chunking (32-token windows, 8-token overlap): the
+    standard pretraining preprocessing step, pure JVM (split + sequence +
+    slice + array_join, zero shuffles). The oracle replays the identical
+    stride arithmetic in SQL — chunk_idx falls out as start // stride."""
+    from insar_spark.operators.textstats import chunk_documents
+
+    docs = load(spark, sf_dir, "documents")
+    return chunk_documents(docs, chunk_tokens=32, overlap=8).select(
+        "doc_id",
+        F.col("chunk_idx").cast("long").alias("chunk_idx"),
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        "chunk_text",
+    )
+
+
+_SQL_DOC_CHUNKS = """
+WITH d AS (
+  SELECT doc_id, string_split(text, ' ') AS t, len(string_split(text, ' ')) AS n
+  FROM documents
+), s AS (
+  SELECT doc_id, t, n,
+         (greatest(n - 9, 0) // 24) * 24 AS last
+  FROM d
+), x AS (
+  SELECT doc_id, t, n, unnest(range(0, last + 1, 24)) AS st FROM s
+)
+SELECT doc_id, st // 24 AS chunk_idx,
+       least(n - st, 32)::BIGINT AS n_tokens,
+       array_to_string(t[st + 1 : st + 32], ' ') AS chunk_text
+FROM x
+"""
+
+
+def q_dedup_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Winnowing-fingerprint near-dup candidates (docs sharing >= 1 pick).
+    Oracle recomputes the fingerprints independently in DuckDB from the
+    shared md5-60 k-gram hash — exact parity, no probabilistic stage."""
+    from insar_spark.operators.textstats import (
+        fingerprint_candidates,
+        winnowing_fingerprints,
+    )
+
+    docs = load(spark, sf_dir, "documents")
+    return fingerprint_candidates(winnowing_fingerprints(docs))
+
+
+def _sql_dedup_fingerprint() -> str:
+    from insar_spark.functions.shared_hash import sql_shingle_hashes, sql_winnow
+
+    fps = sql_winnow(sql_shingle_hashes("text", 5), 4)
+    return f"""
+WITH f AS (SELECT doc_id, {fps} AS fps FROM documents),
+x AS (SELECT doc_id, unnest(fps) AS fp FROM f)
+SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+FROM x a JOIN x b ON a.fp = b.fp AND a.doc_id < b.doc_id
+"""
+
+
+def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from insar_spark.operators.textstats import lang_id
+
+    # spread the single-split scan (per-profile token filters are
+    # the cost; see spread_scan)
+    return lang_id(spread_scan(load(spark, sf_dir, "documents"), "doc_id")).select(
+        "doc_id", "lang_pred", _r("lang_score", 4).alias("lang_score")
+    )
+
+
+def _sql_lang_id() -> str:
+    from insar_spark.operators.textstats import _LANG_PROFILES
+
+    score_cols = []
+    for lang, words in _LANG_PROFILES.items():
+        wl = ", ".join(f"'{w}'" for w in sorted(words))
+        score_cols.append(
+            f"CASE WHEN len(toks) > 0 THEN len(list_filter(toks, "
+            f"_t -> _t IN ({wl})))::DOUBLE / len(toks) ELSE 0.0 END AS s_{lang}"
+        )
+    langs = list(_LANG_PROFILES)
+    m = "greatest(" + ", ".join(f"s_{g}" for g in langs) + ")"
+    pred = "CASE WHEN m <= 0 THEN 'und' " + " ".join(
+        f"WHEN s_{g} = m THEN '{g}'" for g in langs
+    ) + " END"
+    return f"""
+WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
+s AS (SELECT doc_id, {', '.join(score_cols)} FROM d),
+g AS (SELECT doc_id, *, {m} AS m FROM s)
+SELECT doc_id, {pred} AS lang_pred,
+       round(CASE WHEN m > 0 THEN m ELSE 0.0 END, 4) AS lang_score
+FROM g
+"""
+
+
+def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Training-data hygiene: email/phone redaction with hit counts. The
+    corpus has no PII, so deterministic PII is injected first (every third
+    doc gets an email + a phone built from doc_id arithmetic) — both
+    engines synthesize and redact with byte-identical RE2-safe rules."""
+    from insar_spark.operators.textstats import redact_pii
+
+    # spread the single-split scan — the regex passes ran
+    # single-threaded (see spread_scan)
+    docs = spread_scan(load(spark, sf_dir, "documents"), "doc_id")
+    did = F.col("doc_id")
+    injected = docs.select(
+        "doc_id",
+        F.when(
+            did % 3 == 0,
+            F.concat(
+                F.col("text"),
+                F.lit(" reach user"),
+                did.cast("string"),
+                F.lit("@mail.example.com or +1 555 123 "),
+                F.lpad((did % 10_000).cast("string"), 4, "0"),
+            ),
+        ).otherwise(F.col("text")).alias("text"),
+    )
+    return redact_pii(injected).select(
+        "doc_id",
+        F.md5(F.encode("text_redacted", "utf-8")).alias("redacted_md5"),
+        "n_emails",
+        "n_phones",
+    )
+
+
+def _sql_pii_redact() -> str:
+    from insar_spark.operators.textstats import PII_EMAIL, PII_PHONE
+
+    return f"""
+WITH inj AS (
+  SELECT doc_id,
+    CASE WHEN doc_id % 3 = 0 THEN
+      text || ' reach user' || doc_id::VARCHAR
+           || '@mail.example.com or +1 555 123 '
+           || lpad((doc_id % 10000)::VARCHAR, 4, '0')
+    ELSE text END AS text
+  FROM documents
+), r1 AS (
+  SELECT doc_id,
+    len(regexp_extract_all(text, '{PII_EMAIL}')) AS n_emails,
+    regexp_replace(text, '{PII_EMAIL}', '<EMAIL>', 'g') AS t1
+  FROM inj
+)
+SELECT doc_id,
+  md5(regexp_replace(t1, '{PII_PHONE}', '<PHONE>', 'g')) AS redacted_md5,
+  n_emails::BIGINT AS n_emails,
+  len(regexp_extract_all(t1, '{PII_PHONE}'))::BIGINT AS n_phones
+FROM r1
+"""
+
+
+def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benchmark decontamination: training docs sharing any winnowing
+    fingerprint with a probe/eval set (doc_id % 20 == 5, 25 docs). The probe
+    fingerprint set is broadcast (tiny) against the exploded corpus
+    fingerprints — the O(corpus) shape; hits include the corpus's planted
+    near-dups of probe docs."""
+    from insar_spark.operators.textstats import decontaminate
+
+    docs = load(spark, sf_dir, "documents")
+    probes = docs.filter(F.col("doc_id") % 20 == 5)
+    corpus = docs.filter(F.col("doc_id") % 20 != 5)
+    return decontaminate(corpus, probes)
+
+
+def _sql_decontaminate() -> str:
+    from insar_spark.functions.shared_hash import sql_shingle_hashes, sql_winnow
+
+    fps = sql_winnow(sql_shingle_hashes("text", 5), 4)
+    return f"""
+WITH f AS (SELECT doc_id, {fps} AS fps FROM documents),
+corpus AS (SELECT doc_id, unnest(fps) AS fp FROM f WHERE doc_id % 20 != 5),
+probe AS (SELECT DISTINCT unnest(fps) AS fp FROM f WHERE doc_id % 20 = 5)
+SELECT c.doc_id, count(*)::BIGINT AS n_hits
+FROM corpus c JOIN probe p ON c.fp = p.fp
+GROUP BY c.doc_id
+"""
+
+
+def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-style repetition quality: duplicate-word fraction and
+    top-bigram fraction per doc. Zero-shuffle map-only pass (the bigram
+    mode count is a sorted-array longest-run fold, no explode/groupBy)."""
+    from insar_spark.operators.textstats import repetition_stats
+
+    # spread the single-split documents scan — the per-doc fold ran
+    # single-threaded (see spread_scan)
+    return repetition_stats(
+        spread_scan(load(spark, sf_dir, "documents"), "doc_id")
+    )
+
+
+# Both fractions are exact-int counts through ONE double division, so the
+# doubles are bit-identical cross-engine with no rounding (rounding can
+# BREAK parity at a decimal boundary: Spark rounds the shortest decimal
+# repr, DuckDB the binary value).
+_SQL_REPETITION = """
+WITH base AS (
+    SELECT doc_id, string_split(text, ' ') AS words,
+           len(string_split(text, ' ')) AS n,
+           len(string_split(text, ' '))
+             - len(list_distinct(string_split(text, ' '))) AS n_dup
+    FROM documents
+), bg AS (
+    SELECT doc_id, words[i] || ' ' || words[i + 1] AS bigram
+    FROM (SELECT doc_id, words, unnest(range(1, n)) AS i FROM base)
+), top AS (
+    SELECT doc_id, max(c) AS best FROM (
+        SELECT doc_id, bigram, count(*) AS c FROM bg GROUP BY 1, 2
+    ) GROUP BY 1
+)
+SELECT b.doc_id,
+       b.n_dup * 1.0 / b.n AS dup_word_frac,
+       CASE WHEN b.n >= 2 THEN coalesce(t.best, 0) * 1.0 / (b.n - 1)
+            ELSE 0.0 END AS top_bigram_frac
+FROM base b LEFT JOIN top t USING (doc_id)
+"""
+
+
+def q_shard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Training-export shard assignment audit: per-shard doc count, byte
+    mass, and id range under the deterministic h60(doc_id) mod 64 layout
+    (sources/shards.py). The write path (write_shards) is pytest-covered;
+    this query value-checks the assignment itself cross-engine."""
+    from insar_spark.sources.shards import assign_shards
+
+    d = assign_shards(load(spark, sf_dir, "documents"), n_shards=64)
+    return d.groupBy("shard").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_chars").alias("total_chars"),
+        F.min("doc_id").alias("min_id"),
+        F.max("doc_id").alias("max_id"),
+    )
+
+
+def _sql_shard_stats() -> str:
+    from insar_spark.sources.shards import sql_shard
+
+    return f"""
+SELECT {sql_shard('doc_id', 64)}::int AS shard, count(*) AS n_docs,
+       sum(n_chars)::bigint AS total_chars, min(doc_id) AS min_id,
+       max(doc_id) AS max_id
+FROM documents GROUP BY 1
+"""
+
+
+def q_doc_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Surprisal-without-logs quality signal: the fraction of a document's
+    tokens that fall outside its source's top-100 vocabulary. Composes
+    token_frequencies (vocab is tiny -> broadcast) with an exploded-token
+    semi-join; all counts are exact integers through one double division,
+    so parity is bit-exact with no rounding. Deterministic vocabulary via
+    the count-desc/token-asc tie-break."""
+    from insar_spark.operators.textstats import token_frequencies
+
+    docs = load(spark, sf_dir, "documents")
+    vocab = token_frequencies(docs, k=100).select("source", "token")
+    toks = docs.select(
+        "doc_id", "source", F.explode(F.split("text", " ")).alias("token")
+    )
+    in_vocab = toks.join(
+        F.broadcast(vocab), ["source", "token"], "left_semi"
+    ).groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_in"))
+    totals = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
+    return totals.join(in_vocab, "doc_id", "left").select(
+        "doc_id",
+        "n_tok",
+        (
+            (F.col("n_tok") - F.coalesce("n_in", F.lit(0))).cast("double")
+            / F.col("n_tok")
+        ).alias("oov_rate"),
+    )
+
+
+_SQL_DOC_OOV = """
+WITH x AS (
+    SELECT doc_id, source, unnest(string_split(text, ' ')) AS token
+    FROM documents
+), per AS (
+    SELECT source, token, count(*) AS c FROM x GROUP BY 1, 2
+), vocab AS (
+    SELECT source, token FROM per
+    WINDOW w AS (PARTITION BY source ORDER BY c DESC, token)
+    QUALIFY row_number() OVER w <= 100
+), flagged AS (
+    SELECT x.doc_id,
+           count(*) AS n_tok,
+           count(v.token) AS n_in
+    FROM x LEFT JOIN vocab v USING (source, token)
+    GROUP BY 1
+)
+SELECT doc_id, n_tok,
+       (n_tok - n_in) * 1.0 / n_tok AS oov_rate
+FROM flagged
+"""
+
+
+def q_top_tokens_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source vocabulary audit: top-10 tokens by occurrence with doc
+    frequency — the corpus-composition check a pretraining mixture runs
+    per domain. Deterministic tie-break (count desc, token asc) keeps the
+    ranking reproducible cross-engine."""
+    from insar_spark.operators.textstats import token_frequencies
+
+    # spread the single-split scan — the token explode + partial agg
+    # ran single-threaded (see spread_scan)
+    return token_frequencies(
+        spread_scan(load(spark, sf_dir, "documents"), "doc_id"), k=10
+    )
+
+
+_SQL_TOP_TOKENS = """
+WITH x AS (
+    SELECT source, doc_id, unnest(string_split(text, ' ')) AS token
+    FROM documents
+), per AS (
+    SELECT source, token, count(*) AS n_occurrences,
+           count(DISTINCT doc_id) AS n_docs
+    FROM x GROUP BY 1, 2
+)
+SELECT source, token, n_occurrences, n_docs,
+       cast(row_number() OVER w AS int) AS rank
+FROM per
+WINDOW w AS (PARTITION BY source ORDER BY n_occurrences DESC, token)
+QUALIFY row_number() OVER w <= 10
+"""
+
+
 ORACLES = {
     "holt_smooth": (q_holt_smooth, _SQL_HOLT),
     "ewma_smooth": (q_ewma_smooth, _SQL_EWMA),
@@ -2523,6 +3044,20 @@ ORACLES = {
     "f1_f3_filtered_pairs": (q_f1_f3_filtered_pairs, _SQL_F1F3),
     "topk_per_series": (q_topk_per_series, _SQL_TOPK),
     "sessionize_30m": (q_sessionize, _SQL_SESSIONIZE),
+    "dedup_minhash_pairs": (q_dedup_minhash_pairs, _sql_dedup_minhash()),
+    "lang_id_heuristic": (q_lang_id, _sql_lang_id()),
+    "pii_redact": (q_pii_redact, _sql_pii_redact()),
+    "top_tokens_per_source": (q_top_tokens_per_source, _SQL_TOP_TOKENS),
+    "dedup_fingerprint_pairs": (q_dedup_fingerprint_pairs, _sql_dedup_fingerprint()),
+    "decontaminate": (q_decontaminate, _sql_decontaminate()),
+    "sim_cosine_vs_query": (q_sim_cosine_vs_query, _SQL_SIM),
+    "doc_oov_rate": (q_doc_oov_rate, _SQL_DOC_OOV),
+    "doc_chunks": (q_doc_chunks, _SQL_DOC_CHUNKS),
+    "dedup_minhash_incremental": (q_dedup_minhash_incremental, _sql_dedup_minhash_incremental()),
+    "text_repetition": (q_text_repetition, _SQL_REPETITION),
+    "text_tokens_bpe": (q_text_tokens_bpe, _SQL_TOKENS_BPE),
+    "dedup_simhash_pairs": (q_dedup_simhash_pairs, _sql_dedup_simhash()),
+    "shard_stats": (q_shard_stats, _sql_shard_stats()),
 }
 
 
@@ -2604,7 +3139,7 @@ def compare(name: str, got: pd.DataFrame, exp: pd.DataFrame) -> list[str]:
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
-    for t in ("events", "documents"):
+    for t in ("events", "documents", "embeddings"):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
     yield con
     con.close()

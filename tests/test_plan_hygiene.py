@@ -2,8 +2,8 @@
 family's tier-0 build and its first cascade (from a stored tier, as
 ``rollup_job`` and ``stream_job`` run it), the per-series Python kernels
 (SBAS solve, spline gap-fill, Gorilla compression) and every
-DuckDB-checked query of ``test_duckdb_oracle``, the last over the sf0.001
-files.
+DuckDB-checked query of ``test_duckdb_oracle`` (engine and corpus
+operators), the last over the sf0.001 files.
 
 A BatchEvalPython node means a row-at-a-time Python UDF crept in (the
 kernels must stay on the Arrow path). The exchange and Python-stage
@@ -24,8 +24,9 @@ from test_duckdb_oracle import ORACLES, SF
 @pytest.fixture(scope="module")
 def plans(spark, transcripts, tmp_path_factory):
     """Plan name -> DataFrame, each over a Parquet scan as the jobs read
-    their input (built, not run, except the written inputs: the turns and
-    each family's tier-0 output as the cascade's stored source)."""
+    their input (built, not run, except the written inputs: the turns,
+    each family's tier-0 output as the cascade's stored source, and the
+    MinHash store the incremental dedup query writes first)."""
     from insar_spark.operators.compression import compress_series
     from insar_spark.operators.gapfill import resample_spline
     from insar_spark.operators.sbas import invert_pairs
@@ -101,10 +102,21 @@ def test_no_rowwise_python_in_any_contract_query(plans):
         ("w1_turn_deltas", 1, 0),  # series window only
         ("hist_p95_1h", 1, 0),  # spread; the direct-1h rank read rides it
         ("sbas_solve_bandwidth1", 1, 1),  # series window; one Arrow solve stage
+        ("doc_chunks", 0, 0),  # narrow map-only transform
+        ("dedup_minhash_pairs", 3, 0),  # band/bucket + verify, linear
+        ("dedup_minhash_incremental", 5, 0),  # + store prune join
+        # map-only fold; the one exchange is spread_scan spreading the
+        # single-split documents scan across cores (no-op at scale)
+        ("text_repetition", 1, 0),
+        ("shard_stats", 1, 0),  # one n_shards-way shuffle
         ("hist_p95_global_1h", 2, 0),  # spread + direct global read
+        ("top_tokens_per_source", 3, 0),  # spread + (source, token) agg + top-k window
         ("distinct_convs_1h", 2, 0),  # spread + direct 1h bit_or
         ("distinct_hll_1h", 3, 0),  # spread + direct 1h regs + read agg
         ("hot_convs_cms_1h", 3, 0),  # spread + probe-pushdown aggs
+        # vocab agg + top-k window (broadcast), and two different doc_id
+        # aggs (in-vocab and all tokens) that the join rides
+        ("doc_oov_rate", 4, 0),
         ("late_data_profile", 1, 0),  # one conv_id window, groupBy reuses it
         ("cusum_level_shift", 1, 0),  # one conv_id window, groupBy reuses it
         ("counter_increase_1h", 1, 0),  # (conv,seg) windows ride conv_id hash

@@ -3,9 +3,11 @@
 The sketch tiers and their DuckDB oracles rest on shared_hash.py giving
 byte-identical values in Spark (``h60_col``), DuckDB (``sql_h60``) and
 plain Python (``py_h60``), and on the ``perm_params`` universal hash giving the
-same cells in every engine; these property tests drive all three over
-generated texts (including whitespace-edge and short-doc shapes the fixed
-testdata never hits).
+same cells in every engine; the dedup/fingerprint oracles rest on its
+shingle, MinHash, SimHash and winnowing twins agreeing between Spark and
+DuckDB. These property tests drive every engine over generated texts
+(including whitespace-edge and short-doc shapes the fixed testdata never
+hits).
 """
 
 from __future__ import annotations
@@ -81,6 +83,60 @@ def _assert_engines_agree(spark, texts: list[str]) -> None:
                 assert got == want, (engine, col, i, text)
 
 
+def _both_engines(spark, texts: list[str]):
+    """Shingle hashes, MinHash signatures, SimHash and winnowing picks of
+    each text from the Spark builders and their DuckDB twins."""
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    a, b = SH.perm_params(8, seed=42)
+    sh = SH.shingle_hashes_col(F.col("text"), 3)
+    tokh = F.transform(SH.tokens_col(F.col("text")), SH.h60_col)
+    got = (
+        df.select(
+            "doc_id",
+            sh.alias("shash"),
+            SH.minhash_sig_col(sh, a, b).alias("sig"),
+            SH.simhash_col(tokh).alias("simhash"),
+            SH.winnow_col(sh, 4).alias("fps"),
+        )
+        .orderBy("doc_id")
+        .toPandas()
+    )
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", list(enumerate(texts)))
+    A = "[" + ",".join(map(str, a)) + "]"
+    B = "[" + ",".join(map(str, b)) + "]"
+    shs = SH.sql_shingle_hashes("text", 3)
+    tks = (
+        f"list_transform({SH.SQL_TOKENS.format(text='text')}, "
+        f"_t -> {SH.sql_h60('_t')})"
+    )
+    exp = con.execute(
+        f"""
+WITH s AS (SELECT doc_id, {shs} AS shash, {tks} AS tokh FROM d)
+SELECT doc_id, shash,
+  list_transform(range(0, 8), j -> list_min(list_transform(shash,
+    h -> ({A}[j+1] * (h % {SH.P31}) + {B}[j+1]) % {SH.P31}))) AS sig,
+  {SH.sql_simhash('tokh')} AS simhash,
+  {SH.sql_winnow('shash', 4)} AS fps
+FROM s ORDER BY doc_id"""
+    ).df()
+    return got, exp
+
+
+def _assert_fingerprints_agree(spark, texts: list[str]) -> None:
+    got, exp = _both_engines(spark, texts)
+    for col in ("shash", "sig", "simhash", "fps"):
+        for i in range(len(texts)):
+            sv, dv = got[col][i], exp[col][i]
+            sl = list(sv) if hasattr(sv, "__iter__") else sv
+            dl = list(dv) if hasattr(dv, "__iter__") else dv
+            assert sl == dl, (col, i, texts[i])
+
+
 @settings(
     max_examples=10,
     deadline=None,
@@ -89,14 +145,16 @@ def _assert_engines_agree(spark, texts: list[str]) -> None:
 @given(st.lists(TEXT, min_size=1, max_size=6))
 def test_hash_primitives_cross_engine(spark, texts):
     _assert_engines_agree(spark, texts)
+    _assert_fingerprints_agree(spark, texts)
 
 
 def test_hash_edge_shapes(spark):
-    """Deterministic edge corpus: one-token and one-char texts, repeated
-    tokens."""
+    """Deterministic edge corpus: one-token and one-char texts, texts
+    shorter than the shingle/window sizes, repeated tokens."""
     texts = ["x", "a b", "a a a a a a a a", "one two", "w " * 3 + "w"]
     texts = [t.strip() for t in texts]
     _assert_engines_agree(spark, texts)
+    _assert_fingerprints_agree(spark, texts)
 
 
 def test_h60_matches_known_md5(spark):
