@@ -2576,8 +2576,8 @@ SELECT id_a, id_b, round(i / u, 6) AS jaccard FROM p WHERE i / u >= 0.8
 """
 
 
-# stores written by the queries that need one, kept alive (and removed at
-# exit) for as long as their lazily-read plans may run
+# the incremental MinHash query's stores: its plan reads the store lazily,
+# so each stays until the process exits, then is removed
 _STORES: list = []
 
 
