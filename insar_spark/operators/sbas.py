@@ -9,8 +9,8 @@ exchange. No per-row Python anywhere.
 Scale notes (100 TB design):
 * The only shuffle is the groupBy(conv_id) exchange; if the input is already
   bucketed/sorted by conv_id (sources.catalog layout), AQE keeps it local.
-* All-zero series are short-circuited BEFORE the UDF with a cheap pre-agg
-  (insar/timeseries.py:512-516 analog) — see ``prefilter_nonzero``.
+* Series whose deltas are all 0 or null are short-circuited BEFORE the UDF
+  (insar/timeseries.py:512-516 analog) — see ``invert_pairs(prefilter=)``.
 * A mega-conversation can't be split for a whole-series solve; memory is
   bounded because the solve is O(pairs × dates) per group and the pair
   network is bandwidth-limited upstream (operators.series.adjacent_pairs).
@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from insar_spark.functions.sbas_kernels import solve_series
@@ -31,21 +31,6 @@ SOLVE_SCHEMA = (
 )
 
 _SEC_PER_DAY = 86_400.0
-
-
-def prefilter_nonzero(pairs: DataFrame, delta_col: str = "delta_v") -> DataFrame:
-    """F8: drop series whose deltas are all zero/NaN before the solve UDF.
-
-    Cheap hash-agg + broadcast-able semi-join; the expensive UDF stage then
-    only sees series with signal (insar/timeseries.py:512-516).
-    """
-    keep = (
-        pairs.groupBy(KEY)
-        .agg(F.sum(F.abs(F.coalesce(F.col(delta_col), F.lit(0.0)))).alias("_s"))
-        .filter(F.col("_s") > 0)
-        .select(KEY)
-    )
-    return pairs.join(F.broadcast(keep), KEY, "left_semi")
 
 
 def invert_pairs(
@@ -64,13 +49,25 @@ def invert_pairs(
     pair network (F1–F4 applied upstream so Catalyst pushes them into the
     scan). Returns one row per (conv_id, date): the reconstructed cumulative
     series with a temporal-coherence quality column (A7/A8 + A4).
+
+    ``prefilter`` (F8) drops, before the solve UDF, every series whose
+    deltas are all 0 or null (insar/timeseries.py:512-516). A NaN delta
+    sums to NaN and Spark orders NaN above every number, so a series with
+    a NaN delta is kept. The per-series sum is a window over ``conv_id``,
+    which rides the pairs' own ``conv_id`` partitioning and order: no
+    second shuffle of the pair table.
     """
     cols = [KEY, "early_ts", "late_ts", F.col(delta_col).alias("_delta")]
     if weight_col:
         cols.append(F.col(weight_col).alias("_w"))
     df = pairs.select(*cols)
     if prefilter:
-        df = prefilter_nonzero(df, "_delta")
+        signal = F.sum(F.abs(F.coalesce(F.col("_delta"), F.lit(0.0))))
+        df = (
+            df.withColumn("_s", signal.over(Window.partitionBy(KEY)))
+            .filter(F.col("_s") > 0)
+            .drop("_s")
+        )
 
     has_w = weight_col is not None
 

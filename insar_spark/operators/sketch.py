@@ -1103,8 +1103,8 @@ def hll_estimate(
 # probability 1 - delta (delta = e^-d). With d=4, w=2048 a window costs
 # at most 8192 tall rows no matter how many distinct keys it saw.
 #
-# Hashes are the same public universal family the MinHash permutations
-# use — h_j(x) = ((a_j * (h60(x) mod P31) + b_j) mod P31) mod w with
+# Hashes are the public universal family of shared_hash.perm_params —
+# h_j(x) = ((a_j * (h60(x) mod P31) + b_j) mod P31) mod w with
 # seeded (a_j, b_j) literals inlined on both engines — so the sketch is
 # integer-exact and the DuckDB oracle replays it bit-for-bit. Merge and
 # cascade are plain groupBy-SUM over (window, row, cell): associative,

@@ -1,8 +1,9 @@
-"""Text analysis for training-data pipelines: language-ID, quality scores,
-token counting, document fingerprinting.
+"""Text analysis for training-data pipelines: language-ID, quality and
+repetition scores, token counting and frequencies, PII redaction and
+document chunking.
 
-All hot paths are JVM expressions; the language model and the winnowing
-fingerprint run as vectorized Arrow UDFs over whole batches.
+Every operator is JVM expressions only (no Python UDF), so the DuckDB
+oracle can replay it.
 """
 
 from __future__ import annotations
@@ -83,32 +84,6 @@ def quality_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     )
 
 
-def winnowing_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    window: int = 4,
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer et al., SIGMOD 2003):
-    rolling Karp-Rabin over k-grams of tokens, min-hash per window.
-
-    Returns (id, fingerprints array<long>) — near-dup candidates are pairs
-    sharing any fingerprint (explode + groupBy, linear shuffle).
-
-    JVM-side: k-gram hash = md5-60 of the word k-gram string (cross-engine,
-    shared_hash.py), picks = sliding-window min (window expression) —
-    byte-reproducible by the DuckDB oracle.
-    """
-    from insar_spark.functions.shared_hash import shingle_hashes_col, winnow_col
-    from insar_spark.operators.dedup import ensure_parallelism
-
-    kg = shingle_hashes_col(F.col(text_col), k)
-    return ensure_parallelism(df.select(id_col, text_col)).select(
-        F.col(id_col), winnow_col(kg, window).alias("fingerprints")
-    )
-
-
 # RE2-safe patterns (identical semantics in Java regex and DuckDB/RE2)
 PII_EMAIL = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
 PII_PHONE = r"\+?[0-9][0-9 -]{7,}[0-9]"
@@ -130,50 +105,6 @@ def redact_pii(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
         F.regexp_replace(after_email, PII_PHONE, "<PHONE>").alias("text_redacted"),
         n_email.cast("long").alias("n_emails"),
         n_phone.cast("long").alias("n_phones"),
-    )
-
-
-def _explode_fps(fps: DataFrame, id_col: str) -> DataFrame:
-    """Explode a fingerprints column through a per-doc first()-aggregate
-    materialization barrier (r6). ``explode(<attr>)`` fused into the same
-    codegen stage as the winnowing projection re-evaluates the whole
-    md5/sliding-min HOF chain several times over (measured: the exploded
-    read cost 5.5 s vs 1.3 s for the projection alone at sf1.0, and
-    neither a repartition nor a local sort pins the projection below the
-    Generate — the optimizer hoists it back). The aggregate CONSUMES the
-    array into its buffer, so exactly one evaluation survives
-    (5.5 s -> 2.4 s); semantically the identity, since
-    winnowing_fingerprints emits one row per ``id_col``."""
-    m = fps.groupBy(id_col).agg(F.first("fingerprints").alias("fingerprints"))
-    return m.select(F.col(id_col), F.explode("fingerprints").alias("fp"))
-
-
-def decontaminate(
-    docs: DataFrame,
-    probes: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    window: int = 4,
-) -> DataFrame:
-    """Benchmark decontamination: flag training docs that share any
-    winnowing fingerprint with a (small) probe/eval set.
-
-    Scale shape: the probe set's fingerprints are tiny → broadcast
-    left-semi join against the exploded corpus fingerprints; the corpus is
-    scanned once, no self-join, no shuffle of the corpus beyond the
-    explode. Returns (id, n_hits) for contaminated docs only.
-    """
-    corpus_fp = _explode_fps(
-        winnowing_fingerprints(docs, text_col, id_col, k, window), id_col
-    )
-    probe_fp = _explode_fps(
-        winnowing_fingerprints(probes, text_col, id_col, k, window), id_col
-    ).select("fp").distinct()
-    return (
-        corpus_fp.join(F.broadcast(probe_fp), "fp", "left_semi")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
     )
 
 
@@ -221,34 +152,6 @@ def chunk_documents(
             F.slice("_t", F.col("_s") + 1, F.lit(chunk_tokens)), " "
         ).alias("chunk_text"),
     )
-
-
-def fingerprint_candidates(
-    fps: DataFrame, id_col: str = "doc_id", max_bucket: int = 512
-) -> DataFrame:
-    """Pairs of docs sharing >= 1 winnowing fingerprint.
-
-    Candidate generation goes through the same bucket path as every other
-    pair generator (dedup._pairs_from_buckets): groupBy(fp) collects a
-    deterministically sorted member array and pairs are generated inside
-    the array — no posting-list self-join. ``max_bucket`` bounds a flooded
-    fingerprint (a boilerplate k-gram that survives winnowing: license
-    headers, templated greetings), which under the old fp equi-join went
-    quadratic in its posting-list length; the dropped mass is
-    Observation-logged, never silent.
-    """
-    from insar_spark.operators.dedup import _pairs_from_buckets
-
-    # r6: explode through the first()-agg barrier (_explode_fps — the
-    # fused Generate re-evaluated the winnow chain several times), and
-    # drop the old .distinct(): winnow_col already array_distinct's each
-    # doc's picks, so (id, fp) rows are unique by construction and the
-    # dedup exchange was a no-op.
-    x = _explode_fps(fps, id_col)
-    grouped = x.groupBy("fp").agg(
-        F.sort_array(F.collect_list(id_col)).alias("ids")
-    )
-    return _pairs_from_buckets(grouped, max_bucket, "winnowing-fp")
 
 
 def repetition_stats(

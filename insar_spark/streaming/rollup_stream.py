@@ -258,8 +258,8 @@ def sealed_union_view(
     the union is coalesced to one partition, which satisfies the
     latest-epoch-wins window and any aggregate above it (a cascade) with
     no exchange. Otherwise it is repartitioned once on the log keys minus
-    ``window_start`` (a global tier keyed by the window alone: on
-    ``window_start``), the one exchange both operators use.
+    ``window_start`` (every family's log keys hold another column), the one
+    exchange both operators use.
     Raises ``ValueError`` when neither layer has a day to contribute."""
     exclude = set(exclude)
     sealed_days = store.committed_days(sealed_tier) - exclude
@@ -284,9 +284,7 @@ def sealed_union_view(
     if rows <= ONE_TASK_ROWS:
         live = live.coalesce(1)
     else:
-        live = live.repartition(
-            *([k for k in log_keys if k != "window_start"] or log_keys)
-        )
+        live = live.repartition(*[k for k in log_keys if k != "window_start"])
     return latest_epoch(live, log_keys).drop("day")
 
 

@@ -4,14 +4,11 @@ Composes the engine's LLM-data operators into the production pipeline a
 100-TB pretraining-data build runs, end to end:
 
   documents -> annotate (lang-ID + quality + repetition, one map-only pass)
-            -> quality filter -> exact dedup -> MinHash near-dup drop
-            -> decontaminate vs a probe set (optional)
-            -> deterministic shard export
+            -> quality filter -> exact dedup -> deterministic shard export
 
 Usage (cluster):
     spark-submit --py-files insar_spark.zip jobs/corpus_job.py \
-        --input /data/documents --out /data/corpus \
-        [--probes /data/eval_probes] [--n-shards 1024]
+        --input /data/documents --out /data/corpus [--n-shards 1024]
 
 Usage (sandbox):
     python jobs/corpus_job.py --input /root/testdata/sf0.01/documents.parquet \
@@ -19,14 +16,11 @@ Usage (sandbox):
 
 Resume: each stage commits its parquet output plus a ``_COMMITTED`` marker;
 a re-run skips every committed stage (checked by the resume pytest). At
-scale this means a failed 12-hour near-dup stage does not re-run the
-annotate scan.
+scale this means a failed shard export does not re-run the annotate scan.
 
 Scale shape per stage (all verified by the per-operator plan audits):
   annotate       map-only, zero shuffles, pure JVM expressions
   exact dedup    one shuffle on md5(text)
-  near-dup       banded MinHash LSH, capped buckets, O(corpus) — no self-join
-  decontaminate  broadcast probe fingerprints semi-joined against the corpus
   shards         one n_shards-way balanced exchange, partitionBy layout
 """
 
@@ -91,9 +85,7 @@ def _stage(out: str, name: str, build, metrics: dict) -> str:
 
 
 def main(argv: list[str] | None = None) -> dict:
-    from insar_spark.operators.dedup import minhash_dedup
     from insar_spark.operators.textstats import (
-        decontaminate,
         lang_id,
         quality_scores,
         repetition_stats,
@@ -104,12 +96,10 @@ def main(argv: list[str] | None = None) -> dict:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True, help="documents parquet")
     p.add_argument("--out", required=True, help="pipeline output root")
-    p.add_argument("--probes", default=None, help="eval-probe parquet")
     p.add_argument("--n-shards", type=int, default=64)
     p.add_argument("--master", default=None)
     p.add_argument("--min-lang-score", type=float, default=0.02)
     p.add_argument("--max-top-bigram-frac", type=float, default=0.6)
-    p.add_argument("--near-dup-threshold", type=float, default=0.8)
     args = p.parse_args(argv)
 
     spark = get_spark("corpus_job", master=args.master)
@@ -160,33 +150,9 @@ def main(argv: list[str] | None = None) -> dict:
         return filtered.join(keep, "doc_id", "left_semi")
 
     exact_path = _stage(args.out, "exact_dedup", build_exact, metrics)
-    exact = spark.read.parquet(exact_path)
+    final = spark.read.parquet(exact_path)
 
-    # -- 3. near-dup drop: for every verified MinHash pair drop the higher
-    # id (deterministic; transitive chains keep their minimum via the
-    # pairwise rule applied to the candidate graph's edges)
-    def build_near() -> DataFrame:
-        pairs = minhash_dedup(exact, threshold=args.near_dup_threshold)
-        losers = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-        return exact.join(losers, "doc_id", "left_anti")
-
-    near_path = _stage(args.out, "near_dedup", build_near, metrics)
-    near = spark.read.parquet(near_path)
-
-    # -- 4. optional decontamination vs an eval/benchmark probe set
-    if args.probes:
-        probes = spark.read.parquet(args.probes)
-
-        def build_clean() -> DataFrame:
-            contaminated = decontaminate(near, probes).select("doc_id")
-            return near.join(contaminated, "doc_id", "left_anti")
-
-        clean_path = _stage(args.out, "decontaminated", build_clean, metrics)
-        final = spark.read.parquet(clean_path)
-    else:
-        final = near
-
-    # -- 5. shard export (deterministic h60 layout)
+    # -- 3. shard export (deterministic h60 layout)
     shards_path = os.path.join(args.out, "shards")
     if not _committed(shards_path):
         t1 = time.perf_counter()
@@ -205,10 +171,7 @@ def main(argv: list[str] | None = None) -> dict:
         "input": input_rows,
         "filtered": metrics["filtered"]["rows"],
         "exact_dedup": metrics["exact_dedup"]["rows"],
-        "near_dedup": metrics["near_dedup"]["rows"],
-        "final": metrics["decontaminated"]["rows"]
-        if args.probes
-        else metrics["near_dedup"]["rows"],
+        "final": metrics["exact_dedup"]["rows"],
     }
     metrics["wall_sec"] = round(time.perf_counter() - t0, 3)
     print(json.dumps(metrics))

@@ -1,12 +1,9 @@
-"""Dedup + textstats operators."""
+"""Text statistics operators (``operators.textstats``)."""
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 import pytest
-
-from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -25,42 +22,6 @@ def docs_with_dups(spark):
         (6, "another unrelated document mentioning databases and query engines"),
     ]
     return spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-
-
-def test_minhash_lsh_finds_near_dups(spark, docs_with_dups):
-    from insar_spark.operators.dedup import minhash_dedup
-
-    pairs = minhash_dedup(docs_with_dups, threshold=0.5).toPandas()
-    found = {tuple(sorted((a, b))) for a, b in zip(pairs.id_a, pairs.id_b)}
-    assert (0, 1) in found  # exact dup
-    assert (0, 2) in found or (1, 2) in found  # near dup
-    # unrelated docs never pair
-    assert not any(3 in p or 6 in p for p in found)
-    # exact dup has jaccard 1.0
-    exact = pairs[(pairs.id_a == 0) & (pairs.id_b == 1)]
-    assert exact["jaccard"].iloc[0] == pytest.approx(1.0)
-
-
-def test_minhash_signature_deterministic(spark, docs_with_dups):
-    from insar_spark.operators.dedup import minhash_signatures
-
-    a = minhash_signatures(docs_with_dups).toPandas().set_index("doc_id")["sig"]
-    b = minhash_signatures(docs_with_dups).toPandas().set_index("doc_id")["sig"]
-    for i in a.index:
-        assert list(a[i]) == list(b[i])
-    # identical docs -> identical signatures
-    assert list(a[0]) == list(a[1])
-
-
-def test_simhash_near_dups(spark, docs_with_dups):
-    from insar_spark.operators.dedup import simhash_near_dups, simhash_signatures
-
-    sigs = simhash_signatures(docs_with_dups)
-    pairs = simhash_near_dups(sigs, max_hamming=8).toPandas()
-    found = {tuple(sorted((a, b))) for a, b in zip(pairs.id_a, pairs.id_b)}
-    assert (0, 1) in found
-    h01 = pairs[(pairs.id_a == 0) & (pairs.id_b == 1)]["hamming"].iloc[0]
-    assert h01 == 0
 
 
 def test_lang_id(spark):
@@ -96,43 +57,6 @@ def test_token_stats_and_quality(spark, docs_with_dups):
     assert q.loc[0, "repetition_ratio"] > 0
 
 
-def test_winnowing_fingerprints(spark, docs_with_dups):
-    from insar_spark.operators.textstats import (
-        fingerprint_candidates,
-        winnowing_fingerprints,
-    )
-
-    fps = winnowing_fingerprints(docs_with_dups)
-    pdf = fps.toPandas().set_index("doc_id")["fingerprints"]
-    assert list(pdf[0]) == list(pdf[1])  # identical docs, identical prints
-    cands = fingerprint_candidates(fps).toPandas()
-    found = {tuple(sorted((a, b))) for a, b in zip(cands.id_a, cands.id_b)}
-    assert (0, 1) in found
-    assert (0, 5) in found  # shared prefix fingerprints
-    assert not any(p == (3, 6) for p in found)
-
-
-def test_fingerprint_flood_is_capped_not_quadratic(spark):
-    """One boilerplate fingerprint shared by many docs (license header /
-    templated greeting surviving winnowing) must not go quadratic: the
-    bucket path caps at max_bucket members — C(cap, 2) pairs from the
-    deterministically-lowest ids — while normal fingerprints still pair."""
-    import itertools
-
-    from insar_spark.operators.textstats import fingerprint_candidates
-
-    rows = [(i, [42]) for i in range(100)]  # flooded fp
-    rows += [(200, [7, 9]), (201, [9]), (300, [11])]  # normal + singleton
-    fps = spark.createDataFrame(rows, "doc_id long, fingerprints array<long>")
-    got = fingerprint_candidates(fps, max_bucket=8).toPandas()
-    pairs = {tuple(sorted((a, b))) for a, b in zip(got.id_a, got.id_b)}
-    flooded = {p for p in pairs if p[0] < 100}
-    assert flooded == set(itertools.combinations(range(8), 2))  # capped
-    assert (200, 201) in pairs  # normal bucket unaffected
-    assert not any(300 in p for p in pairs)  # singleton dropped
-    assert (got.id_a < got.id_b).all()
-
-
 def test_redact_pii(spark):
     from insar_spark.operators.textstats import redact_pii
 
@@ -152,74 +76,6 @@ def test_redact_pii(spark):
     assert out.loc[2, "n_emails"] == 0 and out.loc[2, "n_phones"] == 0
     assert out.loc[2, "text_redacted"] == rows[2][1]
     assert out.loc[3, "n_emails"] == 2
-
-
-def test_decontaminate_flags_probe_overlap(spark, docs_with_dups):
-    from insar_spark.operators.textstats import decontaminate
-
-    probes = docs_with_dups.filter("doc_id = 0")  # the duplicated base doc
-    corpus = docs_with_dups.filter("doc_id != 0")
-    hits = decontaminate(corpus, probes).toPandas()
-    flagged = set(hits.doc_id)
-    assert 1 in flagged  # exact dup of the probe
-    assert 5 in flagged  # near dup (shared prefix fingerprints)
-    assert 3 not in flagged and 6 not in flagged  # unrelated docs clean
-    assert (hits.n_hits >= 1).all()
-
-
-def test_simhash_overcap_bucket_stays_complete(spark):
-    """One 15-bit chunk bucket holds ALL docs (past max_bucket); sub-chunk
-    re-banding must still find every Hamming<=3 pair (brute-force parity)
-    as long as the remaining bits are diverse enough to split — the
-    documented completeness condition. Signatures are crafted directly:
-    a shared chunk0 forces the level-1 overflow, distinct high bits give
-    level 2 room, planted pairs differ in <=3 high bits."""
-    import itertools
-
-    import numpy as np
-
-    from insar_spark.operators.dedup import simhash_near_dups
-
-    rng = np.random.default_rng(23)
-    common_chunk0 = 0x5A5A
-    sigs = []
-    for i in range(30):
-        high = int(rng.integers(0, 1 << 45)) << 15
-        a = high | common_chunk0
-        flip = 0
-        for b in rng.choice(45, size=3, replace=False):
-            flip |= 1 << (15 + int(b))
-        sigs.append((2 * i, a))
-        sigs.append((2 * i + 1, a ^ flip))  # planted Hamming<=3 partner
-    df = spark.createDataFrame(pd.DataFrame(sigs, columns=["doc_id", "simhash"]))
-    sig_map = dict(sigs)
-    expected = {
-        (a, b)
-        for a, b in itertools.combinations(sorted(sig_map), 2)
-        if bin(sig_map[a] ^ sig_map[b]).count("1") <= 3
-    }
-    assert len(expected) >= 30
-    # cap of 8 << 60 members: the level-1 chunk0 bucket must overflow
-    got_df = simhash_near_dups(df, max_hamming=3, max_bucket=8).toPandas()
-    got = {tuple(sorted((a, b))) for a, b in zip(got_df.id_a, got_df.id_b)}
-    assert got == expected
-
-
-def test_simhash_identical_flood_is_capped_not_quadratic(spark):
-    """The intrinsic limit: members with (near-)identical signatures do
-    not split under re-banding — the level-2 cap bounds the output there
-    (by design, logged), instead of emitting C(n,2) pairs."""
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            [(i, 0x123456789ABCD) for i in range(100)],
-            columns=["doc_id", "simhash"],
-        )
-    )
-    from insar_spark.operators.dedup import simhash_near_dups
-
-    got = simhash_near_dups(df, max_hamming=3, max_bucket=8).toPandas()
-    # bounded: at most C(8,2) pairs per (chunk, sub-chunk) bucket family
-    assert 0 < len(got) <= 4 * 4 * 28
 
 
 def test_chunk_documents_invariants(spark):
@@ -265,38 +121,3 @@ def test_chunk_documents_invariants(spark):
 
     with pytest.raises(ValueError, match="overlap"):
         chunk_documents(docs, chunk_tokens=8, overlap=8)
-
-
-def test_minhash_incremental_equals_full_restricted(spark, tmp_path, docs_with_dups):
-    """Incremental dedup of a new batch against the stored corpus index ==
-    the full-corpus dedup restricted to pairs involving a new doc — and
-    the stored index is pruned, not re-hashed."""
-    from insar_spark.operators.dedup import (
-        minhash_dedup,
-        minhash_dedup_incremental,
-        minhash_write,
-    )
-
-    corpus = docs_with_dups.filter("doc_id % 2 = 0")
-    new = docs_with_dups.filter("doc_id % 2 = 1")
-    path = str(tmp_path / "mh_store")
-    minhash_write(corpus, path)
-
-    inc = minhash_dedup_incremental(
-        spark, new, path, docs_with_dups, threshold=0.5
-    ).toPandas()
-    got = {tuple(sorted((a, b))) for a, b in zip(inc.id_a, inc.id_b)}
-
-    full = minhash_dedup(docs_with_dups, threshold=0.5).toPandas()
-    exp = {
-        tuple(sorted((a, b)))
-        for a, b in zip(full.id_a, full.id_b)
-        if a % 2 == 1 or b % 2 == 1
-    }
-    assert got == exp and len(got) > 0
-    # store layout: one directory per band
-    import os
-
-    assert any(f.startswith("band=") for f in os.listdir(path))
-
-

@@ -1,10 +1,10 @@
 """DuckDB oracles for the engine's per-series, sketch, downsample, SBAS,
 gap-fill, Gorilla and quality operators, and for the corpus pipeline's
-dedup, brute-force cosine, text-stats and shard operators.
+text-stats and shard operators.
 
 Each case runs one engine query in Spark and its independent DuckDB
-twin over the ``events``, ``documents`` and ``embeddings`` tables of the
-sf0.001 test data, then compares row count, column names and values (``compare``):
+twin over the ``events`` and ``documents`` tables of the sf0.001 test
+data, then compares row count, column names and values (``compare``):
 columns sorted by name, rows sorted by every column, floats equal to
 1e-9 and then byte-equal. The UDF paths (SBAS solves, natural-cubic
 spline, Gorilla round-trip) are re-executed in DuckDB via closed forms,
@@ -2473,49 +2473,8 @@ SELECT conv_id, {n_out - 1} AS sel_idx, ts, v FROM pts WHERE bucket = {b}"""
 _SQL_LTTB = _lttb_sql(24)
 
 
-# The corpus pipeline (jobs/corpus_job.py): dedup, brute-force cosine,
-# text stats and shards over the documents/embeddings tables.
-
-
-def q_sim_cosine_vs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine similarity of every embedding vs embedding #0.
-
-    JVM-side: zip_with + aggregate (no Python).
-    """
-    from insar_spark.operators.dedup import ensure_parallelism
-
-    emb = load(spark, sf_dir, "embeddings")
-    qv = F.broadcast(
-        emb.filter(F.col("vec_id") == 0).select(
-            F.col("embedding").alias("qe")
-        )
-    )
-    # spread the one-split scan so the per-row interpreted dot folds
-    # use every core (task layout only — identical per-row arithmetic)
-    joined = ensure_parallelism(emb).crossJoin(qv)
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    cos = dot(F.col("embedding"), F.col("qe")) / (
-        F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-        * F.sqrt(dot(F.col("qe"), F.col("qe")))
-    )
-    return joined.select("vec_id", F.round(cos, 4).alias("cos_sim"))
-
-
-_SQL_SIM = """
-WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-SELECT e.vec_id,
-       round(list_dot_product(cast(e.embedding AS double[]), cast(q.qe AS double[]))
-             / (sqrt(list_dot_product(cast(e.embedding AS double[]), cast(e.embedding AS double[])))
-                * sqrt(list_dot_product(cast(q.qe AS double[]), cast(q.qe AS double[])))), 4) AS cos_sim
-FROM embeddings e, q
-"""
+# The corpus pipeline (jobs/corpus_job.py): text stats and shards over the
+# documents table.
 
 
 def q_text_tokens_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2538,129 +2497,6 @@ SELECT doc_id,
          AS bpe_ish_tokens,
        length(text) AS n_chars
 FROM documents
-"""
-
-
-def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs, JVM-side signatures (shared md5-60 hash),
-    exact word-3-gram Jaccard verify >= 0.8. Oracle: all-pairs exact Jaccard
-    in DuckDB — LSH recall at the shipped 16x4 banding is 1 - (1-s^4)^16:
-    2e-4 miss at the 0.8 contract boundary, ~4e-8 at the dataset's planted-
-    dup similarity (J >= 0.9). The threshold sits in the banding's
-    recall-safe regime ON PURPOSE (a 0.5 gate would carry ~35% per-pair
-    miss odds at its own boundary and only pass while no borderline pair
-    exists — dataset-dependent). Verified against the all-pairs oracle at
-    sf0.001, sf0.01 AND sf0.1."""
-    from insar_spark.operators.dedup import minhash_dedup
-
-    docs = load(spark, sf_dir, "documents")
-    return minhash_dedup(docs, threshold=0.8).select(
-        "id_a", "id_b", _r("jaccard", 6).alias("jaccard")
-    )
-
-
-def _sql_dedup_minhash() -> str:
-    from insar_spark.functions.shared_hash import SQL_TOKENS, sql_shingles
-
-    sh = sql_shingles(SQL_TOKENS.format(text="text"), 3)
-    return f"""
-WITH s AS (
-  SELECT doc_id, list_distinct({sh}) AS sh FROM documents
-), p AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         len(list_intersect(a.sh, b.sh))::DOUBLE AS i,
-         (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))::DOUBLE AS u
-  FROM s a JOIN s b ON a.doc_id < b.doc_id
-)
-SELECT id_a, id_b, round(i / u, 6) AS jaccard FROM p WHERE i / u >= 0.8
-"""
-
-
-# the incremental MinHash query's stores: its plan reads the store lazily,
-# so each stays until the process exits, then is removed
-_STORES: list = []
-
-
-def q_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental dedup — the production crawl shape: even doc_ids are
-    the stored corpus (banded minhash index written once, ingest-time),
-    odd doc_ids are the new batch; only the new batch is hashed, stored
-    rows prune to touched buckets, and the result is the verified pairs
-    involving >= 1 new doc. Oracle: all-pairs exact Jaccard >= 0.8
-    restricted to pairs with an odd member — recall-safe for the same
-    banding reason as dedup_minhash_pairs. The store lives in a
-    temporary directory removed when the process exits (the returned
-    plan reads it lazily)."""
-    import tempfile
-
-    from insar_spark.operators.dedup import (
-        minhash_dedup_incremental,
-        minhash_write,
-    )
-
-    docs = load(spark, sf_dir, "documents")
-    corpus = docs.filter("doc_id % 2 = 0")
-    new = docs.filter("doc_id % 2 = 1")
-    store = tempfile.TemporaryDirectory(prefix="minhash_store_")
-    _STORES.append(store)
-    minhash_write(corpus, store.name)
-    return minhash_dedup_incremental(
-        spark, new, store.name, docs, threshold=0.8
-    ).select("id_a", "id_b", _r("jaccard", 6).alias("jaccard"))
-
-
-def _sql_dedup_minhash_incremental() -> str:
-    from insar_spark.functions.shared_hash import SQL_TOKENS, sql_shingles
-
-    sh = sql_shingles(SQL_TOKENS.format(text="text"), 3)
-    return f"""
-WITH s AS (
-  SELECT doc_id, list_distinct({sh}) AS sh FROM documents
-), p AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         len(list_intersect(a.sh, b.sh))::DOUBLE AS i,
-         (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))::DOUBLE AS u
-  FROM s a JOIN s b ON a.doc_id < b.doc_id
-  WHERE a.doc_id % 2 = 1 OR b.doc_id % 2 = 1
-)
-SELECT id_a, id_b, round(i / u, 6) AS jaccard FROM p WHERE i / u >= 0.8
-"""
-
-
-def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dups at Hamming <= 3 over 60-bit signatures. The 4x15-bit
-    chunk banding is pigeonhole-COMPLETE for Hamming <= 3, and over-cap
-    buckets re-band by sub-chunks of the remaining bits (pigeonhole again),
-    so the all-pairs DuckDB oracle (recomputing the signature independently
-    from the shared md5-60 token hash) matches by construction — verified
-    at sf0.001/0.01/0.1 including a bucket past the cap at sf0.1."""
-    from insar_spark.operators.dedup import simhash_near_dups, simhash_signatures
-
-    docs = load(spark, sf_dir, "documents")
-    return simhash_near_dups(simhash_signatures(docs), max_hamming=3).select(
-        "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
-    )
-
-
-def _sql_dedup_simhash() -> str:
-    from insar_spark.functions.shared_hash import (
-        SQL_TOKENS,
-        sql_h60,
-        sql_simhash,
-    )
-
-    tokh = (
-        f"list_transform({SQL_TOKENS.format(text='text')}, _t -> {sql_h60('_t')})"
-    )
-    return f"""
-WITH h AS (
-  SELECT doc_id, {sql_simhash('tokh')} AS sig
-  FROM (SELECT doc_id, {tokh} AS tokh FROM documents)
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       bit_count(xor(a.sig, b.sig))::INTEGER AS hamming
-FROM h a JOIN h b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.sig, b.sig)) <= 3
 """
 
 
@@ -2695,31 +2531,6 @@ SELECT doc_id, st // 24 AS chunk_idx,
        least(n - st, 32)::BIGINT AS n_tokens,
        array_to_string(t[st + 1 : st + 32], ' ') AS chunk_text
 FROM x
-"""
-
-
-def q_dedup_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing-fingerprint near-dup candidates (docs sharing >= 1 pick).
-    Oracle recomputes the fingerprints independently in DuckDB from the
-    shared md5-60 k-gram hash — exact parity, no probabilistic stage."""
-    from insar_spark.operators.textstats import (
-        fingerprint_candidates,
-        winnowing_fingerprints,
-    )
-
-    docs = load(spark, sf_dir, "documents")
-    return fingerprint_candidates(winnowing_fingerprints(docs))
-
-
-def _sql_dedup_fingerprint() -> str:
-    from insar_spark.functions.shared_hash import sql_shingle_hashes, sql_winnow
-
-    fps = sql_winnow(sql_shingle_hashes("text", 5), 4)
-    return f"""
-WITH f AS (SELECT doc_id, {fps} AS fps FROM documents),
-x AS (SELECT doc_id, unnest(fps) AS fp FROM f)
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-FROM x a JOIN x b ON a.fp = b.fp AND a.doc_id < b.doc_id
 """
 
 
@@ -2813,34 +2624,6 @@ SELECT doc_id,
   n_emails::BIGINT AS n_emails,
   len(regexp_extract_all(t1, '{PII_PHONE}'))::BIGINT AS n_phones
 FROM r1
-"""
-
-
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: training docs sharing any winnowing
-    fingerprint with a probe/eval set (doc_id % 20 == 5, 25 docs). The probe
-    fingerprint set is broadcast (tiny) against the exploded corpus
-    fingerprints — the O(corpus) shape; hits include the corpus's planted
-    near-dups of probe docs."""
-    from insar_spark.operators.textstats import decontaminate
-
-    docs = load(spark, sf_dir, "documents")
-    probes = docs.filter(F.col("doc_id") % 20 == 5)
-    corpus = docs.filter(F.col("doc_id") % 20 != 5)
-    return decontaminate(corpus, probes)
-
-
-def _sql_decontaminate() -> str:
-    from insar_spark.functions.shared_hash import sql_shingle_hashes, sql_winnow
-
-    fps = sql_winnow(sql_shingle_hashes("text", 5), 4)
-    return f"""
-WITH f AS (SELECT doc_id, {fps} AS fps FROM documents),
-corpus AS (SELECT doc_id, unnest(fps) AS fp FROM f WHERE doc_id % 20 != 5),
-probe AS (SELECT DISTINCT unnest(fps) AS fp FROM f WHERE doc_id % 20 = 5)
-SELECT c.doc_id, count(*)::BIGINT AS n_hits
-FROM corpus c JOIN probe p ON c.fp = p.fp
-GROUP BY c.doc_id
 """
 
 
@@ -3044,19 +2827,13 @@ ORACLES = {
     "f1_f3_filtered_pairs": (q_f1_f3_filtered_pairs, _SQL_F1F3),
     "topk_per_series": (q_topk_per_series, _SQL_TOPK),
     "sessionize_30m": (q_sessionize, _SQL_SESSIONIZE),
-    "dedup_minhash_pairs": (q_dedup_minhash_pairs, _sql_dedup_minhash()),
     "lang_id_heuristic": (q_lang_id, _sql_lang_id()),
     "pii_redact": (q_pii_redact, _sql_pii_redact()),
     "top_tokens_per_source": (q_top_tokens_per_source, _SQL_TOP_TOKENS),
-    "dedup_fingerprint_pairs": (q_dedup_fingerprint_pairs, _sql_dedup_fingerprint()),
-    "decontaminate": (q_decontaminate, _sql_decontaminate()),
-    "sim_cosine_vs_query": (q_sim_cosine_vs_query, _SQL_SIM),
     "doc_oov_rate": (q_doc_oov_rate, _SQL_DOC_OOV),
     "doc_chunks": (q_doc_chunks, _SQL_DOC_CHUNKS),
-    "dedup_minhash_incremental": (q_dedup_minhash_incremental, _sql_dedup_minhash_incremental()),
     "text_repetition": (q_text_repetition, _SQL_REPETITION),
     "text_tokens_bpe": (q_text_tokens_bpe, _SQL_TOKENS_BPE),
-    "dedup_simhash_pairs": (q_dedup_simhash_pairs, _sql_dedup_simhash()),
     "shard_stats": (q_shard_stats, _sql_shard_stats()),
 }
 
@@ -3139,7 +2916,7 @@ def compare(name: str, got: pd.DataFrame, exp: pd.DataFrame) -> list[str]:
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
-    for t in ("events", "documents", "embeddings"):
+    for t in ("events", "documents"):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
     yield con
     con.close()

@@ -24,9 +24,8 @@ from test_duckdb_oracle import ORACLES, SF
 @pytest.fixture(scope="module")
 def plans(spark, transcripts, tmp_path_factory):
     """Plan name -> DataFrame, each over a Parquet scan as the jobs read
-    their input (built, not run, except the written inputs: the turns,
-    each family's tier-0 output as the cascade's stored source, and the
-    MinHash store the incremental dedup query writes first)."""
+    their input (built, not run, except the written inputs: the turns and
+    each family's tier-0 output as the cascade's stored source)."""
     from insar_spark.operators.compression import compress_series
     from insar_spark.operators.gapfill import resample_spline
     from insar_spark.operators.sbas import invert_pairs
@@ -92,10 +91,9 @@ def test_no_rowwise_python_in_any_contract_query(plans):
         ("kmv.cascade", 1, 0),
         ("m4.tier0", 1, 0),
         ("m4.cascade", 1, 0),
-        # the pairs' conv_id window + a second raw conv_id shuffle under the
-        # nonzero-series semi-join (its projection differs, so no reuse);
-        # one Arrow solve stage
-        ("invert_pairs", 2, 1),
+        # the pairs' conv_id window, which the nonzero-series window and
+        # the keyed solve ride; one Arrow solve stage
+        ("invert_pairs", 1, 1),
         ("resample_spline", 2, 1),  # last-wins per (conv_id, grid cell) + keyed repartition
         ("compress_series", 1, 1),
         ("flagship_rollup_1m", 1, 0),  # one shuffle, all JVM
@@ -103,8 +101,6 @@ def test_no_rowwise_python_in_any_contract_query(plans):
         ("hist_p95_1h", 1, 0),  # spread; the direct-1h rank read rides it
         ("sbas_solve_bandwidth1", 1, 1),  # series window; one Arrow solve stage
         ("doc_chunks", 0, 0),  # narrow map-only transform
-        ("dedup_minhash_pairs", 3, 0),  # band/bucket + verify, linear
-        ("dedup_minhash_incremental", 5, 0),  # + store prune join
         # map-only fold; the one exchange is spread_scan spreading the
         # single-split documents scan across cores (no-op at scale)
         ("text_repetition", 1, 0),

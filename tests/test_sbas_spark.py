@@ -50,6 +50,21 @@ def test_invert_pairs_golden(spark, golden_pairs):
     assert coh == pytest.approx(1.0)
 
 
+def test_prefilter_drops_only_all_zero_or_null_series(spark, golden_pairs):
+    """A null delta counts as 0; a NaN delta sums to NaN, which Spark
+    orders above 0, so its series is kept."""
+    extra = spark.createDataFrame(
+        [("px_null", DATES[e], DATES[l], None) for (e, l) in PAIR_IDX]
+        + [
+            ("px_nan", DATES[e], DATES[l], float("nan") if i == 0 else 0.0)
+            for i, (e, l) in enumerate(PAIR_IDX)
+        ],
+        "conv_id string, early_ts timestamp, late_ts timestamp, delta_v double",
+    )
+    out = invert_pairs(golden_pairs.unionByName(extra)).toPandas()
+    assert set(out.conv_id) == {"px_base", "px_double", "px_nan"}
+
+
 def test_invert_pairs_a_matrix_path(spark, golden_pairs):
     out = invert_pairs(golden_pairs, use_b_matrix=False).toPandas()
     np.testing.assert_allclose(_phases(out, "px_base"), [0, 2, 14, 16], atol=1e-9)
