@@ -20,7 +20,7 @@ intermediate fits in int64 in both engines (a_j < 2^31, x mod P < 2^31 →
 product < 2^62). Parameters come from one seeded generator
 (:func:`perm_params`) and are inlined as literals on both sides.
 
-The md5 hash has a Spark Column builder (:func:`h60_col`) and a DuckDB
+The md5 hash has a Spark Column form (:func:`h60_col`) and a DuckDB
 expression twin (:func:`sql_h60`) — the oracle is an independent
 re-execution, not a copy of Spark's result.
 """
