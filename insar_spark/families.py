@@ -129,10 +129,8 @@ FAMILIES: dict[str, Family] = {f.name: f for f in (
     # to the raw table, which defeats the "cascade reads stored tiers,
     # never raw" rule. So the PERSISTED batch family starts at 1h (a
     # direct 1h rollup — pytest-proven identical to cascading a transient
-    # 1m sketch) and cascades 1h -> 1d from storage. rollup_job
-    # --lb-tier0 opts into persisting the 1m sketch too (dense-window
-    # deployments) and records the measured lb_1m/hist_1m row ratio. The
-    # STREAM cycle still seals 1m lb partials — that layer is the bounded
+    # 1m sketch) and cascades 1h -> 1d from storage. Only the STREAM
+    # cycle seals 1m lb partials — that layer is the bounded
     # (7-day retention) real-time serve window, not long-term storage.
     Family(
         "lb", chain=(("lb_1m", "1m"), ("lb_1h", "1h"), ("lb_1d", "1d")),

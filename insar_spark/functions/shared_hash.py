@@ -1,12 +1,12 @@
 """Cross-engine deterministic text hashing: identical in Spark and DuckDB.
 
-The distinct, HLL, KMV and count-min sketch tiers and the shard layout
-need hashes that (a) run JVM-side in Spark (no Python in the hot path)
-and (b) can be recomputed *independently* in DuckDB; the sketch tiers
-also hash probe literals in plain Python (:func:`py_h60`). The
-cross-engine tests (``tests/test_shared_hash.py``) cover all three. Every
-engine ships md5, so the shared primitive is the top 60 bits of
-``md5(token)`` parsed as an integer:
+The distinct, HLL, KMV and count-min sketch tiers need hashes that
+(a) run JVM-side in Spark (no Python in the hot path) and (b) can be
+recomputed *independently* in DuckDB; the sketch tiers also hash probe
+literals in plain Python (:func:`py_h60`). The cross-engine tests
+(``tests/test_shared_hash.py``) cover all three. Every engine ships md5,
+so the shared primitive is the top 60 bits of ``md5(token)`` parsed as
+an integer:
 
 * Spark : ``conv(substring(md5(encode(tok,'utf-8')),1,15), 16, 10)::long``
 * DuckDB: ``('0x' || substring(md5(tok),1,15))::BIGINT``

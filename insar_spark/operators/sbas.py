@@ -7,8 +7,7 @@ scheduler is the pool, and partial locality comes free from the groupBy
 exchange. No per-row Python anywhere.
 
 Scale notes (100 TB design):
-* The only shuffle is the groupBy(conv_id) exchange; if the input is already
-  bucketed/sorted by conv_id (sources.catalog layout), AQE keeps it local.
+* The only shuffle is the groupBy(conv_id) exchange.
 * Series whose deltas are all 0 or null are short-circuited BEFORE the UDF
   (insar/timeseries.py:512-516 analog) — see ``invert_pairs(prefilter=)``.
 * A mega-conversation can't be split for a whole-series solve; memory is

@@ -52,37 +52,18 @@ def main(argv: list[str] | None = None) -> dict:
     p.add_argument("--expire-asof", default=None, help="YYYY-MM-DD")
     p.add_argument("--master", default=None)
     p.add_argument(
-        "--bucketize",
-        type=int,
-        default=0,
-        metavar="N_BUCKETS",
-        help="first land the input as a conv_id-bucketed table "
-        "(<store>/_bucketed warehouse); the tier cascade then runs "
-        "shuffle-free (the 100TB layout, see SCALE.md §1)",
-    )
-    p.add_argument(
         "--sketch",
         action="store_true",
         help="also maintain the mergeable sketch tiers: fixed-edge "
         "histogram (hist_1m -> hist_1h over text_len), range-free "
-        "log-bucket rank sketch (lb_1h -> lb_1d; 1m opt-in via "
-        "--lb-tier0), tall distinct-count bitmap (dist_1m -> dist_1h, "
+        "log-bucket rank sketch (lb_1h -> lb_1d; lb_1m is stream-only), "
+        "tall distinct-count bitmap (dist_1m -> dist_1h, "
         "m=2^20), HLL registers (hll_1m -> hll_1h, unbounded "
         "cardinality), count-min frequency (cms_1m -> cms_1h, "
         "hot-key probes), KMV distinct samples (kmv_1m -> kmv_1h, "
         "set intersection) and the M4 chart downsample (m4_1d -> m4_1w, "
         "first/min/max/last points). Same TierStore commit/resume/expiry "
         "semantics; every cascade reads the STORED finer tier",
-    )
-    p.add_argument(
-        "--lb-tier0",
-        action="store_true",
-        dest="lb_tier0",
-        help="with --sketch: ALSO persist the log-bucket sketch at 1m. "
-        "Default policy starts the persisted lb family at 1h because the "
-        "tall sketch barely collapses sparse series at 1m (measured "
-        "~1.6x the hist tier's rows); opting in records the measured "
-        "lb_1m/hist_1m row ratio in the job metrics",
     )
     p.add_argument(
         "--restate-day",
@@ -97,8 +78,8 @@ def main(argv: list[str] | None = None) -> dict:
         "invalidation analog). The drop is a snapshot, not a mutation: "
         "with --snapshot-keep N the pre-restate numbers stay readable "
         "via read_tier(as_of=...) and rollback-able. Covers the tiers "
-        "THIS job maintains; stream-only tiers (m4_1m, lb_1m without "
-        "--lb-tier0, *_1m_log) have no restate path. Repeatable",
+        "THIS job maintains; stream-only tiers (m4_1m, lb_1m, *_1m_log) "
+        "have no restate path. Repeatable",
     )
     p.add_argument(
         "--snapshot-keep",
@@ -113,12 +94,7 @@ def main(argv: list[str] | None = None) -> dict:
     )
     args = p.parse_args(argv)
 
-    extra = (
-        {"spark.sql.warehouse.dir": os.path.join(args.store, "_bucketed")}
-        if args.bucketize
-        else None
-    )
-    spark = get_spark("rollup_job", master=args.master, extra_conf=extra)
+    spark = get_spark("rollup_job", master=args.master)
     store = TierStore(args.store, snapshot_keep=args.snapshot_keep)
     run_params = {"input": args.input, "job": "rollup_job", "version": 1}
 
@@ -127,23 +103,13 @@ def main(argv: list[str] | None = None) -> dict:
 
     @functools.cache
     def turns():
-        """The input, read (and bucketed) only when a tier-0 tier has
-        pending days: reading parquet infers its schema with a Spark job."""
+        """The input, read only when a tier-0 tier has pending days:
+        reading parquet infers its schema with a Spark job."""
         if args.input.startswith("synth:"):
-            df = synth_transcripts(spark, n_convs=int(args.input.split(":")[1]))
-        else:
-            df = spark.read.parquet(args.input).withColumn(
-                "ts", F.col("ts").cast("timestamp")
-            )
-        if not args.bucketize:
-            return df
-        from insar_spark.sources.bucketed import attach_bucketed, write_bucketed
-
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        loc = os.path.join(wh, "transcripts_bucketed")
-        if not os.path.exists(loc):
-            write_bucketed(df, "transcripts_bucketed", args.bucketize)
-        return attach_bucketed(spark, "transcripts_bucketed", loc, args.bucketize)
+            return synth_transcripts(spark, n_convs=int(args.input.split(":")[1]))
+        return spark.read.parquet(args.input).withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        )
 
     input_days = None if args.input.startswith("synth:") else footer_days(args.input)
 
@@ -176,13 +142,9 @@ def main(argv: list[str] | None = None) -> dict:
             params,
         )
 
-    def first_tier(fam):
-        # --lb-tier0 opts the lb family into persisting its finest tier
-        return fam.tiers[0] if fam.name == "lb" and args.lb_tier0 else fam.batch_from
-
     families = enabled(args.sketch)
     job_tiers = [
-        link for fam in families for link in fam.chain[fam.tiers.index(first_tier(fam)):]
+        link for fam in families for link in fam.chain[fam.tiers.index(fam.batch_from):]
     ]
 
     if args.restate_days:
@@ -203,21 +165,12 @@ def main(argv: list[str] | None = None) -> dict:
     # STORED finer tier (60x+ smaller than raw) — the merges being
     # associative is what makes "cascade from storage" legal
     for fam in families:
-        first = first_tier(fam)
+        first = fam.batch_from
         params = {**run_params, **fam.params()}
-        if fam.name == "lb":
-            params["lb_tier0_policy"] = "1m" if args.lb_tier0 else "1h+"
         pending = None if input_days is None else store.pending_days(first, input_days)
         commit(first, pending, lambda: fam.tier0(turns(), dict(fam.chain)[first]), params)
         for source, tier, window in fam.cascades(first):
             cascade_from(source, tier, fam.cascade, window, params)
-
-    if args.sketch and args.lb_tier0:
-        lb_rows, hist_rows = (
-            sum(p["rows"] for p in store.manifest(t)["partitions"].values())
-            for t in ("lb_1m", "hist_1m")
-        )
-        metrics["lb_tier0_rows_ratio"] = round(lb_rows / hist_rows, 3) if hist_rows else None
 
     if args.expire_asof:
         for tier, _ in job_tiers:

@@ -1,12 +1,11 @@
 """DuckDB oracles for the engine's per-series, sketch, downsample, SBAS,
-gap-fill, Gorilla and quality operators, and for the corpus pipeline's
-text-stats and shard operators.
+gap-fill, Gorilla and quality operators.
 
 Each case runs one engine query in Spark and its independent DuckDB
-twin over the ``events`` and ``documents`` tables of the sf0.001 test
-data, then compares row count, column names and values (``compare``):
-columns sorted by name, rows sorted by every column, floats equal to
-1e-9 and then byte-equal. The UDF paths (SBAS solves, natural-cubic
+twin over the ``events`` table of the sf0.001 test data (the
+``documents`` table for ``doc_len_p95_by_source``), then compares row
+count, column names and values (``compare``): columns sorted by name,
+rows sorted by every column, floats equal to 1e-9 and then byte-equal. The UDF paths (SBAS solves, natural-cubic
 spline, Gorilla round-trip) are re-executed in DuckDB via closed forms,
 unrolled recurrence CTEs or list folds, so the check covers their values,
 not only their row counts.
@@ -2473,309 +2472,6 @@ SELECT conv_id, {n_out - 1} AS sel_idx, ts, v FROM pts WHERE bucket = {b}"""
 _SQL_LTTB = _lttb_sql(24)
 
 
-# The corpus pipeline (jobs/corpus_job.py): text stats and shards over the
-# documents table.
-
-
-def q_text_tokens_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish regex token counting (Java regex == RE2 on this pattern)."""
-    from insar_spark.operators.textstats import token_stats
-
-    return token_stats(load(spark, sf_dir, "documents")).select(
-        "doc_id",
-        F.col("ws_tokens").cast("long").alias("ws_tokens"),
-        F.col("bpe_ish_tokens").cast("long").alias("bpe_ish_tokens"),
-        F.col("n_chars").cast("long").alias("n_chars"),
-    )
-
-
-_SQL_TOKENS_BPE = r"""
-SELECT doc_id,
-       len(regexp_split_to_array(text, '\s+')) AS ws_tokens,
-       len(regexp_extract_all(text,
-           '''(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+'))
-         AS bpe_ish_tokens,
-       length(text) AS n_chars
-FROM documents
-"""
-
-
-def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-window chunking (32-token windows, 8-token overlap): the
-    standard pretraining preprocessing step, pure JVM (split + sequence +
-    slice + array_join, zero shuffles). The oracle replays the identical
-    stride arithmetic in SQL — chunk_idx falls out as start // stride."""
-    from insar_spark.operators.textstats import chunk_documents
-
-    docs = load(spark, sf_dir, "documents")
-    return chunk_documents(docs, chunk_tokens=32, overlap=8).select(
-        "doc_id",
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        "chunk_text",
-    )
-
-
-_SQL_DOC_CHUNKS = """
-WITH d AS (
-  SELECT doc_id, string_split(text, ' ') AS t, len(string_split(text, ' ')) AS n
-  FROM documents
-), s AS (
-  SELECT doc_id, t, n,
-         (greatest(n - 9, 0) // 24) * 24 AS last
-  FROM d
-), x AS (
-  SELECT doc_id, t, n, unnest(range(0, last + 1, 24)) AS st FROM s
-)
-SELECT doc_id, st // 24 AS chunk_idx,
-       least(n - st, 32)::BIGINT AS n_tokens,
-       array_to_string(t[st + 1 : st + 32], ' ') AS chunk_text
-FROM x
-"""
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from insar_spark.operators.textstats import lang_id
-
-    # spread the single-split scan (per-profile token filters are
-    # the cost; see spread_scan)
-    return lang_id(spread_scan(load(spark, sf_dir, "documents"), "doc_id")).select(
-        "doc_id", "lang_pred", _r("lang_score", 4).alias("lang_score")
-    )
-
-
-def _sql_lang_id() -> str:
-    from insar_spark.operators.textstats import _LANG_PROFILES
-
-    score_cols = []
-    for lang, words in _LANG_PROFILES.items():
-        wl = ", ".join(f"'{w}'" for w in sorted(words))
-        score_cols.append(
-            f"CASE WHEN len(toks) > 0 THEN len(list_filter(toks, "
-            f"_t -> _t IN ({wl})))::DOUBLE / len(toks) ELSE 0.0 END AS s_{lang}"
-        )
-    langs = list(_LANG_PROFILES)
-    m = "greatest(" + ", ".join(f"s_{g}" for g in langs) + ")"
-    pred = "CASE WHEN m <= 0 THEN 'und' " + " ".join(
-        f"WHEN s_{g} = m THEN '{g}'" for g in langs
-    ) + " END"
-    return f"""
-WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-s AS (SELECT doc_id, {', '.join(score_cols)} FROM d),
-g AS (SELECT doc_id, *, {m} AS m FROM s)
-SELECT doc_id, {pred} AS lang_pred,
-       round(CASE WHEN m > 0 THEN m ELSE 0.0 END, 4) AS lang_score
-FROM g
-"""
-
-
-def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-data hygiene: email/phone redaction with hit counts. The
-    corpus has no PII, so deterministic PII is injected first (every third
-    doc gets an email + a phone built from doc_id arithmetic) — both
-    engines synthesize and redact with byte-identical RE2-safe rules."""
-    from insar_spark.operators.textstats import redact_pii
-
-    # spread the single-split scan — the regex passes ran
-    # single-threaded (see spread_scan)
-    docs = spread_scan(load(spark, sf_dir, "documents"), "doc_id")
-    did = F.col("doc_id")
-    injected = docs.select(
-        "doc_id",
-        F.when(
-            did % 3 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" reach user"),
-                did.cast("string"),
-                F.lit("@mail.example.com or +1 555 123 "),
-                F.lpad((did % 10_000).cast("string"), 4, "0"),
-            ),
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    return redact_pii(injected).select(
-        "doc_id",
-        F.md5(F.encode("text_redacted", "utf-8")).alias("redacted_md5"),
-        "n_emails",
-        "n_phones",
-    )
-
-
-def _sql_pii_redact() -> str:
-    from insar_spark.operators.textstats import PII_EMAIL, PII_PHONE
-
-    return f"""
-WITH inj AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 3 = 0 THEN
-      text || ' reach user' || doc_id::VARCHAR
-           || '@mail.example.com or +1 555 123 '
-           || lpad((doc_id % 10000)::VARCHAR, 4, '0')
-    ELSE text END AS text
-  FROM documents
-), r1 AS (
-  SELECT doc_id,
-    len(regexp_extract_all(text, '{PII_EMAIL}')) AS n_emails,
-    regexp_replace(text, '{PII_EMAIL}', '<EMAIL>', 'g') AS t1
-  FROM inj
-)
-SELECT doc_id,
-  md5(regexp_replace(t1, '{PII_PHONE}', '<PHONE>', 'g')) AS redacted_md5,
-  n_emails::BIGINT AS n_emails,
-  len(regexp_extract_all(t1, '{PII_PHONE}'))::BIGINT AS n_phones
-FROM r1
-"""
-
-
-def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition quality: duplicate-word fraction and
-    top-bigram fraction per doc. Zero-shuffle map-only pass (the bigram
-    mode count is a sorted-array longest-run fold, no explode/groupBy)."""
-    from insar_spark.operators.textstats import repetition_stats
-
-    # spread the single-split documents scan — the per-doc fold ran
-    # single-threaded (see spread_scan)
-    return repetition_stats(
-        spread_scan(load(spark, sf_dir, "documents"), "doc_id")
-    )
-
-
-# Both fractions are exact-int counts through ONE double division, so the
-# doubles are bit-identical cross-engine with no rounding (rounding can
-# BREAK parity at a decimal boundary: Spark rounds the shortest decimal
-# repr, DuckDB the binary value).
-_SQL_REPETITION = """
-WITH base AS (
-    SELECT doc_id, string_split(text, ' ') AS words,
-           len(string_split(text, ' ')) AS n,
-           len(string_split(text, ' '))
-             - len(list_distinct(string_split(text, ' '))) AS n_dup
-    FROM documents
-), bg AS (
-    SELECT doc_id, words[i] || ' ' || words[i + 1] AS bigram
-    FROM (SELECT doc_id, words, unnest(range(1, n)) AS i FROM base)
-), top AS (
-    SELECT doc_id, max(c) AS best FROM (
-        SELECT doc_id, bigram, count(*) AS c FROM bg GROUP BY 1, 2
-    ) GROUP BY 1
-)
-SELECT b.doc_id,
-       b.n_dup * 1.0 / b.n AS dup_word_frac,
-       CASE WHEN b.n >= 2 THEN coalesce(t.best, 0) * 1.0 / (b.n - 1)
-            ELSE 0.0 END AS top_bigram_frac
-FROM base b LEFT JOIN top t USING (doc_id)
-"""
-
-
-def q_shard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-export shard assignment audit: per-shard doc count, byte
-    mass, and id range under the deterministic h60(doc_id) mod 64 layout
-    (sources/shards.py). The write path (write_shards) is pytest-covered;
-    this query value-checks the assignment itself cross-engine."""
-    from insar_spark.sources.shards import assign_shards
-
-    d = assign_shards(load(spark, sf_dir, "documents"), n_shards=64)
-    return d.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.min("doc_id").alias("min_id"),
-        F.max("doc_id").alias("max_id"),
-    )
-
-
-def _sql_shard_stats() -> str:
-    from insar_spark.sources.shards import sql_shard
-
-    return f"""
-SELECT {sql_shard('doc_id', 64)}::int AS shard, count(*) AS n_docs,
-       sum(n_chars)::bigint AS total_chars, min(doc_id) AS min_id,
-       max(doc_id) AS max_id
-FROM documents GROUP BY 1
-"""
-
-
-def q_doc_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Surprisal-without-logs quality signal: the fraction of a document's
-    tokens that fall outside its source's top-100 vocabulary. Composes
-    token_frequencies (vocab is tiny -> broadcast) with an exploded-token
-    semi-join; all counts are exact integers through one double division,
-    so parity is bit-exact with no rounding. Deterministic vocabulary via
-    the count-desc/token-asc tie-break."""
-    from insar_spark.operators.textstats import token_frequencies
-
-    docs = load(spark, sf_dir, "documents")
-    vocab = token_frequencies(docs, k=100).select("source", "token")
-    toks = docs.select(
-        "doc_id", "source", F.explode(F.split("text", " ")).alias("token")
-    )
-    in_vocab = toks.join(
-        F.broadcast(vocab), ["source", "token"], "left_semi"
-    ).groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_in"))
-    totals = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
-    return totals.join(in_vocab, "doc_id", "left").select(
-        "doc_id",
-        "n_tok",
-        (
-            (F.col("n_tok") - F.coalesce("n_in", F.lit(0))).cast("double")
-            / F.col("n_tok")
-        ).alias("oov_rate"),
-    )
-
-
-_SQL_DOC_OOV = """
-WITH x AS (
-    SELECT doc_id, source, unnest(string_split(text, ' ')) AS token
-    FROM documents
-), per AS (
-    SELECT source, token, count(*) AS c FROM x GROUP BY 1, 2
-), vocab AS (
-    SELECT source, token FROM per
-    WINDOW w AS (PARTITION BY source ORDER BY c DESC, token)
-    QUALIFY row_number() OVER w <= 100
-), flagged AS (
-    SELECT x.doc_id,
-           count(*) AS n_tok,
-           count(v.token) AS n_in
-    FROM x LEFT JOIN vocab v USING (source, token)
-    GROUP BY 1
-)
-SELECT doc_id, n_tok,
-       (n_tok - n_in) * 1.0 / n_tok AS oov_rate
-FROM flagged
-"""
-
-
-def q_top_tokens_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source vocabulary audit: top-10 tokens by occurrence with doc
-    frequency — the corpus-composition check a pretraining mixture runs
-    per domain. Deterministic tie-break (count desc, token asc) keeps the
-    ranking reproducible cross-engine."""
-    from insar_spark.operators.textstats import token_frequencies
-
-    # spread the single-split scan — the token explode + partial agg
-    # ran single-threaded (see spread_scan)
-    return token_frequencies(
-        spread_scan(load(spark, sf_dir, "documents"), "doc_id"), k=10
-    )
-
-
-_SQL_TOP_TOKENS = """
-WITH x AS (
-    SELECT source, doc_id, unnest(string_split(text, ' ')) AS token
-    FROM documents
-), per AS (
-    SELECT source, token, count(*) AS n_occurrences,
-           count(DISTINCT doc_id) AS n_docs
-    FROM x GROUP BY 1, 2
-)
-SELECT source, token, n_occurrences, n_docs,
-       cast(row_number() OVER w AS int) AS rank
-FROM per
-WINDOW w AS (PARTITION BY source ORDER BY n_occurrences DESC, token)
-QUALIFY row_number() OVER w <= 10
-"""
-
-
 ORACLES = {
     "holt_smooth": (q_holt_smooth, _SQL_HOLT),
     "ewma_smooth": (q_ewma_smooth, _SQL_EWMA),
@@ -2827,14 +2523,6 @@ ORACLES = {
     "f1_f3_filtered_pairs": (q_f1_f3_filtered_pairs, _SQL_F1F3),
     "topk_per_series": (q_topk_per_series, _SQL_TOPK),
     "sessionize_30m": (q_sessionize, _SQL_SESSIONIZE),
-    "lang_id_heuristic": (q_lang_id, _sql_lang_id()),
-    "pii_redact": (q_pii_redact, _sql_pii_redact()),
-    "top_tokens_per_source": (q_top_tokens_per_source, _SQL_TOP_TOKENS),
-    "doc_oov_rate": (q_doc_oov_rate, _SQL_DOC_OOV),
-    "doc_chunks": (q_doc_chunks, _SQL_DOC_CHUNKS),
-    "text_repetition": (q_text_repetition, _SQL_REPETITION),
-    "text_tokens_bpe": (q_text_tokens_bpe, _SQL_TOKENS_BPE),
-    "shard_stats": (q_shard_stats, _sql_shard_stats()),
 }
 
 

@@ -64,8 +64,8 @@ def test_job_sketch_tiers_resume_and_match_direct(spark, tmp_path):
     m1 = job_main(argv)
     assert m1["tiers"]["hist_1m"]["written_days"] > 0
     assert m1["tiers"]["hist_1h"]["written_days"] > 0
-    # lb store policy: persisted family starts at 1h (tier-0 at 1m is
-    # opt-in — the tall sketch barely collapses sparse series at 1m)
+    # lb store policy: the batch-persisted family starts at 1h (the tall
+    # sketch barely collapses sparse series at 1m; lb_1m is stream-only)
     assert "lb_1m" not in m1["tiers"]
     assert m1["tiers"]["lb_1h"]["written_days"] > 0
     assert m1["tiers"]["lb_1d"]["written_days"] > 0
@@ -150,7 +150,6 @@ def test_job_sketch_tiers_resume_and_match_direct(spark, tmp_path):
     assert (stored_lb["cnt"] == direct_lb["cnt"]).all()
     snap = store.manifest("lb_1h")["snapshots"][-1]["run_params"]
     assert snap["lb_sub_bits"] == LB_SUB_BITS
-    assert snap["lb_tier0_policy"] == "1h+"
 
     # store policy, enforced: the lb family's finest PERSISTED tier never
     # exceeds the hist tier's tier-0 FOOTPRINT (on-disk bytes — row
@@ -280,59 +279,6 @@ def test_job_sketch_tiers_resume_and_match_direct(spark, tmp_path):
     assert [list(x) for x in stored_kmv["kmv"]] == [
         list(x) for x in direct_kmv["kmv"]
     ]
-
-
-def test_job_lb_tier0_opt_in_records_collapse_ratio(spark, tmp_path):
-    """--lb-tier0 opts into persisting the 1m lb sketch; the job records
-    the measured lb_1m/hist_1m row ratio (the collapse measurement that
-    motivated the 1h+ default policy) in metrics, the manifest carries
-    the policy, and the cascaded 1h tier is identical to the default
-    path's direct 1h rollup (transient-1m equivalence)."""
-    from pyspark.sql import functions as F
-
-    from insar_spark.operators.sketch import lb_rollup
-    from insar_spark.sources.catalog import TierStore
-    from insar_spark.synth import synth_transcripts
-
-    store_path = str(tmp_path / "tiers_lb0")
-    m1 = job_main(
-        ["--input", "synth:40", "--store", store_path,
-         "--master", "local[4]", "--sketch", "--lb-tier0"]
-    )
-    assert m1["tiers"]["lb_1m"]["written_days"] > 0
-    assert m1["tiers"]["lb_1h"]["written_days"] > 0
-    ratio = m1["lb_tier0_rows_ratio"]
-    assert ratio is not None and ratio > 0
-
-    store = TierStore(store_path)
-    snap = store.manifest("lb_1m")["snapshots"][-1]["run_params"]
-    assert snap["lb_tier0_policy"] == "1m"
-
-    # cascading the persisted 1m equals the default path's direct 1h
-    stored = (
-        store.read_tier(spark, "lb_1h")
-        .drop("day")
-        .toPandas()
-        .sort_values(["conv_id", "window_start", "bucket"])
-        .reset_index(drop=True)
-    )
-    turns = synth_transcripts(spark, n_convs=40)
-    direct = (
-        lb_rollup(
-            turns.select(
-                "conv_id", "ts",
-                F.length("text").cast("long").alias("text_len"),
-            ),
-            "1h",
-            value_col="text_len",
-        )
-        .toPandas()
-        .sort_values(["conv_id", "window_start", "bucket"])
-        .reset_index(drop=True)
-    )
-    assert len(stored) == len(direct) > 0
-    assert (stored["bucket"] == direct["bucket"]).all()
-    assert (stored["cnt"] == direct["cnt"]).all()
 
 
 def test_job_snapshot_keep_time_travel(spark, tmp_path):
@@ -540,9 +486,52 @@ def test_batch_restate_heals_a_stream_built_store(spark, tmp_path, transcripts):
     assert store.manifest("1m")["partitions"][other]["files"] == other_files
 
 
-def _land(path, turns):
-    turns.write.mode("overwrite").parquet(path)
+def _land(path, turns, mode="overwrite"):
+    turns.write.mode(mode).parquet(path)
     return path
+
+
+def test_job_rerun_after_new_days_land_commits_only_those_days(spark, tmp_path):
+    """The daily run: new days' files land in the input dir the job read
+    before. The re-run commits exactly the new days to 1m, 1h and 1d and
+    skips the old ones, and every tier then equals a one-shot build of
+    the whole input."""
+    from pyspark.sql import functions as F
+
+    from insar_spark.sources.catalog import TierStore
+    from insar_spark.synth import synth_transcripts
+
+    turns = synth_transcripts(spark, n_convs=40)
+    day = F.date_format("ts", "yyyy-MM-dd")
+    days = sorted(r[0] for r in turns.select(day).distinct().collect())
+    cut = days[len(days) // 2]
+    old, new = [d for d in days if d < cut], [d for d in days if d >= cut]
+    assert old and new
+
+    src = _land(str(tmp_path / "in"), turns.filter(day < cut))
+    sp = str(tmp_path / "t")
+    argv = ["--input", src, "--store", sp, "--master", "local[4]"]
+    first = job_main(argv)
+    assert first["tiers"]["1m"]["written_days"] == len(old)
+
+    _land(src, turns.filter(day >= cut), mode="append")
+    m = job_main(argv)
+    store = TierStore(sp)
+    for tier in ("1m", "1h", "1d"):
+        assert m["tiers"][tier]["written_days"] == len(new), tier
+        assert m["tiers"][tier]["skipped_days"] == len(old), tier
+        assert sorted(store.committed_days(tier)) == days, tier
+
+    whole = _land(str(tmp_path / "whole"), turns)
+    job_main(["--input", whole, "--store", str(tmp_path / "one"), "--master", "local[4]"])
+    one = TierStore(str(tmp_path / "one"))
+
+    def rows(s, tier):
+        pdf = s.read_tier(spark, tier).drop("day").toPandas()
+        return pdf.sort_values(["conv_id", "window_start"]).reset_index(drop=True)
+
+    for tier in ("1m", "1h", "1d"):
+        pd.testing.assert_frame_equal(rows(store, tier), rows(one, tier), check_exact=True)
 
 
 def test_job_noop_resume_runs_no_spark_job(spark, tmp_path, spark_jobs):

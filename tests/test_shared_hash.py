@@ -1,6 +1,6 @@
 """Cross-engine parity of the shared hashing primitives.
 
-The sketch tiers, the shard layout and their DuckDB oracles rest on
+The sketch tiers and their DuckDB oracles rest on
 shared_hash.py giving byte-identical values in Spark (``h60_col``), DuckDB
 (``sql_h60``) and plain Python (``py_h60``), and on the ``perm_params``
 universal hash giving the same count-min cells in every engine. These
