@@ -11,12 +11,12 @@ re-aggregates a STORED finer tier into the next coarser one, never raw.
   prefix, except the stats family's (``1m``/``1h``/``1d``).
 * ``batch_from`` — the first tier ``rollup_job`` builds from raw turns;
   it cascades every later tier of the chain from storage.
-* ``stream_to`` — the last tier the stream cycle cascades to (None:
-  batch-only). The cycle streams ``stream_1m`` rows into the epoch log
-  ``{prefix}1m_log`` (latest epoch wins per ``log_keys``) under the
-  checkpoint ``<checkpoint>`` (stats) or ``<checkpoint>_<name>``, seals
-  finalized days into the chain's first tier and cascades up to
-  ``stream_to`` under the seal horizon.
+* ``stream_to`` — the last tier the stream cycle cascades to. The cycle
+  streams ``stream_1m`` rows into the epoch log ``{prefix}1m_log``
+  (latest epoch wins per ``log_keys``) under the checkpoint
+  ``<checkpoint>`` (stats) or ``<checkpoint>_<name>``, seals finalized
+  days into the chain's first tier and cascades up to ``stream_to`` under
+  the seal horizon.
 * ``params`` — extras every commit records in its manifest
   ``run_params``, so a reader knows what a stored sketch was built with.
 * ``retention`` — each chain tier's horizon in days (None = forever).
@@ -71,8 +71,8 @@ class Family:
     batch_from: str
     tier0: Callable[[DataFrame, str], DataFrame]
     cascade: Callable[[DataFrame, str], DataFrame]
-    stream_to: str | None = None
-    stream_1m: Callable[[DataFrame, str], DataFrame] | None = None
+    stream_to: str
+    stream_1m: Callable[[DataFrame, str], DataFrame]
     log_keys: tuple[str, ...] = ("conv_id", "window_start")
     params: Callable[[], dict] = dict
 
@@ -143,26 +143,10 @@ FAMILIES: dict[str, Family] = {f.name: f for f in (
         stream_1m=_late("streaming.rollup_stream.streaming_lb_1m"),
         params=lambda: _sketch(lb_sub_bits="LB_SUB_BITS"),
     ),
-    # global distinct-conversation bitmap (no series key): write_tier
-    # clusters by day only. The GLOBAL tier sees fleet cardinality, so it
-    # uses the TALL large-m form (m=2^20: load factor < 10% at 1M
-    # distincts per window — the array form's m=1024 saturates silently
-    # there), and m rides the manifest like the hist bin edges so a
-    # reader can derive the load factor / saturation flag from the stored
-    # tier alone. Batch-only.
-    Family(
-        "dist", chain=(("dist_1m", "1m"), ("dist_1h", "1h")), retention=(7, 90),
-        batch_from="dist_1m",
-        tier0=lambda t, w: _late("operators.sketch.distinct_rollup_tall")(
-            t.select("conv_id", "ts"), w, **_sketch(m="DISTINCT_M_GLOBAL")
-        ),
-        cascade=_late("operators.sketch.distinct_cascade_tall"),
-        params=lambda: {**_sketch(distinct_m="DISTINCT_M_GLOBAL"), "distinct_form": "tall"},
-    ),
-    # HLL registers: the UNBOUNDED-cardinality companion to the bitmap
-    # (~3% error flat forever). Register max-merge is idempotent, so
-    # replays are free and the log's latest-epoch-wins IS the merge. A
-    # global tier is bounded at 2^p rows per window regardless of
+    # HLL registers: distinct conversations per window with no
+    # cardinality ceiling (~3% error flat forever). Register max-merge is
+    # idempotent, so replays are free and the log's latest-epoch-wins IS
+    # the merge. A global tier is bounded at 2^p rows per window regardless of
     # traffic, so tier-0 persistence is always cheap — no lb-style store
     # policy. p rides the manifest, so readers derive the register count
     # (and LC-regime cutoff) from the stored tier alone.
@@ -186,21 +170,6 @@ FAMILIES: dict[str, Family] = {f.name: f for f in (
         cascade=_late("operators.sketch.cms_cascade"),
         stream_1m=_late("streaming.rollup_stream.streaming_cms_1m"),
         params=lambda: _sketch(cms_d="CMS_D", cms_w="CMS_W", cms_seed="CMS_SEED"),
-    ),
-    # KMV distinct samples: the only distinct summary whose stored form
-    # also answers set INTERSECTION (bitmap/HLL merge by union only). One
-    # array row of <= k hashes per window, so tier-0 persistence is
-    # always cheap; the cascade is union-and-retake (== direct build,
-    # tested). k rides the manifest so intersection readers know the
-    # sample contract. Batch-only: its merge (union, re-take the k
-    # smallest) is no incremental aggregate, so it cannot stream without
-    # custom state.
-    Family(
-        "kmv", chain=(("kmv_1m", "1m"), ("kmv_1h", "1h")), retention=(7, 90),
-        batch_from="kmv_1m",
-        tier0=lambda t, w: _late("operators.sketch.kmv_rollup")(t.select("conv_id", "ts"), w),
-        cascade=_late("operators.sketch.kmv_cascade"),
-        params=lambda: _sketch(kmv_k="KMV_K"),
     ),
     # M4 downsample, the chart-serving shape (first/min/max/last real
     # points per bucket): every component composes exactly, so each tier

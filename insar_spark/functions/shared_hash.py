@@ -1,6 +1,6 @@
 """Cross-engine deterministic text hashing: identical in Spark and DuckDB.
 
-The distinct, HLL, KMV and count-min sketch tiers need hashes that
+The HLL and count-min sketch tiers need hashes that
 (a) run JVM-side in Spark (no Python in the hot path) and (b) can be
 recomputed *independently* in DuckDB; the sketch tiers also hash probe
 literals in plain Python (:func:`py_h60`). The cross-engine tests

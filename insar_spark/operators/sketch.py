@@ -379,241 +379,6 @@ def hist_merge_global(
     return out.select(*cols)
 
 
-# ------------------------------------------------- distinct-count bitmap
-
-DISTINCT_M = 1024  # bitmap positions; 32 packed per long => 32 words
-
-# Linear counting degrades as the bitmap fills (the estimate is
-# -m·ln(1-set/m): unusable well before set=m, undefined at set=m), so a
-# bitmap sized for per-key cardinality silently lies when pointed at
-# fleet cardinality. Two defenses, mirroring the histogram tier's clamp
-# counters: (a) a read-time saturation flag on an integer load-factor
-# compare (below), and (b) a GLOBAL default m sized for fleet
-# cardinality — 2^20 positions keeps the load factor under 10% at one
-# million distincts per window while the sketch stays tiny (32 K packed
-# words ≈ 256 KB/window, vs the corpus it summarizes). At that width the
-# 32768-aggregate array form would blow up codegen, hence the TALL
-# (window, word, wv) representation below whose merge is a plain
-# groupBy-bit_or — exactly the lb-sketch playbook.
-DISTINCT_M_GLOBAL = 1 << 20
-# load factor set/m above which the linear-counting estimate is flagged
-# degraded (standard guidance for linear counting; at 70% the relative
-# error has grown severalfold vs the low-load regime)
-DISTINCT_SATURATION_PCT = 70
-
-
-def distinct_rollup(
-    df: DataFrame, tier: str = "1m", key_col: str = "conv_id",
-    ts_col: str = "ts", m: int = DISTINCT_M,
-    group_col: str | None = None,
-) -> DataFrame:
-    """Mergeable distinct-count sketch per window (linear counting,
-    Whang et al. 1990): bitmap position = h60(key) mod m, packed 32 bits
-    per long so every shift stays positive and engine-independent. The
-    merge is element-wise ``bit_or`` — associative, commutative, exact —
-    so the sketch cascades through retention tiers and streams exactly
-    like the histogram sketch. ``count distinct`` itself is NOT
-    decomposable; the bitmap is, which is the whole point.
-
-    One shuffle on the window key; 32 independent ``bit_or`` aggregates
-    participate in map-side partial aggregation (mega-window skew is
-    absorbed exactly as in hist_rollup). The deterministic md5-60 hash
-    (shared_hash.py) makes the bitmap — not just the estimate —
-    bit-reproducible by the DuckDB oracle.
-
-    ``group_col`` adds a grouping dimension: per (group, window) bitmaps
-    ("active conversations per event type per hour") instead of one
-    global bitmap per window — the KEYED form the hist/lb families
-    already have. The cascade detects the extra column and carries it.
-    """
-    from insar_spark.functions.shared_hash import h60_col
-
-    words = m // 32
-    unit = TIERS[tier]
-    group = [group_col] if group_col else []
-    # bind the md5 position in its own projection (word and bit both
-    # consume it; CollapseProject won't duplicate a non-cheap expression)
-    hashed = df.select(
-        *group,
-        F.date_trunc(unit, F.col(ts_col)).alias("window_start"),
-        F.pmod(
-            h60_col(F.col(key_col).cast("string")), F.lit(m)
-        ).alias("_p"),
-    )
-    base = hashed.select(
-        *group,
-        "window_start",
-        F.floor(F.col("_p") / 32).cast("int").alias("_word"),
-        F.expr("cast(1 as bigint)").alias("_one"),
-        (F.col("_p") % 32).cast("int").alias("_bit"),
-    ).withColumn("_mask", F.expr("shiftleft(_one, _bit)"))
-    aggs = [
-        F.coalesce(
-            F.bit_or(F.when(F.col("_word") == i, F.col("_mask"))), F.lit(0)
-        ).cast("long").alias(f"_w{i}")
-        for i in range(words)
-    ]
-    out = base.groupBy(*group, "window_start").agg(*aggs)
-    return out.select(
-        *group,
-        "window_start",
-        F.array(*[F.col(f"_w{i}") for i in range(words)]).alias("bitmap"),
-    )
-
-
-def distinct_cascade(
-    rolled: DataFrame, tier: str, m: int = DISTINCT_M,
-    group_col: str | None = None,
-) -> DataFrame:
-    """Coarsen a bitmap tier: element-wise bit_or per word. Pass the same
-    ``group_col`` the rollup was built with to keep the keyed dimension."""
-    words = m // 32
-    unit = TIERS[tier]
-    group = [group_col] if group_col else []
-    aggs = [
-        F.bit_or(F.element_at("bitmap", i + 1)).alias(f"_w{i}")
-        for i in range(words)
-    ]
-    out = rolled.groupBy(
-        *group, F.date_trunc(unit, F.col("window_start")).alias("window_start")
-    ).agg(*aggs)
-    return out.select(
-        *group,
-        "window_start",
-        F.array(*[F.col(f"_w{i}") for i in range(words)]).alias("bitmap"),
-    )
-
-
-def distinct_set_bits(bitmap_col: str | Column) -> Column:
-    """Number of set bitmap positions — a pure JVM fold of bit_count.
-    The linear-counting estimate is ``-m * ln(1 - set/m)``; it is left to
-    the caller (a transcendental, so the contract surface exposes the
-    integer bit count, which IS cross-engine byte-stable)."""
-    h = F.col(bitmap_col) if isinstance(bitmap_col, str) else bitmap_col
-    return F.aggregate(
-        h, F.lit(0).cast("long"), lambda a, x: a + F.bit_count(x)
-    )
-
-
-def distinct_saturated(
-    set_bits_col: str | Column, m: int = DISTINCT_M,
-    threshold_pct: int = DISTINCT_SATURATION_PCT,
-) -> Column:
-    """True when the bitmap's load factor exceeds the threshold — i.e.
-    the linear-counting estimate derived from it is degraded (and at
-    set=m undefined). Pure INTEGER compare (set·100 > m·pct), so the
-    flag is byte-stable cross-engine and belongs in the hash-gated
-    contract surface, unlike the transcendental estimate itself.
-
-    This is the bitmap tier's analog of :func:`hist_saturated`: a
-    mis-sized ``m`` is baked in at ingest, and without this flag the
-    stored tier silently reports ~m distincts forever once fleet
-    cardinality overruns it."""
-    s = (
-        F.col(set_bits_col)
-        if isinstance(set_bits_col, str)
-        else set_bits_col
-    )
-    return (s * F.lit(100)) > F.lit(int(m) * int(threshold_pct))
-
-
-def distinct_estimate(set_bits_col: str | Column, m: int = DISTINCT_M) -> Column:
-    """Linear-counting estimate -m·ln(1-set/m) (Whang et al. 1990).
-    Transcendental — NOT part of the byte-hashed contract surface (see
-    distinct_set_bits); NULL once the bitmap is full (set=m), where the
-    estimator is undefined. Pair with :func:`distinct_saturated` — past
-    the load-factor threshold the value is a lower-bound-ish guess, not
-    an estimate."""
-    s = (
-        F.col(set_bits_col)
-        if isinstance(set_bits_col, str)
-        else set_bits_col
-    )
-    frac = s.cast("double") / F.lit(float(m))
-    return F.when(s < m, -F.lit(float(m)) * F.log(F.lit(1.0) - frac))
-
-
-def distinct_rollup_tall(
-    df: DataFrame, tier: str = "1m", key_col: str = "conv_id",
-    ts_col: str = "ts", m: int = DISTINCT_M_GLOBAL,
-    group_col: str | None = None,
-) -> DataFrame:
-    """TALL distinct-count bitmap: one row per (group?, window, word)
-    holding the packed 32-bit word — the large-m form the array
-    representation can't reach (an m=2^20 array would need 32 768
-    independent bit_or aggregates; here `word` is part of the grouping
-    key, so the agg list stays width-1 and map-side partials absorb skew
-    exactly like the tall lb sketch). Rows exist only for words with at
-    least one set bit, so a quiet window costs a handful of rows while a
-    fleet-cardinality window tops out at m/32 rows. Merge/cascade =
-    groupBy-bit_or; set-bit reads = groupBy-sum of bit_count — all
-    native, all partial-aggregated."""
-    unit = TIERS[tier]
-    from insar_spark.functions.shared_hash import h60_col
-
-    group = [group_col] if group_col else []
-    hashed = df.select(
-        *group,
-        F.date_trunc(unit, F.col(ts_col)).alias("window_start"),
-        F.pmod(
-            h60_col(F.col(key_col).cast("string")), F.lit(m)
-        ).alias("_p"),
-    )
-    base = hashed.select(
-        *group,
-        "window_start",
-        F.floor(F.col("_p") / 32).cast("int").alias("word"),
-        F.expr("cast(1 as bigint)").alias("_one"),
-        (F.col("_p") % 32).cast("int").alias("_bit"),
-    ).withColumn("_mask", F.expr("shiftleft(_one, _bit)"))
-    return (
-        base.groupBy(*group, "window_start", "word")
-        .agg(F.bit_or("_mask").cast("long").alias("wv"))
-    )
-
-
-def distinct_cascade_tall(
-    rolled: DataFrame, tier: str, group_col: str | None = None
-) -> DataFrame:
-    """Coarsen a tall bitmap tier: groupBy-bit_or per (window, word) —
-    associative/commutative/exact, the engine's native partial-agged
-    path, same shape as :func:`lb_cascade`."""
-    unit = TIERS[tier]
-    group = [group_col] if group_col else []
-    return (
-        rolled.groupBy(
-            *group,
-            F.date_trunc(unit, F.col("window_start")).alias("window_start"),
-            "word",
-        )
-        .agg(F.bit_or("wv").cast("long").alias("wv"))
-    )
-
-
-def distinct_read_tall(
-    rolled: DataFrame, m: int = DISTINCT_M_GLOBAL,
-    group_col: str | None = None,
-    threshold_pct: int = DISTINCT_SATURATION_PCT,
-) -> DataFrame:
-    """Serve a tall bitmap tier: per (group?, window) set-bit count, XOR
-    checksum (both byte-stable integers) and the saturation flag. One
-    groupBy-sum over the (tiny) stored tier."""
-    group = [group_col] if group_col else []
-    agg = rolled.groupBy(*group, "window_start").agg(
-        F.sum(F.bit_count("wv")).cast("long").alias("n_set_bits"),
-        F.expr("bit_xor(wv)").cast("long").alias("xor_checksum"),
-    )
-    return agg.select(
-        *group,
-        "window_start",
-        "n_set_bits",
-        "xor_checksum",
-        distinct_saturated("n_set_bits", m, threshold_pct)
-        .cast("int")
-        .alias("saturated"),
-    )
-
-
 # --------------------------------------------- log-bucket rank sketch
 #
 # The histogram sketch above trades a FIXED value range [lo, hi) for a
@@ -915,18 +680,11 @@ def lb_quantiles(
 
 # --------------------------------------------- HyperLogLog register sketch
 #
-# The linear-counting bitmap above is exact-ish and cheap at low load
-# factor, but its estimate degrades as the bitmap fills and dies at
-# set=m — hence the load-factor flag and the m=2^20 global default. That
-# is a per-window ceiling of ~1 M distincts. The HLL register sketch
-# (Flajolet et al. 2007) removes the ceiling: m registers each keep the
-# MAX leading-zero run (rho) seen in their hash-suffix stream, so the
-# sketch counts billions of distincts in m small integers with relative
-# error ~1.04/sqrt(m) and CANNOT saturate — max() never overruns.
-# Together the two tiers cover the whole cardinality axis: the bitmap is
-# the low-range precision tool (exact bit count, ~1% error under its
-# load-factor ceiling), HLL the unbounded fleet-scale tool (~3% at
-# p=10, error flat forever).
+# The distinct-count sketch. The HLL register sketch (Flajolet et al.
+# 2007) keeps, in each of m registers, the MAX leading-zero run (rho)
+# seen in its hash-suffix stream, so it counts billions of distincts in m
+# small integers with relative error ~1.04/sqrt(m) (~3% at p=10, flat at
+# any cardinality) and CANNOT saturate — max() never overruns.
 #
 # Same tall playbook as the lb sketch: one row per (key?, window,
 # register) holding max_rho. Merge/cascade = groupBy-MAX — associative,
@@ -943,8 +701,7 @@ def lb_quantiles(
 # below 2^62). The float estimate — alpha_m * m^2 * 2^51 / sum_scaled,
 # with the standard small-range linear-counting correction — is a
 # single deterministic expression over those integers, kept OUT of the
-# byte-hash contract like distinct_estimate and tolerance-tested in
-# pytest instead. Even the correction-regime flag is an integer compare
+# byte-hash contract and tolerance-tested in pytest instead. Even the correction-regime flag is an integer compare
 # (sum_scaled >= HLL_LC_CUTOFF precomputed as one literal), so regime
 # selection is byte-stable cross-engine.
 
@@ -1036,7 +793,7 @@ def hll_read(
     rho=0), and the small-range-regime flag as a pure int64 compare.
     One groupBy-sum over the (tiny) stored tier. The float estimate is
     :func:`hll_estimate` over these columns — off the byte-hash
-    contract, like distinct_estimate."""
+    contract."""
     m = 1 << p
     rho_max = 60 - p + 1
     group = [group_col] if group_col else []
@@ -1070,7 +827,7 @@ def hll_estimate(
     counting m*ln(m/V) in the small-range regime (raw <= 2.5m with V > 0
     empty registers, per Flajolet et al. 2007). Transcendental in the
     small-range branch — NOT part of the byte-hash contract;
-    tolerance-tested in pytest like distinct_estimate."""
+    tolerance-tested in pytest."""
     m = 1 << p
     rho_max = 60 - p + 1
     n = F.col(n_regs_col) if isinstance(n_regs_col, str) else n_regs_col
@@ -1302,143 +1059,3 @@ def cms_probe_inline(
             F.count(F.lit(1)).cast("int").alias("n_cells"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# K-minimum-values distinct sketch (KMV): the one distinct summary that
-# supports set INTERSECTION. The bitmap and HLL tiers above merge by
-# union only — "active conversations per hour" composes, but "how many
-# conversations were active in BOTH hours" / "in both roles" does not.
-# KMV (Bar-Yossef et al. 2002; Beyer et al. 2007 "distinct sampling")
-# keeps the k smallest distinct 60-bit hashes per window: the k-th
-# minimum estimates density ((k-1)·2^60 / h_k distincts), union is
-# "merge and re-take k smallest" (associative, exact on the sample, so
-# tiers cascade bit-identically), and because the retained hashes are a
-# uniform sample of the key space, |A∩B| falls out of membership counts
-# on the union sample — no other tier here can answer that.
-#
-# Scale shape: rollup dedups hashes FIRST (groupBy with map-side
-# partials shrinks the exchange to distinct keys), then one sort-rank
-# per window bounds the tier at k rows; every cascade carries arrays of
-# ≤ k int64s through plain groupBy — collect_list is bounded at
-# (children-per-parent × k) elements, never raw cardinality. All
-# arithmetic is int64-exact until a single final double division, so
-# the DuckDB oracle replays the sketch bit-for-bit from raw keys.
-# ---------------------------------------------------------------------------
-
-KMV_K = 256  # sample size -> relative stderr ~ 1/sqrt(k-2) ~ 6.3 %
-KMV_DOMAIN = float(1 << 60)  # md5-60 hash space (shared_hash.py)
-
-
-def kmv_rollup(
-    df: DataFrame, tier: str = "1m", key_col: str = "conv_id",
-    ts_col: str = "ts", k: int = KMV_K, group_col: str | None = None,
-) -> DataFrame:
-    """One sorted ``array<long>`` of the k smallest distinct md5-60
-    hashes per (group?, window). Two exchanges: a distinct-hash groupBy
-    (map-side partials absorb duplicate keys before the shuffle — the
-    dominant reduction at transcript scale) and a per-window sort-rank;
-    the final array agg reuses the rank's partitioning (no third
-    exchange). Output is ≤ k rows of payload per window regardless of
-    traffic."""
-    from pyspark.sql.window import Window
-
-    from insar_spark.functions.shared_hash import h60_col
-
-    unit = TIERS[tier]
-    group = [group_col] if group_col else []
-    distinct = (
-        df.select(
-            *group,
-            F.date_trunc(unit, F.col(ts_col)).alias("window_start"),
-            h60_col(F.col(key_col).cast("string")).alias("_h"),
-        )
-        .groupBy(*group, "window_start", "_h")
-        .agg(F.lit(1).alias("_dummy"))
-    )
-    w = Window.partitionBy(*group, "window_start").orderBy("_h")
-    return (
-        distinct.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .groupBy(*group, "window_start")
-        .agg(F.array_sort(F.collect_list("_h")).alias("kmv"))
-    )
-
-
-def kmv_cascade(
-    rolled: DataFrame, tier: str, k: int = KMV_K,
-    group_col: str | None = None,
-) -> DataFrame:
-    """Coarsen a KMV tier: merge children by union-and-retake — flatten
-    the child arrays, dedup, sort, keep the k smallest. Exactly equal to
-    building the sketch from raw at the coarser window (the k smallest
-    of a union are among the k smallest of each side), which is what
-    makes the tier cascade-safe; the collect_list is bounded at
-    children×k elements per group, never raw cardinality."""
-    unit = TIERS[tier]
-    group = [group_col] if group_col else []
-    return (
-        rolled.groupBy(
-            *group,
-            F.date_trunc(unit, F.col("window_start")).alias("window_start"),
-        )
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("kmv")))
-                ),
-                1,
-                k,
-            ).alias("kmv")
-        )
-    )
-
-
-def kmv_estimate(kmv_col: str | Column, k: int = KMV_K) -> Column:
-    """Distinct-count estimate from a KMV array: EXACT (the sample holds
-    every distinct hash) when fewer than k survive, else the k-th-minimum
-    density estimator (k-1)·2^60 / h_k. Integer-derived with one final
-    double division — both factors are exactly representable, so an
-    independent SQL engine reproduces the double bit-for-bit."""
-    c = F.col(kmv_col) if isinstance(kmv_col, str) else kmv_col
-    n = F.size(c)
-    return F.when(n < k, n.cast("double")).otherwise(
-        F.lit(float(k - 1)) * F.lit(KMV_DOMAIN)
-        / F.element_at(c, k).cast("double")
-    )
-
-
-def kmv_union(a: Column, b: Column, k: int = KMV_K) -> Column:
-    """KMV of a set union from two KMV arrays: merge, dedup, re-take the
-    k smallest. Null-safe (a window present on one side only unions with
-    the empty set)."""
-    ea = F.coalesce(a, F.array().cast("array<long>"))
-    eb = F.coalesce(b, F.array().cast("array<long>"))
-    return F.slice(
-        F.array_sort(F.array_distinct(F.concat(ea, eb))), 1, k
-    )
-
-
-def kmv_intersect(
-    a: Column, b: Column, k: int = KMV_K,
-) -> tuple[Column, Column, Column]:
-    """Intersection estimate from two KMV sketches (Beyer et al. 2007):
-    the union sample is a uniform sample of A∪B, so the fraction of it
-    present in BOTH sketches estimates the Jaccard index, and
-    |A∩B| ≈ jaccard · |A∪B|. Returns (n_in_both, jaccard,
-    est_intersection); the membership scan is a k-bounded higher-order
-    filter — pure JVM, no explode, no join."""
-    ea = F.coalesce(a, F.array().cast("array<long>"))
-    eb = F.coalesce(b, F.array().cast("array<long>"))
-    u = kmv_union(ea, eb, k)
-    n_both = F.size(
-        F.filter(
-            u,
-            lambda x: F.array_contains(ea, x) & F.array_contains(eb, x),
-        )
-    )
-    n_u = F.size(u)
-    jaccard = F.when(n_u > 0, n_both.cast("double") / n_u.cast("double")
-                     ).otherwise(F.lit(0.0))
-    est_inter = jaccard * kmv_estimate(u, k)
-    return n_both, jaccard, est_inter

@@ -660,8 +660,9 @@ class TierStore:
     ) -> DataFrame:
         """Latest-epoch-wins view over a log-mode tier (of ``days`` only,
         when given; see ``read_tier``). ``keys`` is the window identity —
-        (conv_id, window_start) for per-series tiers, ("window_start",) for
-        global ones (e.g. the distinct bitmap)."""
+        (conv_id, window_start) for per-series tiers, the window plus the
+        sketch cell for global ones (e.g. ("window_start", "reg") for the
+        HLL registers)."""
         return latest_epoch(self.read_tier(spark, tier, days=days), keys)
 
     def write_tier(

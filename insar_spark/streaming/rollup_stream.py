@@ -542,9 +542,8 @@ def streaming_hll_1m(
     register) is an ordinary incremental aggregate (and idempotent, so
     replayed micro-batches are absorbed with no dedup buffer), so the
     streamed tier merges bit-for-bit with batch-built HLL sketches
-    (stream == batch test) and, unlike a linear-counting bitmap, can never
-    saturate — "active conversations this hour" stays servable live at
-    fleet cardinality."""
+    (stream == batch test) and can never saturate — "active conversations
+    this hour" stays servable live at fleet cardinality."""
     from insar_spark.functions.shared_hash import h60_col
     from insar_spark.operators.sketch import HLL_M, hll_rho
 

@@ -57,11 +57,9 @@ def main(argv: list[str] | None = None) -> dict:
         help="also maintain the mergeable sketch tiers: fixed-edge "
         "histogram (hist_1m -> hist_1h over text_len), range-free "
         "log-bucket rank sketch (lb_1h -> lb_1d; lb_1m is stream-only), "
-        "tall distinct-count bitmap (dist_1m -> dist_1h, "
-        "m=2^20), HLL registers (hll_1m -> hll_1h, unbounded "
-        "cardinality), count-min frequency (cms_1m -> cms_1h, "
-        "hot-key probes), KMV distinct samples (kmv_1m -> kmv_1h, "
-        "set intersection) and the M4 chart downsample (m4_1d -> m4_1w, "
+        "HLL registers (hll_1m -> hll_1h, distinct conversations), "
+        "count-min frequency (cms_1m -> cms_1h, hot-key probes) and the "
+        "M4 chart downsample (m4_1d -> m4_1w, "
         "first/min/max/last points). Same TierStore commit/resume/expiry "
         "semantics; every cascade reads the STORED finer tier",
     )

@@ -62,7 +62,7 @@ def run_cycle(
     from insar_spark.streaming import rollup_stream as rs
 
     families = {}
-    for fam in (f for f in enabled(sketch) if f.stream_to):
+    for fam in enabled(sketch):
         t0 = time.perf_counter()
         ckpt = checkpoint if fam.name == "stats" else f"{checkpoint}_{fam.name}"
         q = rs.stream_to_tierstore(

@@ -1621,197 +1621,12 @@ FROM j GROUP BY 1
 )
 
 
-def q_distinct_convs_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-count tier: active conversations per hour served from a
-    mergeable linear-counting bitmap (sketch.distinct_rollup) — count
-    distinct is not decomposable, the bitmap is. The Spark path builds the
-    1m tier and CASCADES to 1h (bit_or merge); the oracle computes 1h
-    directly in SQL from the same md5-60 positions, so equality proves the
-    merge is exact. Checked surface = integer bit stats (set-bit count +
-    XOR checksum over the packed words) — byte-stable cross-engine; the
-    transcendental estimate -m*ln(1-set/m) stays out of the byte compare
-    and is tolerance-tested in test_rollup."""
-    from insar_spark.operators.sketch import (
-        distinct_rollup,
-        distinct_set_bits,
-    )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.col("ts").cast("timestamp").alias("ts"),
-    )
-    # bit_or is associative — direct 1h build == 1m-then-cascade
-    # bit-for-bit, minus one raw-sized exchange (guide §2.4); the cascade
-    # stays pytest-proven and runs in the store path
-    b1h = distinct_rollup(spread_scan(ev), "1h")
-    return b1h.select(
-        "window_start",
-        distinct_set_bits("bitmap").alias("n_set_bits"),
-        F.aggregate(
-            "bitmap", F.lit(0).cast("long"), lambda a, x: a.bitwiseXOR(x)
-        ).alias("xor_checksum"),
-    )
-
-
-def _sql_distinct_convs() -> str:
-    from insar_spark.functions.shared_hash import sql_h60
-
-    h = sql_h60("cast(user_id as varchar)")
-    return f"""
-WITH b AS (
-  SELECT date_trunc('hour', ts) AS window_start,
-         ({h} % 1024) // 32 AS word,
-         1::BIGINT << (({h} % 1024) % 32)::INT AS mask
-  FROM events
-), w AS (
-  SELECT window_start, word, bit_or(mask) AS wv FROM b GROUP BY 1, 2
-)
-SELECT window_start, sum(bit_count(wv))::BIGINT AS n_set_bits,
-       bit_xor(wv) AS xor_checksum
-FROM w GROUP BY window_start
-"""
-
-
-def q_distinct_convs_by_type_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KEYED distinct-count tier (completes the sketch matrix — hist and
-    lb both have keyed + global forms): active conversations per
-    (event_type, hour) from per-(type, window) linear-counting bitmaps.
-    Spark builds the keyed 1m tier and cascades to 1h (bit_or merge with
-    the group carried); the oracle computes 1h directly from the same
-    md5-60 positions, so equality proves the keyed merge is exact. Same
-    integer checked surface as the global query (set bits + XOR
-    checksum)."""
-    from insar_spark.operators.sketch import (
-        distinct_rollup,
-        distinct_set_bits,
-    )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.col("ts").cast("timestamp").alias("ts"),
-    )
-    # direct keyed 1h build (bit_or associative, same as the
-    # global query — guide §2.4)
-    b1h = distinct_rollup(spread_scan(ev), "1h", group_col="event_type")
-    return b1h.select(
-        "event_type",
-        "window_start",
-        distinct_set_bits("bitmap").alias("n_set_bits"),
-        F.aggregate(
-            "bitmap", F.lit(0).cast("long"), lambda a, x: a.bitwiseXOR(x)
-        ).alias("xor_checksum"),
-    )
-
-
-def _sql_distinct_convs_by_type() -> str:
-    from insar_spark.functions.shared_hash import sql_h60
-
-    h = sql_h60("cast(user_id as varchar)")
-    return f"""
-WITH b AS (
-  SELECT event_type, date_trunc('hour', ts) AS window_start,
-         ({h} % 1024) // 32 AS word,
-         1::BIGINT << (({h} % 1024) % 32)::INT AS mask
-  FROM events
-), w AS (
-  SELECT event_type, window_start, word, bit_or(mask) AS wv
-  FROM b GROUP BY 1, 2, 3
-)
-SELECT event_type, window_start, sum(bit_count(wv))::BIGINT AS n_set_bits,
-       bit_xor(wv) AS xor_checksum
-FROM w GROUP BY event_type, window_start
-"""
-
-
-def q_distinct_saturation_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Saturation visibility for the distinct-count tier (the bitmap
-    analog of hist_saturation_1h): the same hourly stream feeds TWO tall
-    bitmaps — one DELIBERATELY undersized (m=16, overrun by busy hours)
-    and one fleet-sized (m=2^20, the global tier's default) — and the
-    integer load-factor flag (`distinct_saturated`: set·100 > m·70) marks
-    exactly the windows whose linear-counting estimate has degraded.
-    Without the flag the undersized sketch silently reports ~m distincts
-    forever — the last silent-at-scale failure mode in the sketch tiers.
-    Exercises the TALL (window, word, wv) form end-to-end (rollup 1m →
-    bit_or cascade 1h → read), the large-m representation the 32768-agg
-    array form can't reach. Checked surface is all-integer (set bits,
-    XOR checksum, flag); the oracle replays positions, packing, cascade
-    and threshold in SQL."""
-    from insar_spark.operators.sketch import (
-        distinct_read_tall,
-        distinct_rollup_tall,
-    )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.col("ts").cast("timestamp").alias("ts"),
-    )
-    # direct 1h builds for both widths (bit_or associative)
-    ev = spread_scan(ev)
-    small = distinct_read_tall(
-        distinct_rollup_tall(ev, "1h", m=16),
-        m=16,
-    ).select(
-        "window_start",
-        F.col("n_set_bits").alias("n_set_small"),
-        F.col("xor_checksum").alias("xor_small"),
-        F.col("saturated").alias("saturated_small"),
-    )
-    big = distinct_read_tall(
-        distinct_rollup_tall(ev, "1h", m=1 << 20),
-        m=1 << 20,
-    ).select(
-        "window_start",
-        F.col("n_set_bits").alias("n_set_big"),
-        F.col("xor_checksum").alias("xor_big"),
-        F.col("saturated").alias("saturated_big"),
-    )
-    return small.join(big, "window_start")
-
-
-def _sql_distinct_saturation() -> str:
-    from insar_spark.functions.shared_hash import sql_h60
-
-    h = sql_h60("cast(user_id as varchar)")
-
-    def sketch(m: int, suffix: str) -> str:
-        return f"""
-b_{suffix} AS (
-  SELECT date_trunc('hour', ts) AS window_start,
-         ({h} % {m}) // 32 AS word,
-         1::BIGINT << (({h} % {m}) % 32)::INT AS mask
-  FROM events
-), w_{suffix} AS (
-  SELECT window_start, word, bit_or(mask) AS wv
-  FROM b_{suffix} GROUP BY 1, 2
-), s_{suffix} AS (
-  SELECT window_start, sum(bit_count(wv))::BIGINT AS n_set_{suffix},
-         bit_xor(wv) AS xor_{suffix},
-         CASE WHEN sum(bit_count(wv)) * 100 > {m} * 70
-              THEN 1 ELSE 0 END AS saturated_{suffix}
-  FROM w_{suffix} GROUP BY 1
-)"""
-
-    return f"""
-WITH {sketch(16, 'small')}, {sketch(1 << 20, 'big')}
-SELECT window_start, n_set_small, xor_small, saturated_small,
-       n_set_big, xor_big, saturated_big
-FROM s_small JOIN s_big USING (window_start)
-"""
-
-
 def q_distinct_hll_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL register sketch tier (Flajolet et al. 2007): distinct
-    conversations per hour with NO cardinality ceiling — the companion to
-    the linear-counting bitmap, which (even at the fleet-sized m=2^20)
-    degrades past its load-factor threshold. The HLL tier's merge is
-    groupBy-MAX per (window, register): associative, commutative AND
-    idempotent, so replays are absorbed for free and the tier rides the
-    seal cycle unchanged; error stays ~3% (p=10) at any cardinality.
+    conversations per hour with NO cardinality ceiling. The HLL tier's
+    merge is groupBy-MAX per (window, register): associative, commutative
+    AND idempotent, so replays are absorbed for free and the tier rides
+    the seal cycle unchanged; error stays ~3% (p=10) at any cardinality.
     Spark builds the tall tier directly at 1h (register-MAX is
     associative, so direct == 1m-then-cascade bit-for-bit; the cascade
     itself stays pytest-proven and runs in the store path); the oracle
@@ -1820,7 +1635,7 @@ def q_distinct_hll_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     (present-register count, the 2^51-scaled harmonic-mean denominator,
     and the small-range-regime flag via one precomputed int64 cutoff);
     the transcendental estimate (hll_estimate) stays out of the hash
-    gate and is tolerance-tested in pytest, mirroring distinct_estimate.
+    gate and is tolerance-tested in pytest.
     Reference analog: prepare.py:258-348 keeps only decomposable running
     stats per layer — HLL is the decomposable form of count-distinct."""
     from insar_spark.operators.sketch import hll_read, hll_rollup
@@ -1954,276 +1769,6 @@ SELECT t.window_start, cand.item AS conv_id,
        count(*)::INT AS n_cells
 FROM t JOIN cand USING (row_j, cell)
 GROUP BY 1, 2
-"""
-
-
-_KMV_Q_K = 16  # query-scale k: sf0.01 hours hold ~5-30 distinct convs,
-
-
-def q_kmv_distinct_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV distinct sketch tier (Bar-Yossef et al. 2002 / Beyer et al.
-    2007): active conversations per hour from the k smallest distinct
-    md5-60 hashes per window — the third distinct summary in the matrix,
-    and the only one whose samples also support set INTERSECTION (see
-    kmv_overlap_types_1d). Spark builds the 1m tier and CASCADES to 1h
-    (union-and-retake merge, bounded at children×k elements per group);
-    the oracle builds 1h directly from raw keys, so equality proves the
-    cascade is exact. Checked surface: sample size + max retained hash
-    (int64-exact) + the estimate — exact below k, (k-1)·2^60/h_k above
-    it, one deterministic double division."""
-    from insar_spark.operators.sketch import kmv_estimate, kmv_rollup
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.col("ts").cast("timestamp").alias("ts"),
-    )
-    # the k smallest of an hour == union-and-retake of its
-    # minutes (the documented cascade-exactness), so build 1h directly —
-    # drops one raw-sized (minute, hash) exchange; the cascade stays
-    # pytest-proven and runs in the store path
-    t1h = kmv_rollup(spread_scan(ev), "1h", k=_KMV_Q_K)
-    return t1h.select(
-        "window_start",
-        F.size("kmv").cast("int").alias("n_sample"),
-        F.element_at("kmv", F.size("kmv")).alias("max_retained"),
-        F.round(kmv_estimate("kmv", k=_KMV_Q_K), 6).alias("est_distinct"),
-    )
-
-
-def _sql_kmv_distinct() -> str:
-    from insar_spark.functions.shared_hash import sql_h60
-
-    h = sql_h60("cast(user_id as varchar)")
-    k = _KMV_Q_K
-    return f"""
-WITH d AS (
-  SELECT DISTINCT date_trunc('hour', ts) AS window_start, {h} AS h
-  FROM events
-), r AS (
-  SELECT window_start, h FROM d
-  QUALIFY row_number() OVER (PARTITION BY window_start ORDER BY h) <= {k}
-)
-SELECT window_start,
-       count(*)::INT AS n_sample,
-       max(h) AS max_retained,
-       round(CASE WHEN count(*) < {k} THEN count(*)::DOUBLE
-             ELSE {k - 1}.0 * 1152921504606846976.0 / max(h)::DOUBLE
-             END, 6) AS est_distinct
-FROM r GROUP BY window_start
-"""
-
-
-def q_kmv_overlap_types_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set-INTERSECTION from KMV sketches — the query neither the bitmap
-    nor the HLL tier can answer (both merge by union only): per day, how
-    many conversations were active in BOTH 'click' and 'purchase'
-    streams, estimated purely from the two k-min samples (no second pass
-    over raw keys). The union sample is a uniform sample of A∪B, so the
-    fraction present in both sketches estimates Jaccard and
-    |A∩B| ≈ J·|A∪B| (Beyer et al. 2007). Spark builds the KEYED 1h tier
-    and cascades to 1d (proving the keyed union-and-retake merge), then
-    intersects with a k-bounded higher-order membership filter — pure
-    JVM, no explode; the oracle rebuilds both day-level samples from raw
-    and replays union/membership with window ranks + joins."""
-    from insar_spark.operators.sketch import (
-        kmv_estimate,
-        kmv_intersect,
-        kmv_rollup,
-        kmv_union,
-    )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = (
-        load(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .select(
-            "event_type",
-            F.col("user_id").cast("string").alias("conv_id"),
-            F.col("ts").cast("timestamp").alias("ts"),
-        )
-    )
-    # direct keyed 1d build (union-and-retake exactness; one
-    # fewer raw-sized exchange — guide §2.4)
-    t1d = kmv_rollup(spread_scan(ev), "1d", k=_KMV_Q_K, group_col="event_type")
-    a = t1d.filter(F.col("event_type") == "click").select(
-        "window_start", F.col("kmv").alias("kmv_a")
-    )
-    b = t1d.filter(F.col("event_type") == "purchase").select(
-        "window_start", F.col("kmv").alias("kmv_b")
-    )
-    j = a.join(b, "window_start")
-    n_both, jac, inter = kmv_intersect(
-        F.col("kmv_a"), F.col("kmv_b"), k=_KMV_Q_K
-    )
-    u = kmv_union(F.col("kmv_a"), F.col("kmv_b"), k=_KMV_Q_K)
-    return j.select(
-        "window_start",
-        n_both.cast("int").alias("n_both"),
-        F.size(u).cast("int").alias("n_union_sample"),
-        F.round(jac, 6).alias("jaccard"),
-        F.round(kmv_estimate(u, k=_KMV_Q_K), 6).alias("est_union"),
-        F.round(inter, 6).alias("est_intersection"),
-    )
-
-
-def q_kmv_retention_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-over-day conversation RETENTION from stored KMV sketches —
-    the classic product-analytics metric ("how many of yesterday's
-    active conversations came back today") that needs set intersection
-    across adjacent windows, which only the KMV tier can serve without a
-    re-scan of raw keys: self-join the daily tier on day+1 and intersect
-    the two k-min samples. est_retained ≈ J·|A∪B| per Beyer et al. 2007;
-    retention_rate divides by the prior day's estimate. One tiny
-    sketch-tier self-join (30 rows at a month of days) regardless of
-    corpus size."""
-    from insar_spark.operators.sketch import (
-        kmv_estimate,
-        kmv_intersect,
-        kmv_rollup,
-        kmv_union,
-    )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.col("ts").cast("timestamp").alias("ts"),
-    )
-    t1d = kmv_rollup(spread_scan(ev), "1d", k=_KMV_Q_K)
-    prev = t1d.select(
-        F.col("window_start").alias("day_prev"),
-        F.col("kmv").alias("kmv_a"),
-    )
-    cur = t1d.select(
-        F.col("window_start").alias("day_cur"),
-        F.col("kmv").alias("kmv_b"),
-    )
-    j = prev.join(
-        cur,
-        F.col("day_cur") == F.date_add(F.col("day_prev"), 1).cast(
-            "timestamp"
-        ),
-    )
-    n_both, jac, inter = kmv_intersect(
-        F.col("kmv_a"), F.col("kmv_b"), k=_KMV_Q_K
-    )
-    u = kmv_union(F.col("kmv_a"), F.col("kmv_b"), k=_KMV_Q_K)
-    est_prev = kmv_estimate(F.col("kmv_a"), k=_KMV_Q_K)
-    return j.select(
-        F.col("day_prev").alias("window_start"),
-        n_both.cast("int").alias("n_both"),
-        F.round(inter, 6).alias("est_retained"),
-        F.round(inter / est_prev, 6).alias("retention_rate"),
-    )
-
-
-def _sql_kmv_retention() -> str:
-    from insar_spark.functions.shared_hash import sql_h60
-
-    h = sql_h60("cast(user_id as varchar)")
-    k = _KMV_Q_K
-    dom = "1152921504606846976.0"
-    est = (
-        f"CASE WHEN {{n}} < {k} THEN {{n}}::DOUBLE "
-        f"ELSE {k - 1}.0 * {dom} / {{mx}}::DOUBLE END"
-    )
-    return f"""
-WITH d AS (
-  SELECT DISTINCT date_trunc('day', ts) AS window_start, {h} AS h
-  FROM events
-), r AS (
-  SELECT window_start, h FROM d
-  QUALIFY row_number() OVER (PARTITION BY window_start ORDER BY h) <= {k}
-), pairs AS (
-  SELECT a.window_start AS day_prev, a.h AS ha, b.h AS hb,
-         b.window_start AS day_cur
-  FROM r a JOIN r b
-    ON b.window_start = a.window_start + INTERVAL 1 DAY AND a.h = b.h
-), uni AS (
-  SELECT l.day_prev, l.h FROM (
-    SELECT a.window_start AS day_prev, a.h FROM r a
-    WHERE EXISTS (SELECT 1 FROM r b
-                  WHERE b.window_start = a.window_start + INTERVAL 1 DAY)
-    UNION
-    SELECT b.window_start - INTERVAL 1 DAY AS day_prev, b.h FROM r b
-    WHERE EXISTS (SELECT 1 FROM r a
-                  WHERE a.window_start = b.window_start - INTERVAL 1 DAY)
-  ) l
-  QUALIFY row_number() OVER (PARTITION BY l.day_prev ORDER BY l.h) <= {k}
-), m AS (
-  SELECT u.day_prev, u.h,
-         (p.ha IS NOT NULL) AS in_both
-  FROM uni u
-  LEFT JOIN pairs p ON p.day_prev = u.day_prev AND p.ha = u.h
-), s AS (
-  SELECT day_prev,
-         sum(CASE WHEN in_both THEN 1 ELSE 0 END)::INT AS n_both,
-         count(*)::INT AS n_u,
-         max(h) AS max_u
-  FROM m GROUP BY day_prev
-), pa AS (
-  SELECT window_start AS day_prev, count(*)::INT AS n_a, max(h) AS max_a
-  FROM r GROUP BY window_start
-), e AS (
-  SELECT s.day_prev, s.n_both,
-         (s.n_both::DOUBLE / s.n_u::DOUBLE)
-           * ({est.format(n="s.n_u", mx="s.max_u")}) AS inter_raw,
-         {est.format(n="pa.n_a", mx="pa.max_a")} AS prev_raw
-  FROM s JOIN pa USING (day_prev)
-)
-SELECT day_prev AS window_start, n_both,
-       round(inter_raw, 6) AS est_retained,
-       round(inter_raw / prev_raw, 6) AS retention_rate
-FROM e
-"""
-
-
-def _sql_kmv_overlap() -> str:
-    from insar_spark.functions.shared_hash import sql_h60
-
-    h = sql_h60("cast(user_id as varchar)")
-    k = _KMV_Q_K
-    return f"""
-WITH d AS (
-  SELECT DISTINCT event_type, date_trunc('day', ts) AS window_start,
-         {h} AS h
-  FROM events WHERE event_type IN ('click', 'purchase')
-), ra AS (
-  SELECT window_start, h FROM d WHERE event_type = 'click'
-  QUALIFY row_number() OVER (PARTITION BY window_start ORDER BY h) <= {k}
-), rb AS (
-  SELECT window_start, h FROM d WHERE event_type = 'purchase'
-  QUALIFY row_number() OVER (PARTITION BY window_start ORDER BY h) <= {k}
-), uni AS (
-  SELECT window_start, h FROM (SELECT * FROM ra UNION SELECT * FROM rb)
-  QUALIFY row_number() OVER (PARTITION BY window_start ORDER BY h) <= {k}
-), m AS (
-  SELECT u.window_start, u.h,
-         (ra.h IS NOT NULL AND rb.h IS NOT NULL) AS in_both
-  FROM uni u
-  LEFT JOIN ra ON ra.window_start = u.window_start AND ra.h = u.h
-  LEFT JOIN rb ON rb.window_start = u.window_start AND rb.h = u.h
-), s AS (
-  SELECT window_start,
-         sum(CASE WHEN in_both THEN 1 ELSE 0 END)::INT AS n_both,
-         count(*)::INT AS n_union_sample,
-         max(h) AS max_h
-  FROM m GROUP BY window_start
-), e AS (
-  SELECT *,
-         n_both::DOUBLE / n_union_sample::DOUBLE AS jac_raw,
-         CASE WHEN n_union_sample < {k} THEN n_union_sample::DOUBLE
-              ELSE {k - 1}.0 * 1152921504606846976.0 / max_h::DOUBLE
-         END AS est_u_raw
-  FROM s
-)
-SELECT window_start, n_both, n_union_sample,
-       round(jac_raw, 6) AS jaccard,
-       round(est_u_raw, 6) AS est_union,
-       round(jac_raw * est_u_raw, 6) AS est_intersection
-FROM e
-WHERE window_start IN (SELECT window_start FROM ra)
-  AND window_start IN (SELECT window_start FROM rb)
 """
 
 
@@ -2477,19 +2022,13 @@ ORACLES = {
     "ewma_smooth": (q_ewma_smooth, _SQL_EWMA),
     "m4_downsample_1w": (q_m4_downsample_1w, _SQL_M4_1W),
     "lttb_downsample": (q_lttb_downsample, _SQL_LTTB),
-    "kmv_distinct_1h": (q_kmv_distinct_1h, _sql_kmv_distinct()),
-    "kmv_overlap_types_1d": (q_kmv_overlap_types_1d, _sql_kmv_overlap()),
-    "kmv_retention_1d": (q_kmv_retention_1d, _sql_kmv_retention()),
     "hot_convs_cms_1h": (q_hot_convs_cms_1h, _sql_hot_convs_cms()),
     "distinct_hll_1h": (q_distinct_hll_1h, _sql_distinct_hll()),
-    "distinct_saturation_1h": (q_distinct_saturation_1h, _sql_distinct_saturation()),
     "delta_p05_p95_1h": (q_delta_p05_p95_1h, _SQL_DELTA_TAILS),
     "hist_p95_global_1h": (q_hist_p95_global_1h, _SQL_HIST_P95_GLOBAL),
-    "distinct_convs_1h": (q_distinct_convs_1h, _sql_distinct_convs()),
     "hist_saturation_1h": (q_hist_saturation_1h, _SQL_HIST_SATURATION),
     "lb_rank_p99_1h": (q_lb_rank_p99_1h, _SQL_LB_RANK),
     "lb_rank_series_1h": (q_lb_rank_series_1h, _SQL_LB_RANK_SERIES),
-    "distinct_convs_by_type_1h": (q_distinct_convs_by_type_1h, _sql_distinct_convs_by_type()),
     "doc_len_p95_by_source": (q_doc_len_p95_by_source, _SQL_DOC_LEN_P95),
     "a8_weighted_solve": (q_a8_weighted_solve, _SQL_SBAS_ALLPAIRS),
     "sbas_solve_from_blobs": (q_sbas_solve_from_blobs, _SQL_SBAS_BW1),

@@ -81,14 +81,10 @@ def test_no_rowwise_python_in_any_contract_query(plans):
         ("hist.cascade", 1, 0),
         ("lb.tier0", 1, 0),
         ("lb.cascade", 1, 0),
-        ("dist.tier0", 1, 0),
-        ("dist.cascade", 1, 0),
         ("hll.tier0", 1, 0),
         ("hll.cascade", 1, 0),
         ("cms.tier0", 1, 0),
         ("cms.cascade", 1, 0),
-        ("kmv.tier0", 2, 0),  # (window, hash) dedup agg + per-window agg
-        ("kmv.cascade", 1, 0),
         ("m4.tier0", 1, 0),
         ("m4.cascade", 1, 0),
         # the pairs' conv_id window, which the nonzero-series window and
@@ -101,7 +97,6 @@ def test_no_rowwise_python_in_any_contract_query(plans):
         ("hist_p95_1h", 1, 0),  # spread; the direct-1h rank read rides it
         ("sbas_solve_bandwidth1", 1, 1),  # series window; one Arrow solve stage
         ("hist_p95_global_1h", 2, 0),  # spread + direct global read
-        ("distinct_convs_1h", 2, 0),  # spread + direct 1h bit_or
         ("distinct_hll_1h", 3, 0),  # spread + direct 1h regs + read agg
         ("hot_convs_cms_1h", 3, 0),  # spread + probe-pushdown aggs
         ("late_data_profile", 1, 0),  # one conv_id window, groupBy reuses it

@@ -150,54 +150,6 @@ def test_hist_sketch_cascade_is_exact_and_quantile_bounded(spark, transcripts):
     assert (err >= 0).all() and (err <= step).all()  # upper edge of the rank's bin
 
 
-def test_distinct_sketch_cascade_exact_and_estimate_bounded(spark, transcripts):
-    """The linear-counting bitmap is a true continuous aggregate:
-    cascading 1m bitmaps to 1h (bit_or merge) is BIT-IDENTICAL to rolling
-    the raw turns directly at 1h, and the estimate derived from the bit
-    count tracks the true distinct count within linear-counting error."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from insar_spark.operators.sketch import (
-        DISTINCT_M,
-        distinct_cascade,
-        distinct_rollup,
-        distinct_set_bits,
-    )
-
-    df = transcripts.select("conv_id", "ts")
-    via_cascade = distinct_cascade(distinct_rollup(df, "1m"), "1h")
-    direct = distinct_rollup(df, "1h")
-    g = via_cascade.toPandas().sort_values("window_start").reset_index(drop=True)
-    e = direct.toPandas().sort_values("window_start").reset_index(drop=True)
-    assert len(g) == len(e) > 0
-    assert [list(b) for b in g["bitmap"]] == [list(b) for b in e["bitmap"]]
-
-    # estimate accuracy: -m ln(1 - set/m) vs true count(distinct) per hour
-    est = {
-        r["window_start"]: r["n_set"]
-        for r in direct.select(
-            "window_start", distinct_set_bits("bitmap").alias("n_set")
-        ).collect()
-    }
-    truth = {
-        r["window_start"]: r["n"]
-        for r in df.groupBy(F.date_trunc("hour", "ts").alias("window_start"))
-        .agg(F.countDistinct("conv_id").alias("n"))
-        .collect()
-    }
-    assert est.keys() == truth.keys()
-    for w, n_set in est.items():
-        assert 0 < n_set < DISTINCT_M  # not saturated at this scale
-        estimate = -DISTINCT_M * math.log(1 - n_set / DISTINCT_M)
-        # linear counting se ~ sqrt(m*(exp(t)-1-t))/ (t=n/m); generous 3x
-        n = truth[w]
-        t = n / DISTINCT_M
-        se = math.sqrt(DISTINCT_M * (math.exp(t) - 1 - t)) if t > 0 else 1.0
-        assert abs(estimate - n) <= max(3 * se, 2.0), (w, estimate, n)
-
-
 def test_hist_clamp_saturation_detectable_from_stored_tier(spark, tmp_path):
     """A mis-sized `hi` is baked into the sketch at ingest; the clamp
     counters make that detectable FROM THE STORED TIER ALONE: they merge
@@ -557,136 +509,6 @@ def test_lb_signed_spark_matches_mirror(spark):
     assert (q["p95"] >= 0).all() and len(q) > 0
 
 
-def test_distinct_tall_form_and_saturation_visibility(spark, tmp_path):
-    """The TALL large-m bitmap form (a) agrees bit-for-bit with the array
-    form at the same m, (b) cascades exactly (bit_or merge), (c) flags a
-    deliberately-overflowed bitmap via the integer load-factor compare
-    while the fleet-sized m stays unflagged AND accurate, and (d) the
-    saturation is detectable from the STORED tier alone (m rides the
-    manifest, the flag derives from stored rows)."""
-    import datetime as dt
-    import math
-
-    from pyspark.sql import functions as F
-
-    from insar_spark.operators.sketch import (
-        DISTINCT_M,
-        distinct_cascade_tall,
-        distinct_estimate,
-        distinct_read_tall,
-        distinct_rollup,
-        distinct_rollup_tall,
-        distinct_saturated,
-        distinct_set_bits,
-    )
-    from insar_spark.sources.catalog import TierStore
-
-    t0 = dt.datetime(2025, 6, 1, 12, 0, 0)
-    # 400 distinct keys in one hour: overruns m=64 (load ~100%), sits at
-    # load ~0.4 for m=1024
-    rows = [
-        (f"k{i}", t0 + dt.timedelta(seconds=7 * i)) for i in range(400)
-    ]
-    df = spark.createDataFrame(rows, "conv_id string, ts timestamp")
-
-    # (a) cross-form identity at m=1024: array word i == tall row word=i
-    tall = {
-        r["word"]: r["wv"]
-        for r in distinct_rollup_tall(df, "1h", m=DISTINCT_M).collect()
-    }
-    arr = distinct_rollup(df, "1h").collect()[0]["bitmap"]
-    for i, wv in enumerate(arr):
-        assert tall.get(i, 0) == wv
-
-    # (b) cascade exactness: 1m -> 1h bit_or == direct 1h
-    via = {
-        r["word"]: r["wv"]
-        for r in distinct_cascade_tall(
-            distinct_rollup_tall(df, "1m", m=DISTINCT_M), "1h"
-        ).collect()
-    }
-    assert via == tall
-
-    # (c) saturation flag discriminates; sized-m estimate is accurate
-    small = distinct_read_tall(
-        distinct_rollup_tall(df, "1h", m=64), m=64
-    ).collect()[0]
-    big = distinct_read_tall(
-        distinct_rollup_tall(df, "1h", m=1 << 20), m=1 << 20
-    ).collect()[0]
-    assert small["saturated"] == 1 and big["saturated"] == 0
-    assert small["n_set_bits"] <= 64  # the undersized sketch is pinned at m
-    est = -(1 << 20) * math.log(1 - big["n_set_bits"] / (1 << 20))
-    assert abs(est - 400) <= 5  # fleet-sized: estimate ~= truth
-
-    # distinct_estimate column agrees with the python formula and is
-    # NULL at set=m (undefined point)
-    got = (
-        spark.range(1)
-        .select(
-            distinct_estimate(F.lit(big["n_set_bits"]), 1 << 20).alias("e"),
-            distinct_estimate(F.lit(64), 64).alias("full"),
-        )
-        .collect()[0]
-    )
-    assert abs(got["e"] - est) < 1e-9 and got["full"] is None
-    # integer threshold semantics: strictly-above-70% fires
-    flags = (
-        spark.range(1)
-        .select(
-            distinct_saturated(F.lit(44), 64).alias("a"),  # 68.75%
-            distinct_saturated(F.lit(45), 64).alias("b"),  # 70.3%
-        )
-        .collect()[0]
-    )
-    assert flags["a"] is False and flags["b"] is True
-
-    # (d) stored-tier detectability: write the undersized tier, read it
-    # back cold, and derive the flag from stored rows + manifest m
-    store = TierStore(str(tmp_path / "tiers"))
-    store.write_tier(
-        distinct_rollup_tall(df, "1m", m=64),
-        "dist_1m",
-        run_params={"distinct_m": 64, "distinct_form": "tall"},
-    )
-    snap = store.manifest("dist_1m")["snapshots"][-1]["run_params"]
-    assert snap["distinct_m"] == 64
-    stored = store.read_tier(spark, "dist_1m").drop("day")
-    served = distinct_read_tall(
-        distinct_cascade_tall(stored, "1h"), m=snap["distinct_m"]
-    ).collect()[0]
-    assert served["saturated"] == 1
-    # and the array-form reader building block agrees on the bit count
-    assert served["n_set_bits"] == small["n_set_bits"]
-    assert distinct_set_bits is not None  # array form still exported
-
-
-def test_distinct_sketch_keyed_cascade_exact(spark, transcripts):
-    """KEYED bitmap tier (group_col): cascading per-(role, window) 1m
-    bitmaps to 1h is bit-identical to rolling directly at 1h, and the
-    group dimension survives the merge."""
-    from insar_spark.operators.sketch import distinct_cascade, distinct_rollup
-
-    df = transcripts.select("role", "conv_id", "ts")
-    via = (
-        distinct_cascade(
-            distinct_rollup(df, "1m", group_col="role"), "1h", group_col="role"
-        )
-        .toPandas()
-        .sort_values(["role", "window_start"])
-        .reset_index(drop=True)
-    )
-    direct = (
-        distinct_rollup(df, "1h", group_col="role")
-        .toPandas()
-        .sort_values(["role", "window_start"])
-        .reset_index(drop=True)
-    )
-    assert len(via) == len(direct) > 0
-    assert (via["role"] == direct["role"]).all()
-    assert [list(b) for b in via["bitmap"]] == [list(b) for b in direct["bitmap"]]
-
-
 def test_lb_bucket_matches_python_model_on_random_longs(spark):
     """Model-based check of the integer bucket arithmetic: the Spark
     expressions (length(bin(v)), shiftright/shiftleft) must agree with an
@@ -777,8 +599,8 @@ def test_hll_sketch_cascade_exact_and_estimate_bounded(spark):
     (b) idempotent under replay (union of the tier with itself merges to
     the identical sketch), (c) estimate within 6 sigma (sigma =
     1.04/sqrt(1024) ~ 3.25%) across four decades of true cardinality —
-    including well past the linear-counting bitmap's m=1024 ceiling,
-    the whole point of the tier."""
+    including far past the m=1024 register count, the whole point of the
+    tier."""
     import pandas as pd
 
     from insar_spark.operators.sketch import (
@@ -830,7 +652,7 @@ def test_hll_sketch_cascade_exact_and_estimate_bounded(spark):
         assert abs(est - n) <= 6 * sigma * n + 3, (
             f"hour {hour}: est {est} vs true {n}"
         )
-    # the two big hours exceed the bitmap tier's m=1024 ceiling; the HLL
+    # the two big hours far exceed the m=1024 register count; the HLL
     # raw regime must be active there (lc_regime=0), and the small hour
     # must sit in the linear-counting regime
     assert got[0]["lc_regime"] == 1
@@ -912,97 +734,3 @@ def test_cms_sketch_never_undercounts_and_cascade_exact(spark):
         assert est <= true_cnt + eps * n_total + 1, (
             f"{k}: overshoot beyond the eps*N bound: {est} vs {true_cnt}"
         )
-
-
-def test_kmv_sketch_cascade_intersection_and_estimate(spark):
-    """KMV distinct sketch: (a) 1m->1h union-and-retake cascade equals
-    the direct 1h build array-for-array (the k smallest of a union are
-    among the k smallest of each side), (b) idempotent under replay,
-    (c) the k-th-minimum estimator is EXACT below k and within 6 sigma
-    (sigma = 1/sqrt(k-2)) above it, (d) the intersection estimate — the
-    capability neither the bitmap nor HLL tier has — is exact when both
-    sides fit the sample and within tolerance when they don't."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    from insar_spark.operators.sketch import (
-        KMV_K,
-        kmv_cascade,
-        kmv_estimate,
-        kmv_intersect,
-        kmv_rollup,
-    )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # hour 0: 100 convs (< k, exact regime); hour 1: 50_000 convs with
-    # ids 0..49_999; hour 2: ids 25_000..74_999 (true overlap 25_000)
-    frames = []
-    for hour, lo, n in [(0, 0, 100), (1, 0, 50_000), (2, 25_000, 50_000)]:
-        frames.append(
-            pd.DataFrame(
-                {
-                    "conv_id": [f"c{lo + i}" for i in range(n)],
-                    "ts": pd.Timestamp(f"2026-01-01 {hour:02d}:00:00")
-                    + pd.to_timedelta(
-                        [i % 3600 for i in range(n)], unit="s"
-                    ),
-                }
-            )
-        )
-    df = spark.createDataFrame(pd.concat(frames))
-
-    t1m = kmv_rollup(df, "1m")
-    via_cascade = kmv_cascade(t1m, "1h")
-    direct = kmv_rollup(df, "1h")
-    a = {r["window_start"]: list(r["kmv"]) for r in via_cascade.collect()}
-    b = {r["window_start"]: list(r["kmv"]) for r in direct.collect()}
-    assert a == b, "1m->1h union-and-retake must equal the direct build"
-
-    replayed = kmv_cascade(t1m.unionAll(t1m), "1h")
-    c = {r["window_start"]: list(r["kmv"]) for r in replayed.collect()}
-    assert c == b, "replayed partitions must merge idempotently"
-
-    est = {
-        r["window_start"].hour: r["est"]
-        for r in direct.select(
-            "window_start", kmv_estimate("kmv").alias("est")
-        ).collect()
-    }
-    assert est[0] == 100.0, "below k the sample is complete -> exact"
-    sigma = 1.0 / (KMV_K - 2) ** 0.5
-    for hour in (1, 2):
-        assert abs(est[hour] - 50_000) <= 6 * sigma * 50_000
-
-    # intersection of hours 1 and 2: true 25_000 of union 75_000
-    h1 = direct.filter(F.hour("window_start") == 1).select(
-        F.col("kmv").alias("kmv_a")
-    )
-    h2 = direct.filter(F.hour("window_start") == 2).select(
-        F.col("kmv").alias("kmv_b")
-    )
-    n_both, jac, inter = kmv_intersect(F.col("kmv_a"), F.col("kmv_b"))
-    row = (
-        h1.crossJoin(h2)
-        .select(
-            n_both.alias("n_both"),
-            jac.alias("jaccard"),
-            inter.alias("est_inter"),
-        )
-        .collect()[0]
-    )
-    true_j = 25_000 / 75_000
-    # jaccard is a k-sample binomial proportion: stderr sqrt(j(1-j)/k)
-    se = (true_j * (1 - true_j) / KMV_K) ** 0.5
-    assert abs(row["jaccard"] - true_j) <= 6 * se
-    assert abs(row["est_inter"] - 25_000) <= 0.35 * 25_000
-
-    # exact-regime intersection: hour 0 with itself is identity
-    h0 = direct.filter(F.hour("window_start") == 0).select(
-        F.col("kmv").alias("kmv_a"), F.col("kmv").alias("kmv_b")
-    )
-    n_both0, jac0, inter0 = kmv_intersect(F.col("kmv_a"), F.col("kmv_b"))
-    r0 = h0.select(
-        n_both0.alias("n"), jac0.alias("j"), inter0.alias("i")
-    ).collect()[0]
-    assert (r0["n"], r0["j"], r0["i"]) == (100, 1.0, 100.0)

@@ -49,52 +49,33 @@ def test_job_cascade_matches_direct(spark, tmp_path):
 
 
 def test_job_sketch_tiers_resume_and_match_direct(spark, tmp_path):
-    """--sketch maintains hist_1m/hist_1h through the same TierStore:
-    day-commit resume skips on re-run, and the STORED cascade equals a
-    direct 1h histogram of the raw turns."""
+    """--sketch maintains every family's batch tiers (its chain from
+    ``batch_from`` on) through the same TierStore: the first run commits
+    days to each, a re-run commits none (day-commit resume), and the
+    STORED cascades equal direct 1h builds of the raw turns."""
     from pyspark.sql import functions as F
 
+    from insar_spark.families import enabled
     from insar_spark.operators.sketch import hist_rollup
     from insar_spark.sources.catalog import TierStore
     from insar_spark.synth import synth_transcripts
 
+    tiers = {
+        t for fam in enabled(True) for t in fam.tiers[fam.tiers.index(fam.batch_from):]
+    }
     store_path = str(tmp_path / "tiers_sk")
     argv = ["--input", "synth:60", "--store", store_path,
             "--master", "local[4]", "--sketch"]
     m1 = job_main(argv)
-    assert m1["tiers"]["hist_1m"]["written_days"] > 0
-    assert m1["tiers"]["hist_1h"]["written_days"] > 0
+    assert set(m1["tiers"]) == tiers
+    assert [t for t in sorted(tiers) if m1["tiers"][t]["written_days"] <= 0] == []
     # lb store policy: the batch-persisted family starts at 1h (the tall
     # sketch barely collapses sparse series at 1m; lb_1m is stream-only)
     assert "lb_1m" not in m1["tiers"]
-    assert m1["tiers"]["lb_1h"]["written_days"] > 0
-    assert m1["tiers"]["lb_1d"]["written_days"] > 0
-    assert m1["tiers"]["dist_1m"]["written_days"] > 0
-    assert m1["tiers"]["dist_1h"]["written_days"] > 0
-
-    assert m1["tiers"]["hll_1m"]["written_days"] > 0
-    assert m1["tiers"]["hll_1h"]["written_days"] > 0
-    assert m1["tiers"]["cms_1m"]["written_days"] > 0
-    assert m1["tiers"]["cms_1h"]["written_days"] > 0
-    assert m1["tiers"]["kmv_1m"]["written_days"] > 0
-    assert m1["tiers"]["kmv_1h"]["written_days"] > 0
-    assert m1["tiers"]["m4_1d"]["written_days"] > 0
-    assert m1["tiers"]["m4_1w"]["written_days"] > 0
 
     m2 = job_main(argv)
-    assert m2["tiers"]["hist_1m"]["written_days"] == 0
-    assert m2["tiers"]["hist_1h"]["written_days"] == 0
-    assert m2["tiers"]["lb_1h"]["written_days"] == 0
-    assert m2["tiers"]["lb_1d"]["written_days"] == 0
-    assert m2["tiers"]["dist_1m"]["written_days"] == 0
-    assert m2["tiers"]["hll_1m"]["written_days"] == 0
-    assert m2["tiers"]["hll_1h"]["written_days"] == 0
-    assert m2["tiers"]["cms_1m"]["written_days"] == 0
-    assert m2["tiers"]["cms_1h"]["written_days"] == 0
-    assert m2["tiers"]["kmv_1m"]["written_days"] == 0
-    assert m2["tiers"]["kmv_1h"]["written_days"] == 0
-    assert m2["tiers"]["m4_1d"]["written_days"] == 0
-    assert m2["tiers"]["m4_1w"]["written_days"] == 0
+    assert set(m2["tiers"]) == tiers
+    assert [t for t in sorted(tiers) if m2["tiers"][t]["written_days"] != 0] == []
 
     store = TierStore(store_path)
     stored = (
@@ -166,38 +147,6 @@ def test_job_sketch_tiers_resume_and_match_direct(spark, tmp_path):
 
     assert not os.path.exists(store.tier_path("lb_1m"))
 
-    # the global distinct tier is the TALL fleet-sized form, its m rides
-    # the manifest (the hist-edge pattern: a reader can derive load
-    # factor / saturation from the stored tier alone), and the stored
-    # bit_or cascade equals a direct 1h rollup of the raw turns
-    from insar_spark.operators.sketch import (
-        DISTINCT_M_GLOBAL,
-        distinct_rollup_tall,
-    )
-
-    for dist_tier in ("dist_1m", "dist_1h"):
-        snap = store.manifest(dist_tier)["snapshots"][-1]["run_params"]
-        assert snap["distinct_m"] == DISTINCT_M_GLOBAL
-        assert snap["distinct_form"] == "tall"
-    stored_d = (
-        store.read_tier(spark, "dist_1h")
-        .drop("day")
-        .toPandas()
-        .sort_values(["window_start", "word"])
-        .reset_index(drop=True)
-    )
-    direct_d = (
-        distinct_rollup_tall(
-            turns.select("conv_id", "ts"), "1h", m=DISTINCT_M_GLOBAL
-        )
-        .toPandas()
-        .sort_values(["window_start", "word"])
-        .reset_index(drop=True)
-    )
-    assert len(stored_d) == len(direct_d) > 0
-    assert (stored_d["word"] == direct_d["word"]).all()
-    assert (stored_d["wv"] == direct_d["wv"]).all()
-
     # the HLL register tier rides the same store: p in the manifest
     # (reader derives register count + LC cutoff from the stored tier),
     # and the stored max-cascade equals a direct 1h rollup of raw turns
@@ -254,31 +203,6 @@ def test_job_sketch_tiers_resume_and_match_direct(spark, tmp_path):
     assert len(stored_cms) == len(direct_cms) > 0
     assert (stored_cms["cell"] == direct_cms["cell"]).all()
     assert (stored_cms["cnt"] == direct_cms["cnt"]).all()
-
-    # the KMV tier: k in the manifest (intersection readers need the
-    # sample contract), stored union-and-retake cascade == direct 1h
-    from insar_spark.operators.sketch import KMV_K, kmv_rollup
-
-    for kmv_tier in ("kmv_1m", "kmv_1h"):
-        snap = store.manifest(kmv_tier)["snapshots"][-1]["run_params"]
-        assert snap["kmv_k"] == KMV_K
-    stored_kmv = (
-        store.read_tier(spark, "kmv_1h")
-        .drop("day")
-        .toPandas()
-        .sort_values("window_start")
-        .reset_index(drop=True)
-    )
-    direct_kmv = (
-        kmv_rollup(turns.select("conv_id", "ts"), "1h")
-        .toPandas()
-        .sort_values("window_start")
-        .reset_index(drop=True)
-    )
-    assert len(stored_kmv) == len(direct_kmv) > 0
-    assert [list(x) for x in stored_kmv["kmv"]] == [
-        list(x) for x in direct_kmv["kmv"]
-    ]
 
 
 def test_job_snapshot_keep_time_travel(spark, tmp_path):
@@ -554,7 +478,7 @@ def test_job_noop_resume_runs_no_spark_job(spark, tmp_path, spark_jobs):
     for extra in ([], ["--sketch"]):
         m, jobs = spark_jobs(lambda: job_main(argv + extra))
         assert jobs == [], extra
-        assert len(m["tiers"]) == (17 if extra else 3)
+        assert len(m["tiers"]) == (13 if extra else 3)
         for tier, t in m["tiers"].items():
             assert t["decided"] == "manifest" and t["written_days"] == 0, tier
             assert t["skipped_days"] == first["tiers"][tier]["written_days"], tier
@@ -613,9 +537,9 @@ def test_job_rerun_on_expired_store_commits_nothing(spark, tmp_path, spark_jobs)
 
 
 def test_job_sketch_tiers_expire_at_their_family_horizons(spark, tmp_path):
-    """Every sketch family declares its tiers' retention: hll/cms/kmv 1m
-    days expire at the 1m horizon (7 days) with the stats 1m days, and
-    their 1h days stay until the 1h horizon (90 days)."""
+    """Every sketch family declares its tiers' retention: hll/cms 1m days
+    expire at the 1m horizon (7 days) with the stats 1m days, and their
+    1h days stay until the 1h horizon (90 days)."""
     import datetime as dt
 
     from pyspark.sql import functions as F
@@ -633,7 +557,7 @@ def test_job_sketch_tiers_expire_at_their_family_horizons(spark, tmp_path):
     assert days and max(days) == last.isoformat()
     store = TierStore(sp)
     m2 = job_main(argv + ["--expire-asof", "2030-01-01"])
-    for fam in ("hll", "cms", "kmv"):
+    for fam in ("hll", "cms"):
         assert m1["expired"][f"{fam}_1m"] == days, fam
         assert store.committed_days(f"{fam}_1m") == set(), fam
         assert m1["expired"][f"{fam}_1h"] == [], fam
