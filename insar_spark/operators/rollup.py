@@ -22,17 +22,6 @@ from insar_spark.operators.series import KEY, ord_key
 
 # tier name -> date_trunc unit; ordered fine -> coarse
 TIERS: dict[str, str] = {"1m": "minute", "1h": "hour", "1d": "day"}
-_TIER_ORDER = list(TIERS)
-
-# Decomposable per-window stats. avg/rates are derived columns computed at
-# read time (finalize), so cascading stays exact.
-_STATS = [
-    ("n_turns", "sum"),  # count at tier 0, sum of counts after
-    ("n_tool_calls", "sum"),
-    ("sum_text_len", "sum"),
-    ("min_text_len", "min"),
-    ("max_text_len", "max"),
-]
 
 
 def rollup_turns(df: DataFrame, tier: str = "1m") -> DataFrame:

@@ -122,30 +122,6 @@ def reference_align(df: DataFrame, value_col: str = "text_len") -> DataFrame:
     )
 
 
-def reference_align_window(
-    df: DataFrame, value_col: str = "text_len", ref_width: int = 3
-) -> DataFrame:
-    """W4 variant: subtract the mean of a window at the series head.
-
-    Mirrors the reference's win×win patch mean around the reference pixel
-    (insar/prepare.py:381-386 uses mean of a window, not a single cell).
-    """
-    w_head = series_window().rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_all = series_window().rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    rn = F.row_number().over(series_window())
-    return (
-        df.withColumn("_rn", rn)
-        .withColumn(
-            "_ref",
-            F.avg(F.when(F.col("_rn") <= ref_width, F.col(value_col))).over(w_all),
-        )
-        .withColumn(f"{value_col}_aligned", F.col(value_col) - F.col("_ref"))
-        .drop("_rn", "_ref")
-    )
-
-
 def ffill(df: DataFrame, value_col: str) -> DataFrame:
     """W8: forward-fill nulls within a series (reindex().ffill() analog)."""
     w = series_window().rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -1,12 +1,14 @@
-"""Every engine module is reached from a job, the benchmark or a tool.
+"""Every engine module is reached from a job, the benchmark or a tool,
+and every top-level engine name is referenced somewhere.
 
 The roots are ``jobs/*.py``, ``perfbench/*.py``, ``tools/*.py`` and the
 engine functions ``insar_spark/families.py`` names by path (``_late``).
 From them, every ``import``/``from ... import`` (function-local ones too)
 that lands on a repository module is followed. A module under
 ``insar_spark/`` that no root reaches is code only tests run: delete it,
-or give it a caller. There is no allowlist. Static (``ast``) only; no
-Spark.
+or give it a caller. A top-level ``def``, ``class`` or assigned name under
+``insar_spark/`` that nothing in the repository's code or tests mentions is
+dead: delete it. There is no allowlist. Static (``ast``) only; no Spark.
 """
 
 from __future__ import annotations
@@ -86,3 +88,50 @@ def test_every_engine_module_is_reached():
     assert engine, ROOT
     unreached = sorted(os.path.relpath(f, ROOT) for f in engine - reached())
     assert unreached == [], unreached
+
+
+def _top_level_names(path: str) -> set[str]:
+    """The names ``path`` defines at module level: each ``def``,
+    ``class`` and assigned name, dunders excepted."""
+    names = set()
+    for node in ast.parse(open(path).read(), path).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                names |= {n.id for n in ast.walk(t) if isinstance(n, ast.Name)}
+    return {n for n in names if not (n.startswith("__") and n.endswith("__"))}
+
+
+def _references(path: str) -> set[str]:
+    """The names ``path`` refers to: loaded names, attributes, imported
+    names, and the ``.``-separated words of string constants (families
+    look engine functions and constants up by string)."""
+    refs = set()
+    for node in ast.walk(ast.parse(open(path).read(), path)):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            refs.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            refs.add(node.attr)
+        elif isinstance(node, ast.alias):
+            refs.add(node.name.rsplit(".", 1)[-1])
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            refs.update(node.value.split("."))
+    return refs
+
+
+def test_every_engine_name_is_referenced():
+    def files(d):
+        return glob.glob(os.path.join(ROOT, d, "**", "*.py"), recursive=True)
+
+    refs = set()
+    for d in ("insar_spark", "jobs", "perfbench", "tools", "tests"):
+        for f in files(d):
+            refs |= _references(f)
+    unreferenced = sorted(
+        f"{os.path.relpath(f, ROOT)}:{name}"
+        for f in files("insar_spark")
+        for name in _top_level_names(f) - refs
+    )
+    assert unreferenced == [], unreferenced
