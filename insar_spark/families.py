@@ -146,10 +146,10 @@ FAMILIES: dict[str, Family] = {f.name: f for f in (
     # HLL registers: distinct conversations per window with no
     # cardinality ceiling (~3% error flat forever). Register max-merge is
     # idempotent, so replays are free and the log's latest-epoch-wins IS
-    # the merge. A global tier is bounded at 2^p rows per window regardless of
-    # traffic, so tier-0 persistence is always cheap — no lb-style store
-    # policy. p rides the manifest, so readers derive the register count
-    # (and LC-regime cutoff) from the stored tier alone.
+    # the merge. A global tier is bounded at 2^p rows per window
+    # regardless of traffic, so tier-0 persistence is always cheap — no
+    # lb-style store policy. p rides the manifest, so readers derive the
+    # register count (and LC-regime cutoff) from the stored tier alone.
     Family(
         "hll", chain=(("hll_1m", "1m"), ("hll_1h", "1h")), retention=(7, 90),
         batch_from="hll_1m", stream_to="hll_1h", log_keys=("window_start", "reg"),

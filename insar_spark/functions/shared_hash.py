@@ -1,8 +1,8 @@
 """Cross-engine deterministic text hashing: identical in Spark and DuckDB.
 
-The HLL and count-min sketch tiers need hashes that
-(a) run JVM-side in Spark (no Python in the hot path) and (b) can be
-recomputed *independently* in DuckDB; the sketch tiers also hash probe
+The HLL and count-min sketch tiers need hashes that (a) run JVM-side in
+Spark (no Python in the hot path) and (b) can be recomputed
+*independently* in DuckDB; the sketch tiers also hash probe
 literals in plain Python (:func:`py_h60`). The cross-engine tests
 (``tests/test_shared_hash.py``) cover all three. Every engine ships md5,
 so the shared primitive is the top 60 bits of ``md5(token)`` parsed as
