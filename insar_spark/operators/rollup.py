@@ -9,8 +9,10 @@ reference hand-codes with running accumulators.
 Key scale property: the coarser tier is computed FROM the finer tier
 (`cascade`), never from raw turns — at 10^12 turns the 1h rollup reads the
 ~60×-smaller 1m table, and the reaggregation is exact because every tier
-carries decomposable stats (sums + counts, min/max, arg-min/arg-max by a
-total order), never pre-divided averages.
+carries decomposable stats (sums + counts, min/max, first/last), never
+pre-divided averages. Within a 1m window first/last are the arg-min/arg-max
+of the (ts, turn_idx) order key; above it they come from window order, so
+no tier stores an order key.
 """
 
 from __future__ import annotations
@@ -51,8 +53,6 @@ def rollup_turns(df: DataFrame, tier: str = "1m") -> DataFrame:
             F.max("text_len").alias("max_text_len"),
             F.min_by("text_len", "ord").alias("first_text_len"),
             F.max_by("text_len", "ord").alias("last_text_len"),
-            F.min("ord").alias("first_ord"),
-            F.max("ord").alias("last_ord"),
         )
     )
 
@@ -61,9 +61,13 @@ def cascade(rolled: DataFrame, to_tier: str) -> DataFrame:
     """Re-aggregate a finer tier into ``to_tier`` (1m -> 1h -> 1d).
 
     Exact partial->final reaggregation: sums of sums, counts of counts,
-    min/max of min/max, and first/last carried by the total-order key — the
-    identity rollup_1h(turns) == cascade(rollup_1m(turns), '1h') is a test
-    invariant (FIXTURES.md §4).
+    min/max of min/max, and first/last taken from the earliest/latest finer
+    window. That is exact because each input row is a distinct finer window
+    of its conversation (stored tiers are unique per (conv_id,
+    window_start); a live view runs latest-epoch-wins first), and windows
+    are disjoint, so the earliest window holds the turn with the smallest
+    (ts, turn_idx) key. The identity rollup_1h(turns) ==
+    cascade(rollup_1m(turns), '1h') is a test invariant (FIXTURES.md §4).
     """
     unit = TIERS[to_tier]
     win = F.date_trunc(unit, F.col("window_start")).alias("window_start")
@@ -75,33 +79,8 @@ def cascade(rolled: DataFrame, to_tier: str) -> DataFrame:
             F.sum("sum_text_len").alias("sum_text_len"),
             F.min("min_text_len").alias("min_text_len"),
             F.max("max_text_len").alias("max_text_len"),
-            F.min_by("first_text_len", "first_ord").alias("first_text_len"),
-            F.max_by("last_text_len", "last_ord").alias("last_text_len"),
-            F.min("first_ord").alias("first_ord"),
-            F.max("last_ord").alias("last_ord"),
+            F.min_by("first_text_len", "window_start").alias("first_text_len"),
+            F.max_by("last_text_len", "window_start").alias("last_text_len"),
         )
     )
 
-
-def finalize(rolled: DataFrame, tier: str) -> DataFrame:
-    """Derive the presentation metrics from the decomposable stats.
-
-    turns/min and tool-call rate are the transcript analogs of the
-    reference's stack-average layer (insar/stackavg.py:93-105): totals
-    normalized by window span.
-    """
-    minutes = {"1m": 1.0, "1h": 60.0, "1d": 1440.0}[tier]
-    return rolled.select(
-        KEY,
-        "window_start",
-        "n_turns",
-        "n_tool_calls",
-        (F.col("n_turns") / F.lit(minutes)).alias("turns_per_min"),
-        (F.col("n_tool_calls") / F.col("n_turns")).alias("tool_call_rate"),
-        (F.col("sum_text_len") / F.col("n_turns")).alias("avg_text_len"),
-        "min_text_len",
-        "max_text_len",
-        (F.col("last_text_len") - F.col("first_text_len")).alias(
-            "text_len_delta"
-        ),
-    )

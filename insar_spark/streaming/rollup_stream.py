@@ -40,10 +40,11 @@ def streaming_rollup_1m(
     """Watermarked tumbling-window rollup, append-mode compatible.
 
     Same decomposable stats as the batch tier (operators.rollup) so a
-    streaming-built 1m tier cascades identically to a batch-built one.
-    min_by/max_by aren't streaming-supported pre-shuffle, so first/last use
-    the (ts, turn_idx) ord key via max_by on a struct-free bigint, which IS
-    supported inside windowed aggs in Spark 4.
+    streaming-built 1m tier cascades identically to a batch-built one:
+    first/last are min_by/max_by over the (ts, turn_idx) ord key, a
+    struct-free bigint (supported inside windowed aggs in Spark 4), and
+    the key itself is not emitted, since cascades above 1m pick first/last
+    by window order.
     """
     # same guarded packing as the batch path (series.ord_key): turn_idx >=
     # 2^20 must raise identically here, not silently corrupt first/last
@@ -68,8 +69,6 @@ def streaming_rollup_1m(
             F.max("text_len").alias("max_text_len"),
             F.min_by("text_len", "ord").alias("first_text_len"),
             F.max_by("text_len", "ord").alias("last_text_len"),
-            F.min("ord").alias("first_ord"),
-            F.max("ord").alias("last_ord"),
         )
         .select(
             "conv_id",
@@ -81,8 +80,6 @@ def streaming_rollup_1m(
             "max_text_len",
             "first_text_len",
             "last_text_len",
-            "first_ord",
-            "last_ord",
         )
     )
 
@@ -473,8 +470,10 @@ def _stitch_1h_view(spark: SparkSession, store, fam) -> DataFrame:
 def stats_realtime_1h_view(spark: SparkSession, store) -> DataFrame:
     """Real-time PLAIN-STATS serve — the flagship tier family through the
     same three-layer stitch the sketch families use: every stat in the
-    stats tier is decomposable (sums/counts/min/max/ord-keyed first+last),
-    so ``operators.rollup.cascade`` merges sealed 1h days, sealed 1m days
+    stats tier is decomposable (sums/counts/min/max; first/last by ord
+    within a 1m window and by window order above it, exact because
+    latest-epoch-wins leaves one live row per 1m window), so
+    ``operators.rollup.cascade`` merges sealed 1h days, sealed 1m days
     the 1h cascade hasn't covered, and the live epoch log into a view
     bit-equal to a batch 1h rollup over everything that has arrived."""
     return realtime_1h_view(spark, store, "stats")

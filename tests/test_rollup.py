@@ -5,7 +5,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from insar_spark.operators.rollup import cascade, finalize, rollup_turns
+from insar_spark.operators.rollup import cascade, rollup_turns
 
 
 def _pd_rollup(pdf: pd.DataFrame, unit: str) -> pd.DataFrame:
@@ -61,16 +61,6 @@ def test_first_last_stable_order(spark, transcripts, transcripts_pdf):
     exp_last = g["text_len"].last().reset_index(drop=True)
     np.testing.assert_allclose(got["first_text_len"].to_numpy(), exp_first.to_numpy())
     np.testing.assert_allclose(got["last_text_len"].to_numpy(), exp_last.to_numpy())
-
-
-def test_finalize_metrics(spark, transcripts):
-    fin = finalize(rollup_turns(transcripts, "1m"), "1m").toPandas()
-    assert (fin["turns_per_min"] == fin["n_turns"]).all()
-    assert ((fin["tool_call_rate"] >= 0) & (fin["tool_call_rate"] <= 1)).all()
-    np.testing.assert_allclose(
-        fin["tool_call_rate"].to_numpy(),
-        (fin["n_tool_calls"] / fin["n_turns"]).to_numpy(),
-    )
 
 
 def test_rollup_insensitive_to_input_order(spark):
