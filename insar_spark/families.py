@@ -95,8 +95,8 @@ class Family:
 FAMILIES: dict[str, Family] = {f.name: f for f in (
     # the flagship decomposable stats (sums/counts/min/max, first+last by
     # ord within a 1m window and by window order above it); a sealed 1m
-    # day is final (watermark passed), so the
-    # stream cycle cascades its 1h/1d windows too
+    # day is final (watermark passed), so the stream cycle cascades its
+    # 1h/1d windows too
     Family(
         "stats", chain=(("1m", "1m"), ("1h", "1h"), ("1d", "1d")), retention=(7, 90, None),
         batch_from="1m", stream_to="1d",
