@@ -169,26 +169,25 @@ def stores(spark, turns_pdf, tmp_path_factory):
     drops = [turns_pdf.iloc[0::2], pd.concat([turns_pdf.iloc[1::2], tail]), late]
 
     stream = TierStore(str(root / "stream"))
-    _spark_df(spark, drops[0]).write.parquet(src)
-    q = stream_to_tierstore(
-        spark, src, stream, checkpoint_dir=ckpt, watermark=WATERMARK, tier="1m_log"
-    )
-    try:
-        q.processAllAvailable()
-        _spark_df(spark, drops[1]).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
+
+    def drain(*parts):
+        """Land each part and drain it as its own micro-batch of one query."""
+        _spark_df(spark, parts[0]).write.mode("append").parquet(src)
+        q = stream_to_tierstore(
+            spark, src, stream, checkpoint_dir=ckpt, watermark=WATERMARK, tier="1m_log"
+        )
+        try:
+            q.processAllAvailable()
+            for part in parts[1:]:
+                _spark_df(spark, part).write.mode("append").parquet(src)
+                q.processAllAvailable()
+        finally:
+            q.stop()
+
+    drain(drops[0], drops[1])
     refined_before_seal = _dup_keys(stream.read_tier(spark, "1m_log"))
     cycle = run_cycle(spark, stream, src, ckpt, watermark=WATERMARK)
-    _spark_df(spark, drops[2]).write.mode("append").parquet(src)
-    q = stream_to_tierstore(
-        spark, src, stream, checkpoint_dir=ckpt, watermark=WATERMARK, tier="1m_log"
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(drops[2])
 
     batch_in = str(root / "batch_in")
     _spark_df(spark, pd.concat(drops)).write.parquet(batch_in)
@@ -220,7 +219,7 @@ def test_window_order_cascade_equals_direct_build(spark, turns_pdf):
     got = _frame(m1).set_index(["conv_id", "window_start"])
     # the tie minute: turn_idx 1 (7 chars) is first, turn_idx 9 (1 char) last
     assert got.loc[("tie", TS("2025-03-30 10:15")), ["first_text_len", "last_text_len"]].tolist() == [7.0, 1.0]
-    # the null-text hour starts with a null first_text_len
+    # the null-text hour starts and ends with a turn without text
     hour = _frame(h1).set_index(["conv_id", "window_start"]).loc[("null", TS("2025-03-31 08:00"))]
     assert np.isnan(hour["first_text_len"]) and np.isnan(hour["last_text_len"])
 
